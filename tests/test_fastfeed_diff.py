@@ -1,9 +1,12 @@
-"""Differential tests: the single-pass fast parse driver
-(html/fastfeed.py) must produce a tree IDENTICAL — element names,
-attrs, order counters, structure, text pieces with absolute offsets
-and literal flags — to the stdlib incremental parser path
-(dom.parse_stdlib) on every input, including hostile ones.  Where one
-path raises, the other must raise the same exception type.
+"""Differential tests: the production tree builder (html/fastfeed.py,
+reached through dom.parse) must produce a tree IDENTICAL — element
+names, attrs, order counters, structure, text pieces with absolute
+offsets and literal flags — to the independent oracle in
+tests/stdlib_tree.py, which drives the stdlib incremental parser
+through tree-building handler methods, on every input, including
+hostile ones.  Where one path raises, the other must raise the same
+exception type.  The larger off-suite soak reuses ``assert_same_tree``:
+``python scripts/soak_fastfeed.py``.
 """
 
 import random
@@ -16,6 +19,8 @@ from hypothesis import given, settings, strategies as st
 from webtext_extraction_spark.fixtures_pages import heavy_payload_for, payload_for
 from webtext_extraction_spark.html import dom as htmldom
 from webtext_extraction_spark.html.dom import TextNode
+
+from tests.stdlib_tree import parse_stdlib
 
 sys.setrecursionlimit(20000)  # dumps of MAX_DEPTH-capped trees
 
@@ -39,7 +44,7 @@ def assert_same_tree(payload: str):
     except Exception as e:  # noqa: BLE001 - comparing failure modes
         fast, fast_exc = None, type(e)
     try:
-        ref = dump(htmldom.parse_stdlib(payload))
+        ref = dump(parse_stdlib(payload))
         ref_exc = None
     except Exception as e:  # noqa: BLE001
         ref, ref_exc = None, type(e)
@@ -142,6 +147,25 @@ ADVERSARIAL = [
     "<![CDATA[open&#z;<i>x</i>",
     "<a b='c>x&#z;y&#q;<b>two bails</b>",
     "&#z;<a b='c>x&#q;<b>bail then construct</b>",
+    # numeric charref classes: cp1252 remap, surrogate, out of range,
+    # overflowing the code space, noncharacter, and more decimal digits
+    # than int() converts
+    "<p>a&#150;b&#xD800;c&#x110000;d</p>",
+    "<p>&#99999999999999999999;&#xFDD0;x</p>",
+    "<p>&#" + "9" * 5000 + ";x</p>",
+    "<p>x&amp",
+    # flattened opens past MAX_DEPTH closed by a stray end tag, an end
+    # tag that reaches the real stack, and matching ones
+    "<div>" * 600 + "a</span>b</body>c" + "</div>" * 600 + "d",
+    "<body>" + "<div>" * 600 + "a</span>b" + "</div>" * 300 + "c</body>d",
+    "<body>" + "<div>" * 600 + "</body><div>x</div>y",
+    # text on both sides of a comment / PI / declaration stays split
+    "a<!-- c -->b<?pi?>c<!doctype x>d<![if x]>e</1>f",
+    # a script/style closer whose name only case-folds to the element's
+    # (U+017F long s, U+0131 dotless i): the stdlib keeps it as text
+    "<script>x</\u017fcript>y</script><p>z</p>",
+    "<script>x</scr\u0131pt>y</script><p>z</p>",
+    "<style>x</\u017ftyle >y</style>",
 ]
 
 
@@ -208,7 +232,9 @@ def test_exhaustive_small_strings():
     (`<>&;"=a/!?-`) and a PI/CDATA-bracket alphabet (`<>![CD/]?-a`)
     additionally each ran exhaustively at length 7 (19.5M cases
     apiece), plus 30k long random markup-soup strings — all zero
-    divergence (~46M exhaustive differential cases total on record)."""
+    divergence (~46M exhaustive differential cases total on record).
+    ``python scripts/soak_fastfeed.py`` re-runs all five alphabets
+    through length 6 plus a seeded 30k construct/attr soup."""
     import itertools
 
     alpha = "<>&#;a'/!-"

@@ -2,6 +2,7 @@
 independent recursive reimplementation, over random trees × the real
 selector inventory (every selector the rules/handlers actually use)."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from webtext_extraction_spark import rules
@@ -168,3 +169,22 @@ def test_decompose_all_adjacent_chain_sequential_semantics():
     dom = parse('<html><body><p class="x y">a</p><p class="z">keep</p></body></html>')
     decompose_all(dom.body, [".x", ".y + .z"])
     assert [el.get_text() for el in dom.select("p")] == ["keep"]
+
+
+def test_compiled_decompose_set_is_immutable():
+    """_compile_decompose_set is lru_cached, so every decompose_all call
+    with the same selector batch shares its result: a caller mutating it
+    would corrupt all later calls (ADVICE r6 #2).  Mutation must fail."""
+    from webtext_extraction_spark.html.selector import _compile_decompose_set
+
+    tags, classes, chains, has_adjacent = _compile_decompose_set(("nav", ".ad", "div p"))
+    assert (tags, classes, len(chains), has_adjacent) == ({"nav"}, {"ad"}, 1, False)
+    with pytest.raises(AttributeError):
+        tags.add("p")
+    with pytest.raises(AttributeError):
+        classes.discard("ad")
+    with pytest.raises(AttributeError):
+        chains.append(chains[0])
+    with pytest.raises(TypeError):
+        chains[0][0] = chains[0][1]
+    assert _compile_decompose_set(("nav", ".ad", "div p"))[:2] == ({"nav"}, {"ad"})

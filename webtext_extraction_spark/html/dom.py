@@ -26,32 +26,6 @@ decoded char is not a verbatim slice of the payload.
 
 from __future__ import annotations
 
-import html as _html
-from html.parser import HTMLParser
-
-from webtext_extraction_spark.html import fastfeed
-
-try:  # html.unescape's numeric-charref tables (HTML5 §13.2.5.80: the
-    # cp1252 remap for &#128;-&#159;, U+FFFD for surrogates/overflow,
-    # dropped noncharacters) — bs4 convert_charrefs=True semantics
-    from html import _invalid_charrefs, _invalid_codepoints
-except ImportError:  # pragma: no cover - other stdlib layouts
-    _invalid_charrefs, _invalid_codepoints = {}, set()
-
-VOID_ELEMENTS = frozenset(
-    "area base br col embed hr img input link meta param source track wbr".split()
-)
-
-# Nesting-depth guard: elements opened beyond this depth attach as
-# siblings at the cap level instead of nesting.  Rationale: block
-# scoring (D3) does per-block subtree text walks, which is quadratic
-# in nesting depth — a hostile 5000-deep payload would stall an
-# executor for ~12 s.  The reference's answer to stalls is a 600 s
-# wall-clock kill (W:1388, P2); the engine's is this deterministic
-# structural cap (real pages nest < 100 levels; capped parses remain
-# well-defined and linear).
-MAX_DEPTH = 512
-
 
 class TextNode:
     """One logical run of character data.
@@ -358,212 +332,12 @@ class Document(Element):
         return self._first_named("title")
 
 
-def _attr_map(attrs) -> dict:
-    """Attr list → dict with bs4's duplicate policy: on a repeated
-    attribute the LAST value wins (BeautifulSoup html.parser builder
-    default, on_duplicate_attribute=REPLACE — the reference parses via
-    BeautifulSoup, W:1241), keeping the first occurrence's position."""
-    attr_map = {}
-    for k, v in attrs:
-        attr_map[k] = v if v is not None else ""
-    return attr_map
-
-
-class _TreeBuilder(HTMLParser):
-    """Event-driven tree build with absolute source offsets.
-
-    ``convert_charrefs=False`` so entity references arrive as discrete
-    events with exact positions; adjacent data/entity fragments are
-    buffered and flushed into one logical TextNode at the next tag
-    boundary (matching bs4's merged-string behavior).
-    """
-
-    def __init__(self, payload: str):
-        super().__init__(convert_charrefs=False)
-        self.payload = payload
-        # absolute-position tracking: goahead calls updatepos(i, j) after
-        # every consumed segment, and every handler that reads a position
-        # (data/entity/charref) fires when the previous updatepos ended
-        # exactly at that handler's start — so _pos IS the handler's
-        # absolute offset.  This replaces the stdlib line/column
-        # bookkeeping (a str.count('\n') per event) we never used beyond
-        # reconstructing absolute offsets.  _rebase covers the one place
-        # indices become relative: close() re-runs goahead on the
-        # unconsumed tail after feed() rebased self.rawdata.
-        self._pos = 0
-        self._rebase = 0
-        self.root = Document()
-        self.root._parse_order = self._order_list = []
-        self.stack: list[Element] = [self.root]
-        self.order = 0  # document pre-order counter (creation order)
-        self.pending: list = []  # text pieces awaiting flush
-        # tag names of opens beyond MAX_DEPTH (flattened, not pushed) —
-        # names are kept so an end tag only consumes a flattened open it
-        # actually matches; </body> arriving while a capped <div> is
-        # open must reach the real stack (ADVICE r01)
-        self.overflow_tags: list[str] = []
-
-    def updatepos(self, i: int, j: int) -> int:
-        self._pos = j
-        return j
-
-    def _abs(self) -> int:
-        return self._rebase + self._pos
-
-    def _flush_text(self):
-        # copy+clear (not rebind): the pending list object is STABLE, so
-        # the fast driver appends data runs to it without a method call
-        if self.pending:
-            parent = self.stack[-1]
-            parent.children.append(TextNode(self.pending[:], parent))
-            self.pending.clear()
-
-    # -- tag events (hot path: _flush_text / _attr_map are inlined — the
-    # per-event call overhead is measurable at millions of pages) -----------
-    def handle_starttag(self, tag, attrs):
-        parent = self.stack[-1]
-        pending = self.pending
-        if pending:
-            parent.children.append(TextNode(pending[:], parent))
-            pending.clear()
-        attr_map = {}
-        for k, v in attrs:
-            attr_map[k] = v if v is not None else ""
-        self.order += 1
-        el = Element(tag, attr_map, parent, self.order)
-        parent.children.append(el)
-        self._order_list.append(el)
-        if tag not in VOID_ELEMENTS:
-            if len(self.stack) >= MAX_DEPTH:
-                self.overflow_tags.append(tag)  # attach flat; named close below
-            else:
-                self.stack.append(el)
-
-    def handle_startendtag(self, tag, attrs):
-        parent = self.stack[-1]
-        pending = self.pending
-        if pending:
-            parent.children.append(TextNode(pending[:], parent))
-            pending.clear()
-        attr_map = {}
-        for k, v in attrs:
-            attr_map[k] = v if v is not None else ""
-        self.order += 1
-        el = Element(tag, attr_map, parent, self.order)
-        parent.children.append(el)
-        self._order_list.append(el)
-
-    def handle_endtag(self, tag):
-        pending = self.pending
-        if pending:
-            parent = self.stack[-1]
-            parent.children.append(TextNode(pending[:], parent))
-            pending.clear()
-        if not self.overflow_tags:
-            # fast path: the end tag names the innermost open element
-            stack = self.stack
-            if len(stack) > 1 and stack[-1].name == tag:
-                stack.pop()
-                return
-        if self.overflow_tags:
-            # consume the most recent MATCHING flattened open (closing
-            # any flattened opens above it, stack-scan semantics); an
-            # end tag naming no flattened open falls through to the
-            # real stack below
-            for i in range(len(self.overflow_tags) - 1, -1, -1):
-                if self.overflow_tags[i] == tag:
-                    del self.overflow_tags[i:]
-                    return
-        # pop to the most recent matching open tag; ignore strays
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].name == tag:
-                # every flattened open is logically ABOVE any real-stack
-                # element: closing a real element closes them all, so a
-                # stale overflow entry must not swallow a later legitimate
-                # close (ADVICE r02)
-                self.overflow_tags.clear()
-                del self.stack[i:]
-                break
-
-    # -- text events ---------------------------------------------------------
-    def handle_data(self, data):
-        start = self._rebase + self._pos
-        self.pending.append((data, start, start + len(data), True))
-
-    def handle_entityref(self, name):
-        start = self._abs()
-        end = start + 1 + len(name)
-        if end < len(self.payload) and self.payload[end] == ";":
-            end += 1
-        decoded = _html.unescape(self.payload[start:end])
-        self.pending.append((decoded, start, end, False))
-
-    def handle_charref(self, name):
-        start = self._abs()
-        end = start + 2 + len(name)
-        if end < len(self.payload) and self.payload[end] == ";":
-            end += 1
-        try:
-            code = int(name[1:], 16) if name.lower().startswith("x") else int(name)
-        except (ValueError, OverflowError):
-            decoded = self.payload[start:end]
-        else:
-            # html.unescape numeric semantics (= bs4 convert_charrefs):
-            # cp1252 remap for the &#128;-&#159; block (Word-exported
-            # curly quotes/dashes), U+FFFD for surrogates and
-            # out-of-range, noncharacters dropped — NOT bare chr()
-            if code in _invalid_charrefs:
-                decoded = _invalid_charrefs[code]
-            elif 0xD800 <= code <= 0xDFFF or code > 0x10FFFF:
-                decoded = "�"
-            elif code in _invalid_codepoints:
-                decoded = ""
-            else:
-                decoded = chr(code)
-        self.pending.append((decoded, start, end, False))
-
-    # comments / declarations / PIs contribute no text
-    def handle_comment(self, data):
-        if self.pending:
-            self._flush_text()
-
-    def handle_decl(self, decl):
-        if self.pending:
-            self._flush_text()
-
-    def handle_pi(self, data):
-        if self.pending:
-            self._flush_text()
-
-    def unknown_decl(self, data):
-        if self.pending:
-            self._flush_text()
-
-
 def parse(payload: str) -> Document:
     """Parse an HTML payload into an offset-tracking Document tree.
 
-    Uses the single-pass fast driver (html/fastfeed.py) — event-stream
-    identical to the stdlib incremental parser (differentially tested in
-    tests/test_fastfeed_diff.py); falls back to the stdlib path when the
-    pinned parser internals are unavailable."""
-    if fastfeed.FAST_FEED_AVAILABLE:
-        builder = _TreeBuilder(payload)
-        fastfeed.fast_feed(builder, payload)
-        builder._flush_text()
-        return builder.root
-    return parse_stdlib(payload)  # pragma: no cover - import fallback
+    The single-pass builder in html/fastfeed.py builds every node; it
+    is differentially tested against the stdlib parser in
+    tests/test_fastfeed_diff.py."""
+    from webtext_extraction_spark.html.fastfeed import fast_feed  # imports this module
 
-
-def parse_stdlib(payload: str) -> Document:
-    """Reference parse via the stdlib incremental parser — the behavior
-    oracle for the fast driver's differential tests."""
-    builder = _TreeBuilder(payload)
-    builder.feed(payload)
-    # feed() rebased self.rawdata to the unconsumed tail; events fired
-    # during close() carry tail-relative positions
-    builder._rebase = len(payload) - len(builder.rawdata)
-    builder._pos = 0
-    builder.close()
-    builder._flush_text()
-    return builder.root
+    return fast_feed(payload)

@@ -178,7 +178,8 @@ def _compile_decompose_set(selectors: tuple[str, ...]):
     """Split a selector batch into (simple_tags, simple_classes,
     complex_chains, has_adjacent) — pure function of the selector
     strings, memoized because the built-in unwanted-selector batches
-    are fixed lists applied once per extracted page."""
+    are fixed lists applied once per extracted page.  Every call with
+    the same batch shares the result, so it is returned immutable."""
     has_adjacent = any(
         comb == "adjacent"
         for s in selectors
@@ -199,8 +200,8 @@ def _compile_decompose_set(selectors: tuple[str, ...]):
                     if not c.tag and len(c.classes) == 1 and not c.ids and not c.attrs:
                         simple_classes.add(c.classes[0])
                         continue
-                complex_chains.append(chain)
-    return simple_tags, simple_classes, complex_chains, has_adjacent
+                complex_chains.append(tuple(chain))
+    return frozenset(simple_tags), frozenset(simple_classes), tuple(complex_chains), has_adjacent
 
 
 def decompose_all(root, selectors: list[str]) -> None:

@@ -253,21 +253,3 @@ NAV_TEXT_WORDS = [
 # ---------------------------------------------------------------------------
 TARGET_DOMAINS = ["youtube.com"]
 YAHOO_IMAGE_SEARCH_PREFIX = "https://search.yahoo.co.jp/image/search"
-
-
-def rule_bundle() -> dict:
-    """Everything an executor needs, as one broadcastable dict."""
-    return {
-        "rule_version": RULE_VERSION,
-        "main_content_selectors": MAIN_CONTENT_SELECTORS,
-        "domain_selectors": DOMAIN_SELECTORS,
-        "unwanted_selectors": UNWANTED_SELECTORS,
-        "body_unwanted_selectors": BODY_UNWANTED_SELECTORS,
-        "selenium_body_unwanted": SELENIUM_BODY_UNWANTED,
-        "error_patterns": ERROR_PATTERNS,
-        "failure_templates": FAILURE_TEMPLATES_WITH_URL,
-        "failure_prefixes": FAILURE_PREFIXES,
-        "timeout_marker": TIMEOUT_MARKER,
-        "nav_phrases": NAV_PHRASES,
-        "content_indicators": CONTENT_INDICATOR_PATTERNS,
-    }

@@ -42,10 +42,6 @@ def write_bucketed_table(
     writer.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def colocated_join(
     spark: SparkSession, left_table: str, right_table: str, key: str = "conv_id"
 ) -> DataFrame:
