@@ -61,8 +61,6 @@ class _TreeBuilder(HTMLParser):
         return self._rebase + self._pos
 
     def _flush_text(self):
-        # copy+clear (not rebind): the pending list object is STABLE, so
-        # the fast driver appends data runs to it without a method call
         if self.pending:
             parent = self.stack[-1]
             parent.children.append(TextNode(self.pending[:], parent))
@@ -192,7 +190,7 @@ class _TreeBuilder(HTMLParser):
 
 def parse_stdlib(payload: str) -> Document:
     """Reference parse via the stdlib incremental parser — the behavior
-    oracle for the fast driver's differential tests."""
+    oracle for fastfeed.fast_feed's differential tests."""
     builder = _TreeBuilder(payload)
     builder.feed(payload)
     # feed() rebased self.rawdata to the unconsumed tail; events fired
