@@ -10,15 +10,20 @@ tests/test_fastfeed_diff.py, over:
   length 5);
 - 30,000 seeded construct/attribute soup strings: concatenations of
   incomplete constructs, charref-bail fragments, attribute shapes,
-  CDATA elements and tag soup.
+  CDATA elements and tag soup;
+- the same 30,000 soup strings through ``assert_same_under_decompose``:
+  a seeded decompose sequence per string (seeded by its position),
+  with text assembly (plain and tracked), descendants, select,
+  find_all, body and title compared against the oracle's object walks
+  after every step.
 
-Run after any change to the tree builder:
+Run after any change to the tree builder or the tree's range logic:
 
     python scripts/soak_fastfeed.py
 
 Settings are fixed.  Prints the case count per family and the
 divergences found (the first few payloads of each), and exits non-zero
-on any divergence.  Takes about a minute on 4 cores.
+on any divergence.  Takes about a minute and a half on 4 cores.
 """
 
 from __future__ import annotations
@@ -64,15 +69,25 @@ def _exhaustive(task):
     return _check(prefix + "".join(t) for t in rest)
 
 
-def _check(payloads):
-    from tests.test_fastfeed_diff import assert_same_tree
+def _check_walks(task):
+    start, payloads = task
+    return _check(payloads, start)
+
+
+def _check(payloads, walk_seed=None):
+    """Tree parity per payload, or with ``walk_seed`` the decompose-walk
+    check seeded by ``walk_seed`` + the payload's position."""
+    from tests.test_fastfeed_diff import assert_same_tree, assert_same_under_decompose
 
     sys.setrecursionlimit(20000)
     cases, failed, shown = 0, 0, []
-    for payload in payloads:
+    for n, payload in enumerate(payloads):
         cases += 1
         try:
-            assert_same_tree(payload)
+            if walk_seed is None:
+                assert_same_tree(payload)
+            else:
+                assert_same_under_decompose(payload, walk_seed + n)
         except AssertionError:
             failed += 1
             if len(shown) < SHOW:
@@ -102,6 +117,8 @@ def main() -> int:
     payloads = _soup_payloads()
     chunks = [payloads[i : i + SOUP_CHUNK] for i in range(0, len(payloads), SOUP_CHUNK)]
     families.append((f"construct/attr soup seed={SOUP_SEED}", _check, chunks))
+    walk_tasks = [(i, payloads[i : i + SOUP_CHUNK]) for i in range(0, len(payloads), SOUP_CHUNK)]
+    families.append((f"decompose walks over the soup seed={SOUP_SEED}", _check_walks, walk_tasks))
 
     total_cases = total_failed = 0
     with mp.get_context("spawn").Pool(WORKERS) as pool:

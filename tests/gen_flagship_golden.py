@@ -30,7 +30,7 @@ def rows():
         for turn_idx in range(1 + i % 12):
             payload, tool = payload_for(conv_id, turn_idx)
             r = extract_payload(payload, tool)
-            # F6 post-layer, mirroring extraction.with_error_pattern_status
+            # F6 post-layer, mirroring the one in extraction._extract_batch
             status = r.status
             if status == "ok" and any(p in r.text for p in rules.ERROR_PATTERNS):
                 status = "error_pattern"

@@ -41,7 +41,7 @@ def build_rows():
             r = extract_payload(payload, tool)
             url, _domain = derive_url_and_domain(payload)
             status = r.status
-            # F6 layering (Spark-side with_error_pattern_status replica)
+            # F6 layering (replica of the one in extraction._extract_batch)
             if status == "ok" and any(p in r.text for p in rules.ERROR_PATTERNS):
                 status = "error_pattern"
             rows.append((conv_id, t, url, r.text, status))

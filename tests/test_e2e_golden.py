@@ -32,5 +32,5 @@ def test_pipeline_matches_committed_golden(spark):
     assert (out["turn_idx"] == golden["turn_idx"]).all()
     mism = out["extracted_text"] != golden["extracted_text"]
     assert not mism.any(), out[mism].head()
-    # status differs only where the Spark layer upgrades ok→error_pattern
+    # status differs only where the batch upgrades ok→error_pattern
     assert (out["strategy"] == golden["strategy"]).all()

@@ -5,7 +5,13 @@ offsets and literal flags — to the independent oracle in
 tests/stdlib_tree.py, which drives the stdlib incremental parser
 through tree-building handler methods, on every input, including
 hostile ones.  Where one path raises, the other must raise the same
-exception type.  The larger off-suite soak reuses ``assert_same_tree``:
+exception type.
+
+``assert_same_under_decompose`` checks the range logic of the flat tree
+(html/dom.py) against the oracle's object walks: after every step of a
+seeded decompose sequence, text assembly (plain and tracked, with
+offsets), descendants, select, find_all, body, title and the whole
+tree dump must agree.  The larger off-suite soak reuses both checks:
 ``python scripts/soak_fastfeed.py``.
 """
 
@@ -18,7 +24,6 @@ from hypothesis import given, settings, strategies as st
 
 from webtext_extraction_spark.fixtures_pages import heavy_payload_for, payload_for
 from webtext_extraction_spark.html import dom as htmldom
-from webtext_extraction_spark.html.dom import TextNode
 
 from tests.stdlib_tree import parse_stdlib
 
@@ -26,7 +31,9 @@ sys.setrecursionlimit(20000)  # dumps of MAX_DEPTH-capped trees
 
 
 def dump(node):
-    if isinstance(node, TextNode):
+    """The compared fields of a node of either tree: production views
+    and oracle nodes expose the same names."""
+    if not hasattr(node, "name"):  # a text node
         return ("text", tuple(node.pieces))
     return (
         "el",
@@ -50,6 +57,68 @@ def assert_same_tree(payload: str):
         ref, ref_exc = None, type(e)
     assert fast_exc == ref_exc, (fast_exc, ref_exc, payload[:200])
     assert fast == ref, payload[:200]
+
+
+WALK_SELECTORS = ["p", "div", "div p", ".a", "#x", "[data-k*='v']", "div + p", "main .a, span"]
+
+
+def _orders(els) -> list:
+    return [el.order for el in els]
+
+
+def _compare_walks(fast, ref):
+    for sep, strip in (("", False), ("\n", True), (" ", True)):
+        assert fast.get_text(sep, strip) == ref.get_text(sep, strip)
+        tt = fast.get_text_tracked(sep, strip)
+        assert (tt.text, tt.off.tolist()) == ref.get_text_tracked(sep, strip)
+    assert _orders(fast.descendants()) == _orders(ref.descendants())
+    for selector in WALK_SELECTORS:
+        assert _orders(fast.select(selector)) == _orders(ref.select(selector)), selector
+    assert _orders(fast.find_all(["p", "div", "p"])) == _orders(ref.find_all(["p", "div"]))
+    assert _orders(fast.find_all(class_pred=bool)) == _orders(ref.find_all(class_pred=bool))
+
+
+def assert_same_under_decompose(payload: str, seed: int, steps: int = 6):
+    """Decompose the same elements in both trees — a seeded mix of any
+    element, one inside the last decomposed subtree (nested, or inside
+    a detached subtree), an ancestor of it, and the same one again —
+    comparing every walk from several roots after each step."""
+    try:
+        fast, ref = htmldom.parse(payload), parse_stdlib(payload)
+    except Exception:  # noqa: BLE001 - parse parity is assert_same_tree's job
+        return
+    pairs = [(fast, ref)] + list(zip(fast.descendants(), ref.descendants()))
+    parent = {r.order: r.parent.order for _f, r in pairs[1:]}
+    rng = random.Random(seed)
+    last = None
+    for _ in range(steps if len(pairs) > 1 else 0):
+        inside = [i for i in parent if last and _within(parent, i, last)]
+        kind = rng.randrange(4)
+        if kind == 1 and inside:
+            pick = rng.choice(inside)
+        elif kind == 2 and last and parent[last]:
+            pick = parent[last]
+        elif kind == 3 and last:
+            pick = last
+        else:
+            pick = rng.randrange(1, len(pairs))
+        last = pick
+        pairs[pick][0].decompose()
+        pairs[pick][1].decompose()
+        assert dump(fast) == dump(ref)
+        for root in {0, pick, parent[pick], rng.randrange(len(pairs))}:
+            _compare_walks(*pairs[root])
+        for name in ("body", "title"):
+            f, r = getattr(fast, name), getattr(ref, name)
+            assert (f and f.order) == (r and r.order)
+
+
+def _within(parent: dict, i: int, top: int) -> bool:
+    while i:
+        i = parent[i]
+        if i == top:
+            return True
+    return False
 
 
 ADVERSARIAL = [
@@ -269,3 +338,24 @@ def test_markup_char_soup(payload):
 @given(st.text(max_size=200))
 def test_arbitrary_text(payload):
     assert_same_tree(payload)
+
+
+TREE_TAGS = ["div", "p", "main", "span", "nav", "aside", "body", "title", "script"]
+TREE_TEXT = ["t", " a b ", "&amp;", "x&#65;y", "\n", "<!-- c -->", "&#xFDD0;", "a</>b",
+             "<br>", "<img src='i'/>", "</span>", "&lt"]
+
+
+@st.composite
+def _html_tree(draw, depth=0):
+    if depth >= 4 or draw(st.integers(0, 2)) == 0:
+        return draw(st.sampled_from(TREE_TEXT))
+    tag = draw(st.sampled_from(TREE_TAGS))
+    attrs = draw(st.sampled_from(["", ' class="a"', ' class="b a"', ' id="x"', " data-k=v"]))
+    inner = "".join(draw(st.lists(_html_tree(depth=depth + 1), max_size=4)))
+    return f"<{tag}{attrs}>{inner}</{tag}>"
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_html_tree(), min_size=1, max_size=5), st.integers(0, 2**32))
+def test_range_walks_under_decomposition(nodes, seed):
+    assert_same_under_decompose("<html>" + "".join(nodes), seed)

@@ -1,13 +1,15 @@
 """Selector-engine fuzz parity: the production matcher vs a naive,
-independent recursive reimplementation, over random trees × the real
-selector inventory (every selector the rules/handlers actually use)."""
+independent recursive reimplementation (``tests.stdlib_tree.naive_select``),
+over random trees × the real selector inventory (every selector the
+rules/handlers actually use)."""
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from webtext_extraction_spark import rules
 from webtext_extraction_spark.html.dom import parse
-from webtext_extraction_spark.html.selector import _parse_selector
+
+from tests.stdlib_tree import naive_select
 
 SELECTORS = list(
     dict.fromkeys(
@@ -37,68 +39,6 @@ ATTRS = [
     ("href", "https://x.example"),
     ("itemprop", "articleBody"),
 ]
-
-
-# -- independent naive matcher -------------------------------------------------
-
-
-def naive_compound_matches(el, compound):
-    if compound.tag and compound.tag != "*" and el.name != compound.tag:
-        return False
-    classes = (el.attrs.get("class") or "").split()
-    if any(c not in classes for c in compound.classes):
-        return False
-    if any(el.attrs.get("id") != i for i in compound.ids):
-        return False
-    for name, op, value in compound.attrs:
-        actual = el.attrs.get(name)
-        if actual is None:
-            return False
-        if op == "=" and actual != value:
-            return False
-        if op == "*=" and value not in actual:
-            return False
-    return True
-
-
-def naive_select(root, selector):
-    groups = _parse_selector(selector)
-
-    def ancestors_of(el):
-        out = []
-        node = el.parent
-        while node is not None and node.name != "[document]":
-            out.append(node)
-            node = node.parent
-        return out
-
-    def prev_sibling(el):
-        if el.parent is None:
-            return None
-        sibs = [c for c in el.parent.children if getattr(c, "name", None)]
-        prev = None
-        for s in sibs:
-            if s is el:
-                return prev
-            prev = s
-        return None
-
-    def chain_match(el, chain, idx):
-        comb, compound = chain[idx]
-        if not naive_compound_matches(el, compound):
-            return False
-        if idx == 0:
-            return True
-        if comb == "adjacent":
-            p = prev_sibling(el)
-            return p is not None and chain_match(p, chain, idx - 1)
-        return any(chain_match(a, chain, idx - 1) for a in ancestors_of(el))
-
-    out = []
-    for el in root.descendants():
-        if any(chain_match(el, chain, len(chain) - 1) for chain in groups):
-            out.append(el)
-    return out
 
 
 # -- random tree generator -------------------------------------------------------

@@ -74,9 +74,29 @@ def test_stable_order_under_partitioning(spark, transcripts):
 def test_all_statuses_present_and_error_pattern_layered(extracted):
     statuses = {r[0] for r in extracted.select("status").distinct().collect()}
     assert "ok" in statuses
-    assert "error_pattern" in statuses  # h19 pages re-classified Spark-side
+    assert "error_pattern" in statuses  # h19 pages re-classified in the batch
     err = extracted.filter(F.col("status") == "error_pattern").first()
     assert "ERR_TIMED_OUT" in err["extracted_text"] or "このサイト" in err["extracted_text"]
+
+
+def test_error_pattern_status_set_in_batch(transcripts):
+    """F6 runs inside the extraction batch: the retro-scan with the
+    default patterns changes no row of extract_turns output, and every
+    h19 (browser error page) turn is error_pattern."""
+    from webtext_extraction_spark import rules
+    from webtext_extraction_spark.fixtures_pages import archetype_for
+    from webtext_extraction_spark.operators.extraction import (
+        extract_turns,
+        with_error_pattern_status,
+    )
+
+    out = extract_turns(transcripts).select("conv_id", "turn_idx", "extracted_text", "status")
+    rescanned = with_error_pattern_status(out, patterns=list(rules.ERROR_PATTERNS))
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows == sorted(tuple(r) for r in rescanned.collect())
+    h19 = [r for r in rows if archetype_for(r[0], r[1])[0] == "h19_error_pattern"]
+    assert h19
+    assert {r[3] for r in h19} == {"error_pattern"}
 
 
 def test_span_invariant_through_arrow(extracted, spark):

@@ -22,13 +22,23 @@ payload so extracted text can be emitted with character-span
 provenance (new-engine obligation; the reference never records
 offsets).  Entity-decoded characters are flagged as non-literal: the
 decoded char is not a verbatim slice of the payload.
+
+Representation: the tree is flat.  ``html/fastfeed.py`` writes the
+parse into the Document's parallel lists in document pre-order, so an
+element's subtree and its text nodes are index intervals.
+``decompose()`` records the element in ``Document.dropped``; walks read
+the live part of an interval (minus the outermost dropped subtrees
+strictly inside it).  :class:`Element` and :class:`TextNode` are views
+the Document creates on demand, one per index, so ``is`` holds.
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left
+
 
 class TextNode:
-    """One logical run of character data.
+    """View of one logical run of character data.
 
     ``pieces`` is a list of ``(text, src_start, src_end, literal)``
     fragments: ``literal`` fragments satisfy
@@ -36,49 +46,44 @@ class TextNode:
     entity decodes whose source range covers the entity reference.
     """
 
-    __slots__ = ("pieces", "parent")
+    __slots__ = ("doc", "index")
 
-    def __init__(self, pieces, parent):
-        self.pieces = pieces
-        self.parent = parent
+    def __init__(self, doc: "Document", index: int):
+        self.doc = doc
+        self.index = index
+
+    @property
+    def pieces(self) -> list:
+        return self.doc.pieces_of(self.index)
+
+    @property
+    def parent(self) -> "Element":
+        return self.doc.node(self.doc.tx_parent[self.index])
 
     @property
     def text(self) -> str:
-        pieces = self.pieces
-        if len(pieces) == 1:  # the overwhelmingly common shape
-            return pieces[0][0]
-        return "".join(p[0] for p in pieces)
+        return "".join(p[0] for p in self.pieces)
 
 
 class Element:
-    """A DOM element.
+    """View of one element: ``order`` is its document pre-order index.
 
     STRUCTURAL MUTATION INVARIANT (ADVICE r03): the tree is
-    append-only at PARSE time and decompose-only AFTERWARDS.  There is
-    deliberately no insertion/reattachment API — ``_DomIndex`` is
-    built once per Document and only tracks liveness via
-    ``decompose_epoch``, so an element attached after ``ensure_index``
-    has run would be invisible to ``select``/``find_all`` with no
-    signal.  Any future attachment path MUST either invalidate
-    ``Document._dom_index`` (set it to None) or assert that
-    ``ensure_index`` has not yet run."""
+    append-only at PARSE time and decompose-only AFTERWARDS.  The flat
+    representation enforces it: an element's subtree is the fixed
+    interval ``[order, el_end[order])`` written by the parser, and the
+    only mutation is adding an index to ``Document.dropped``, which
+    every walk and index lookup reads at query time.  There is no
+    insertion/reattachment API."""
 
-    __slots__ = ("name", "attrs", "parent", "children", "decomposed", "_classes", "order")
+    __slots__ = ("doc", "order", "name", "attrs", "_classes")
 
-    def __init__(self, name: str, attrs: dict, parent, order: int = 0):
-        self.name = name
-        self.attrs = attrs
-        self.parent = parent
-        self.children: list = []
-        self.decomposed = False
+    def __init__(self, doc: "Document", order: int):
+        self.doc = doc
+        self.order = order
+        self.name = doc.el_tag[order]
+        self.attrs = doc.el_attrs[order]
         self._classes = None  # lazy class-token cache (attrs are immutable)
-        self.order = order  # document pre-order position (parse-time)
-
-    # -- attribute helpers -------------------------------------------------
-    def get(self, key: str, default=None):
-        if key == "class":
-            return self.class_list() or default
-        return self.attrs.get(key, default)
 
     def class_list(self) -> list[str]:
         if self._classes is None:
@@ -86,60 +91,31 @@ class Element:
             self._classes = raw.split() if raw else []
         return self._classes
 
+    # -- tree navigation (live links: a decomposed element has no parent
+    # and is no longer among its parent's children) --------------------------
     @property
-    def id(self):
-        return self.attrs.get("id")
+    def parent(self):
+        doc, i = self.doc, self.order
+        if i == 0 or doc.is_dropped(i):
+            return None
+        return doc.node(doc.el_parent[i])
 
-    # -- tree walks (iterative: real pages nest 1000+ levels deep, which
-    # overflows the python stack with recursive generators) ----------------
-    def iter(self):
-        """Yield self + all live descendant Elements, document order."""
-        if self.decomposed:
-            return
-        yield self
-        yield from self.descendants()
-
-    def iter_text_nodes(self):
-        """Live TextNodes in document order (list — every caller
-        consumes the walk fully; an explicit-stack list build avoids
-        per-node generator resume overhead in the hot path)."""
-        out: list = []
-        if self.decomposed:
-            return out
-        children, i = self.children, 0
-        stack: list = []
-        while True:
-            if i < len(children):
-                child = children[i]
-                i += 1
-                if type(child) is TextNode:
-                    out.append(child)
-                elif not child.decomposed:
-                    stack.append((children, i))
-                    children, i = child.children, 0
-            elif stack:
-                children, i = stack.pop()
-            else:
-                return out
-
-    def descendants(self):
-        """Live descendant Elements in document order (list; see
-        ``iter_text_nodes`` for why not a generator)."""
-        out: list = []
-        children, i = self.children, 0
-        stack: list = []
-        while True:
-            if i < len(children):
-                child = children[i]
-                i += 1
-                if type(child) is not TextNode and not child.decomposed:
-                    out.append(child)
-                    stack.append((children, i))
-                    children, i = child.children, 0
-            elif stack:
-                children, i = stack.pop()
-            else:
-                return out
+    @property
+    def children(self) -> list:
+        """Live child elements and text nodes, in document order."""
+        doc, r = self.doc, self.order
+        ends, text_start, text_end = doc.el_end, doc.el_text, doc.el_text_end
+        out = []
+        t, c = text_start[r], r + 1
+        while c < ends[r]:
+            while t < text_start[c]:  # text between children belongs to r
+                out.append(doc.text_node(t))
+                t += 1
+            if not doc.is_dropped(c):
+                out.append(doc.node(c))
+            t, c = text_end[c], ends[c]
+        out.extend(doc.text_node(t) for t in range(t, text_end[r]))
+        return out
 
     def ancestors(self):
         node = self.parent
@@ -150,47 +126,107 @@ class Element:
     def prev_element_sibling(self):
         if self.parent is None:
             return None
-        prev = None
-        for child in self.parent.children:
-            if child is self:
-                return prev
-            if isinstance(child, Element) and not child.decomposed:
-                prev = child
-        return None
+        doc, i, prev = self.doc, self.order, None
+        c = doc.el_parent[i] + 1
+        while c < i:
+            if not doc.is_dropped(c):
+                prev = c
+            c = doc.el_end[c]
+        return None if prev is None else doc.node(prev)
+
+    def descendants(self) -> list:
+        """Live descendant Elements in document order."""
+        node = self.doc.node
+        return [node(e) for lo, hi in self.doc.live_ranges(self.order) for e in range(lo, hi)]
+
+    def iter_text_nodes(self) -> list:
+        """Live TextNodes in document order (none if self is decomposed)."""
+        doc = self.doc
+        if doc.is_dropped(self.order):
+            return []
+        ranges = doc.live_text_ranges(self.order)
+        return [doc.text_node(t) for lo, hi in ranges for t in range(lo, hi)]
 
     # -- mutation -----------------------------------------------------------
     def decompose(self):
         """Remove this subtree from the document (W:1285-1287 analogue)."""
-        self.decomposed = True
-        if self.parent is not None:
-            # invalidate the owning document's clean-index guarantee
-            # BEFORE detaching (only a decompose inside the live tree can
-            # change liveness of indexed elements)
-            top = self
-            while top.parent is not None:
-                top = top.parent
-            if isinstance(top, Document):
-                top.decompose_epoch += 1
-            self.parent.children = [c for c in self.parent.children if c is not self]
-            self.parent = None
+        dropped = self.doc.dropped
+        k = bisect_left(dropped, self.order)
+        if k == len(dropped) or dropped[k] != self.order:
+            dropped.insert(k, self.order)
 
     # -- text assembly (the D6 kernel, W:815/W:1288) -------------------------
     def get_text(self, separator: str = "", strip: bool = False) -> str:
-        parts = []
-        for tn in self.iter_text_nodes():
-            s = tn.text
-            if strip:
-                s = s.strip()
-                if not s:
-                    continue
-            parts.append(s)
-        return separator.join(parts)
+        doc = self.doc
+        if doc.is_dropped(self.order):
+            return ""
+        texts = []
+        payload, tx_piece, bounds, decoded = doc.payload, doc.tx_piece, doc.pc_bounds, doc.pc_text
+        for lo, hi in doc.live_text_ranges(self.order):
+            for t in range(lo, hi):
+                p = tx_piece[t]
+                if tx_piece[t + 1] == p + 2 and p not in decoded:  # one literal piece
+                    texts.append(payload[bounds[p] : bounds[p + 1]])
+                else:
+                    texts.append("".join(q[0] for q in doc.pieces_of(t)))
+        if strip:
+            texts = [s for s in map(str.strip, texts) if s]
+        return separator.join(texts)
 
     def get_text_tracked(self, separator: str = "", strip: bool = False):
-        """Like get_text but returns a TrackedText with payload offsets."""
-        from webtext_extraction_spark.kernel.tracked import TrackedText
+        """Like get_text but returns a TrackedText with payload offsets:
+        a (start, len) run per kept piece (start -1 = synthetic), turned
+        into the offset array by one vectorized pass at the end."""
+        from webtext_extraction_spark.kernel.tracked import TrackedText, _offsets_from_runs
 
-        return TrackedText.from_text_nodes(self.iter_text_nodes(), separator, strip)
+        doc = self.doc
+        if doc.is_dropped(self.order):
+            return TrackedText.empty()
+        payload, tx_piece, bounds, decoded = doc.payload, doc.tx_piece, doc.pc_bounds, doc.pc_text
+        texts: list[str] = []
+        run_starts: list[int] = []  # src_start, or -1 for synthetic
+        run_lens: list[int] = []
+        sep_len = len(separator)
+        first = True
+        for lo, hi in doc.live_text_ranges(self.order):
+            for t in range(lo, hi):
+                p = tx_piece[t]
+                if tx_piece[t + 1] == p + 2 and p not in decoded:  # one literal piece
+                    pieces, s = None, payload[bounds[p] : bounds[p + 1]]
+                else:
+                    pieces = doc.pieces_of(t)
+                    s = "".join(q[0] for q in pieces)
+                a, b = 0, len(s)
+                if strip:
+                    stripped = s.strip()
+                    if not stripped:
+                        continue
+                    if len(stripped) != b:
+                        a = b - len(s.lstrip())
+                        b = a + len(stripped)
+                        s = stripped
+                if not first and separator:
+                    texts.append(separator)
+                    run_starts.append(-1)
+                    run_lens.append(sep_len)
+                first = False
+                if pieces is None:  # one literal piece: the kept window is one run
+                    texts.append(s)
+                    run_starts.append(bounds[p] + a)
+                    run_lens.append(b - a)
+                    continue
+                # multi-piece node: clip each piece to the [a, b) keep-window
+                pos = 0
+                for pt, ps, _pe, lit in pieces:
+                    lo_, hi_ = max(a - pos, 0), min(b - pos, len(pt))
+                    if hi_ > lo_:
+                        texts.append(pt[lo_:hi_])
+                        run_starts.append(ps + lo_ if lit else -1)
+                        run_lens.append(hi_ - lo_)
+                    pos += len(pt)
+        if first:
+            return TrackedText.empty()
+        return TrackedText("".join(texts), _offsets_from_runs(run_starts, run_lens))
 
     # -- queries -------------------------------------------------------------
     def select(self, selector: str) -> list["Element"]:
@@ -206,122 +242,159 @@ class Element:
         """Subset of bs4 find_all used by the per-site handlers
         (W:765, W:773, W:778, W:864, W:1157): match by tag-name list
         and/or predicates over the raw class string / id string."""
-        if isinstance(names, str):
-            names = [names]
-        candidates = None
-        if names is not None:
-            doc = owning_document(self)
-            if doc is not None:
-                idx = doc.ensure_index()
-                candidates = []
-                for n in dict.fromkeys(names):  # dedup: repeated names must not double-yield
-                    candidates.extend(idx.by_tag.get(n, ()))
-                if len(names) > 1:
-                    candidates.sort(key=_order_key)
-                if not (self is doc and doc.decompose_epoch == idx.epoch):
-                    candidates = [el for el in candidates if is_under(el, self)]
-        out = []
-        for el in candidates if candidates is not None else self.descendants():
-            if candidates is None and names is not None and el.name not in names:
-                continue
-            if class_pred is not None and not class_pred(el.attrs.get("class")):
-                continue
-            if id_pred is not None and not id_pred(el.attrs.get("id")):
-                continue
-            out.append(el)
-        return out
+        doc, attrs = self.doc, self.doc.el_attrs
+        if names is None:
+            found = [e for lo, hi in doc.live_ranges(self.order) for e in range(lo, hi)]
+        else:
+            # set: repeated names must not double-yield
+            found = sorted(e for n in set([names] if isinstance(names, str) else names)
+                           for e in doc.by_tag.get(n, ()))
+            found = doc.live_under(self.order, found)
+        return [
+            doc.node(e)
+            for e in found
+            if (class_pred is None or class_pred(attrs[e].get("class")))
+            and (id_pred is None or id_pred(attrs[e].get("id")))
+        ]
 
     def __repr__(self):  # pragma: no cover - debug aid
         return f"<{self.name} {self.attrs}>"
 
 
-class _DomIndex:
-    """Liveness-at-build-time snapshot of (tag|class|id|attr-name) →
-    doc-order element lists.  Queries taken at ``epoch`` ==
-    ``doc.decompose_epoch`` need no liveness re-check; after further
-    decomposes, candidates are re-verified with :func:`is_under`."""
-
-    __slots__ = ("by_tag", "by_class", "by_id", "by_attr", "epoch")
-
-    def __init__(self, root: "Document"):
-        self.by_tag: dict = {}
-        self.by_class: dict = {}
-        self.by_id: dict = {}
-        self.by_attr: dict = {}
-        self.epoch = root.decompose_epoch
-        for el in root.descendants():
-            self.by_tag.setdefault(el.name, []).append(el)
-            for c in el.class_list():
-                self.by_class.setdefault(c, []).append(el)
-            for k in el.attrs:
-                self.by_attr.setdefault(k, []).append(el)
-            i = el.attrs.get("id")
-            if i is not None:
-                self.by_id.setdefault(i, []).append(el)
-
-
-def _order_key(el) -> int:
-    return el.order
-
-
-def owning_document(el):
-    """The Document at the top of ``el``'s parent chain, or None when
-    the chain is broken (el sits in a decomposed/detached subtree)."""
-    node = el
-    while node.parent is not None:
-        node = node.parent
-    return node if isinstance(node, Document) else None
-
-
-def is_under(el, root) -> bool:
-    """True iff ``root`` is a PROPER ancestor of ``el`` along live
-    parent links — exactly the elements a ``root.descendants()`` walk
-    yields (decomposed subtrees are detached, breaking the chain)."""
-    node = el
-    while True:
-        parent = node.parent
-        if parent is None:
-            return False
-        if parent is root:
-            return True
-        node = parent
-
-
 class Document(Element):
-    """Root node; also exposes ``body`` and ``title`` (W:1341, W:1359).
+    """Root node (``order`` 0); also exposes ``body`` and ``title``
+    (W:1341, W:1359).
 
-    Carries the lazily-built ``_DomIndex`` and the ``decompose_epoch``
-    that keeps it honest under decomposition — see the structural
-    mutation invariant on :class:`Element`: parse-time append-only,
-    decompose-only afterwards, no attachment without index
-    invalidation."""
+    Holds the parse as parallel lists written by ``fastfeed.fast_feed``,
+    indexed by element pre-order position: ``el_tag``, ``el_attrs``,
+    ``el_parent``, ``el_end`` (one past the last descendant) and the
+    text-node interval ``[el_text, el_text_end)``.  Text node ``t`` has
+    parent ``tx_parent[t]`` and pieces ``pc_bounds[tx_piece[t]:tx_piece[t
+    + 1]]`` — flat (start, end) pairs; a piece whose position is a key
+    of ``pc_text`` is a decode with that text, any other is literal.
+    ``by_tag`` is filled during the parse, the other indexes by
+    ``ensure_index``; they hold every element, and liveness is read
+    from ``dropped`` at query time."""
 
-    def __init__(self):
-        super().__init__("[document]", {}, None)
-        self.decompose_epoch = 0
-        self._dom_index: _DomIndex | None = None
-        # document-order element list maintained by the parse-time
-        # builder (append-only pre-order == walk order); valid as a
-        # descendants() shortcut only while NOTHING has been decomposed
-        self._parse_order: list | None = None
+    __slots__ = (
+        "payload", "el_tag", "el_attrs", "el_parent", "el_end", "el_text", "el_text_end",
+        "tx_parent", "tx_piece", "pc_bounds", "pc_text", "by_tag", "by_class", "by_id",
+        "by_attr", "dropped", "_views", "_text_views",
+    )
 
-    def descendants(self):
-        if self.decompose_epoch == 0 and self._parse_order is not None:
-            return list(self._parse_order)
-        return super().descendants()
+    def __init__(self, payload: str):
+        self.payload = payload
+        self.el_tag, self.el_attrs, self.el_parent = ["[document]"], [{}], [-1]
+        self.el_end, self.el_text, self.el_text_end = [1], [0], [0]
+        self.tx_parent, self.tx_piece, self.pc_bounds, self.pc_text = [], [], [], {}
+        self.by_tag: dict[str, list[int]] = {}
+        self.by_class = self.by_id = self.by_attr = None
+        self.dropped: list[int] = []  # sorted indexes of decomposed elements
+        self._views = {0: self}
+        self._text_views: dict = {}
+        super().__init__(self, 0)
 
-    def ensure_index(self) -> _DomIndex:
-        if self._dom_index is None:
-            self._dom_index = _DomIndex(self)
-        return self._dom_index
+    def node(self, i: int) -> Element:
+        """The canonical view of element ``i``."""
+        view = self._views.get(i)
+        if view is None:
+            view = self._views[i] = Element(self, i)
+        return view
+
+    def text_node(self, t: int) -> TextNode:
+        view = self._text_views.get(t)
+        if view is None:
+            view = self._text_views[t] = TextNode(self, t)
+        return view
+
+    def pieces_of(self, t: int) -> list:
+        """Text node ``t``'s ``(text, src_start, src_end, literal)`` pieces."""
+        payload, bounds, decoded = self.payload, self.pc_bounds, self.pc_text
+        out = []
+        for p in range(self.tx_piece[t], self.tx_piece[t + 1], 2):
+            s, e = bounds[p], bounds[p + 1]
+            out.append((decoded[p], s, e, False) if p in decoded else (payload[s:e], s, e, True))
+        return out
+
+    @property
+    def pristine(self) -> bool:
+        """Nothing was decomposed: indistinguishable from a fresh parse."""
+        return not self.dropped
+
+    def is_dropped(self, i: int) -> bool:
+        dropped = self.dropped
+        k = bisect_left(dropped, i)
+        return k < len(dropped) and dropped[k] == i
+
+    def _cuts(self, r: int) -> list[int]:
+        """The outermost decomposed elements strictly inside ``r``."""
+        dropped = self.dropped
+        if not dropped:
+            return []
+        ends = self.el_end
+        out, reach = [], r + 1
+        for k in range(bisect_left(dropped, reach), len(dropped)):
+            d = dropped[k]
+            if d >= ends[r]:
+                break
+            if d >= reach:
+                out.append(d)
+                reach = ends[d]
+        return out
+
+    def live_ranges(self, r: int) -> list[tuple[int, int]]:
+        """Element index ranges of ``r``'s live descendants."""
+        lo = r + 1
+        out = []
+        for d in self._cuts(r):
+            out.append((lo, d))
+            lo = self.el_end[d]
+        out.append((lo, self.el_end[r]))
+        return out
+
+    def live_text_ranges(self, r: int) -> list[tuple[int, int]]:
+        """Text-node index ranges of ``r``'s live subtree."""
+        lo = self.el_text[r]
+        out = []
+        for d in self._cuts(r):
+            out.append((lo, self.el_text[d]))
+            lo = self.el_text_end[d]
+        out.append((lo, self.el_text_end[r]))
+        return out
+
+    def live_under(self, r: int, found) -> list[int]:
+        """The members of the ascending index list ``found`` that are
+        live descendants of ``r``."""
+        found = found[bisect_left(found, r + 1) : bisect_left(found, self.el_end[r])]
+        cuts = self._cuts(r)
+        if not cuts:
+            return found
+        ends = self.el_end
+        out = []
+        k = 0
+        for e in found:
+            while k < len(cuts) and ends[cuts[k]] <= e:
+                k += 1
+            if k == len(cuts) or e < cuts[k]:
+                out.append(e)
+        return out
+
+    def ensure_index(self) -> "Document":
+        """Build the class / id / attribute-name indexes (once)."""
+        if self.by_class is None:
+            self.by_class, self.by_id, self.by_attr = {}, {}, {}
+            for e, attrs in enumerate(self.el_attrs):
+                for k in attrs:
+                    self.by_attr.setdefault(k, []).append(e)
+                for c in (attrs.get("class") or "").split():
+                    self.by_class.setdefault(c, []).append(e)
+                if "id" in attrs:
+                    self.by_id.setdefault(attrs["id"], []).append(e)
+        return self
 
     def _first_named(self, name):
-        idx = self.ensure_index()
-        clean = self.decompose_epoch == idx.epoch
-        for el in idx.by_tag.get(name, ()):
-            if clean or is_under(el, self):
-                return el
-        return None
+        found = self.live_under(0, self.by_tag.get(name, []))
+        return self.node(found[0]) if found else None
 
     @property
     def body(self):
@@ -335,8 +408,8 @@ class Document(Element):
 def parse(payload: str) -> Document:
     """Parse an HTML payload into an offset-tracking Document tree.
 
-    The single-pass builder in html/fastfeed.py builds every node; it
-    is differentially tested against the stdlib parser in
+    The single-pass builder in html/fastfeed.py writes the flat tree;
+    it is differentially tested against the stdlib parser in
     tests/test_fastfeed_diff.py."""
     from webtext_extraction_spark.html.fastfeed import fast_feed  # imports this module
 

@@ -1,22 +1,20 @@
 """Single-pass HTML tree builder — stdlib semantics, batch-input speed.
 
-``fast_feed(payload)`` builds the ``dom.Document`` tree that CPython
+``fast_feed(payload)`` writes the ``dom.Document`` tree that CPython
 3.11's ``html.parser.HTMLParser`` (with ``convert_charrefs=False``)
-yields for ``feed(payload); close()`` through tree-building handlers —
-but in one flat loop over the full document that builds every node
-itself:
+yields for ``feed(payload); close()`` through tree-building handlers,
+in one flat loop over the full document that appends every element,
+text node and text piece to the Document's pre-order lists (no node
+objects; see ``dom.Document``):
 
 - every "incomplete construct, wait for more data" branch of
   ``goahead`` collapses into the end-of-input recovery (``end=1``),
   because the whole payload is available up front;
 - no per-event line/column bookkeeping, no ``rawdata`` re-slicing, no
-  handler-method dispatch: text pieces are appended with absolute
-  payload offsets, and every start or end tag reaches exactly one
+  handler-method dispatch: every start or end tag reaches exactly one
   inline element-open or element-close block;
 - the rare cases (an end tag that does not close the innermost
-  element, numeric character references, the text-run flush at a
-  comment / declaration / PI) are plain module functions, each called
-  from one place.
+  element, numeric character references) are plain module functions.
 
 All *tolerant-parsing* semantics (what counts as a tag, how broken
 markup degrades to data) come from the stdlib's own compiled regexes,
@@ -26,11 +24,8 @@ private to the pinned CPython, so on a layout without them this module
 fails to import instead of switching parser.
 
 Parity is checked against an independent oracle, the stdlib parser
-itself driving handler methods (``tests/stdlib_tree.py``):
-``tests/test_fastfeed_diff.py`` asserts tree equality over every
-fixture archetype, the e2e corpus, adversarial snippets and random
-mutations, and ``python scripts/soak_fastfeed.py`` runs the larger
-off-suite soak.
+itself driving handler methods (``tests/stdlib_tree.py``), by
+``tests/test_fastfeed_diff.py`` and ``python scripts/soak_fastfeed.py``.
 
 Reference: the original engine parses with BeautifulSoup's
 ``html.parser`` backend (W:1241 etc.); this builder preserves that
@@ -61,7 +56,7 @@ from html.parser import (
     tagfind_tolerant,
 )
 
-from webtext_extraction_spark.html.dom import Document, Element, TextNode
+from webtext_extraction_spark.html.dom import Document
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -180,7 +175,7 @@ def _parse_endtag(rawdata: str, i: int, in_cdata: bool):
     return rawdata.find(">", namematch.end()) + 1, namematch.group(1).lower()
 
 
-def _close_unmatched(stack: list, overflow: list, tag: str) -> None:
+def _close_unmatched(doc: Document, stack: list, overflow: list, tag: str) -> None:
     """An end tag that does not close the innermost open element (or
     arrives while flattened opens are pending): consume the most recent
     MATCHING flattened open, closing any flattened opens above it; an
@@ -191,12 +186,15 @@ def _close_unmatched(stack: list, overflow: list, tag: str) -> None:
             del overflow[i:]
             return
     for i in range(len(stack) - 1, 0, -1):
-        if stack[i].name == tag:
+        if doc.el_tag[stack[i]] == tag:
             # every flattened open is logically ABOVE any real-stack
             # element: closing a real element closes them all, so a
             # stale overflow entry must not swallow a later legitimate
             # close (ADVICE r02)
             overflow.clear()
+            for e in stack[i:]:
+                doc.el_end[e] = len(doc.el_tag)
+                doc.el_text_end[e] = len(doc.tx_parent)
             del stack[i:]
             return
 
@@ -218,13 +216,6 @@ def _charref_text(name: str, ref: str) -> str:
     if code in _invalid_codepoints:
         return ""
     return chr(code)
-
-
-def _flush_text(pending: list, parent) -> None:
-    """End the open text run at a comment / declaration / PI: those
-    contribute no text, but text on either side of one stays split."""
-    parent.children.append(TextNode(pending[:], parent))
-    pending.clear()
 
 
 def _parse_pi(rawdata: str, i: int) -> int:
@@ -285,20 +276,23 @@ def fast_feed(rawdata: str) -> Document:
     """Build the Document for ``rawdata`` — node for node the tree the
     stdlib parser's ``feed(rawdata); close()`` events build.
 
-    Adjacent data runs and entity decodes collect in ``pending`` and
-    become one logical TextNode at the next tag boundary (bs4's merged
-    strings); every piece is ``(text, start, end, literal)`` with
-    absolute payload offsets."""
-    root = Document()
-    root._parse_order = order_list = []
-    stack = [root]
-    pending: list = []
+    Adjacent data runs and entity decodes append (start, end) pairs to
+    ``pieces`` and become one logical text node at the next tag
+    boundary (bs4's merged strings); a decoded piece also records its
+    text in ``decoded``.  An element's subtree interval is closed when
+    it leaves the stack."""
+    doc = Document(rawdata)
+    tags, el_attrs, el_parent = doc.el_tag, doc.el_attrs, doc.el_parent
+    el_end, el_text, el_text_end = doc.el_end, doc.el_text, doc.el_text_end
+    tx_parent, tx_piece, decoded, by_tag = doc.tx_parent, doc.tx_piece, doc.pc_text, doc.by_tag
+    pieces = doc.pc_bounds  # flat (start, end) pairs
+    mark = 0  # pieces[mark:] is the open text run
+    stack = [0]
     # tag names of opens beyond MAX_DEPTH (attached flat, not pushed) —
     # names are kept so an end tag only consumes a flattened open it
     # actually matches; </body> arriving while a capped <div> is open
     # must reach the real stack (ADVICE r01)
     overflow: list = []
-    order = 0  # document pre-order counter (creation order)
     void_elements, max_depth, cdata_close = VOID_ELEMENTS, MAX_DEPTH, _CDATA_CLOSE
     n = len(rawdata)
     i = 0
@@ -319,7 +313,7 @@ def fast_feed(rawdata: str) -> Document:
         else:
             j = n
         if i < j:
-            pending.append((rawdata[i:j], i, j, True))
+            pieces += (i, j)
         i = j
         if i == n:
             break
@@ -342,27 +336,34 @@ def fast_feed(rawdata: str) -> Document:
                 else:
                     k, tag, attrs, slash = _parse_starttag(rawdata, i)
                 if tag is not None:
-                    # element open ('/>' attaches without pushing)
+                    # element open ('/>' attaches without pushing); its
+                    # interval is a leaf's until it is pushed and closed
                     parent = stack[-1]
-                    if pending:
-                        parent.children.append(TextNode(pending[:], parent))
-                        pending.clear()
-                    order += 1
-                    el = Element(tag, attrs, parent, order)
-                    parent.children.append(el)
-                    order_list.append(el)
+                    if len(pieces) > mark:
+                        tx_piece.append(mark)
+                        tx_parent.append(parent)
+                        mark = len(pieces)
+                    e = len(tags)
+                    tags.append(tag)
+                    el_attrs.append(attrs)
+                    el_parent.append(parent)
+                    el_end.append(e + 1)
+                    nt = len(tx_parent)
+                    el_text.append(nt)
+                    el_text_end.append(nt)
+                    by_tag.setdefault(tag, []).append(e)
                     if not slash:
                         if tag not in void_elements:
                             if len(stack) >= max_depth:
                                 overflow.append(tag)  # attach flat
                             else:
-                                stack.append(el)
+                                stack.append(e)
                         if tag in cdata_close:
                             interesting = cdata_close[tag]
                     i = k
                     continue
                 if k >= 0:  # not a tag after all: character data
-                    pending.append((rawdata[i:k], i, k, True))
+                    pieces += (i, k)
                     i = k
                     continue
             elif nxt == "/":
@@ -377,20 +378,22 @@ def fast_feed(rawdata: str) -> Document:
                     k, tag = _parse_endtag(rawdata, i, interesting is not interesting_normal)
                 if tag is not None:
                     # element close
-                    if pending:
-                        parent = stack[-1]
-                        parent.children.append(TextNode(pending[:], parent))
-                        pending.clear()
-                    if not overflow and len(stack) > 1 and stack[-1].name == tag:
-                        stack.pop()  # innermost match
+                    if len(pieces) > mark:
+                        tx_piece.append(mark)
+                        tx_parent.append(stack[-1])
+                        mark = len(pieces)
+                    if not overflow and len(stack) > 1 and tags[stack[-1]] == tag:
+                        e = stack.pop()  # innermost match
+                        el_end[e] = len(tags)
+                        el_text_end[e] = len(tx_parent)
                     else:
-                        _close_unmatched(stack, overflow, tag)
+                        _close_unmatched(doc, stack, overflow, tag)
                     interesting = interesting_normal  # clear_cdata_mode
                     i = k
                     continue
                 if interesting is not interesting_normal:
                     # a script/style closer that closes nothing: data
-                    pending.append((rawdata[i:k], i, k, True))
+                    pieces += (i, k)
                     i = k
                     continue
             elif nxt == "!":
@@ -398,7 +401,7 @@ def fast_feed(rawdata: str) -> Document:
             elif nxt == "?":
                 k = _parse_pi(rawdata, i)
             elif i + 1 < n:
-                pending.append(("<", i, i + 1, True))
+                pieces += (i, i + 1)  # a '<' that opens nothing
                 i += 1
                 continue
             else:
@@ -417,9 +420,13 @@ def fast_feed(rawdata: str) -> Document:
                         k = i + 1
                 else:
                     k += 1
-                pending.append((rawdata[i:k], i, k, True))
-            elif pending:  # a comment / declaration / PI ends the text run
-                _flush_text(pending, stack[-1])
+                pieces += (i, k)
+            elif len(pieces) > mark:
+                # a comment / declaration / PI contributes no text, but
+                # text on either side of one stays split
+                tx_piece.append(mark)
+                tx_parent.append(stack[-1])
+                mark = len(pieces)
             i = k
         elif rawdata.startswith("&#", i):
             match = charref.match(rawdata, i)
@@ -427,11 +434,12 @@ def fast_feed(rawdata: str) -> Document:
                 k = match.end()
                 if not rawdata.startswith(";", k - 1):
                     k -= 1
-                pending.append((_charref_text(match.group()[2:-1], rawdata[i:k]), i, k, False))
+                decoded[len(pieces)] = _charref_text(match.group()[2:-1], rawdata[i:k])
+                pieces += (i, k)
                 i = k
                 continue
             if ";" in rawdata[i:]:  # stdlib: bail by consuming '&#'
-                pending.append((rawdata[i : i + 2], i, i + 2, True))
+                pieces += (i, i + 2)
                 i += 2
                 if not bailed:
                     # feed-pass break: the close pass re-parses the rest
@@ -444,7 +452,8 @@ def fast_feed(rawdata: str) -> Document:
                 k = match.end()
                 if not rawdata.startswith(";", k - 1):
                     k -= 1
-                pending.append((unescape(rawdata[i:k]), i, k, False))
+                decoded[len(pieces)] = unescape(rawdata[i:k])
+                pieces += (i, k)
                 i = k
                 continue
             match = incomplete.match(rawdata, i)
@@ -453,14 +462,18 @@ def fast_feed(rawdata: str) -> Document:
                     i += 1  # stdlib drops the '&' at EOF
                 break
             if i + 1 < n:
-                pending.append(("&", i, i + 1, True))
+                pieces += (i, i + 1)
                 i += 1
             else:
                 break
     # trailing emit (end=1; suppressed in CDATA mode, like the stdlib)
     if i < n and interesting is interesting_normal:
-        pending.append((rawdata[i:n], i, n, True))
-    if pending:
-        parent = stack[-1]
-        parent.children.append(TextNode(pending, parent))
-    return root
+        pieces += (i, n)
+    if len(pieces) > mark:
+        tx_piece.append(mark)
+        tx_parent.append(stack[-1])
+    tx_piece.append(len(pieces))  # end of the last text node's pieces
+    for e in stack:  # still open at end of input
+        el_end[e] = len(tags)
+        el_text_end[e] = len(tx_parent)
+    return doc

@@ -205,18 +205,16 @@ def _compile_decompose_set(selectors: tuple[str, ...]):
 
 
 def decompose_all(root, selectors: list[str]) -> None:
-    """Decompose every descendant matching ANY selector — single tree
-    walk instead of one walk per selector.  Final tree state is
-    identical to sequential per-selector select+decompose (decomposing
-    a node inside an already-collected subtree is a no-op) — EXCEPT for
-    adjacent-sibling (``+``) chains, whose matches can depend on
-    earlier decompositions; any selector containing one is applied
-    sequentially first to preserve the invariant (round-3 review; all
-    built-in unwanted-selector sets are bare tags / single classes, so
-    this path is cold).
+    """Decompose every descendant matching ANY selector — one pass over
+    the root's live index range instead of one walk per selector.  The
+    final tree equals sequential per-selector select+decompose, except
+    with adjacent-sibling (``+``) chains, whose matches can depend on
+    earlier decompositions: a batch containing one is applied
+    sequentially (round-3 review; the built-in batches have none).
 
     Bare-tag and single-class compounds (all 26 boilerplate selectors)
-    collapse into two set-membership tests per element."""
+    are two set-membership tests per element, read from the Document's
+    lists without creating element views."""
     simple_tags, simple_classes, complex_chains, has_adjacent = (
         _compile_decompose_set(tuple(selectors))
     )
@@ -226,71 +224,56 @@ def decompose_all(root, selectors: list[str]) -> None:
             for el in select(root, s):
                 el.decompose()
         return
+    doc = root.doc
+    tags, attrs = doc.el_tag, doc.el_attrs
     matches = []
-    for el in root.descendants():
-        if el.name in simple_tags:
-            matches.append(el)
-            continue
-        if simple_classes and not simple_classes.isdisjoint(el.class_list()):
-            matches.append(el)
-            continue
-        for chain in complex_chains:
-            if _chain_matches(el, chain, len(chain) - 1):
-                matches.append(el)
-                break
-    for el in matches:
-        el.decompose()
+    for lo, hi in doc.live_ranges(root.order):
+        for e in range(lo, hi):
+            if tags[e] in simple_tags:
+                matches.append(e)
+                continue
+            if simple_classes:
+                raw = attrs[e].get("class")
+                if raw and not simple_classes.isdisjoint(raw.split()):
+                    matches.append(e)
+                    continue
+            for chain in complex_chains:
+                if _chain_matches(doc.node(e), chain, len(chain) - 1):
+                    matches.append(e)
+                    break
+    for e in matches:
+        doc.node(e).decompose()
 
 
-def _index_candidates(idx, compound):
-    """Doc-order candidate list for a compound from the most selective
-    available index key, or None when the compound is unindexable
-    (bare ``*``)."""
+def _index_candidates(doc, compound):
+    """Ascending candidate index list for a compound from the most
+    selective available index key (every element for a bare ``*``)."""
     if compound.ids:
-        return idx.by_id.get(compound.ids[0], ())
+        return doc.ensure_index().by_id.get(compound.ids[0], [])
     if compound.classes:
-        return idx.by_class.get(compound.classes[0], ())
+        return doc.ensure_index().by_class.get(compound.classes[0], [])
     if compound.tag and compound.tag != "*":
-        return idx.by_tag.get(compound.tag, ())
+        return doc.by_tag.get(compound.tag, [])
     if compound.attrs:
-        return idx.by_attr.get(compound.attrs[0][0], ())
-    return None
+        return doc.ensure_index().by_attr.get(compound.attrs[0][0], [])
+    return range(len(doc.el_tag))
 
 
 def select(root, selector: str) -> list:
     """All live descendant elements of ``root`` matching ``selector``,
     in document order (bs4 ``select`` contract).
 
-    Fast path: candidates come from the owning Document's lazy
-    tag/class/id/attr index (one walk per document, ever) and are
-    re-verified for liveness/containment only when the tree mutated
-    since the index was built — instead of one full tree walk per
-    ``select`` call.  Results are identical to the walk."""
-    from webtext_extraction_spark.html.dom import is_under, owning_document
-
-    groups = _parse_selector(selector)
-    doc = owning_document(root)
-    if doc is not None:
-        idx = doc.ensure_index()
-        per_chain = [_index_candidates(idx, chain[-1][1]) for chain in groups]
-        if all(c is not None for c in per_chain):
-            clean = root is doc and doc.decompose_epoch == idx.epoch
-            hits: dict[int, object] = {}
-            for chain, cands in zip(groups, per_chain):
-                last_idx = len(chain) - 1
-                for el in cands:
-                    if el.order in hits:
-                        continue
-                    if not (clean or is_under(el, root)):
-                        continue
-                    if _chain_matches(el, chain, last_idx):
-                        hits[el.order] = el
-            return [hits[k] for k in sorted(hits)]
-    # walk fallback: detached root or unindexable compound
-    out = []
-    for el in root.descendants():
-        for chain in groups:
-            if _chain_matches(el, chain, len(chain) - 1):
-                out.append(el)
-                break
-    return out
+    Candidates come from the Document's tag/class/id/attr index and are
+    kept when they lie in the root's live index range — instead of one
+    full tree walk per ``select`` call.  Results are identical to the
+    walk."""
+    doc = root.doc
+    hits: dict[int, object] = {}
+    for chain in _parse_selector(selector):
+        last_idx = len(chain) - 1
+        for e in doc.live_under(root.order, _index_candidates(doc, chain[-1][1])):
+            if e not in hits:
+                el = doc.node(e)
+                if _chain_matches(el, chain, last_idx):
+                    hits[e] = el
+    return [hits[k] for k in sorted(hits)]

@@ -16,8 +16,9 @@ pandas UDFs (operators/extraction.py) — never per-row Spark Python.
 
 Returned record: (text, spans, strategy, status) with
 status ∈ {ok, pdf_empty, failure_template, timeout, empty}.
-(error_pattern status is layered on afterwards by the status operator,
-mirroring save_results W:1557-1656 which scans final text.)
+(error_pattern status is layered on afterwards by the extraction batch,
+operators/extraction._extract_batch, mirroring save_results
+W:1557-1656 which scans final text.)
 """
 
 from __future__ import annotations
@@ -180,7 +181,7 @@ def _selenium_variant(
     a fresh parse, then the W:1216 body fallback with keep-longer.
 
     ``pristine_dom``: an existing parse of the SAME payload whose tree
-    was never mutated (``decompose_epoch == 0``) — indistinguishable
+    was never mutated (``dom.pristine``) — indistinguishable
     from a fresh parse, so the re-parse is skipped.  Callers must not
     use the tree afterwards (this variant mutates it)."""
     dom = pristine_dom if pristine_dom is not None else htmldom.parse(payload)
@@ -334,7 +335,7 @@ def _extract_payload_unsafe(
 
     # 4. requests-path extraction (W:446-537) — a handler-path tree the
     # handler never mutated is identical to a fresh parse; reuse it
-    if sdom is not None and sdom.decompose_epoch == 0:
+    if sdom is not None and sdom.pristine:
         dom = sdom
     else:
         dom = htmldom.parse(payload)
@@ -350,7 +351,7 @@ def _extract_payload_unsafe(
     if extracted is None or len(extracted.text.strip()) < rules.SUCCESS_MIN_CHARS:
         selenium_tt, selenium_strategy = _selenium_variant(
             payload, domain, site_rules,
-            pristine_dom=dom if dom.decompose_epoch == 0 else None,
+            pristine_dom=dom if dom.pristine else None,
         )
         if selenium_tt.text and len(selenium_tt.text.strip()) >= rules.SUCCESS_MIN_CHARS:
             extracted, strategy = selenium_tt, selenium_strategy

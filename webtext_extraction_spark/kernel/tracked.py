@@ -22,6 +22,7 @@ the reconstruction invariant (FIXTURES.md §2).
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import numpy as np
@@ -51,11 +52,6 @@ def _offsets_from_runs(run_starts: list[int], run_lens: list[int]) -> np.ndarray
     )
 
 
-def _chain_one(first, rest):
-    yield first
-    yield from rest
-
-
 class TrackedText:
     __slots__ = ("text", "off")
 
@@ -79,78 +75,10 @@ class TrackedText:
     @classmethod
     def from_pieces(cls, pieces) -> "TrackedText":
         """From DOM text-node pieces (text, src_start, src_end, literal)."""
-        if not pieces:
-            return cls.empty()
-        if len(pieces) == 1:  # the overwhelmingly common shape: one literal run
-            text, start, _end, lit = pieces[0]
-            if lit:
-                return cls(text, np.arange(start, start + len(text), dtype=np.int64))
-            return cls(text, np.full(len(text), -1, dtype=np.int64))
-        texts = []
-        offs = []
-        for text, start, _end, lit in pieces:
-            texts.append(text)
-            if lit:
-                offs.append(np.arange(start, start + len(text), dtype=np.int64))
-            else:
-                offs.append(np.full(len(text), -1, dtype=np.int64))
-        return cls("".join(texts), np.concatenate(offs))
-
-    @classmethod
-    def from_text_nodes(cls, nodes, separator: str = "", strip: bool = False) -> "TrackedText":
-        """Assemble DOM TextNodes into one TrackedText — result identical
-        to ``join(separator, [from_pieces(n.pieces).strip()? for n])``
-        but flat: per kept piece only a (start, len) RUN tuple is
-        recorded (start -1 = synthetic) and the whole offset array is
-        built by ONE vectorized repeat+arange pass at the end — no
-        per-piece numpy arrays, no concatenate of dozens of small
-        arrays (the hot path of ``get_text_tracked`` on large pages)."""
-        texts: list[str] = []
-        run_starts: list[int] = []  # src_start, or -1 for synthetic
-        run_lens: list[int] = []
-        sep_len = len(separator)
-        first = True
-        for tn in nodes:
-            pieces = tn.pieces
-            if len(pieces) == 1:
-                t = pieces[0][0]
-            else:
-                t = "".join(p[0] for p in pieces)
-            a, b = 0, len(t)
-            if strip:
-                stripped = t.strip()
-                if not stripped:
-                    continue
-                if len(stripped) == len(t):  # nothing stripped — skip lstrip
-                    b = len(t)
-                else:
-                    a = len(t) - len(t.lstrip())
-                    b = a + len(stripped)
-            if not first and separator:
-                texts.append(separator)
-                run_starts.append(-1)
-                run_lens.append(sep_len)
-            first = False
-            if len(pieces) == 1:
-                if b > a:
-                    texts.append(t[a:b])
-                    p0 = pieces[0]
-                    run_starts.append(p0[1] + a if p0[3] else -1)
-                    run_lens.append(b - a)
-                continue
-            # multi-piece node: clip each piece to the [a, b) keep-window
-            pos = 0
-            for pt, ps, _pe, lit in pieces:
-                pn = len(pt)
-                lo, hi = max(a - pos, 0), min(b - pos, pn)
-                if hi > lo:
-                    texts.append(pt[lo:hi])
-                    run_starts.append(ps + lo if lit else -1)
-                    run_lens.append(hi - lo)
-                pos += pn
-        if first:
-            return cls.empty()
-        return cls("".join(texts), _offsets_from_runs(run_starts, run_lens))
+        return cls(
+            "".join(p[0] for p in pieces),
+            _offsets_from_runs([p[1] if p[3] else -1 for p in pieces], [len(p[0]) for p in pieces]),
+        )
 
     @classmethod
     def join(cls, sep: str, parts: list["TrackedText"]) -> "TrackedText":
@@ -201,7 +129,7 @@ class TrackedText:
         pieces_t, pieces_o = [], []
         pos = 0
         repl_off = np.full(len(repl), -1, dtype=np.int64)
-        for m in _chain_one(first, it):
+        for m in itertools.chain((first,), it):
             s, e = m.span()
             pieces_t.append(self.text[pos:s])
             pieces_o.append(self.off[pos:s])

@@ -17,12 +17,18 @@ Design notes (SURVEY.md §2.11, §4):
 - The rule bundle travels to executors once per job via
   ``SparkContext.broadcast`` (J3 — rule-table broadcast); the UDF
   closure only captures the broadcast handle.
-- Everything around the UDF (status layering, ordering, filtering) is
-  built-in column expressions → whole-stage codegen.
+- The F6 error-pattern status is set inside the batch, on the final
+  text the kernel just produced (a Python ``in`` per pattern), not by
+  JVM ``contains`` scans over the output column afterwards;
+  ``with_error_pattern_status`` is the retro-scan of an existing table.
+- Everything around the UDF (ordering, filtering) is built-in column
+  expressions → whole-stage codegen.
 - No per-row Python UDF anywhere (input_hint requirement).
 """
 
 from __future__ import annotations
+
+from operator import itemgetter
 
 import pandas as pd
 import pyarrow as pa
@@ -91,6 +97,9 @@ _PA_RESULT_TYPE = pa.struct(
 )
 
 
+_START, _END, _KIND = itemgetter(0), itemgetter(1), itemgetter(2)  # span tuple fields
+
+
 def _extract_batch(
     texts: pa.Array, tools: pa.Array, site_rules: dict | None = None
 ) -> pa.Array:
@@ -104,7 +113,10 @@ def _extract_batch(
     # pages built ~7M short-lived dicts, and CPython's gen-2 GC
     # rescanning millions of live objects dominated the batch (2-6×
     # wall-clock swings at local[32], scripts/bench_heavy.py).  Flat
-    # lists keep the object count O(rows + spans) primitives.
+    # lists keep the object count O(rows + spans) primitives; the
+    # kernel's (start, end, kind) span tuples are split into them by
+    # three C-level extends per row (no per-span Python code), and die
+    # with their row, so the tuple free list serves the next row.
     ex_texts: list = []
     strategies: list = []
     statuses: list = []
@@ -120,6 +132,7 @@ def _extract_batch(
     # copy the result columns (O(spans) appends vs ms of kernel work).
     # Keys reference strings already held by the batch — no copies.
     memo: dict = {}
+    error_patterns = rules_mod.ERROR_PATTERNS
     for payload, tool in zip(texts.to_pylist(), tools.to_pylist()):
         if not isinstance(payload, str):
             payload = ""
@@ -141,20 +154,24 @@ def _extract_batch(
         lo = len(starts)
         url, domain = derive_url_and_domain(payload)
         result = extract_payload(payload, tool, site_rules, url_domain=(url, domain))
+        status = result.status
+        # F6 — an ok row whose final text contains an error pattern
+        # (save_results → detect_browser_errors, W:1408-1455)
+        if status == "ok" and any(p in result.text for p in error_patterns):
+            status = "error_pattern"
         ex_texts.append(result.text)
         strategies.append(result.strategy)
-        statuses.append(result.status)
+        statuses.append(status)
         urls.append(url)
         domains.append(domain)
-        for s in result.spans:
-            starts.append(s[0])
-            ends.append(s[1])
-            kinds.append(s[2])
+        starts.extend(map(_START, result.spans))
+        ends.extend(map(_END, result.spans))
+        kinds.extend(map(_KIND, result.spans))
         span_offsets.append(len(starts))
         memo[(payload, tool)] = (
             result.text,
             result.strategy,
-            result.status,
+            status,
             url,
             domain,
             lo,
@@ -235,15 +252,16 @@ def with_error_pattern_status(
     text_col: str = "extracted_text",
     patterns: list[str] | None = None,
 ) -> DataFrame:
-    """F6 — mark rows whose final text *contains* any broadcast error
-    pattern (save_results → detect_browser_errors, W:1408-1455).
+    """F6 retro-scan — mark ``ok`` rows whose final text *contains* any
+    error pattern (save_results → detect_browser_errors, W:1408-1455).
     Pure column expressions (JVM/codegen); the pattern list is tiny and
     inlined as literals — the Catalyst analogue of a broadcast.
 
-    Passing ``patterns`` re-scans an EXISTING extraction table with an
-    updated rule set without re-running extraction — the engine's
-    version of cleanup_error_pages.py (CE:100-195), which retro-scans
-    outputs when config.ini patterns change."""
+    ``extract_turns`` already applies the built-in patterns inside the
+    extraction batch; this re-scans an EXISTING extraction table with an
+    updated rule set (``patterns``) without re-running extraction — the
+    engine's version of cleanup_error_pages.py (CE:100-195), which
+    retro-scans outputs when config.ini patterns change."""
     pattern_hit = None
     for pattern in patterns if patterns is not None else rules_mod.ERROR_PATTERNS:
         cond = F.col(text_col).contains(pattern)
@@ -277,7 +295,7 @@ def extract_turns(df: DataFrame, site_rules: dict | None = None) -> DataFrame:
     )
     carried = [c for c in df.columns if c != "text"]
     result = df.withColumn("_ex", udf(F.col("text"), F.col("tool")))
-    result = result.select(
+    return result.select(
         *carried,
         F.col("_ex.extracted_text").alias("extracted_text"),
         F.col("_ex.spans").alias("spans"),
@@ -286,7 +304,6 @@ def extract_turns(df: DataFrame, site_rules: dict | None = None) -> DataFrame:
         F.col("_ex.url").alias("url"),
         F.col("_ex.domain").alias("domain"),
     )
-    return with_error_pattern_status(result)
 
 
 def extract_turns_distinct(

@@ -2,8 +2,8 @@
 
 ``extraction_pipeline`` is the flagship logical plan:
 scan → [salted repartition ONLY if skew detected] → extract (one
-pandas UDF) → status layer.  Everything before and after the UDF is
-Catalyst-visible; filters on conv_id/tool push into the parquet/
+Arrow UDF; the F6 status is set inside its batch).  Everything before
+and after the UDF is Catalyst-visible; filters on conv_id/tool push into the parquet/
 Iceberg scan.
 
 Why the shuffle is conditional: scan splits are already byte-balanced
