@@ -13,6 +13,8 @@ Cluster usage (north rule: multi-executor, N and 4N):
 Config precedence (reference analogue W:1758-1789: CLI > config.ini >
 default): CLI args > spark conf > defaults.  The job is resumable:
 re-running with the same --output skips lineage-committed buckets.
+The job's last stdout line is its summary as one JSON object
+(``buckets_done``, ``rows``; ``span_ok``/``span_mismatch`` with --audit).
 On an Iceberg deployment, --input takes a table identifier and the
 scan becomes ``spark.read.format("iceberg").load(...)`` — everything
 downstream is unchanged.
@@ -21,6 +23,7 @@ downstream is unchanged.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
@@ -76,8 +79,6 @@ def main(argv=None):
 
     site_rules = None
     if args.rules:
-        import json
-
         from webtext_extraction_spark import rules as rules_mod
 
         site_rules = dict(rules_mod.DOMAIN_SELECTORS)
@@ -97,7 +98,7 @@ def main(argv=None):
         write_partitions=args.write_partitions,
         audit=args.audit,
     )
-    print(f"extraction complete: {summary}")
+    print(json.dumps(summary))
     spark.stop()
 
 

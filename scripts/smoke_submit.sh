@@ -9,11 +9,36 @@ python - <<EOF
 import shutil
 shutil.make_archive("$workdir/engine", "zip", root_dir=".", base_dir="webtext_extraction_spark")
 EOF
-spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
-  --conf spark.ui.enabled=false \
-  jobs/run_extract.py --synth-convs 60 --output "$workdir/out" --num-buckets 8
+extract() {
+  spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
+    --conf spark.ui.enabled=false \
+    jobs/run_extract.py --synth-convs 60 --output "$workdir/out" --num-buckets 8
+}
+# the lineage reconciles with the output: one row per bucket and
+# sum(rows) equal to the data row count
+reconcile() {
+  python - <<EOF
+import duckdb
+n, buckets, rows = duckdb.sql(
+    "SELECT count(*), count(DISTINCT bucket), sum(rows) "
+    "FROM read_parquet('$workdir/out/_lineage/*.parquet')"
+).fetchone()
+data = duckdb.sql(
+    "SELECT count(*) FROM read_parquet('$workdir/out/data/*/*.parquet')"
+).fetchone()[0]
+assert n == buckets == 8, f"lineage rows {n}, buckets {buckets}: want one row per bucket"
+assert rows == data, f"lineage sum(rows) {rows} != data rows {data}"
+print(f"SMOKE OK: lineage of {n} buckets reconciles with {data} data rows")
+EOF
+}
+extract
 test -d "$workdir/out/_lineage" && test -d "$workdir/out/data"
-echo "SMOKE OK: $(ls "$workdir/out")"
+reconcile
+# a second submit over the same output is a no-op
+last=$(extract | tail -n 1)
+python -c "import json, sys; s = json.loads(sys.argv[1]); assert s['buckets_done'] == 0, s" "$last"
+reconcile
+echo "SMOKE OK: rerun committed nothing ($last)"
 # curation job over the driver-provided documents table (all gates on)
 spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
   --conf spark.ui.enabled=false \

@@ -1,5 +1,5 @@
-"""jobs/run_curate.py CLI: gate composition end-to-end in-process
-(the spark-submit deploy path itself is exercised by
+"""jobs/run_curate.py and jobs/run_extract.py CLIs end-to-end
+in-process (the spark-submit deploy path itself is exercised by
 scripts/smoke_submit.sh)."""
 
 import sys
@@ -319,3 +319,35 @@ def test_run_curate_incremental_nonmonotone_ids_drop_cross_crawl_dup(
     # 5 must DROP (its cluster contains prior 900) even though 5 < 900;
     # 6 is genuinely new
     assert kept == [6]
+
+
+def test_run_extract_resumes_then_noops(spark, tmp_path, monkeypatch, capsys):
+    """--buckets-per-commit commit, resume, rerun: every run ends with
+    one JSON summary line, the rerun commits nothing, and the lineage
+    reconciles with the output (one row per bucket, sum(rows) = data
+    rows)."""
+    import json
+
+    from jobs import run_extract
+
+    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch_rows = spark.conf.get(batch_key)
+    out = str(tmp_path / "extracted")
+    args = ["--synth-convs", "30", "--output", out, "--num-buckets", "6"]
+    summaries = []
+    try:
+        for extra in (["--buckets-per-commit", "2"], [], []):
+            run_extract.main(args + extra)
+            summaries.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
+    finally:
+        spark.conf.set(batch_key, batch_rows)
+    assert summaries[0]["buckets_done"] == 2
+    assert summaries[1]["buckets_done"] == 4
+    assert summaries[2] == {"buckets_done": 0, "rows": 0}
+
+    lineage = spark.read.parquet(out + "/_lineage").collect()
+    data_rows = spark.read.parquet(out + "/data").count()
+    assert sorted(r["bucket"] for r in lineage) == list(range(6))
+    assert sum(r["rows"] for r in lineage) == data_rows
+    assert summaries[0]["rows"] + summaries[1]["rows"] == data_rows

@@ -70,72 +70,3 @@ def test_bucket_id_stable_across_partitionings(spark):
     }
     assert a == b
     assert all(0 <= v < 16 for v in a.values())
-
-
-def test_probe_dup_ratio_estimate(spark):
-    """estimate_dup_ratio: ~0 on an all-distinct corpus, high on a
-    corpus where one payload repeats many times (unsampled probe =
-    exact ratio)."""
-    from webtext_extraction_spark.operators.partitioning import probe_payload_stats
-
-    distinct_df = spark.createDataFrame(
-        [(f"c{i}", f"payload-{i}") for i in range(100)], ["conv_id", "text"]
-    )
-    stats = probe_payload_stats(distinct_df, estimate_dup_ratio=True)
-    assert stats["dup_ratio"] < 0.1
-
-    dup_df = spark.createDataFrame(
-        [(f"c{i}", "same payload" if i % 2 else f"payload-{i}") for i in range(100)],
-        ["conv_id", "text"],
-    )
-    stats = probe_payload_stats(dup_df, estimate_dup_ratio=True)
-    assert stats["dup_ratio"] > 0.35  # 50 dups of one payload => ~0.49
-
-    # default (and warm/bytes_col) probes never pay for the estimate
-    stats = probe_payload_stats(dup_df)
-    assert stats["dup_ratio"] == 0.0
-
-
-def test_pipeline_dedup_payloads_auto_trigger(spark, monkeypatch):
-    """dedup_payloads='auto' buys the global distinct path ONLY for
-    heavy rows with a high sampled dup ratio — never for KB pages
-    (where it measured a loss) or low-dup corpora."""
-    from webtext_extraction_spark.operators import extraction as ex_mod
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
-
-    calls = []
-    real = ex_mod.extract_turns_distinct
-    monkeypatch.setattr(
-        ex_mod,
-        "extract_turns_distinct",
-        lambda df, *a, **k: calls.append("distinct") or real(df, *a, **k),
-    )
-    heavy_payload = "<p>" + "x" * 200_000 + "</p>"
-    heavy_dups = spark.createDataFrame(
-        [(f"c{i}", 0, "tool", heavy_payload, "", None) for i in range(30)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    out = extraction_pipeline(
-        heavy_dups, salt_hot_keys=False, hot_sample_fraction=None, dedup_payloads="auto"
-    )
-    assert calls == ["distinct"]
-    assert out.count() == 30
-
-    calls.clear()
-    kb_dups = spark.createDataFrame(
-        [(f"c{i}", 0, "tool", "<p>small dup page</p>", "", None) for i in range(30)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    extraction_pipeline(
-        kb_dups, salt_hot_keys=False, hot_sample_fraction=None, dedup_payloads="auto"
-    ).count()
-    assert calls == []  # KB pages: global path is a measured loss
-
-    heavy_distinct = spark.createDataFrame(
-        [(f"c{i}", 0, "tool", heavy_payload[:-4] + f"{i}</p>", "", None) for i in range(30)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    extraction_pipeline(
-        heavy_distinct, salt_hot_keys=False, hot_sample_fraction=None, dedup_payloads="auto"
-    ).count()
-    assert calls == []  # heavy but no dups

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from webtext_extraction_spark.fixtures_pages import payload_for
 from webtext_extraction_spark.kernel.extract import extract_payload
 from webtext_extraction_spark.plans.lineage import (
-    completed_buckets,
+    read_lineage,
     read_output,
     run_extraction,
 )
@@ -229,7 +229,7 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
     # phase 1: only 3 buckets commit (simulated kill)
     r1 = run_extraction(spark, transcripts, phased, num_buckets=8, buckets_per_commit=3)
     assert r1["buckets_done"] == 3
-    assert len(completed_buckets(spark, phased)) == 3
+    assert len({r["bucket"] for r in read_lineage(spark, phased)}) == 3
     # phase 2: resume processes only the remaining buckets
     r2 = run_extraction(spark, transcripts, phased, num_buckets=8)
     assert r2["buckets_done"] == 8 - 3
@@ -257,20 +257,16 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
     shutil.rmtree(phased, ignore_errors=True)
 
 
-def test_resume_broadcast_anti_join_at_high_bucket_counts(spark, transcripts, tmp_path):
-    """VERDICT r02 #9: above isin_max_literals the completed-bucket
-    filter is a broadcast left_anti join, not a giant isin literal —
-    and resume at 4096 buckets still completes idempotently."""
+def test_resume_idempotent_at_4096_buckets(spark, transcripts, tmp_path):
+    """VERDICT r02 #9: resume at 4096 buckets completes idempotently —
+    completed buckets are dropped on the driver, so the plan carries no
+    resume filter however many buckets the lineage holds."""
     out = str(tmp_path / "hibuck")
-    # force the anti-join path with a tiny threshold
     r1 = run_extraction(
         spark, transcripts, out, num_buckets=4096, buckets_per_commit=5,
-        isin_max_literals=0,
     )
     assert r1["buckets_done"] == 5
-    r2 = run_extraction(
-        spark, transcripts, out, num_buckets=4096, isin_max_literals=0
-    )
+    r2 = run_extraction(spark, transcripts, out, num_buckets=4096)
     total_buckets = (
         transcripts.select(
             F.pmod(F.xxhash64("conv_id"), F.lit(4096)).cast("int").alias("b")
@@ -280,6 +276,39 @@ def test_resume_broadcast_anti_join_at_high_bucket_counts(spark, transcripts, tm
     rows = read_output(spark, out).select("conv_id", "turn_idx").collect()
     assert len(rows) == transcripts.count()
     assert len(set(rows)) == len(rows)
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_resumed_commit_job_count(spark, transcripts, tmp_path):
+    """A resumed commit runs at most 7 Spark jobs: one lineage read,
+    two for bucket discovery, two for the data commit, two for the
+    lineage commit."""
+    out = str(tmp_path / "jobs")
+    run_extraction(spark, transcripts, out, num_buckets=8, buckets_per_commit=3)
+    sc = spark.sparkContext
+    sc.setJobGroup("resumed-commit", "resumed commit")
+    try:
+        r = run_extraction(spark, transcripts, out, num_buckets=8, buckets_per_commit=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r["buckets_done"] == 3
+    jobs = sc.statusTracker().getJobIdsForGroup("resumed-commit")
+    assert 0 < len(jobs) <= 7, jobs
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_run_extraction_leaves_session_conf(spark, transcripts, tmp_path):
+    """Dynamic partition overwrite is a writer option: the caller's
+    session conf is the same after run_extraction as before."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = str(tmp_path / "conf")
+    spark.conf.set(key, "static")
+    try:
+        run_extraction(spark, transcripts, out, num_buckets=4)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)
     shutil.rmtree(out, ignore_errors=True)
 
 

@@ -73,10 +73,8 @@ def probe_payload_stats(
     skew_factor: float = 8.0,
     sample_fraction: float | None = None,
     bytes_col: str | None = None,
-    estimate_dup_ratio: bool = False,
 ) -> dict:
-    """One sampled probe → ``{"hot_keys": [...], "mean_row_bytes": f,
-    "dup_ratio": f}``.
+    """One sampled probe → ``{"hot_keys": [...], "mean_row_bytes": f}``.
 
     Extends the hot-key probe with the mean payload size per row —
     the CPU-cost proxy the flagship plan uses to pick task
@@ -85,54 +83,27 @@ def probe_payload_stats(
     (26-row scan splits of 0.7 MB pages measured 3-4× slower than
     96-way fine-grained tasks at local[32] — scripts/bench_heavy.py).
     Same scan shape as ``detect_hot_keys``; ``bytes_col`` takes
-    precomputed byte counts (warm runs).
-
-    ``estimate_dup_ratio`` (cold path only — the warm/bytes_col probe
-    never touches payloads): adds one aggregate over the same sampled
-    payloads — ``1 - approx_distinct(hash) / rows``.  Sampling thins
-    duplicate groups, so the estimate is a LOWER BOUND on the true
-    exact-dup ratio: the auto dedup-before-extract trigger only fires
-    on strong global duplication, the conservative direction."""
+    precomputed byte counts (warm runs)."""
     if bytes_col is not None:
         scan = df.select(key, F.col(bytes_col).alias("_bytes"))
     else:
         scan = df.select(key, F.length(F.col(payload)).alias("_bytes"))
-        if estimate_dup_ratio:
-            scan = df.select(
-                key,
-                F.length(F.col(payload)).alias("_bytes"),
-                F.xxhash64(F.coalesce(F.col(payload), F.lit(""))).alias("_ph"),
-            )
     if sample_fraction is not None:
         scan = scan.sample(fraction=sample_fraction, seed=42)
     per_key = scan.groupBy(key).agg(
         F.sum("_bytes").alias("_key_bytes"), F.count("*").alias("_rows")
     )
-    totals_df = per_key.agg(
+    totals = per_key.agg(
         F.avg("_key_bytes").alias("mean_key_bytes"),
         (F.sum("_key_bytes") / F.sum("_rows")).alias("mean_row_bytes"),
-    )
-    if estimate_dup_ratio and bytes_col is None:
-        # fold the dup estimate into the SAME probe job (one crossJoin
-        # of two 1-row aggregates) instead of a third driver round-trip
-        totals_df = totals_df.crossJoin(
-            scan.agg(
-                F.count("*").alias("_n"), F.approx_count_distinct("_ph").alias("_d")
-            )
-        )
-    totals = totals_df.first()
+    ).first()
     mean_key = totals["mean_key_bytes"] or 0.0
     hot = per_key.filter(
         F.col("_key_bytes") > int(mean_key * skew_factor)
     ).select(key)
-    dup_ratio = 0.0
-    if estimate_dup_ratio and bytes_col is None:
-        if totals["_n"]:
-            dup_ratio = max(0.0, 1.0 - totals["_d"] / totals["_n"])
     return {
         "hot_keys": [r[0] for r in hot.collect()],
         "mean_row_bytes": float(totals["mean_row_bytes"] or 0.0),
-        "dup_ratio": dup_ratio,
     }
 
 

@@ -5,9 +5,11 @@ Reference analogue: the completed_folder membership checkpoint
 
 - the input is bucketed by ``bucket_id = pmod(xxhash64(conv_id), B)``
   (stable across runs and partition counts);
-- each run processes only buckets absent from the lineage table
-  (anti-join semantics, J2);
-- output is written with dynamic partition overwrite on ``bucket``, so
+- each run processes only buckets absent from the lineage table; the
+  lineage is read once per run with a fixed schema and the completed
+  buckets are dropped on the driver;
+- output is written with dynamic partition overwrite on ``bucket`` (a
+  writer option, so the caller's session conf is untouched), so
   re-processing a bucket that crashed mid-write is idempotent
   (overwrite replaces any partial files);
 - a lineage row (bucket, rows, bytes_in, bytes_out, status counts,
@@ -20,6 +22,18 @@ Reference analogue: the completed_folder membership checkpoint
   The persisted payload_bytes column doubles as the warm-run skew
   probe (``warm_key_stats``).
 
+A resumed commit runs seven Spark jobs, and each has a reason to stay:
+
+1. the lineage read: one collect of (bucket, input_snapshot) — the
+   snapshot check and the resume set in one round-trip;
+2-3. bucket discovery: ``distinct`` over the column-pruned input scan
+   (shuffle map stage + result) — the input's bucket set is only known
+   by reading conv_id;
+4-5. the data commit: the (bucket, conv_id) write shuffle + the
+   partitioned write;
+6-7. the lineage commit: the per-bucket rollup shuffle + the append,
+   whose observed ``sum(rows)`` is the summary's row count.
+
 Storage is parquet directories (this sandbox has no Iceberg jars); the
 layout maps 1:1 onto an Iceberg table with ``bucket(conv_id)``
 partitioning where the lineage append and data append would share one
@@ -31,7 +45,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 
 from webtext_extraction_spark import rules
 from webtext_extraction_spark.operators.extraction import extract_turns
@@ -40,25 +54,29 @@ from webtext_extraction_spark.operators.partitioning import bucket_id
 LINEAGE_DIR = "_lineage"
 DATA_DIR = "data"
 
+# the lineage rows as run_extraction writes them; reading with a fixed
+# schema skips the parquet footer-inference job
+LINEAGE_SCHEMA = (
+    "bucket int, rows bigint, bytes_out bigint, rows_ok bigint, rows_not_ok bigint, "
+    "rows_in bigint, bytes_in bigint, rule_version string, input_snapshot string"
+)
 
-def completed_buckets(spark: SparkSession, output_path: str) -> list[int]:
+
+def read_lineage(spark: SparkSession, output_path: str) -> list[Row]:
+    """(bucket, input_snapshot) of every committed lineage row, in one
+    job; [] before the first commit.  A resume over a different
+    snapshot must be detected, not silently mixed (reference analogue:
+    completed_folder assumes one fixed URL list per run directory,
+    R:21-42)."""
     lineage_path = os.path.join(output_path, LINEAGE_DIR)
     if not os.path.exists(lineage_path):
         return []
-    lineage = spark.read.parquet(lineage_path)
-    return [r[0] for r in lineage.select("bucket").distinct().collect()]
-
-
-def lineage_snapshots(spark: SparkSession, output_path: str) -> set[str]:
-    """Distinct input_snapshot ids already committed to the lineage —
-    a resume over a different snapshot must be detected, not silently
-    mixed (reference analogue: completed_folder assumes one fixed URL
-    list per run directory, R:21-42)."""
-    lineage_path = os.path.join(output_path, LINEAGE_DIR)
-    if not os.path.exists(lineage_path):
-        return set()
-    lineage = spark.read.parquet(lineage_path)
-    return {r[0] for r in lineage.select("input_snapshot").distinct().collect()}
+    return (
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(lineage_path)
+        .select("bucket", "input_snapshot")
+        .collect()
+    )
 
 
 def run_extraction(
@@ -71,7 +89,6 @@ def run_extraction(
     site_rules: dict | None = None,
     write_partitions: int | None = None,
     audit: bool = False,
-    isin_max_literals: int = 256,
 ) -> dict:
     """Resumable bucketed extraction run.
 
@@ -89,15 +106,18 @@ def run_extraction(
     and adds span_ok/span_mismatch counts to the returned summary —
     the post-batch quality gate a production deployment schedules
     after each commit.
-    ``isin_max_literals`` caps the completed-bucket isin literal: above
-    it the resume filter becomes a broadcast left_anti join (constant
-    plan size at 10³-10⁴ buckets).
-    Returns summary counters.
+
+    A resumed commit runs seven Spark jobs (module docstring): one
+    lineage read, two for bucket discovery, two for the data commit,
+    two for the lineage commit.
+    Returns summary counters; ``rows`` is the observed ``sum(rows)`` of
+    the appended lineage rows.
     """
     data_path = os.path.join(output_path, DATA_DIR)
     lineage_path = os.path.join(output_path, LINEAGE_DIR)
 
-    seen_snapshots = lineage_snapshots(spark, output_path)
+    committed = read_lineage(spark, output_path)
+    seen_snapshots = {r["input_snapshot"] for r in committed}
     if seen_snapshots and seen_snapshots != {input_snapshot}:
         raise ValueError(
             f"resume over a different input snapshot: lineage has "
@@ -105,25 +125,14 @@ def run_extraction(
             "write to a fresh output_path (or re-run with the original "
             "snapshot) instead of mixing input versions"
         )
+    done = {r["bucket"] for r in committed}
 
-    done = completed_buckets(spark, output_path)
+    # discovery reads conv_id only (the payload column is pruned);
+    # completed buckets are dropped here on the driver, so the plan
+    # carries no resume filter at any bucket count
     src = transcripts.withColumn("bucket", bucket_id(F.col("conv_id"), num_buckets))
-    if done:
-        if len(done) <= isin_max_literals:
-            # tiny list → literal isin beats any join
-            src = src.filter(~F.col("bucket").isin(done))
-        else:
-            # thousands of buckets: a giant isin literal bloats the plan
-            # (codegen over 10³+ comparisons per row); broadcast
-            # left_anti keeps the plan constant-size and the join
-            # map-side (VERDICT r02 #9)
-            done_df = spark.createDataFrame(
-                [(int(b),) for b in done], "bucket int"
-            )
-            src = src.join(F.broadcast(done_df), "bucket", "left_anti")
-
     remaining = sorted(
-        r[0] for r in src.select("bucket").distinct().collect()
+        b for (b,) in src.select("bucket").distinct().collect() if b not in done
     )
     if buckets_per_commit is not None:
         remaining = remaining[:buckets_per_commit]
@@ -136,6 +145,7 @@ def run_extraction(
     # (extraction is 1:1 per turn) instead of a second full-payload
     # aggregate action.  payload_bytes also persists in the output table,
     # which gives warm re-runs a free skew probe (warm_key_stats).
+    # isin over more than 10 literals plans as an InSet hash lookup.
     batch = src.filter(F.col("bucket").isin(remaining)).withColumn(
         "payload_bytes", F.length("text")
     )
@@ -150,13 +160,13 @@ def run_extraction(
         write_partitions = max(
             len(remaining), 2 * spark.sparkContext.defaultParallelism
         )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         extracted.repartition(
             write_partitions, F.col("bucket"), F.xxhash64(F.col("conv_id"))
         )
         .sortWithinPartitions("bucket", "conv_id", "turn_idx")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(data_path)
     )
@@ -166,8 +176,13 @@ def run_extraction(
     # processed, extraction-rule version).  rows_in/bytes_in come from
     # the committed output (extraction is strictly 1:1 per turn and
     # payload_bytes was carried through), so this rollup never touches
-    # the input table.
-    out = spark.read.parquet(data_path).filter(F.col("bucket").isin(remaining))
+    # the input table.  The read-back takes the extraction's schema
+    # (no footer-inference job).
+    out = (
+        spark.read.schema(extracted.schema)
+        .parquet(data_path)
+        .filter(F.col("bucket").isin(remaining))
+    )
     lineage = (
         out.groupBy("bucket")
         .agg(
@@ -185,10 +200,12 @@ def run_extraction(
             "rows_in", "bytes_in", "rule_version", "input_snapshot",
         )
     )
-    lineage.write.mode("append").parquet(lineage_path)
+    committed_rows = Observation("committed_rows")
+    lineage.observe(committed_rows, F.sum("rows").alias("rows")).write.mode(
+        "append"
+    ).parquet(lineage_path)
 
-    rows = out.count()
-    summary = {"buckets_done": len(remaining), "rows": rows}
+    summary = {"buckets_done": len(remaining), "rows": committed_rows.get["rows"]}
 
     if audit:
         from webtext_extraction_spark.operators.extraction import audit_spans
@@ -218,7 +235,8 @@ def warm_key_stats(
     predates the payload_bytes column; callers fall back to the cold
     probe.  Partial prior runs are fine — byte skew per key is stable
     under per-bucket subsetting the same way it is under sampling."""
-    if input_snapshot not in lineage_snapshots(spark, output_path):
+    committed = read_lineage(spark, output_path)
+    if input_snapshot not in {r["input_snapshot"] for r in committed}:
         return None
     out = spark.read.parquet(os.path.join(output_path, DATA_DIR))
     if "payload_bytes" not in out.columns:

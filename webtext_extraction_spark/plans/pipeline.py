@@ -41,12 +41,6 @@ from webtext_extraction_spark.operators.partitioning import (
 # fine-grained repartition (scripts/bench_heavy.py).
 HEAVY_ROW_BYTES = 131072
 
-# minimum SAMPLED exact-dup ratio before dedup_payloads="auto" buys the
-# global distinct-extraction path; the sampled ratio is a lower bound on
-# the true one, and the path only measured a win on heavy rows (1.61× at
-# 67% dups on 0.7 MB pages vs 0.80× — a loss — on ~6 KB pages).
-DEDUP_MIN_DUP_RATIO = 0.3
-
 
 def extraction_pipeline(
     transcripts: DataFrame,
@@ -54,7 +48,6 @@ def extraction_pipeline(
     salt_hot_keys: bool | str = "auto",
     hot_sample_fraction: float = 0.1,
     warm_stats: DataFrame | None = None,
-    dedup_payloads: bool | str = False,
 ) -> DataFrame:
     """The flagship plan.  Ordering is NOT forced here (keys travel with
     every row); callers that need the stable output order add
@@ -86,52 +79,19 @@ def extraction_pipeline(
       transport/compute overlap cost 3-4× (measured,
       scripts/bench_heavy.py).
 
-    ``dedup_payloads``:
-    - ``False`` (default): co-located exact-dup pages are still
-      collapsed for free by the batch-local memo inside the UDF.
-    - ``True``: always extract via ``extract_turns_distinct`` (global
-      distinct-payload extraction; two digest-keyed shuffles).
-    - ``"auto"``: the probe additionally estimates the sampled
-      exact-dup ratio (a lower bound); the global path is bought only
-      in the regime where it measured a WIN — heavy rows AND dup
-      ratio ≥ ``DEDUP_MIN_DUP_RATIO`` (0.7 MB pages at 67% dups:
-      1.61×; ~6 KB pages at the same dup ratio: 0.80×, i.e. a LOSS —
-      OPERATORS.md).  Requires a cold probe (ignored with
-      ``warm_stats``, which never sees payloads).
+    Co-located exact-dup pages are collapsed for free by the batch-local
+    memo inside the UDF; global distinct-payload extraction is the
+    explicit ``extraction.extract_turns_distinct``.
     """
     hot = None
     heavy_rows = False
-    heavy_for_dedup = False
-    dup_ratio = 0.0
-    want_probe = salt_hot_keys is True or salt_hot_keys == "auto"
-    if want_probe or dedup_payloads == "auto":
+    if salt_hot_keys is True or salt_hot_keys == "auto":
         if warm_stats is not None:
             stats = probe_payload_stats(warm_stats, bytes_col="payload_bytes")
         else:
-            stats = probe_payload_stats(
-                transcripts,
-                sample_fraction=hot_sample_fraction,
-                estimate_dup_ratio=dedup_payloads == "auto",
-            )
-        hot = stats["hot_keys"] if want_probe else None
-        heavy_rows = want_probe and stats["mean_row_bytes"] >= HEAVY_ROW_BYTES
-        dup_ratio = stats.get("dup_ratio", 0.0)
-        if dedup_payloads == "auto":
-            heavy_for_dedup = stats["mean_row_bytes"] >= HEAVY_ROW_BYTES
-    use_distinct = dedup_payloads is True or (
-        dedup_payloads == "auto"
-        and warm_stats is None
-        and heavy_for_dedup
-        and dup_ratio >= DEDUP_MIN_DUP_RATIO
-    )
-    if use_distinct:
-        # the distinct step's shuffle already rebalances; skip the
-        # salt/granularity repartition of the full input.  An explicit
-        # num_partitions still holds: it sizes the digest shuffle (=
-        # kernel task granularity) with no extra exchange (ADVICE r03)
-        from webtext_extraction_spark.operators.extraction import extract_turns_distinct
-
-        return extract_turns_distinct(transcripts, num_partitions=num_partitions)
+            stats = probe_payload_stats(transcripts, sample_fraction=hot_sample_fraction)
+        hot = stats["hot_keys"]
+        heavy_rows = stats["mean_row_bytes"] >= HEAVY_ROW_BYTES
     if hot or heavy_rows or salt_hot_keys is True:
         if num_partitions is None:
             # 3 tasks per core: fine-grained tasks smooth stragglers (hot
