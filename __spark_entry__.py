@@ -106,13 +106,15 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full extraction pipeline over a synthetic transcripts
-    table (FIXTURES.md §1), stable (conv_id, turn_idx) output."""
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
+    """Flagship: the extraction operator over a synthetic transcripts
+    table (FIXTURES.md §1), stable (conv_id, turn_idx) output.  It
+    extracts on the input splits and runs no skew probe
+    (``plans/pipeline.extraction_pipeline`` is the probing plan)."""
+    from webtext_extraction_spark.operators.extraction import extract_turns
     from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
     transcripts = synth_transcripts(spark, num_conversations=40)
-    out = extraction_pipeline(transcripts, salt_hot_keys=False)
+    out = extract_turns(transcripts)
     return out.select(
         "conv_id", "turn_idx", "role", "tool", "extracted_text", "strategy", "status"
     ).orderBy("conv_id", "turn_idx")
@@ -128,15 +130,11 @@ def _q_extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_extract_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webtext_extraction_spark.plans.pipeline import (
-        extraction_pipeline,
-        extraction_summary,
-    )
+    from webtext_extraction_spark.operators.extraction import extract_turns
+    from webtext_extraction_spark.plans.pipeline import extraction_summary
     from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
-    out = extraction_pipeline(
-        synth_transcripts(spark, num_conversations=40), salt_hot_keys=False
-    )
+    out = extract_turns(synth_transcripts(spark, num_conversations=40))
     return extraction_summary(out)
 
 

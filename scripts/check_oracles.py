@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() on DuckDB over the same
 sf dir; compare row count, column names, and order-insensitive values.
+Each result line also carries the query's Spark seconds (plan build +
+collect), so one run is also the breadth probe of where the time goes.
 
 Usage: python scripts/check_oracles.py [sf_dir] [only_query ...]
 """
@@ -9,6 +11,7 @@ from __future__ import annotations
 
 import math
 import sys
+import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -59,16 +62,18 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            spark_s = f"spark {time.time() - t0:.2f} s"
         except Exception as e:
             print(f"[SPARK ERR ] {name}: {str(e)[:300]}")
             fail += 1
             continue
         if name not in oracles:
-            print(f"[ROWS-ONLY ] {name}: {len(srows)} rows, cols={scols}")
+            print(f"[ROWS-ONLY ] {name}: {len(srows)} rows, cols={scols}, {spark_s}")
             ok += 1
             continue
         try:
@@ -76,7 +81,7 @@ def main():
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as e:
-            print(f"[DUCK ERR  ] {name}: {str(e)[:300]}")
+            print(f"[DUCK ERR  ] {name}: {spark_s}; {str(e)[:300]}")
             fail += 1
             continue
         problems = []
@@ -90,10 +95,10 @@ def main():
                 diff = [x for x in zip(a, b) if x[0] != x[1]][:3]
                 problems.append(f"values differ, first diffs: {diff}")
         if problems:
-            print(f"[MISMATCH  ] {name}: {'; '.join(problems)[:500]}")
+            print(f"[MISMATCH  ] {name}: {spark_s}; {'; '.join(problems)[:500]}")
             fail += 1
         else:
-            print(f"[MATCH     ] {name}: {len(srows)} rows")
+            print(f"[MATCH     ] {name}: {len(srows)} rows, {spark_s}")
             ok += 1
     print(f"\n{ok} ok, {fail} failing")
     spark.stop()

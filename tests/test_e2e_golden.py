@@ -7,7 +7,8 @@ import pathlib
 import pandas as pd
 from pyspark.sql import functions as F
 
-from webtext_extraction_spark.plans.pipeline import extraction_pipeline
+from webtext_extraction_spark.operators.extraction import extract_turns
+from webtext_extraction_spark.operators.partitioning import salted_repartition
 from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
 GOLDEN = pathlib.Path(__file__).parent / "goldens" / "e2e.parquet"
@@ -21,7 +22,7 @@ def test_pipeline_matches_committed_golden(spark):
 
     transcripts = synth_transcripts(spark, num_conversations=n_convs)
     out = (
-        extraction_pipeline(transcripts, num_partitions=9)
+        extract_turns(salted_repartition(transcripts, 9))
         .select("conv_id", "turn_idx", "extracted_text", "strategy")
         .orderBy("conv_id", "turn_idx")
         .toPandas()

@@ -331,17 +331,12 @@ def test_run_extract_resumes_then_noops(spark, tmp_path, monkeypatch, capsys):
     from jobs import run_extract
 
     monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
-    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    batch_rows = spark.conf.get(batch_key)
     out = str(tmp_path / "extracted")
     args = ["--synth-convs", "30", "--output", out, "--num-buckets", "6"]
     summaries = []
-    try:
-        for extra in (["--buckets-per-commit", "2"], [], []):
-            run_extract.main(args + extra)
-            summaries.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
-    finally:
-        spark.conf.set(batch_key, batch_rows)
+    for extra in (["--buckets-per-commit", "2"], [], []):
+        run_extract.main(args + extra)
+        summaries.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
     assert summaries[0]["buckets_done"] == 2
     assert summaries[1]["buckets_done"] == 4
     assert summaries[2] == {"buckets_done": 0, "rows": 0}
@@ -351,3 +346,22 @@ def test_run_extract_resumes_then_noops(spark, tmp_path, monkeypatch, capsys):
     assert sorted(r["bucket"] for r in lineage) == list(range(6))
     assert sum(r["rows"] for r in lineage) == data_rows
     assert summaries[0]["rows"] + summaries[1]["rows"] == data_rows
+
+
+def test_run_extract_restores_session_conf(spark, tmp_path, monkeypatch, capsys):
+    """The job's Arrow, batch-size and AQE settings hold only while it
+    runs: the caller's session reads its earlier values afterwards."""
+    from jobs import run_extract
+
+    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
+    keys = (
+        "spark.sql.execution.arrow.pyspark.enabled",
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.adaptive.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    assert before["spark.sql.execution.arrow.maxRecordsPerBatch"] != "256"
+    out = str(tmp_path / "conf")
+    run_extract.main(["--synth-convs", "8", "--output", out, "--num-buckets", "2"])
+    capsys.readouterr()
+    assert {k: spark.conf.get(k) for k in keys} == before

@@ -22,7 +22,7 @@ def test_detect_hot_keys_finds_heavy_conversations(spark):
     rows = [(f"c{i}", t, "x" * 100) for i in range(50) for t in range(4)]
     rows += [("hot", t, "y" * 40000) for t in range(8)]
     df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "text"])
-    hot = detect_hot_keys(df, skew_factor=8.0)
+    hot = detect_hot_keys(df)
     assert hot == ["hot"]
 
 
@@ -40,7 +40,7 @@ def test_salted_repartition_spreads_hot_key(spark):
     )
     assert hot_parts_unsalted == 1  # co-located without salting
 
-    salted = salted_repartition(df, 8, hot_keys=["hot"], salt_buckets=8)
+    salted = salted_repartition(df, 8, hot_keys=["hot"])
     hot_parts_salted = (
         salted.filter(F.col("conv_id") == "hot")
         .select(F.spark_partition_id().alias("pid"))

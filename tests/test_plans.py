@@ -5,9 +5,12 @@ scan, broadcast joins where we broadcast, no cartesian products in the
 LSH pipelines, exactly one Arrow UDF stage in extraction.
 """
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
-from webtext_extraction_spark.operators import dedup, similarity
+from webtext_extraction_spark.operators import dedup, similarity, textstats
 from webtext_extraction_spark.operators.extraction import extract_turns
 from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
@@ -67,10 +70,76 @@ def test_minhash_lsh_has_no_cartesian_product(spark):
     assert "BroadcastNestedLoopJoin" not in plan  # equi-join on (band,bucket)
 
 
+def _node_details(plan: str, node: str) -> list[str]:
+    """The detail blocks ("(<id>) <node> ..." up to the next blank
+    line) of every ``node`` in a formatted plan."""
+    return [b for b in plan.split("\n\n") if re.match(rf"\(\d+\) {node}\b", b.strip())]
+
+
+def _detail_line(block: str, prefix: str) -> str:
+    return next(line for line in block.splitlines() if line.startswith(prefix))
+
+
+_FENCED_SCANS = {
+    "minhash_lsh_pairs": lambda docs: dedup.minhash_lsh_pairs(docs, "doc_id", "text", 8, 4, 0.1),
+    "bm25_topk": lambda docs: textstats.bm25_topk(
+        docs, "doc_id", "text",
+        docs.sparkSession.createDataFrame([(0, "common tokens")], ["query_id", "query_text"]),
+    ),
+    "repetition_profile": lambda docs: textstats.repetition_profile(docs, "doc_id", "text"),
+    "containment_pairs": lambda docs: dedup.containment_pairs(docs, "doc_id", "text"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_FENCED_SCANS))
+def test_scan_filter_is_rlike_not_tokenize(spark, tmp_path, op):
+    """The zero-token guard reaches the scan as ``text RLIKE '\\S'``
+    only.  A size(tokens) > 0 guard (written or inferred from an
+    explode) would re-run the split/md5 tokenize inside the pushed
+    scan filter."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"w{i} common tokens here and there") for i in range(20)], ["doc_id", "text"]
+    ).write.parquet(path)
+    plan = _plan(_FENCED_SCANS[op](spark.read.parquet(path)))
+    scan_filters = [
+        _detail_line(b, "Condition")
+        for b in _node_details(plan, "Filter")
+        if re.search(r"\btext#", _detail_line(b, "Condition"))
+    ]
+    assert scan_filters
+    for cond in scan_filters:
+        assert "RLIKE" in cond, cond
+        for fn in ("md5(", "transform(", "split("):
+            assert fn not in cond, cond
+
+
+def test_minhash_jaccard_threshold_stays_above_join(spark, tmp_path):
+    """The explode barrier keeps the Jaccard threshold in a Filter
+    above the candidate join: pushed into the join condition, the
+    array_intersect would run before the cheap band/id predicates."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"w{i} common tokens here") for i in range(20)], ["doc_id", "text"]
+    ).write.parquet(path)
+    plan = _plan(dedup.minhash_lsh_pairs(spark.read.parquet(path), "doc_id", "text", 8, 4, 0.1))
+    joins = _node_details(plan, r"\w*Join")
+    assert len(joins) == 1
+    join_id = int(re.match(r"\((\d+)\)", joins[0].strip()).group(1))
+    assert "array_intersect" not in _detail_line(joins[0], "Join condition")
+    thresholds = [
+        int(re.match(r"\((\d+)\)", b.strip()).group(1))
+        for b in _node_details(plan, "Filter")
+        if re.search(r"jaccard#\d+ >= 0\.1", _detail_line(b, "Condition"))
+    ]
+    # formatted explain numbers nodes children-first: above = larger id
+    assert thresholds and all(t > join_id for t in thresholds)
+
+
 def test_pipeline_auto_skips_shuffle_when_no_skew(spark, tmp_path):
     """Flagship plan buys the repartition ONLY under detected skew: on
-    a no-skew input the auto plan has no Exchange below the UDF (scan →
-    ArrowEvalPython), while salt_hot_keys=True forces one."""
+    a no-skew input the plan has no Exchange below the UDF (scan →
+    ArrowEvalPython)."""
     from webtext_extraction_spark.plans.pipeline import extraction_pipeline
 
     path = str(tmp_path / "t4")
@@ -81,52 +150,40 @@ def test_pipeline_auto_skips_shuffle_when_no_skew(spark, tmp_path):
     assert "ArrowEvalPython" in auto_plan
     assert "Exchange" not in auto_plan  # extraction is shuffle-free
 
-    forced_plan = _plan(extraction_pipeline(flat, salt_hot_keys=True))
-    assert "Exchange" in forced_plan
 
-
-def test_pipeline_auto_shuffles_under_skew(spark):
-    """With a genuinely hot conversation, auto detects it and the plan
-    gains the salted repartition."""
+def test_pipeline_auto_shuffles_under_skew(spark, monkeypatch):
+    """With a genuinely hot conversation, the probe detects it and the
+    plan gains the salted repartition."""
+    from webtext_extraction_spark.plans import pipeline
     from webtext_extraction_spark.plans.pipeline import extraction_pipeline
+
+    monkeypatch.setattr(pipeline, "PROBE_SAMPLE_FRACTION", None)
 
     rows = [(f"c{i}", 0, "user", "x" * 50, "fetch", None) for i in range(40)]
     rows += [("hot", t, "user", "y" * 60000, "fetch", None) for t in range(6)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    plan = _plan(extraction_pipeline(df, hot_sample_fraction=None))
+    plan = _plan(extraction_pipeline(df))
     assert "ArrowEvalPython" in plan
     assert "Exchange" in plan
 
 
-def test_pipeline_honors_explicit_num_partitions_without_skew(spark, tmp_path):
-    """ADVICE r02: an explicitly passed num_partitions must size the
-    extraction stage even when the probe finds no skew (only
-    num_partitions=None gets the shuffle-free fast path)."""
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
-
-    path = str(tmp_path / "t5")
-    synth_transcripts(spark, num_conversations=30).write.parquet(path)
-    flat = spark.read.parquet(path)
-
-    sized = extraction_pipeline(flat, num_partitions=5)
-    assert "Exchange" in _plan(sized)
-    assert sized.rdd.getNumPartitions() == 5
-
-
-def test_pipeline_auto_repartitions_heavy_rows_without_skew(spark):
+def test_pipeline_auto_repartitions_heavy_rows_without_skew(spark, monkeypatch):
     """Heavy-row regime: uniform ~200 KB payloads (zero key skew) must
     still buy the fine-grained repartition — per-row CPU follows
     payload bytes, so scan splits are too coarse (bench_heavy)."""
+    from webtext_extraction_spark.plans import pipeline
     from webtext_extraction_spark.plans.pipeline import extraction_pipeline
+
+    monkeypatch.setattr(pipeline, "PROBE_SAMPLE_FRACTION", None)
 
     rows = [(f"c{i}", 0, "user", "x" * 200_000, "fetch", None) for i in range(40)]
     df = spark.createDataFrame(
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    plan = _plan(extraction_pipeline(df, hot_sample_fraction=None))
+    plan = _plan(extraction_pipeline(df))
     assert "Exchange" in plan
     assert "ArrowEvalPython" in plan
 
@@ -141,36 +198,6 @@ def test_probe_payload_stats_reports_both_regimes(spark):
     assert stats["hot_keys"] == ["hot"]
     # mean row bytes = (200*100 + 8*40000) / 208
     assert abs(stats["mean_row_bytes"] - (200 * 100 + 8 * 40000) / 208) < 1e-6
-
-
-def test_warm_stats_probe_never_reads_payload(spark, tmp_path):
-    """Warm re-run: hot keys come from the previous run's committed
-    payload_bytes column — the probe plan's ReadSchema must not contain
-    the text column, and it must find the same hot key the cold probe
-    finds (VERDICT r02 #2)."""
-    from webtext_extraction_spark.operators.partitioning import detect_hot_keys
-    from webtext_extraction_spark.plans.lineage import run_extraction, warm_key_stats
-
-    rows = [(f"c{i}", 0, "user", "x" * 50, "fetch", None) for i in range(40)]
-    rows += [("hot", t, "user", "y" * 60000, "fetch", None) for t in range(6)]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    out = str(tmp_path / "warm")
-    run_extraction(spark, df, out, num_buckets=4, input_snapshot="snapW")
-
-    assert warm_key_stats(spark, out, "other-snap") is None
-    stats = warm_key_stats(spark, out, "snapW")
-    assert stats is not None
-
-    # the probe's scan is column-pruned to (conv_id, payload_bytes)
-    per_key = stats.groupBy("conv_id").agg(F.sum("payload_bytes").alias("b"))
-    read_schema = _plan(per_key).split("ReadSchema")[1].split("\n")[0]
-    assert "payload_bytes" in read_schema and "text" not in read_schema
-
-    assert detect_hot_keys(stats, bytes_col="payload_bytes") == ["hot"]
-    assert detect_hot_keys(df) == ["hot"]  # cold probe agrees
 
 
 def test_boilerplate_ngrams_partial_aggregation(spark, tmp_path):
@@ -343,21 +370,6 @@ def test_remove_boilerplate_apply_is_one_scan_no_shuffle(spark, tmp_path):
     assert _node_ids(plan, "Exchange") == 0
     assert _node_ids(plan, "Join") == 0 and "Join" not in plan
     assert _node_ids(plan, "Scan parquet") == 1
-
-
-def test_extract_turns_distinct_honors_num_partitions_single_exchange(spark):
-    """An explicit num_partitions on the distinct path sizes the digest
-    shuffle itself — the dedup aggregate's clustering requirement is
-    satisfied by the explicit repartition, so there is exactly ONE
-    digest exchange, at the requested width (ADVICE r03)."""
-    import re
-
-    from webtext_extraction_spark.operators.extraction import extract_turns_distinct
-    from webtext_extraction_spark.sources.transcripts import synth_transcripts
-
-    df = synth_transcripts(spark, num_conversations=10)
-    plan = _plan(extract_turns_distinct(df, num_partitions=7))
-    assert re.findall(r"hashpartitioning\(_ph#\d+, (\d+)\)", plan) == ["7"]
 
 
 def test_scrub_pii_is_shuffle_free_pure_expressions(spark, tmp_path):

@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 
 from webtext_extraction_spark.fixtures_pages import payload_for
 from webtext_extraction_spark.kernel.extract import extract_payload
+from webtext_extraction_spark.operators.extraction import extract_turns
+from webtext_extraction_spark.operators.partitioning import (
+    detect_hot_keys,
+    salted_repartition,
+)
 from webtext_extraction_spark.plans.lineage import (
     read_lineage,
     read_output,
@@ -34,7 +39,7 @@ def transcripts(spark):
 
 @pytest.fixture(scope="module")
 def extracted(spark, transcripts):
-    df = extraction_pipeline(transcripts, num_partitions=7).cache()
+    df = extraction_pipeline(transcripts).cache()
     df.count()
     return df
 
@@ -52,22 +57,22 @@ def test_udf_matches_driver_side_kernel(extracted):
 
 
 def test_stable_order_under_partitioning(spark, transcripts):
-    a = (
-        extraction_pipeline(transcripts, num_partitions=3, salt_hot_keys=False)
-        .orderBy("conv_id", "turn_idx")
-        .select("conv_id", "turn_idx", "extracted_text")
-        .collect()
-    )
-    b = (
-        extraction_pipeline(
-            transcripts.repartition(13), num_partitions=11, salt_hot_keys=True
+    """3- and 11-way salted repartitions (the 11-way one over a
+    13-split input, salting whatever the full probe finds hot) extract
+    exactly what direct extraction does, in the same stable order."""
+    def ordered(df):
+        return (
+            extract_turns(df)
+            .orderBy("conv_id", "turn_idx")
+            .select("conv_id", "turn_idx", "extracted_text")
+            .collect()
         )
-        .orderBy("conv_id", "turn_idx")
-        .select("conv_id", "turn_idx", "extracted_text")
-        .collect()
-    )
-    assert a == b
-    keys = [(r["conv_id"], r["turn_idx"]) for r in a]
+
+    direct = ordered(transcripts)
+    resplit = transcripts.repartition(13)
+    assert ordered(salted_repartition(transcripts, 3)) == direct
+    assert ordered(salted_repartition(resplit, 11, detect_hot_keys(resplit))) == direct
+    keys = [(r["conv_id"], r["turn_idx"]) for r in direct]
     assert keys == sorted(keys)
 
 
@@ -255,6 +260,31 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
         assert r["rule_version"] and r["input_snapshot"]
     shutil.rmtree(single, ignore_errors=True)
     shutil.rmtree(phased, ignore_errors=True)
+
+
+def test_lineage_of_killed_first_append_reads_empty(spark, transcripts, tmp_path):
+    """A run killed during its first lineage append leaves a `_lineage`
+    dir that holds only `_temporary`: it reads as no committed bucket,
+    and the next run commits every bucket."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "killed")
+    attempt = os.path.join(out, "_lineage", "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(attempt)
+    pq.write_table(
+        pa.table({"bucket": pa.array([99], pa.int32()), "input_snapshot": ["unversioned"]}),
+        os.path.join(attempt, "part-00000.parquet"),
+    )
+    assert read_lineage(spark, out) == []
+    r = run_extraction(spark, transcripts, out, num_buckets=4)
+    assert sorted(row["bucket"] for row in read_lineage(spark, out)) == list(
+        range(r["buckets_done"])
+    )
+    assert r["rows"] == transcripts.count()
+    shutil.rmtree(out, ignore_errors=True)
 
 
 def test_resume_idempotent_at_4096_buckets(spark, transcripts, tmp_path):

@@ -621,7 +621,11 @@ def containment_pairs(
     sets = df.filter(F.col(text_col).rlike(r"\S")).select(
         F.col(id_col).alias("_id"), hashed_word_set(F.col(text_col)).alias("_hs")
     )
-    toks = sets.select("_id", F.explode("_hs").alias("_th"))
+    # explode_OUTER is the fence: a plain explode of an attribute makes
+    # InferFiltersFromGenerate push size(_hs) > 0 into the scan filter,
+    # which re-runs the md5 tokenize there.  The rlike guard already
+    # keeps every set non-empty, so the rows are the same.
+    toks = sets.select("_id", F.explode_outer("_hs").alias("_th"))
     dfreq = toks.groupBy("_th").agg(F.count("*").cast("long").alias("_dft"))
     w = Window.partitionBy("_id").orderBy("_dft", "_th")
     rare = (

@@ -306,11 +306,7 @@ def extract_turns(df: DataFrame, site_rules: dict | None = None) -> DataFrame:
     )
 
 
-def extract_turns_distinct(
-    df: DataFrame,
-    site_rules: dict | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def extract_turns_distinct(df: DataFrame) -> DataFrame:
     """Global dedup-before-extract: run the kernel once per DISTINCT
     (payload, tool) across the whole input, then join results back to
     every row.  Output rows/schema identical to ``extract_turns``.
@@ -331,25 +327,18 @@ def extract_turns_distinct(
     md5(tool) — hashing the fields SEPARATELY keeps the pair encoding
     injective (a delimiter inside concat would collide on payloads
     containing the delimiter byte); collision odds ~1e-14 at 1e12 rows.
-
-    ``num_partitions`` sizes the digest shuffle (and therefore the
-    kernel-stage task granularity — the thing the knob exists for):
-    the explicit ``repartition(n, _ph)`` satisfies the dedup
-    aggregate's clustering requirement, so Catalyst inserts NO second
-    exchange (plan-audited) — honoring the caller's partition count
-    costs nothing over the default-partitioned dedup shuffle
-    (ADVICE r03).
+    The digest shuffle takes the session's shuffle partitioning (AQE
+    coalesces it); the built-in rules module drives the kernel.  No
+    production job calls this; the driver's ``extract_distinct`` query
+    does.
     """
     hexpr = F.concat(
         F.md5(F.coalesce(F.col("text"), F.lit(""))),
         F.md5(F.coalesce(F.col("tool"), F.lit(""))),
     )
     tagged = df.withColumn("_ph", hexpr)
-    pre = tagged.select("text", "tool", "_ph")
-    if num_partitions is not None:
-        pre = pre.repartition(num_partitions, "_ph")
-    distinct = pre.dropDuplicates(["_ph"])
-    results = extract_turns(distinct, site_rules).drop("tool")
+    distinct = tagged.select("text", "tool", "_ph").dropDuplicates(["_ph"])
+    results = extract_turns(distinct).drop("tool")
     carried = [c for c in df.columns if c != "text"]
     return tagged.join(results, "_ph").select(
         *carried,

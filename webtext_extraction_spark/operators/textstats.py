@@ -1988,8 +1988,10 @@ def bm25_topk(
     base = df.filter(F.col(text_col).rlike(r"\S")).select(
         F.col(id_col).alias("_id"), words(F.col(text_col)).alias("_ws")
     )
+    # explode_outer: no inferred size(_ws) > 0 re-tokenizing in the scan
+    # filter (the containment_pairs fence); rlike keeps _ws non-empty
     toks = base.select(
-        "_id", F.size("_ws").alias("_dl"), F.explode("_ws").alias("term")
+        "_id", F.size("_ws").alias("_dl"), F.explode_outer("_ws").alias("term")
     )
     tf = toks.groupBy("_id", "_dl", "term").agg(
         F.count("*").cast("long").alias("_tf")

@@ -18,9 +18,9 @@ Reference analogue: the completed_folder membership checkpoint
   no lineage row is simply redone;
 - the payload column is scanned exactly ONCE per run: input accounting
   (payload_bytes = length(text)) rides through the extraction
-  projection and the phase-2 rollup reads only the committed output.
-  The persisted payload_bytes column doubles as the warm-run skew
-  probe (``warm_key_stats``).
+  projection and the phase-2 rollup reads only the committed output;
+- a commit extracts on the scan splits of its buckets: it never runs
+  the skew probe of ``pipeline.extraction_pipeline``.
 
 A resumed commit runs seven Spark jobs, and each has a reason to stay:
 
@@ -43,6 +43,7 @@ filesystem version of that transaction.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
@@ -68,12 +69,15 @@ def read_lineage(spark: SparkSession, output_path: str) -> list[Row]:
     snapshot must be detected, not silently mixed (reference analogue:
     completed_folder assumes one fixed URL list per run directory,
     R:21-42)."""
-    lineage_path = os.path.join(output_path, LINEAGE_DIR)
-    if not os.path.exists(lineage_path):
+    # the part files by their glob: naming the `_lineage` dir itself
+    # makes Spark warn that it ignores a hidden path; a dir holding only
+    # the `_temporary` of a killed first append has no part file yet
+    parts = os.path.join(output_path, LINEAGE_DIR, "*.parquet")
+    if not glob.glob(parts):
         return []
     return (
         spark.read.schema(LINEAGE_SCHEMA)
-        .parquet(lineage_path)
+        .parquet(parts)
         .select("bucket", "input_snapshot")
         .collect()
     )
@@ -143,8 +147,7 @@ def run_extraction(
     # row): the payload column is scanned exactly ONCE per run — the
     # phase-2 rollup derives rows_in/bytes_in from the committed output
     # (extraction is 1:1 per turn) instead of a second full-payload
-    # aggregate action.  payload_bytes also persists in the output table,
-    # which gives warm re-runs a free skew probe (warm_key_stats).
+    # aggregate action.
     # isin over more than 10 literals plans as an InSet hash lookup.
     batch = src.filter(F.col("bucket").isin(remaining)).withColumn(
         "payload_bytes", F.length("text")
@@ -220,28 +223,6 @@ def run_extraction(
         summary["span_ok"] = counts.get("ok", 0)
         summary["span_mismatch"] = counts.get("mismatch", 0)
     return summary
-
-
-def warm_key_stats(
-    spark: SparkSession, output_path: str, input_snapshot: str
-) -> DataFrame | None:
-    """(conv_id, payload_bytes) from a PREVIOUS committed run over the
-    same input snapshot — lets a warm re-run probe for hot keys without
-    reading the payload column at all (VERDICT r02 #2: at 100 TB the
-    cold probe's sample still touches every row-group of ``text``; the
-    warm probe reads two slim columns of the output table instead).
-
-    Returns None when no lineage exists for this snapshot or the output
-    predates the payload_bytes column; callers fall back to the cold
-    probe.  Partial prior runs are fine — byte skew per key is stable
-    under per-bucket subsetting the same way it is under sampling."""
-    committed = read_lineage(spark, output_path)
-    if input_snapshot not in {r["input_snapshot"] for r in committed}:
-        return None
-    out = spark.read.parquet(os.path.join(output_path, DATA_DIR))
-    if "payload_bytes" not in out.columns:
-        return None
-    return out.select("conv_id", "payload_bytes")
 
 
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:

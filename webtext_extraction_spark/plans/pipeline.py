@@ -1,22 +1,24 @@
 """End-to-end extraction plans + the rendered-output formatter.
 
 ``extraction_pipeline`` is the flagship logical plan:
-scan → [salted repartition ONLY if skew detected] → extract (one
-Arrow UDF; the F6 status is set inside its batch).  Everything before
-and after the UDF is Catalyst-visible; filters on conv_id/tool push into the parquet/
-Iceberg scan.
+scan → [salted repartition ONLY if the probe finds a reason] → extract
+(one Arrow UDF; the F6 status is set inside its batch).  Everything
+before and after the UDF is Catalyst-visible; filters on conv_id/tool
+push into the parquet/Iceberg scan.
 
 Why the shuffle is conditional: scan splits are already byte-balanced
 (``maxPartitionBytes``) and extraction is stateless per row, so an
 unconditional repartition of the full payload column is a 100 TB
 shuffle at 100 TB input, bought to fix skew that balanced splits +
-AQE mostly already fix.  The default ``salt_hot_keys="auto"`` runs a
-sampled byte-skew probe (cheap: two tiny columns, sampled) and buys
-the shuffle only when the probe finds a reason: a hot key (salted
-repartition) or heavy rows (mean payload ≥ HEAVY_ROW_BYTES — CPU per
-row is payload-proportional, so task granularity must follow CPU,
-not bytes; fine-grained repartition measured 3-4× faster on ~0.7 MB
-pages).
+AQE mostly already fix.  One sampled payload probe (two tiny columns)
+buys the shuffle only when it finds a reason: a hot key (salted
+repartition; 1.6-2.6× under planted skew at local[8] on a 32-core
+host, scripts/bench_skew.py) or heavy rows (mean payload ≥
+HEAVY_ROW_BYTES — CPU per row is payload-proportional, so task
+granularity must follow CPU, not bytes; fine-grained repartition
+measured 3-4× faster on ~0.7 MB pages, scripts/bench_heavy.py).  A
+plan that must never probe or shuffle calls
+``extraction.extract_turns`` directly.
 
 ``render_extracted`` reproduces the reference's text sink format for
 golden comparison (save_results W:1712-1726 + integrated.py:45-58):
@@ -41,68 +43,34 @@ from webtext_extraction_spark.operators.partitioning import (
 # fine-grained repartition (scripts/bench_heavy.py).
 HEAVY_ROW_BYTES = 131072
 
+# the probe's seeded sample of the input (None scans every row)
+PROBE_SAMPLE_FRACTION = 0.1
 
-def extraction_pipeline(
-    transcripts: DataFrame,
-    num_partitions: int | None = None,
-    salt_hot_keys: bool | str = "auto",
-    hot_sample_fraction: float = 0.1,
-    warm_stats: DataFrame | None = None,
-) -> DataFrame:
+
+def extraction_pipeline(transcripts: DataFrame) -> DataFrame:
     """The flagship plan.  Ordering is NOT forced here (keys travel with
     every row); callers that need the stable output order add
     ``.orderBy('conv_id', 'turn_idx')`` at the sink (O1).
 
-    ``salt_hot_keys``:
-    - ``"auto"`` (default): sampled hot-key probe; repartition + salt
-      ONLY when skew is found, else extract directly on scan splits.
-    - ``True``: always repartition (salting any detected hot keys) —
-      for inputs known to be skewed or pathologically split.
-    - ``False``: never probe, never shuffle.
-
-    An EXPLICIT ``num_partitions`` is always honored: with no detected
-    skew the stage is still repartitioned (unsalted, conv_id-keyed) to
-    that size — only ``num_partitions=None`` lets the no-skew path run
-    on raw scan splits.
-
-    ``warm_stats``: a (conv_id, payload_bytes) DataFrame from a prior
-    committed run (``lineage.warm_key_stats``); when given, the probe
-    aggregates those precomputed byte counts instead of scanning the
-    payload column — the 100 TB warm-run path.
-
-    The auto probe buys the repartition in TWO skew regimes:
-    - key skew (hot conversations) → salted repartition;
-    - HEAVY ROWS (mean payload ≥ ``HEAVY_ROW_BYTES``, no skew needed)
-      → plain fine-grained repartition: per-row CPU scales with
-      payload bytes, so byte-balanced 128 MB scan splits of ~MB pages
-      are 100+-row, 30+-second tasks — stragglers and poor
-      transport/compute overlap cost 3-4× (measured,
-      scripts/bench_heavy.py).
+    One probe (``probe_payload_stats`` over a ``PROBE_SAMPLE_FRACTION``
+    sample) decides the split:
+    - key skew (hot conversations) or HEAVY ROWS (mean payload ≥
+      ``HEAVY_ROW_BYTES``, no skew needed) → salted repartition to
+      3 tasks per core: fine-grained tasks smooth stragglers (hot pages
+      cost ~10× a normal page even after salting), and byte-balanced
+      128 MB scan splits of ~MB pages are 100+-row, 30+-second tasks;
+    - otherwise → extraction on the scan splits, no shuffle.
 
     Co-located exact-dup pages are collapsed for free by the batch-local
     memo inside the UDF; global distinct-payload extraction is the
     explicit ``extraction.extract_turns_distinct``.
     """
-    hot = None
-    heavy_rows = False
-    if salt_hot_keys is True or salt_hot_keys == "auto":
-        if warm_stats is not None:
-            stats = probe_payload_stats(warm_stats, bytes_col="payload_bytes")
-        else:
-            stats = probe_payload_stats(transcripts, sample_fraction=hot_sample_fraction)
-        hot = stats["hot_keys"]
-        heavy_rows = stats["mean_row_bytes"] >= HEAVY_ROW_BYTES
-    if hot or heavy_rows or salt_hot_keys is True:
-        if num_partitions is None:
-            # 3 tasks per core: fine-grained tasks smooth stragglers (hot
-            # pages cost ~10× a normal page even after salting)
-            num_partitions = 3 * transcripts.sparkSession.sparkContext.defaultParallelism
-        balanced = salted_repartition(transcripts, num_partitions, hot_keys=hot)
-    elif num_partitions is not None:
-        balanced = salted_repartition(transcripts, num_partitions, hot_keys=None)
-    else:
-        balanced = transcripts
-    return extract_turns(balanced)
+    stats = probe_payload_stats(transcripts, PROBE_SAMPLE_FRACTION)
+    hot = stats["hot_keys"]
+    if hot or stats["mean_row_bytes"] >= HEAVY_ROW_BYTES:
+        num_partitions = 3 * transcripts.sparkSession.sparkContext.defaultParallelism
+        transcripts = salted_repartition(transcripts, num_partitions, hot_keys=hot)
+    return extract_turns(transcripts)
 
 
 def extraction_summary(extracted: DataFrame) -> DataFrame:
