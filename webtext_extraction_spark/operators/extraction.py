@@ -329,8 +329,8 @@ def extract_turns_distinct(df: DataFrame) -> DataFrame:
     containing the delimiter byte); collision odds ~1e-14 at 1e12 rows.
     The digest shuffle takes the session's shuffle partitioning (AQE
     coalesces it); the built-in rules module drives the kernel.  No
-    production job calls this; the driver's ``extract_distinct`` query
-    does.
+    production job calls this; the ``extract_distinct`` query of
+    ``__spark_entry__.py`` does.
     """
     hexpr = F.concat(
         F.md5(F.coalesce(F.col("text"), F.lit(""))),
