@@ -37,12 +37,6 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 )
 
-JOB_CONF = {
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
-    "spark.sql.adaptive.enabled": "true",
-}
-
 
 def main(argv=None):
     parser = argparse.ArgumentParser(description="webtext extraction job")
@@ -65,49 +59,46 @@ def main(argv=None):
                              "run's output (adds span_ok/span_mismatch "
                              "to the summary)")
     args = parser.parse_args(argv)
-    if not (args.synth_convs or args.input):
-        parser.error("one of --input / --synth-convs is required")
 
     from pyspark.sql import SparkSession
 
+    # executor-side tuning that must hold regardless of cluster defaults,
+    # set on a session of its own: the caller's session conf is untouched
+    spark = SparkSession.builder.appName("webtext-extract").getOrCreate().newSession()
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    if args.synth_convs:
+        from webtext_extraction_spark.sources.transcripts import synth_transcripts
+
+        transcripts = synth_transcripts(spark, num_conversations=args.synth_convs)
+    elif args.input:
+        transcripts = spark.read.parquet(args.input)
+    else:
+        parser.error("one of --input / --synth-convs is required")
+
+    site_rules = None
+    if args.rules:
+        from webtext_extraction_spark import rules as rules_mod
+
+        site_rules = dict(rules_mod.DOMAIN_SELECTORS)
+        with open(args.rules, encoding="utf-8") as fh:
+            site_rules.update(json.load(fh))
+
     from webtext_extraction_spark.plans.lineage import run_extraction
 
-    spark = SparkSession.builder.appName("webtext-extract").getOrCreate()
-    # executor-side tuning that must hold regardless of cluster defaults;
-    # the caller's values come back when the job returns
-    prior = {k: spark.conf.get(k) for k in JOB_CONF}
-    for k, v in JOB_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        if args.synth_convs:
-            from webtext_extraction_spark.sources.transcripts import synth_transcripts
-
-            transcripts = synth_transcripts(spark, num_conversations=args.synth_convs)
-        else:
-            transcripts = spark.read.parquet(args.input)
-
-        site_rules = None
-        if args.rules:
-            from webtext_extraction_spark import rules as rules_mod
-
-            site_rules = dict(rules_mod.DOMAIN_SELECTORS)
-            with open(args.rules, encoding="utf-8") as fh:
-                site_rules.update(json.load(fh))
-
-        summary = run_extraction(
-            spark,
-            transcripts,
-            args.output,
-            num_buckets=args.num_buckets,
-            buckets_per_commit=args.buckets_per_commit,
-            input_snapshot=args.input_snapshot or (args.input or "synth"),
-            site_rules=site_rules,
-            write_partitions=args.write_partitions,
-            audit=args.audit,
-        )
-    finally:
-        for k, v in prior.items():
-            spark.conf.set(k, v)
+    summary = run_extraction(
+        spark,
+        transcripts,
+        args.output,
+        num_buckets=args.num_buckets,
+        buckets_per_commit=args.buckets_per_commit,
+        input_snapshot=args.input_snapshot or (args.input or "synth"),
+        site_rules=site_rules,
+        write_partitions=args.write_partitions,
+        audit=args.audit,
+    )
     print(json.dumps(summary))
     spark.stop()
 

@@ -348,9 +348,10 @@ def test_run_extract_resumes_then_noops(spark, tmp_path, monkeypatch, capsys):
     assert summaries[0]["rows"] + summaries[1]["rows"] == data_rows
 
 
-def test_run_extract_restores_session_conf(spark, tmp_path, monkeypatch, capsys):
-    """The job's Arrow, batch-size and AQE settings hold only while it
-    runs: the caller's session reads its earlier values afterwards."""
+def test_run_extract_leaves_session_conf(spark, tmp_path, monkeypatch, capsys):
+    """The job sets its Arrow, batch-size and AQE settings on a session
+    of its own: the caller's session reads its earlier values
+    afterwards."""
     from jobs import run_extract
 
     monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)

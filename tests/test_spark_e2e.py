@@ -287,6 +287,23 @@ def test_lineage_of_killed_first_append_reads_empty(spark, transcripts, tmp_path
     shutil.rmtree(out, ignore_errors=True)
 
 
+def test_resume_under_glob_metacharacter_output_path(spark, transcripts, tmp_path):
+    """An output dir named like a glob pattern (``run[1]``) is read
+    literally: the resume sees the committed lineage, commits only the
+    remaining buckets, and still refuses a different input snapshot."""
+    out = str(tmp_path / "run[1]" / "out")
+    r1 = run_extraction(spark, transcripts, out, num_buckets=8, buckets_per_commit=3)
+    assert len(read_lineage(spark, out)) == 3
+    with pytest.raises(ValueError, match="different input snapshot"):
+        run_extraction(spark, transcripts, out, num_buckets=8, input_snapshot="other")
+    r2 = run_extraction(spark, transcripts, out, num_buckets=8)
+    assert r1["buckets_done"] + r2["buckets_done"] == len(read_lineage(spark, out))
+    rows = read_output(spark, out).select("conv_id", "turn_idx").collect()
+    assert len(rows) == len(set(rows)) == transcripts.count()
+    assert r1["rows"] + r2["rows"] == len(rows)
+    shutil.rmtree(str(tmp_path / "run[1]"), ignore_errors=True)
+
+
 def test_resume_idempotent_at_4096_buckets(spark, transcripts, tmp_path):
     """VERDICT r02 #9: resume at 4096 buckets completes idempotently —
     completed buckets are dropped on the driver, so the plan carries no

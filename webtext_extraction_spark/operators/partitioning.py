@@ -8,7 +8,9 @@ W:1388).  The Spark-native replacement is one measured decision
 - ``probe_payload_stats``: one sampled scan of (conv_id, length(text))
   aggregated per conv_id.  A key is hot when its byte total exceeds
   ``SKEW_FACTOR`` × the mean key total; the mean row size is the
-  heavy-row signal.  Byte skew is stable under sampling.
+  heavy-row signal.  Byte skew is stable under sampling.  One action
+  when no key is hot (the common case); a second collects the hot keys
+  only when the largest key total says one exists.
 - ``salted_repartition``: repartition by xxhash64(conv_id), with hot
   conv_ids additionally salted by pmod(xxhash64(turn_idx),
   ``SALT_BUCKETS``) so one huge conversation (or hot domain) spreads
@@ -48,14 +50,22 @@ def probe_payload_stats(df: DataFrame, sample_fraction: float | None = None) -> 
     )
     totals = per_key.agg(
         F.avg("_key_bytes").alias("mean_key_bytes"),
+        F.max("_key_bytes").alias("max_key_bytes"),
         (F.sum("_key_bytes") / F.sum("_rows")).alias("mean_row_bytes"),
     ).first()
-    mean_key = totals["mean_key_bytes"] or 0.0
-    hot = per_key.filter(
-        F.col("_key_bytes") > int(mean_key * SKEW_FACTOR)
-    ).select("conv_id")
+    threshold = int((totals["mean_key_bytes"] or 0.0) * SKEW_FACTOR)
+    hot = []
+    # the largest key total tells whether any key is hot: without skew
+    # the probe is this one action, not a second scan for an empty list
+    if (totals["max_key_bytes"] or 0) > threshold:
+        hot = [
+            r[0]
+            for r in per_key.filter(F.col("_key_bytes") > threshold)
+            .select("conv_id")
+            .collect()
+        ]
     return {
-        "hot_keys": [r[0] for r in hot.collect()],
+        "hot_keys": hot,
         "mean_row_bytes": float(totals["mean_row_bytes"] or 0.0),
     }
 

@@ -43,8 +43,8 @@ filesystem version of that transaction.
 
 from __future__ import annotations
 
-import glob
 import os
+import re
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 
@@ -72,15 +72,24 @@ def read_lineage(spark: SparkSession, output_path: str) -> list[Row]:
     # the part files by their glob: naming the `_lineage` dir itself
     # makes Spark warn that it ignores a hidden path; a dir holding only
     # the `_temporary` of a killed first append has no part file yet
-    parts = os.path.join(output_path, LINEAGE_DIR, "*.parquet")
-    if not glob.glob(parts):
+    lineage_path = os.path.join(output_path, LINEAGE_DIR)
+    if not os.path.isdir(lineage_path) or not any(
+        f.endswith(".parquet") for f in os.listdir(lineage_path)
+    ):
         return []
     return (
         spark.read.schema(LINEAGE_SCHEMA)
-        .parquet(parts)
+        .parquet(_literal(lineage_path) + "/*.parquet")
         .select("bucket", "input_snapshot")
         .collect()
     )
+
+
+def _literal(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters escaped: Spark globs
+    every read path, so an output dir such as ``run[1]`` would
+    otherwise match nothing, or another dir."""
+    return re.sub(r"([\\{}\[\]*?])", r"\\\1", path)
 
 
 def run_extraction(
@@ -183,7 +192,7 @@ def run_extraction(
     # (no footer-inference job).
     out = (
         spark.read.schema(extracted.schema)
-        .parquet(data_path)
+        .parquet(_literal(data_path))
         .filter(F.col("bucket").isin(remaining))
     )
     lineage = (
@@ -228,6 +237,6 @@ def run_extraction(
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:
     """Final ordered view (stable (conv_id, turn_idx) — O1)."""
     return (
-        spark.read.parquet(os.path.join(output_path, DATA_DIR))
+        spark.read.parquet(_literal(os.path.join(output_path, DATA_DIR)))
         .orderBy("conv_id", "turn_idx")
     )
