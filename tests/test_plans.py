@@ -136,17 +136,27 @@ def test_minhash_jaccard_threshold_stays_above_join(spark, tmp_path):
     assert thresholds and all(t > join_id for t in thresholds)
 
 
-def test_pipeline_auto_skips_shuffle_when_no_skew(spark, tmp_path):
-    """Flagship plan buys the repartition ONLY under detected skew: on
-    a no-skew input the plan has no Exchange below the UDF (scan →
-    ArrowEvalPython)."""
+def test_pipeline_auto_skips_shuffle_when_no_skew(spark, monkeypatch):
+    """Flagship plan buys the repartition ONLY under detected skew.  A
+    conversation above SKEW_FACTOR × the mean key bytes but under one
+    task's share of the input (1 / defaultParallelism) is no straggler:
+    the full-scan probe finds no hot key and the plan has no Exchange
+    below the UDF (scan → ArrowEvalPython)."""
+    from webtext_extraction_spark.operators.partitioning import SKEW_FACTOR
+    from webtext_extraction_spark.plans import pipeline
     from webtext_extraction_spark.plans.pipeline import extraction_pipeline
 
-    path = str(tmp_path / "t4")
-    synth_transcripts(spark, num_conversations=30).write.parquet(path)
-    flat = spark.read.parquet(path)
+    monkeypatch.setattr(pipeline, "PROBE_SAMPLE_FRACTION", None)
 
-    auto_plan = _plan(extraction_pipeline(flat))
+    rows = [(f"c{i}", 0, "user", "x" * 1000, "fetch", None) for i in range(99)]
+    rows += [("warm", t, "user", "y" * 1000, "fetch", None) for t in range(10)]
+    total = 109 * 1000
+    assert 10_000 > SKEW_FACTOR * total / 100  # hot by the mean alone
+    assert 10_000 < total / spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    auto_plan = _plan(extraction_pipeline(df))
     assert "ArrowEvalPython" in auto_plan
     assert "Exchange" not in auto_plan  # extraction is shuffle-free
 
@@ -198,6 +208,23 @@ def test_probe_payload_stats_reports_both_regimes(spark):
     assert stats["hot_keys"] == ["hot"]
     # mean row bytes = (200*100 + 8*40000) / 208
     assert abs(stats["mean_row_bytes"] - (200 * 100 + 8 * 40000) / 208) < 1e-6
+
+
+def test_ivf_cell_plan_grows_linearly_in_k(spark):
+    """The IVF argmin is one distance array, linear in k: doubling the
+    centroids at most ~doubles the analyzed plan.  A running-best
+    ``when(closer, …).otherwise(best)`` fold embeds the best twice per
+    centroid and doubles the plan with every centroid."""
+    df = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(4)]) for i in range(8)], ["vec_id", "embedding"]
+    )
+
+    def analyzed_len(k):
+        centroids = [[float(c * j) for j in range(4)] for c in range(k)]
+        out = similarity.with_ivf_cell(df, centroids)
+        return len(out._jdf.queryExecution().analyzed().toString())
+
+    assert analyzed_len(8) <= 2.5 * analyzed_len(4)
 
 
 def test_boilerplate_ngrams_partial_aggregation(spark, tmp_path):

@@ -7,8 +7,10 @@ W:1388).  The Spark-native replacement is one measured decision
 
 - ``probe_payload_stats``: one sampled scan of (conv_id, length(text))
   aggregated per conv_id.  A key is hot when its byte total exceeds
-  ``SKEW_FACTOR`` × the mean key total; the mean row size is the
-  heavy-row signal.  Byte skew is stable under sampling.  One action
+  ``SKEW_FACTOR`` × the mean key total AND one task's fair share
+  (1 / defaultParallelism) of the sampled bytes: below that share the
+  key cannot be a straggler; the mean row size is the heavy-row
+  signal.  Byte skew is stable under sampling.  One action
   when no key is hot (the common case); a second collects the hot keys
   only when the largest key total says one exists.
 - ``salted_repartition``: repartition by xxhash64(conv_id), with hot
@@ -52,8 +54,15 @@ def probe_payload_stats(df: DataFrame, sample_fraction: float | None = None) -> 
         F.avg("_key_bytes").alias("mean_key_bytes"),
         F.max("_key_bytes").alias("max_key_bytes"),
         (F.sum("_key_bytes") / F.sum("_rows")).alias("mean_row_bytes"),
+        F.sum("_key_bytes").alias("total_bytes"),
     ).first()
-    threshold = int((totals["mean_key_bytes"] or 0.0) * SKEW_FACTOR)
+    tasks = df.sparkSession.sparkContext.defaultParallelism
+    threshold = int(
+        max(
+            (totals["mean_key_bytes"] or 0.0) * SKEW_FACTOR,
+            (totals["total_bytes"] or 0) / tasks,
+        )
+    )
     hot = []
     # the largest key total tells whether any key is hot: without skew
     # the probe is this one action, not a second scan for an empty list

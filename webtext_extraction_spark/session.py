@@ -12,6 +12,14 @@ chosen to survive a 1000-executor / 100 TB deployment:
   SPARK_ARROW_BATCH_ROWS / extra_conf (jobs/run_extract.py uses 256).
 - shuffle partitions sized to cores locally; on a real cluster this is
   2-3× total executor cores (or left to AQE's coalescing).
+- Python workers import the installed pyspark, not SPARK_HOME's
+  ``pyspark.zip``: ``spark.python.daemon.module`` selects
+  ``worker_daemon``, which takes the pyspark/py4j zips and the
+  spark-core jar off the worker's ``sys.path`` (pyspark re-reads every
+  zip directory on it at the start of each task: 0.21-0.25 s of CPU).
+  Sessions made by spark-submit (jobs/run_extract.py,
+  jobs/run_curate.py) keep pyspark's own daemon: a cluster executor
+  adds ``--py-files`` archives per task, after its daemon has started.
 """
 
 from __future__ import annotations
@@ -28,6 +36,10 @@ from pyspark.sql import SparkSession
 # executor python memory — override via SPARK_ARROW_BATCH_ROWS or
 # get_spark(extra_conf=...).
 ARROW_BATCH_ROWS = int(os.environ.get("SPARK_ARROW_BATCH_ROWS", "512"))
+
+# the directory holding this package, on the workers' PYTHONPATH so the
+# worker daemon below imports from any driver working directory
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -54,6 +66,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "webtext_extraction_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
