@@ -1026,7 +1026,6 @@ def _q_curate_corpus(spark, sf_dir):
     the realistic 'which documents survive into the training set'
     pipeline, composed from the engine's own operators."""
     docs = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    prof = textstats.text_profile(docs, "doc_id", "text")
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=8, bands=4, jaccard_threshold=0.7
     )
@@ -1039,9 +1038,11 @@ def _q_curate_corpus(spark, sf_dir):
         .filter(F.col("node") == F.col("component"))
         .select(F.col("node").alias("doc_id"))
     )
+    # the row-local gates filter the scan; only the cluster keepers join
     return (
-        prof.join(keepers, "doc_id")
+        textstats.with_text_profile(docs, "text")
         .filter((F.col("lang_pred") == "en") & (F.col("quality") >= 0.6))
+        .join(keepers, "doc_id")
         .select("doc_id", "lang_pred", "quality")
         .orderBy("doc_id")
     )
@@ -1079,17 +1080,16 @@ def _q_pack_sequences(spark, sf_dir):
 
 def _q_curate_corpus_v2(spark, sf_dir):
     """The full curation pipeline with ALL engine gates composed:
-    lang + quality (text_profile), repetition (repetition_profile,
-    Gopher-style dup_word_char_frac <= 0.8), decontamination (no
-    benchmark 4-gram overlap), and near-dup cluster keepers.  Each
+    lang + quality (with_text_profile), repetition
+    (with_repetition_profile, Gopher-style dup_word_char_frac <= 0.8),
+    decontamination (no benchmark 4-gram overlap), and near-dup
+    cluster keepers.  Each
     gate drops at least one v1 survivor at sf0.01 (38 by repetition
     only; 3 by contamination only; 1 and 55 by both) — non-vacuous by
     construction.  (At sf0.1 the v1 pool is just 2 docs and both
     legitimately fail a gate, so 0 rows is the correct answer there;
     the discriminating check is the sf0.01 gate.)"""
     docs = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    prof = textstats.text_profile(docs, "doc_id", "text")
-    rep = textstats.repetition_profile(docs, "doc_id", "text", top_n=2, dup_n=5)
     bench = _load(spark, sf_dir, "documents").filter(
         (F.col("doc_id") >= 400) & (F.col("doc_id") < 500)
     )
@@ -1106,16 +1106,20 @@ def _q_curate_corpus_v2(spark, sf_dir):
         .filter(F.col("node") == F.col("component"))
         .select(F.col("node").alias("doc_id"))
     )
+    # the row-local gates (lang, quality, repetition; a zero-word doc's
+    # NULL dup_word_char_frac fails) filter the scan; only the
+    # cross-document gates join
+    gated = textstats.with_repetition_profile(
+        textstats.with_text_profile(docs, "text"), "text", top_n=2, dup_n=5
+    ).filter(
+        (F.col("lang_pred") == "en")
+        & (F.col("quality") >= 0.6)
+        & (F.col("dup_word_char_frac") <= 0.8)
+    )
     return (
-        prof.join(rep, "doc_id")
-        .join(cont, "doc_id")
+        gated.join(cont, "doc_id")
         .join(keepers, "doc_id")
-        .filter(
-            (F.col("lang_pred") == "en")
-            & (F.col("quality") >= 0.6)
-            & (F.col("dup_word_char_frac") <= 0.8)
-            & (~F.col("contaminated"))
-        )
+        .filter(~F.col("contaminated"))
         .select("doc_id", "quality", "dup_word_char_frac", "contamination_frac")
         .orderBy("doc_id")
     )

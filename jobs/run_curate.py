@@ -12,19 +12,18 @@ jobs/run_extract.py):
 
 Input is a documents parquet, or raw Common Crawl WET files with
 ``--input-format wet`` (sources/wet — deterministic hashed doc_ids,
-url-host sources).  Gates compose in one DataFrame statement (each
-is the library operator the driver gate oracles): language/quality
-(text_profile),
-the Gopher/FineWeb rule battery (quality_gate, --gopher-gate),
-repetition (repetition_profile, Gopher dup_word_char_frac), benchmark
-decontamination (4-gram overlap vs --bench), near-dup cluster keepers
-(minhash-LSH + connected components), semantic cluster keepers
-(hashed-bow cosine — text-only, no embeddings table needed) or
-exact-dup keepers, α-temperature mixing of the survivors
-(mixing_weights → sample_quota, --mix-budget), then optional PII
-scrubbing of the surviving text.  Every gate is optional
-— skip a flag and its operator never enters the plan (Catalyst sees
-only what you asked for).
+url-host sources).  Row-local gates read only a doc's own text, so
+they are projections and Filters over the scan, with no join:
+language/quality (with_text_profile), the Gopher/FineWeb rule battery
+(with_quality_gate, --gopher-gate), repetition (with_repetition_profile,
+Gopher dup_word_char_frac).  Cross-document gates join on the id: the
+unigram-LM floor, benchmark decontamination (4-gram overlap vs
+--bench), near-dup / semantic / exact-dup keepers, substring and
+containment dedup, α-temperature mixing of the survivors
+(mixing_weights → sample_quota, --mix-budget).  PII scrubbing
+(with_scrubbed_pii) projects the surviving text last.  Each row-local
+step is the projection behind an operator the driver gate oracles.
+Every gate is optional — skip a flag and it never enters the plan.
 """
 
 from __future__ import annotations
@@ -41,7 +40,7 @@ os.environ["PYTHONPATH"] = (
 )
 
 
-def main(argv=None):
+def parse_args(argv=None) -> argparse.Namespace:
     parser = argparse.ArgumentParser(description="corpus curation job")
     parser.add_argument("--input", required=True,
                         help="documents parquet (doc_id, text, ...) or a "
@@ -111,75 +110,47 @@ def main(argv=None):
     args = parser.parse_args(argv)
     if args.prior_signatures and args.dedup != "neardup":
         parser.error("--prior-signatures requires --dedup neardup")
+    return args
 
-    from pyspark.sql import SparkSession, functions as F
+
+def curate(docs, args: argparse.Namespace):
+    """The gated corpus, in the order the module docstring lists."""
+    from pyspark.sql import functions as F
 
     from webtext_extraction_spark.operators import contamination, dedup, privacy, textstats
+    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
 
-    spark = SparkSession.builder.appName("webtext-curate").getOrCreate()
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-    if args.input_format == "wet":
-        # Common Crawl in, documents shape out: deterministic doc_id
-        # (portable md5 of the record id, url fallback — stable
-        # across runs and engines), source = url host so the
-        # per-source gates (mixing, overlap, reports) work untouched
-        from webtext_extraction_spark.functions.text import (
-            domain_of,
-            portable_hash64,
-        )
-        from webtext_extraction_spark.sources.wet import open_wet
-
-        wet = open_wet(spark, args.input)
-        docs = wet.select(
-            portable_hash64(
-                F.coalesce(F.col("record_id"), F.col("url"), F.lit(""))
-            ).alias(args.id_col),
-            F.col("text").alias(args.text_col),
-            F.col("url"),
-            domain_of(F.col("url")).alias("source"),
-        )
-    else:
-        docs = spark.read.parquet(args.input)
-    idc, txt = args.id_col, args.text_col
-    out = docs
-
+    idc, txt, spark = args.id_col, args.text_col, docs.sparkSession
+    # the row-local gates read each doc's own text: projections and
+    # Filters over the scan, no id join (a repeated id never meets
+    # another copy's verdict)
+    out, cols = ensure_scan_parallelism(docs), docs.columns
     if args.lang or args.min_quality is not None:
-        prof = textstats.text_profile(docs, idc, txt).select(
-            idc, "lang_pred", "quality"
-        )
-        out = out.join(prof, idc)
+        out = textstats.with_text_profile(out, txt)
+        cols = cols + ["lang_pred", "quality"]
         if args.lang:
             out = out.filter(F.col("lang_pred") == args.lang)
         if args.min_quality is not None:
             out = out.filter(F.col("quality") >= args.min_quality)
-
     if args.gopher_gate:
-        # quality_gate keeps a row for EVERY doc (NULL/empty included:
-        # the word-count floor owns them), so an inner join loses no
-        # rows; the gate itself is one zero-shuffle projection
-        qg = textstats.quality_gate(
-            docs, idc, txt,
+        out = textstats.with_quality_gate(
+            out, txt,
             min_words=args.gate_min_words,
             max_dup_word_frac=args.gate_max_dup_frac,
-        ).select(idc, "passes")
-        out = out.join(qg, idc).filter(F.col("passes")).drop("passes")
-
+        ).filter(F.col("passes"))
     if args.max_dup_frac is not None:
-        rep = textstats.repetition_profile(docs, idc, txt).select(
-            idc, "dup_word_char_frac"
-        )
-        # left join: zero-word docs have no repetition row and pass
-        out = out.join(rep, idc, "left").filter(
+        # a zero-word doc has NULL repetition metrics and passes
+        out = textstats.with_repetition_profile(out, txt).filter(
             F.coalesce(F.col("dup_word_char_frac"), F.lit(0.0)) <= args.max_dup_frac
         )
+        cols = cols + ["dup_word_char_frac"]
+    out = out.select(*cols)
 
     if args.min_logprob is not None:
         lm = textstats.unigram_logprob(docs, idc, txt).select(idc, "logprob_mean")
-        # left join, matching the --max-dup-frac gate's convention
-        # (ADVICE r04): zero-token docs have no logprob row and PASS —
-        # a fluency floor has nothing to say about an empty doc; the
-        # repetition/quality gates own degenerate docs
+        # left join: zero-token docs have no logprob row and PASS, as a
+        # zero-word doc passes --max-dup-frac — a fluency floor has nothing
+        # to say about an empty doc; the quality gates own degenerate docs
         out = out.join(lm, idc, "left").filter(
             F.col("logprob_mean").isNull()
             | (F.col("logprob_mean") >= args.min_logprob)
@@ -305,14 +276,41 @@ def main(argv=None):
         out = out.join(pick, idc, "left_semi")
 
     if args.scrub_pii:
-        scrubbed = privacy.scrub_pii(out, idc, txt)
-        out = out.drop(txt).join(
-            scrubbed.select(
-                idc, F.col("scrubbed_text").alias(txt), "n_email", "n_ipv4", "n_phone"
-            ),
-            idc,
+        out = privacy.with_scrubbed_pii(out, txt).select(
+            *(c for c in out.columns if c != txt),
+            F.col("scrubbed_text").alias(txt), "n_email", "n_ipv4", "n_phone",
         )
+    return out
 
+
+def main(argv=None):
+    args = parse_args(argv)
+
+    from pyspark.sql import SparkSession, functions as F
+
+    spark = SparkSession.builder.appName("webtext-curate").getOrCreate()
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    if args.input_format == "wet":
+        # Common Crawl in, documents shape out: deterministic doc_id
+        # (portable md5 of the record id, url fallback — stable
+        # across runs and engines), source = url host so the
+        # per-source gates (mixing, overlap, reports) work untouched
+        from webtext_extraction_spark.functions.text import domain_of, portable_hash64
+        from webtext_extraction_spark.sources.wet import open_wet
+
+        wet = open_wet(spark, args.input)
+        docs = wet.select(
+            portable_hash64(
+                F.coalesce(F.col("record_id"), F.col("url"), F.lit(""))
+            ).alias(args.id_col),
+            F.col("text").alias(args.text_col),
+            F.col("url"),
+            domain_of(F.col("url")).alias("source"),
+        )
+    else:
+        docs = spark.read.parquet(args.input)
+    out = curate(docs, args)
     out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     print(f"curated rows: {n}")
@@ -321,11 +319,13 @@ def main(argv=None):
         # the artifact the NEXT run passes as --prior-signatures: this
         # run's docs, unioned with the prior artifact when one was
         # given (so the corpus signature table accretes run over run)
-        sigs = dedup.minhash_signatures(docs, idc, txt, num_hashes=8)
+        from webtext_extraction_spark.operators.dedup import minhash_signatures
+
+        sigs = minhash_signatures(docs, args.id_col, args.text_col, num_hashes=8)
         if args.prior_signatures:
             sigs = sigs.unionByName(
                 spark.read.parquet(args.prior_signatures)
-                .select(idc, "ws_hashes", "minhash")
+                .select(args.id_col, "ws_hashes", "minhash")
             )
         sigs.write.mode("overwrite").parquet(args.emit_signatures)
         print(f"signatures: {spark.read.parquet(args.emit_signatures).count()}")

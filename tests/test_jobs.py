@@ -191,6 +191,36 @@ def test_run_curate_gopher_gate(spark, tmp_path, monkeypatch):
     assert kept == set(range(20))
 
 
+def test_run_curate_row_local_gates_judge_each_copy_of_a_repeated_id(
+    spark, tmp_path, monkeypatch
+):
+    """Rows that share a doc_id are separate documents to the row-local
+    gates: no gate emits more rows than it reads, and each copy passes
+    or fails on its own text."""
+    from jobs import run_curate
+
+    en = "the quick brown fox jumps over the lazy dog, mail me at a@example.com"
+    ja = "これは日本語の文章です これは日本語の文章です"  # ja; 2 words, all dup
+    twin = "a quiet river runs under the old stone bridge"
+    rows = [(1, en), (1, ja), (2, twin), (2, twin), (3, "")]
+    p = str(tmp_path / "docs_rep_ids")
+    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(p)
+    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
+    scrubbed = en.replace("a@example.com", "<EMAIL>")
+    for flags, want in [
+        (["--lang", "en", "--scrub-pii"], [(1, scrubbed), (2, twin), (2, twin)]),
+        # the zero-word doc has no repetition metric and passes
+        (["--max-dup-frac", "0.8"], [(1, en), (2, twin), (2, twin), (3, "")]),
+        (["--gopher-gate", "--gate-min-words", "5"], [(1, en), (2, twin), (2, twin)]),
+    ]:
+        out = str(tmp_path / ("rep_ids_" + flags[0].strip("-")))
+        run_curate.main(["--input", p, "--output", out, *flags])
+        got = sorted(
+            (r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()
+        )
+        assert got == want, flags
+
+
 def test_run_curate_mix_downsamples_survivors(spark, tmp_path, monkeypatch):
     """--mix-budget draws the deterministic per-source quota from the
     gated survivors; re-running selects the identical row set."""

@@ -3,6 +3,7 @@
 
 import hashlib
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -621,6 +622,58 @@ def test_repetition_top_ngram_tie_breaks_to_greatest_gram(spark):
     df = spark.createDataFrame([(0, "b c a b c")], ["doc_id", "text"])
     r = textstats.repetition_profile(df, "doc_id", "text").collect()[0]
     assert r["top_ngram_char_frac"] == round(2 * 3 / 9, 6)
+
+
+def _repetition_reference(text, top_n=2, dup_n=5):
+    """repetition_profile's metrics replayed with collections.Counter."""
+    from collections import Counter
+
+    ws = [w for w in re.split(r"[ \t\n\x0b\f\r]+", text) if w]
+
+    def grams(n):
+        return Counter(" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1))
+
+    def dup_mass(counts):
+        return sum(len(g) * c for g, c in counts.items() if c >= 2)
+
+    words, top, dup = grams(1), grams(top_n), grams(dup_n)
+    best = max(((c, g) for g, c in top.items()), default=None)
+    return {
+        "n_words": len(ws),
+        "dup_word_frac": round((len(ws) - len(words)) / len(ws), 6),
+        "dup_word_char_frac": round(dup_mass(words) / sum(map(len, ws)), 6),
+        "top_ngram_char_frac": round(best[0] * len(best[1]) / len(text), 6) if best else 0.0,
+        "dup_ngram_char_frac": round(dup_mass(dup) / len(text), 6),
+    }
+
+
+def test_repetition_profile_multi_mb_document_matches_counter(spark):
+    """One > 2 MB document (random words, mixed separators, a repeated
+    40-word paragraph): the per-row sort handles it, and every metric
+    equals the Counter replay after rounding."""
+    import random
+    import string
+
+    rnd = random.Random(11)
+    vocab = [
+        "".join(rnd.choice(string.ascii_lowercase) for _ in range(rnd.randint(2, 9)))
+        for _ in range(20_000)
+    ]
+    para = " ".join(rnd.choice(vocab) for _ in range(40))
+    parts, size = [], 0
+    while size < 2_100_000:
+        part = para if rnd.random() < 0.01 else rnd.choice(vocab)
+        parts.append(part + rnd.choice([" "] * 20 + ["\n", " \t "]))
+        size += len(parts[-1])
+    text = "".join(parts)
+    assert len(text) >= 2_000_000
+    df = spark.createDataFrame([(0, text)], ["doc_id", "text"])
+    for top_n, dup_n in [(2, 5), (3, 1)]:
+        got = textstats.repetition_profile(df, "doc_id", "text", top_n, dup_n).collect()
+        assert len(got) == 1
+        row = got[0].asDict()
+        assert row.pop("doc_id") == 0
+        assert row == _repetition_reference(text, top_n, dup_n)
 
 
 def test_decontaminate_hand_computed(spark):

@@ -314,6 +314,56 @@ def test_repetition_profile_single_payload_scan(spark, tmp_path):
     assert _node_ids(plan, "Scan parquet") == 1
 
 
+def test_repetition_profile_sorts_once_per_row_below_its_lambdas(spark, tmp_path):
+    """repetition_profile is row-local: no Exchange.  The sorted gram
+    arrays are made in a Project of their own, and the Generate whose
+    lambdas index them reads them as attributes; a Filter on a metric
+    stays above that Generate.  Inlined into a lambda, the sort would
+    re-run once per element."""
+    from webtext_extraction_spark.operators.textstats import (
+        repetition_profile,
+        with_repetition_profile,
+    )
+
+    p = str(tmp_path / "docs_rep_sort")
+    spark.createDataFrame(
+        [(i, "a b c a b c d e %d" % i) for i in range(8)], ["doc_id", "text"]
+    ).write.parquet(p)
+    docs = spark.read.parquet(p)
+    gated = with_repetition_profile(docs, "text").filter(F.col("dup_word_char_frac") <= 0.8)
+    for df in (repetition_profile(docs, "doc_id", "text"), gated):
+        plan = _plan(df)
+        assert _node_ids(plan, "Exchange") == 0
+        sorting = [b for b in plan.split("\n\n") if "sort_array(" in b]
+        assert sorting and all(re.match(r"\(\d+\) Project\b", b.strip()) for b in sorting)
+        (generate,) = _node_details(plan, "Generate")
+        assert "lambdafunction" in generate and "_rp_s1" in generate
+
+
+def test_run_curate_row_local_gates_join_and_shuffle_nothing(spark, tmp_path):
+    """The row-local gates of run_curate (lang/quality, Gopher battery,
+    repetition, PII scrub) join nothing and shuffle nothing but
+    ensure_scan_parallelism's one round-robin rebalance."""
+    from jobs import run_curate
+
+    p = str(tmp_path / "docs_curate")
+    spark.createDataFrame(
+        [(i, "the cat sat on the mat %d u@x.com" % i) for i in range(8)], ["doc_id", "text"]
+    ).write.parquet(p)
+    args = run_curate.parse_args(
+        [
+            "--input", p, "--output", str(tmp_path / "unused"),
+            "--lang", "en", "--min-quality", "0.6", "--gopher-gate",
+            "--max-dup-frac", "0.8", "--scrub-pii",
+        ]
+    )
+    plan = _plan(run_curate.curate(spark.read.parquet(p), args))
+    assert "Join" not in plan
+    exchanges = _node_details(plan, "Exchange")
+    assert len(exchanges) <= 1
+    assert all("RoundRobinPartitioning" in b for b in exchanges)
+
+
 def test_decontaminate_broadcasts_bench_and_never_shuffles_payload(spark, tmp_path):
     """Bench gram set broadcast; the only Exchange carries the tiny
     (doc_id, counters) aggregate — the payload never shuffles."""

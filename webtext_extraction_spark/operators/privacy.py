@@ -40,20 +40,20 @@ PII_RULES: list[tuple[str, str, str]] = [
 
 
 def scrub_pii(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Redact emails / IPv4 addresses / phone-shaped digit runs.
+    """Redact emails / IPv4 addresses / phone-shaped digit runs: the
+    columns of :func:`with_scrubbed_pii` keyed by id, (id,
+    scrubbed_text, n_email, n_ipv4, n_phone), one row per input row."""
+    out = with_scrubbed_pii(df, text_col)
+    return out.select(id_col, "scrubbed_text", "n_email", "n_ipv4", "n_phone")
 
-    Output: (id, scrubbed_text, n_email, n_ipv4, n_phone) — one row
-    per input row, NULL text treated as the empty document.  Counts
-    are per-category match counts at the moment that category is
-    scrubbed (sequential, see PII_RULES ordering).
-    """
+
+def with_scrubbed_pii(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` plus ``scrubbed_text`` and ``n_<category>`` match counts,
+    NULL text as the empty document.  Each count is taken when its
+    category is scrubbed (sequential, see PII_RULES ordering)."""
     cur = F.coalesce(F.col(text_col), F.lit(""))
-    counts = []
+    counts = {}
     for name, pattern, repl in PII_RULES:
-        counts.append(F.regexp_count(cur, F.lit(pattern)).alias(f"n_{name}"))
+        counts[f"n_{name}"] = F.regexp_count(cur, F.lit(pattern))
         cur = F.regexp_replace(cur, pattern, repl)
-    return df.select(
-        F.col(id_col),
-        cur.alias("scrubbed_text"),
-        *counts,
-    )
+    return df.withColumns({"scrubbed_text": cur, **counts})

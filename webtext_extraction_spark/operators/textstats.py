@@ -31,6 +31,7 @@ from webtext_extraction_spark.functions.text import (
     portable_hash64,
     words,
 )
+from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
 
 EN_STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "on", "for", "with"]
 
@@ -88,12 +89,6 @@ def quality_score_expr(col) -> Column:
     )
 
 
-def token_counts(df: DataFrame, text_col: str) -> DataFrame:
-    return df.withColumn("ws_tokens", F.size(words(F.col(text_col)))).withColumn(
-        "bpe_tokens", F.regexp_count(F.col(text_col), F.lit(BPE_TOKEN_PATTERN))
-    )
-
-
 def fingerprint_expr(col) -> Column:
     """Order-sensitive rolling hash: acc = (acc*31 + h(w) mod 1e6+3)
     mod 1e9+7 — stays < 2^35 at every step, so no overflow divergence
@@ -132,79 +127,81 @@ def repetition_profile(
                            the value can exceed 1 on degenerate text —
                            filters threshold it, they don't sum it.
 
-    Shape (the 100 TB story): all gram sizes (n in {1, top_n, dup_n})
-    are generated in ONE projection over a SINGLE scan of the text
-    column (a union of per-n streams would rescan the 100 TB payload
-    once per n), flattened to a tagged (n, gram) stream with one
-    explode -> groupBy(doc, n, gram) with map-side partial aggregation
-    -> groupBy(doc) rollup.  Two shuffles total, keys are (doc, gram)
-    — uniformly spread, no hot keys, no per-doc quadratic HOF (which
-    would blow up on multi-MB documents).  Docs with zero words drop
-    out (documented; callers keep them with a left join).
+    The columns of :func:`with_repetition_profile` keyed by id, behind
+    the zero-word fence: docs with zero words drop out (documented; the
+    step keeps them, with NULL metrics).
+    """
+    # rlike guard == size(words)>0 without re-running the tokenize in
+    # the pushed-down scan filter (same move as minhash_lsh_pairs)
+    fenced = df.filter(F.col(text_col).rlike(r"\S"))
+    return with_repetition_profile(fenced, text_col, top_n, dup_n).select(
+        id_col, "n_words", "dup_word_frac", "dup_word_char_frac", "top_ngram_char_frac",
+        "dup_ngram_char_frac",
+    )
+
+
+def with_repetition_profile(
+    df: DataFrame, text_col: str, top_n: int = 2, dup_n: int = 5
+) -> DataFrame:
+    """``df`` plus the :func:`repetition_profile` columns, NULL for a
+    doc with zero words.  The Gopher rules are per-document, so this is
+    a row-local projection: each gram array (n in {1, top_n, dup_n}) is
+    sorted once per row, O(n log n) (``sort_array``: native ordering,
+    not ``array_sort``'s comparator lambda); the duplicate mass is the
+    summed length of elements equal to a sorted neighbour, the top gram
+    the greatest (run length, gram).  Fences, pinned by test_plans.py:
+    the sorted arrays sit in their own Project (inlined into the lambdas
+    that index them they would re-sort per element), and the metrics
+    come out of a one-row ``inline``, so a Filter on them is not pushed
+    down with those sorts inlined.
     """
     if top_n < 1 or dup_n < 1:
         raise ValueError(f"gram sizes must be >= 1, got top_n={top_n} dup_n={dup_n}")
-    # rlike guard == size(words)>0 without re-running the tokenize in
-    # the pushed-down scan filter (same move as minhash_lsh_pairs)
-    base = df.filter(F.col(text_col).rlike(r"\S")).select(
-        F.col(id_col).alias("_id"),
-        F.length(F.col(text_col)).cast("double").alias("_chars"),
-        words(F.col(text_col)).alias("_ws"),
+    ws = F.col("_rp_ws")
+    sizes = sorted({1, top_n, dup_n})
+    tmp = ["_rp_ws"] + [f"_rp_s{n}" for n in sizes]
+    srt = df.withColumn("_rp_ws", words(F.col(text_col))).withColumns(
+        {f"_rp_s{n}": F.sort_array(ws if n == 1 else ngrams_of_words(ws, n)) for n in sizes}
     )
-    def _tagger(n: int):
-        # NOTE: must be a one-arg lambda — transform() interprets a
-        # two-arg lambda as the (element, index) form, so the usual
-        # `lambda g, n=n:` default-capture idiom silently binds n to
-        # the POSITION INDEX here.
-        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram"))
+    s1, dup = F.col("_rp_s1"), F.col(f"_rp_s{dup_n}")
+    n_words = F.size(s1)
+    chars = F.length(F.col(text_col)).cast("double")
+    metrics = {
+        "n_words": n_words,
+        "dup_word_frac": F.round((n_words - F.size(F.array_distinct(s1))) / n_words, 6),
+        "dup_word_char_frac": F.round(_dup_mass(s1) / _mass(s1), 6),
+        "top_ngram_char_frac": F.round(
+            F.coalesce(_top_run_mass(F.col(f"_rp_s{top_n}")) / chars, F.lit(0.0)), 6
+        ),
+        "dup_ngram_char_frac": F.round(_dup_mass(dup) / chars, 6),
+    }
+    row = F.struct(*(F.when(n_words > 0, e).alias(name) for name, e in metrics.items()))
+    return srt.drop(*metrics).select("*", F.inline(F.array(row))).drop(*tmp)
 
-    tag_streams = [
-        F.transform(ngrams_of_words(F.col("_ws"), n), _tagger(n))
-        for n in sorted({1, top_n, dup_n})
-    ]
-    tagged = base.select(
-        "_id",
-        "_chars",
-        F.explode(F.flatten(F.array(*tag_streams))).alias("_t"),
-    ).select("_id", "_chars", F.col("_t.n").alias("n"), F.col("_t.gram").alias("gram"))
-    counts = tagged.groupBy("_id", "_chars", "n", "gram").agg(
-        F.count("*").cast("long").alias("c")
+
+def _mass(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, g: acc + F.length(g))
+
+
+def _dup_mass(srt: Column) -> Column:
+    """Char mass of the sorted array's elements equal to a neighbour
+    (``get`` is NULL out of range, where ANSI mode rejects ``[]``)."""
+    return _mass(F.filter(srt, lambda g, i: (g == F.get(srt, i - 1)) | (g == F.get(srt, i + 1))))
+
+
+def _top_run_mass(srt: Column) -> Column:
+    """count * length of the most frequent gram of a sorted array (NULL
+    when empty): the struct max of (run length, gram) over its runs."""
+    def step(acc, g):
+        run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(1)
+        top = F.greatest(acc["top"], F.struct(run.alias("c"), g.alias("gram")))
+        return F.struct(g.alias("prev"), run.alias("run"), top.alias("top"))
+
+    start = F.expr(
+        "named_struct('prev', CAST(NULL AS STRING), 'run', 0L,"
+        " 'top', named_struct('c', 0L, 'gram', CAST(NULL AS STRING)))"
     )
-    counts = counts.withColumn("mass", F.col("c") * F.length("gram"))
-    is1 = F.col("n") == 1
-    ist = F.col("n") == top_n
-    isd = F.col("n") == dup_n
-    dup = F.col("c") >= 2
-    agg = counts.groupBy("_id", "_chars").agg(
-        F.sum(F.when(is1, F.col("c"))).cast("int").alias("n_words"),
-        F.sum(F.when(is1, 1)).cast("int").alias("n_distinct_words"),
-        F.sum(F.when(is1, F.col("mass"))).alias("word_mass"),
-        F.coalesce(F.sum(F.when(is1 & dup, F.col("mass"))), F.lit(0)).alias("dup_word_mass"),
-        F.max(F.when(ist, F.struct(F.col("c"), F.col("gram")))).alias("top"),
-        F.coalesce(F.sum(F.when(isd & dup, F.col("mass"))), F.lit(0)).alias("dup_gram_mass"),
-    )
-    return agg.select(
-        F.col("_id").alias(id_col),
-        "n_words",
-        F.round((F.col("n_words") - F.col("n_distinct_words")) / F.col("n_words"), 6)
-        .cast("double")
-        .alias("dup_word_frac"),
-        F.round(F.col("dup_word_mass") / F.col("word_mass"), 6)
-        .cast("double")
-        .alias("dup_word_char_frac"),
-        F.round(
-            F.coalesce(
-                F.col("top.c") * F.length(F.col("top.gram")) / F.col("_chars"),
-                F.lit(0.0),
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("top_ngram_char_frac"),
-        F.round(F.col("dup_gram_mass") / F.col("_chars"), 6)
-        .cast("double")
-        .alias("dup_ngram_char_frac"),
-    )
+    return F.aggregate(srt, start, step, lambda acc: acc["top"]["c"] * F.length(acc["top"]["gram"]))
 
 
 def pack_sequences(
@@ -1264,16 +1261,22 @@ def hist_quantiles(
 
 def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One-pass per-document profile: the operator queries() exposes."""
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
+    out = with_text_profile(ensure_scan_parallelism(df), text_col)
+    return out.select(id_col, "lang_pred", "quality", "ws_tokens", "bpe_tokens", "fingerprint")
 
-    out = token_counts(ensure_scan_parallelism(df), text_col)
-    return out.select(
-        F.col(id_col),
-        lang_id_expr(F.col(text_col)).alias("lang_pred"),
-        quality_score_expr(F.col(text_col)).alias("quality"),
-        "ws_tokens",
-        "bpe_tokens",
-        fingerprint_expr(F.col(text_col)).alias("fingerprint"),
+
+def with_text_profile(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` plus the :func:`text_profile` columns: language, quality,
+    whitespace and BPE-ish regex token counts, fingerprint."""
+    text = F.col(text_col)
+    return df.withColumns(
+        {
+            "lang_pred": lang_id_expr(text),
+            "quality": quality_score_expr(text),
+            "ws_tokens": F.size(words(text)),
+            "bpe_tokens": F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN)),
+            "fingerprint": fingerprint_expr(text),
+        }
     )
 
 
@@ -1528,9 +1531,16 @@ def mixing_weights(
     return out
 
 
-def quality_gate(
+def quality_gate(df: DataFrame, id_col: str, text_col: str, **thresholds) -> DataFrame:
+    """:func:`with_quality_gate`'s columns keyed by id, one row per input row."""
+    return with_quality_gate(df, text_col, **thresholds).select(
+        id_col, "n_words", "mean_word_len", "stop_ratio", "max_word_len", "dup_word_frac",
+        "alpha_ratio", "fail_mask", "passes",
+    )
+
+
+def with_quality_gate(
     df: DataFrame,
-    id_col: str,
     text_col: str,
     *,
     min_words: int = 50,
@@ -1581,9 +1591,9 @@ def quality_gate(
     boolean column, so ``.filter("passes")`` keeps the gate inside
     the scan stage of whatever reads it.
 
-    Output: (id, n_words int, mean_word_len double, stop_ratio
+    Adds to ``df``: n_words int, mean_word_len double, stop_ratio
     double, max_word_len int, dup_word_frac double, alpha_ratio
-    double, fail_mask int, passes boolean).
+    double, fail_mask int, passes boolean.
     """
     if min_words < 0 or max_words < min_words:
         raise ValueError(
@@ -1601,9 +1611,6 @@ def quality_gate(
     )
     n = F.size(ws).cast("long")
     nz = F.greatest(n, F.lit(1)).cast("double")
-    word_chars = F.aggregate(
-        ws, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-    )
     stop_hits = F.size(
         F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS))
     ).cast("long")
@@ -1617,16 +1624,15 @@ def quality_gate(
     alpha_chars = _char_count(
         F.coalesce(F.col(text_col), F.lit("")), r"[A-Za-z ]"
     ).cast("double")
-    base = df.select(
-        F.col(id_col),
-        n.cast("int").alias("n_words"),
-        F.round(word_chars.cast("double") / nz, 6).alias("mean_word_len"),
-        F.round(stop_hits.cast("double") / nz, 6).alias("stop_ratio"),
-        longest.alias("max_word_len"),
-        F.round((n - n_distinct).cast("double") / nz, 6).alias(
-            "dup_word_frac"
-        ),
-        F.round(alpha_chars / total_chars, 6).alias("alpha_ratio"),
+    base = df.withColumns(
+        {
+            "n_words": n.cast("int"),
+            "mean_word_len": F.round(_mass(ws).cast("double") / nz, 6),
+            "stop_ratio": F.round(stop_hits.cast("double") / nz, 6),
+            "max_word_len": longest,
+            "dup_word_frac": F.round((n - n_distinct).cast("double") / nz, 6),
+            "alpha_ratio": F.round(alpha_chars / total_chars, 6),
+        }
     )
     mask = (
         F.when(F.col("n_words") < min_words, GATE_TOO_FEW_WORDS).otherwise(0)

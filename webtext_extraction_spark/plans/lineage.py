@@ -69,17 +69,17 @@ def read_lineage(spark: SparkSession, output_path: str) -> list[Row]:
     snapshot must be detected, not silently mixed (reference analogue:
     completed_folder assumes one fixed URL list per run directory,
     R:21-42)."""
-    # the part files by their glob: naming the `_lineage` dir itself
-    # makes Spark warn that it ignores a hidden path; a dir holding only
-    # the `_temporary` of a killed first append has no part file yet
+    # the part files by name: Spark warns when named the hidden `_lineage`
+    # dir, and when its sink-metadata probe looks a glob up as a path; the
+    # `_temporary` of a killed first append holds no part file yet
     lineage_path = os.path.join(output_path, LINEAGE_DIR)
-    if not os.path.isdir(lineage_path) or not any(
-        f.endswith(".parquet") for f in os.listdir(lineage_path)
-    ):
+    names = os.listdir(lineage_path) if os.path.isdir(lineage_path) else []
+    parts = [_literal(os.path.join(lineage_path, f)) for f in names if f.endswith(".parquet")]
+    if not parts:
         return []
     return (
         spark.read.schema(LINEAGE_SCHEMA)
-        .parquet(_literal(lineage_path) + "/*.parquet")
+        .parquet(*parts)
         .select("bucket", "input_snapshot")
         .collect()
     )
