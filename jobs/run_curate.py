@@ -16,7 +16,9 @@ url-host sources).  Row-local gates read only a doc's own text, so
 they are projections and Filters over the scan, with no join:
 language/quality (with_text_profile), the Gopher/FineWeb rule battery
 (with_quality_gate, --gopher-gate), repetition (with_repetition_profile,
-Gopher dup_word_char_frac).  Cross-document gates join on the id: the
+Gopher dup_word_char_frac), which tokenize each document once between
+them and filter on fenced signal columns (textstats module docstring).
+Cross-document gates join on the id: the
 unigram-LM floor, benchmark decontamination (4-gram overlap vs
 --bench), near-dup / semantic / exact-dup keepers, substring and
 containment dedup, α-temperature mixing of the survivors

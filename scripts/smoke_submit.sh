@@ -48,8 +48,14 @@ spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
 test -d "$workdir/curated"
 python - <<EOF
 import duckdb
-n = duckdb.sql("SELECT count(*) FROM read_parquet('$workdir/curated/*.parquet')").fetchone()[0]
+curated = "read_parquet('$workdir/curated/*.parquet')"
+n = duckdb.sql(f"SELECT count(*) FROM {curated}").fetchone()[0]
 assert n > 0, "curation smoke produced zero rows"
-print(f"SMOKE OK: curated {n} rows")
+# the gates' internal columns (the shared word array) must not ship
+cols = [r[0] for r in duckdb.sql(f"DESCRIBE SELECT * FROM {curated}").fetchall()]
+want = ["doc_id", "lang", "source", "n_chars", "lang_pred", "quality",
+        "dup_word_char_frac", "text", "n_email", "n_ipv4", "n_phone"]
+assert cols == want, f"curated columns {cols} != {want}"
+print(f"SMOKE OK: curated {n} rows, columns {cols}")
 EOF
 rm -rf "$workdir"

@@ -6,23 +6,6 @@ from webtext_extraction_spark.kernel import handlers
 from webtext_extraction_spark.kernel.extract import extract_payload
 
 
-def test_youtube_handler_labels():
-    # D10 (dead code in the reference, W:911-955) — addressable operator
-    html = (
-        "<html><body><h1 class='title'>Video Title</h1>"
-        "<div id='description-inline-expander'>line one\ndesc body</div></body></html>"
-    )
-    tt, fail = handlers.handle_youtube(parse(html), "https://youtube.com/watch?v=1")
-    assert fail is None
-    assert tt.text.startswith("【タイトル】Video Title")
-    assert "【説明】\n" in tt.text
-
-
-def test_youtube_handler_failure_template():
-    tt, fail = handlers.handle_youtube(parse("<html><body></body></html>"), "u")
-    assert tt is None and fail.startswith("YouTubeページからのテキスト抽出に失敗しました")
-
-
 def test_instagram_fallback_selector():
     # no >20-char h1/span captions → '._a9zs' fallback (W:666-672)
     html = (

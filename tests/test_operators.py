@@ -676,6 +676,61 @@ def test_repetition_profile_multi_mb_document_matches_counter(spark):
         assert row == _repetition_reference(text, top_n, dup_n)
 
 
+EDGE_DOCS = [
+    (0, None),
+    (1, ""),
+    (2, " \t\n "),
+    (3, "word"),
+    (4, "日本語のテキストです。これは テスト です"),
+    (5, "a b b a"),  # every bigram count 1: the tie breaks to 'b b'
+    (6, "b c a b c"),
+    (7, "the cat sat on the mat and the cat sat on the mat again"),
+]
+
+
+def test_chained_row_local_steps_equal_each_operator_alone(spark):
+    """with_text_profile -> with_quality_gate -> with_repetition_profile
+    on one DataFrame share one word column; every operator's columns
+    equal that operator run alone, and no internal ``_`` column reaches
+    an operator's output or run_curate's."""
+    from jobs import run_curate
+
+    df = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    chain = textstats.with_repetition_profile(
+        textstats.with_quality_gate(textstats.with_text_profile(df, "text"), "text"), "text"
+    )
+    got = {r["doc_id"]: r.asDict() for r in chain.collect()}
+    assert set(got) == {d for d, _ in EDGE_DOCS}
+    alone = {
+        "text_profile": textstats.text_profile(df, "doc_id", "text"),
+        "quality_gate": textstats.quality_gate(df, "doc_id", "text"),
+        "repetition_profile": textstats.repetition_profile(df, "doc_id", "text"),
+    }
+    # the repetition step writes its own n_words / dup_word_frac (NULL
+    # for a zero-word doc) over the gate's
+    rep_only = {"n_words", "dup_word_frac"}
+    for name, out in alone.items():
+        assert not [c for c in out.columns if c.startswith("_")], (name, out.columns)
+        rows = out.collect()
+        assert rows, name
+        for r in rows:
+            want = r.asDict()
+            cols = set(want) - ({"doc_id"} | (rep_only if name == "quality_gate" else set()))
+            assert {c: got[r["doc_id"]][c] for c in cols} == {c: want[c] for c in cols}, name
+    # repetition_profile drops zero-word docs; the chain keeps them with NULL metrics
+    assert {r["doc_id"] for r in alone["repetition_profile"].collect()} == {3, 4, 5, 6, 7}
+    assert all(got[d]["dup_word_char_frac"] is None for d in (0, 1, 2))
+    for flags in (
+        "--lang en --min-quality 0.0 --gopher-gate --gate-min-words 1 --max-dup-frac 0.9 --scrub-pii",
+        "--gopher-gate --gate-min-words 0 --max-dup-frac 1.0",
+        "--min-quality 0.0",
+    ):
+        args = run_curate.parse_args(["--input", "unused", "--output", "unused"] + flags.split())
+        out = run_curate.curate(df, args)
+        assert not [c for c in out.columns if c.startswith("_")], (flags, out.columns)
+        assert out.count() > 0, flags
+
+
 def test_decontaminate_hand_computed(spark):
     from webtext_extraction_spark.operators import contamination
 

@@ -343,7 +343,10 @@ def test_repetition_profile_sorts_once_per_row_below_its_lambdas(spark, tmp_path
 def test_run_curate_row_local_gates_join_and_shuffle_nothing(spark, tmp_path):
     """The row-local gates of run_curate (lang/quality, Gopher battery,
     repetition, PII scrub) join nothing and shuffle nothing but
-    ensure_scan_parallelism's one round-robin rebalance."""
+    ensure_scan_parallelism's one round-robin rebalance.  They tokenize
+    each document once: the steps share one word column, and every
+    Filter reads fenced signal columns, not a copy of the tokenize or
+    of the lambdas over it."""
     from jobs import run_curate
 
     p = str(tmp_path / "docs_curate")
@@ -357,11 +360,18 @@ def test_run_curate_row_local_gates_join_and_shuffle_nothing(spark, tmp_path):
             "--max-dup-frac", "0.8", "--scrub-pii",
         ]
     )
-    plan = _plan(run_curate.curate(spark.read.parquet(p), args))
+    out = run_curate.curate(spark.read.parquet(p), args)
+    plan = _plan(out)
     assert "Join" not in plan
     exchanges = _node_details(plan, "Exchange")
     assert len(exchanges) <= 1
     assert all("RoundRobinPartitioning" in b for b in exchanges)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("split(") == 1, optimized
+    filters = [line for line in optimized.splitlines() if re.match(r"[\s:+-]*Filter\b", line)]
+    assert len(filters) >= 3, optimized
+    for cond in filters:
+        assert "split(" not in cond and "lambdafunction" not in cond, cond
 
 
 def test_decontaminate_broadcasts_bench_and_never_shuffles_payload(spark, tmp_path):

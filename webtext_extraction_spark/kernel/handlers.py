@@ -1,4 +1,4 @@
-"""Per-site special handlers (D7–D11) re-expressed over the engine DOM.
+"""Per-site special handlers (D7–D9, D11) re-expressed over the engine DOM.
 
 Each handler consumes a parsed Document (the reference fetches its own
 page via Selenium; in the new engine the payload IS the page, so the
@@ -10,9 +10,6 @@ Citations into /root/reference/common_scripts/web_text_extractor_ver1.5.py:
   handle_twitter_page      W:603-635
   handle_instagram_page    W:637-680
   handle_yahoo_chiebukuro  W:682-909
-  handle_youtube_page      W:911-955  (dead code in the reference —
-                           never dispatched — kept here as an
-                           addressable operator for parity)
   handle_pinterest_page    W:957-1185
 
 Selenium ``element.text`` (rendered text) is approximated by
@@ -193,31 +190,6 @@ def handle_chiebukuro(dom, url: str):
         result.extend(answers)
     if not result:
         return None, f"知恵袋からコンテンツを抽出できませんでした: {url}"
-    return TrackedText.join("\n\n", result), None
-
-
-def handle_youtube(dom, url: str):
-    """W:911-955 — 【タイトル】/【説明】 assembly (dead code in the
-    reference; exposed here as operator D10)."""
-    title_el = dom.select_one("h1.title")
-    title_tt = (
-        title_el.get_text_tracked(separator="\n", strip=True)
-        if title_el is not None
-        else TrackedText.empty()
-    )
-    desc_el = dom.select_one("#description-inline-expander")
-    desc_tt = (
-        desc_el.get_text_tracked(separator="\n", strip=True)
-        if desc_el is not None
-        else TrackedText.empty()
-    )
-    result = []
-    if title_tt.text:
-        result.append(TrackedText.synthetic("【タイトル】").concat(title_tt))
-    if desc_tt.text:
-        result.append(TrackedText.synthetic("【説明】\n").concat(desc_tt))
-    if not result:
-        return None, f"YouTubeページからのテキスト抽出に失敗しました: {url}"
     return TrackedText.join("\n\n", result), None
 
 

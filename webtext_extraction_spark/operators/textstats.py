@@ -20,6 +20,16 @@ models:
   style of Gopher's repetition filters (Rae et al. 2021, table A1) —
   duplicate-word and duplicate-n-gram character fractions plus the
   top-n-gram character share.
+
+The ``with_*`` steps behind text_profile, quality_gate and
+repetition_profile read one word array, ``_ws_<text>``, that the first
+of them puts in a plain Project, so a chain tokenizes each document
+once.  Each step's signals leave through ``_fence``, a one-row
+``inline``: Catalyst pushes a Filter through a Project with the aliases
+inlined, and lambdas escape common-subexpression elimination, so a
+Filter on an unfenced signal re-runs the tokenize and its lambdas.  The
+word array is not fenced: a second Generate per row cost text_profile
+20-30% at sf0.1.  Fences are pinned by tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -53,11 +63,27 @@ def _char_count(col, pattern: str) -> Column:
     return F.length(col) - F.length(F.regexp_replace(col, pattern, ""))
 
 
-def lang_id_expr(col) -> Column:
+def _with_words(df: DataFrame, text_col: str) -> tuple[DataFrame, Column]:
+    """(``df`` with the shared word column of ``text_col``, that column);
+    the column is added only when no earlier step added it."""
+    ws = f"_ws_{text_col}"
+    return (df if ws in df.columns else df.withColumn(ws, words(F.col(text_col)))), F.col(ws)
+
+
+def _stop_hits(ws: Column) -> Column:
+    return F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS)))
+
+
+def _fence(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    """``df`` plus ``cols``, replacing same-named columns, out of a one-row ``inline``."""
+    row = F.struct(*(e.alias(name) for name, e in cols.items()))
+    return df.drop(*cols).select("*", F.inline(F.array(row)))
+
+
+def lang_id_expr(col, ws) -> Column:
     jp = _char_count(col, r"[ぁ-んァ-ヶ一-龯ー]")
     total = F.greatest(F.length(col), F.lit(1))
-    ws = words(col)
-    stop_hits = F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS)))
+    stop_hits = _stop_hits(ws)
     n_words = F.greatest(F.size(ws), F.lit(1))
     alpha_ratio = _char_count(col, r"[A-Za-z ]") / total
     return (
@@ -67,16 +93,13 @@ def lang_id_expr(col) -> Column:
     )
 
 
-def quality_score_expr(col) -> Column:
+def quality_score_expr(col, ws) -> Column:
     """0..1 quality heuristic: rewards mid-length docs with normal
     punctuation/stopword profiles; penalizes fragments and symbol soup."""
     n = F.length(col).cast("double")
-    ws = words(col)
     n_words = F.greatest(F.size(ws), F.lit(1)).cast("double")
     punct_ratio = _char_count(col, r"[^\w\s]") / F.greatest(n, F.lit(1.0))
-    stop_ratio = (
-        F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS))).cast("double") / n_words
-    )
+    stop_ratio = _stop_hits(ws).cast("double") / n_words
     mean_word_len = F.greatest(n, F.lit(1.0)) / n_words
     len_score = F.least(n / F.lit(500.0), F.lit(1.0))
     punct_score = F.when(punct_ratio < 0.2, 1.0).otherwise(
@@ -89,7 +112,7 @@ def quality_score_expr(col) -> Column:
     )
 
 
-def fingerprint_expr(col) -> Column:
+def fingerprint_expr(ws) -> Column:
     """Order-sensitive rolling hash: acc = (acc*31 + h(w) mod 1e6+3)
     mod 1e9+7 — stays < 2^35 at every step, so no overflow divergence
     between engines.  NULL text fingerprints as the empty document
@@ -97,7 +120,7 @@ def fingerprint_expr(col) -> Column:
     DuckDB replay yields 0 (found by the r4 random-corpus soak; the
     driver corpus carries no NULL text, so the gate never saw it)."""
     return F.aggregate(
-        F.coalesce(words(col), F.array().cast("array<string>")),
+        F.coalesce(ws, F.array().cast("array<string>")),
         F.lit(0).cast("long"),
         lambda acc, w: (acc * 31 + portable_hash64(w) % FP_TOKEN_MOD) % FP_MOD,
     )
@@ -149,18 +172,18 @@ def with_repetition_profile(
     sorted once per row, O(n log n) (``sort_array``: native ordering,
     not ``array_sort``'s comparator lambda); the duplicate mass is the
     summed length of elements equal to a sorted neighbour, the top gram
-    the greatest (run length, gram).  Fences, pinned by test_plans.py:
-    the sorted arrays sit in their own Project (inlined into the lambdas
-    that index them they would re-sort per element), and the metrics
-    come out of a one-row ``inline``, so a Filter on them is not pushed
-    down with those sorts inlined.
+    the greatest (run length, gram), over the shared word column.
+    Fences, pinned by test_plans.py: the sorted arrays sit in their own
+    Project (inlined into the lambdas that index them they would re-sort
+    per element), and the metrics come out of :func:`_fence`, so a
+    Filter on them is not pushed down with those sorts inlined.
     """
     if top_n < 1 or dup_n < 1:
         raise ValueError(f"gram sizes must be >= 1, got top_n={top_n} dup_n={dup_n}")
-    ws = F.col("_rp_ws")
+    df, ws = _with_words(df, text_col)
     sizes = sorted({1, top_n, dup_n})
-    tmp = ["_rp_ws"] + [f"_rp_s{n}" for n in sizes]
-    srt = df.withColumn("_rp_ws", words(F.col(text_col))).withColumns(
+    tmp = [f"_rp_s{n}" for n in sizes]
+    srt = df.withColumns(
         {f"_rp_s{n}": F.sort_array(ws if n == 1 else ngrams_of_words(ws, n)) for n in sizes}
     )
     s1, dup = F.col("_rp_s1"), F.col(f"_rp_s{dup_n}")
@@ -175,8 +198,7 @@ def with_repetition_profile(
         ),
         "dup_ngram_char_frac": F.round(_dup_mass(dup) / chars, 6),
     }
-    row = F.struct(*(F.when(n_words > 0, e).alias(name) for name, e in metrics.items()))
-    return srt.drop(*metrics).select("*", F.inline(F.array(row))).drop(*tmp)
+    return _fence(srt, {name: F.when(n_words > 0, e) for name, e in metrics.items()}).drop(*tmp)
 
 
 def _mass(arr: Column) -> Column:
@@ -1267,16 +1289,22 @@ def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def with_text_profile(df: DataFrame, text_col: str) -> DataFrame:
     """``df`` plus the :func:`text_profile` columns: language, quality,
-    whitespace and BPE-ish regex token counts, fingerprint."""
+    whitespace and BPE-ish regex token counts, fingerprint, fenced.
+    Like the other ``with_*`` steps it leaves the shared word column
+    ``_ws_<text_col>`` in its output for the next step (module
+    docstring): callers select their columns, and a caller that
+    rewrites the text drops it first."""
+    df, ws = _with_words(df, text_col)
     text = F.col(text_col)
-    return df.withColumns(
+    return _fence(
+        df,
         {
-            "lang_pred": lang_id_expr(text),
-            "quality": quality_score_expr(text),
-            "ws_tokens": F.size(words(text)),
+            "lang_pred": lang_id_expr(text, ws),
+            "quality": quality_score_expr(text, ws),
+            "ws_tokens": F.size(ws),
             "bpe_tokens": F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN)),
-            "fingerprint": fingerprint_expr(text),
-        }
+            "fingerprint": fingerprint_expr(ws),
+        },
     )
 
 
@@ -1584,12 +1612,12 @@ def with_quality_gate(
     ratios are 0 by convention and the word-count floor owns the
     verdict (no /0 under ANSI — denominators are greatest(n, 1)).
 
-    Shape (100 TB): ONE projection over the text scan — zero shuffle,
+    Shape (100 TB): row-local over the text scan — zero shuffle,
     zero Python, whole-stage codegen end-to-end; array ops are linear
     per doc (array_distinct is hash-based, no quadratic HOF).  The
-    filter composes with predicate pushdown: ``passes`` is a plain
-    boolean column, so ``.filter("passes")`` keeps the gate inside
-    the scan stage of whatever reads it.
+    signals read the shared word column and are fenced (module
+    docstring); ``fail_mask`` and ``passes`` project over them, so
+    ``.filter("passes")`` compares computed columns.
 
     Adds to ``df``: n_words int, mean_word_len double, stop_ratio
     double, max_word_len int, dup_word_frac double, alpha_ratio
@@ -1606,25 +1634,18 @@ def with_quality_gate(
         )
     if max_word_len < 1:
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
-    ws = F.coalesce(
-        words(F.col(text_col)), F.array().cast("array<string>")
-    )
+    df, ws = _with_words(df, text_col)
+    ws = F.coalesce(ws, F.array().cast("array<string>"))
+    text = F.coalesce(F.col(text_col), F.lit(""))
     n = F.size(ws).cast("long")
     nz = F.greatest(n, F.lit(1)).cast("double")
-    stop_hits = F.size(
-        F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS))
-    ).cast("long")
-    longest = F.coalesce(
-        F.array_max(F.transform(ws, F.length)), F.lit(0)
-    ).cast("int")
+    stop_hits = _stop_hits(ws).cast("long")
+    longest = F.coalesce(F.array_max(F.transform(ws, F.length)), F.lit(0)).cast("int")
     n_distinct = F.size(F.array_distinct(ws)).cast("long")
-    total_chars = F.greatest(
-        F.length(F.coalesce(F.col(text_col), F.lit(""))), F.lit(1)
-    ).cast("double")
-    alpha_chars = _char_count(
-        F.coalesce(F.col(text_col), F.lit("")), r"[A-Za-z ]"
-    ).cast("double")
-    base = df.withColumns(
+    total_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
+    alpha_chars = _char_count(text, r"[A-Za-z ]").cast("double")
+    base = _fence(
+        df,
         {
             "n_words": n.cast("int"),
             "mean_word_len": F.round(_mass(ws).cast("double") / nz, 6),
@@ -1632,7 +1653,7 @@ def with_quality_gate(
             "max_word_len": longest,
             "dup_word_frac": F.round((n - n_distinct).cast("double") / nz, 6),
             "alpha_ratio": F.round(alpha_chars / total_chars, 6),
-        }
+        },
     )
     mask = (
         F.when(F.col("n_words") < min_words, GATE_TOO_FEW_WORDS).otherwise(0)
