@@ -42,6 +42,7 @@ from webtext_extraction_spark.operators.dedup import (
     TOKEN_SPACE,
     _perm_params,
 )
+from webtext_extraction_spark.operators.partitioning import source_splits
 from webtext_extraction_spark.functions import text as textfn
 
 # ---------------------------------------------------------------------------
@@ -97,7 +98,8 @@ _FLAGSHIP_GOLDEN = os.path.join(
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """An sf table, split once for every query that reads it."""
+    return source_splits(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -363,9 +365,11 @@ def _q_j5_asof_join_bounded(spark, sf_dir):
 
 
 def _q_o1_stable_topn(spark, sf_dir):
+    """(l_orderkey, l_linenumber) repeats, so ties keep file order,
+    whatever the partitioning."""
     li = _load(spark, sf_dir, "lineitem")
     return (
-        li.orderBy("l_orderkey", "l_linenumber")
+        li.orderBy("l_orderkey", "l_linenumber", "_metadata.file_path", "_metadata.row_index")
         .select("l_orderkey", "l_linenumber", F.round("l_quantity", 6).alias("qty"))
         .limit(1000)
     )

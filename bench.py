@@ -81,6 +81,7 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
     from webtext_extraction_spark.operators.partitioning import (
         detect_hot_keys,
         salted_repartition,
+        source_splits,
     )
 
     transcripts = build_transcripts(spark, sf, convs)
@@ -155,8 +156,8 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
             "turns_per_sec": n_turns / timings["extract_pipeline"],
         }
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    docs = source_splits(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    emb = source_splits(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
     # the synthetic word-soup corpus is DEGENERATE for LSH: most doc
     # pairs genuinely exceed jaccard 0.7, so candidate verification is

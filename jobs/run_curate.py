@@ -26,6 +26,8 @@ containment dedup, α-temperature mixing of the survivors
 (with_scrubbed_pii) projects the surviving text last.  Each row-local
 step is the projection behind an operator the driver gate oracles.
 Every gate is optional — skip a flag and it never enters the plan.
+``main`` splits the source once (partitioning.source_splits), and every
+gate reads that one ``docs``; ``curate`` only builds the plan.
 """
 
 from __future__ import annotations
@@ -120,13 +122,12 @@ def curate(docs, args: argparse.Namespace):
     from pyspark.sql import functions as F
 
     from webtext_extraction_spark.operators import contamination, dedup, privacy, textstats
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
 
     idc, txt, spark = args.id_col, args.text_col, docs.sparkSession
     # the row-local gates read each doc's own text: projections and
     # Filters over the scan, no id join (a repeated id never meets
     # another copy's verdict)
-    out, cols = ensure_scan_parallelism(docs), docs.columns
+    out, cols = docs, docs.columns
     if args.lang or args.min_quality is not None:
         out = textstats.with_text_profile(out, txt)
         cols = cols + ["lang_pred", "quality"]
@@ -290,6 +291,8 @@ def main(argv=None):
 
     from pyspark.sql import SparkSession, functions as F
 
+    from webtext_extraction_spark.operators.partitioning import source_splits
+
     spark = SparkSession.builder.appName("webtext-curate").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -312,6 +315,7 @@ def main(argv=None):
         )
     else:
         docs = spark.read.parquet(args.input)
+    docs = source_splits(docs)
     out = curate(docs, args)
     out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()

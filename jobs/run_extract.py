@@ -15,6 +15,8 @@ default): CLI args > spark conf > defaults.  The job is resumable:
 re-running with the same --output skips lineage-committed buckets.
 The job's last stdout line is its summary as one JSON object
 (``buckets_done``, ``rows``; ``span_ok``/``span_mismatch`` with --audit).
+UDF batches take the engine's one size, ``session.ARROW_BATCH_ROWS``
+rows; Spark's 64 MB ``maxBytesPerBatch`` bounds those of multi-MB pages.
 On an Iceberg deployment, --input takes a table identifier and the
 scan becomes ``spark.read.format("iceberg").load(...)`` — everything
 downstream is unchanged.
@@ -62,11 +64,13 @@ def main(argv=None):
 
     from pyspark.sql import SparkSession
 
+    from webtext_extraction_spark.session import ARROW_BATCH_ROWS
+
     # executor-side tuning that must hold regardless of cluster defaults,
     # set on a session of its own: the caller's session conf is untouched
     spark = SparkSession.builder.appName("webtext-extract").getOrCreate().newSession()
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     if args.synth_convs:

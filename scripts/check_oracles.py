@@ -2,7 +2,8 @@
 queries() entry on Spark and its oracle_sql() on DuckDB over the same
 sf dir; compare row count, column names, and order-insensitive values.
 Each result line also carries the query's Spark seconds (plan build +
-collect), so one run is also the breadth probe of where the time goes.
+collect), so one run is also the breadth probe of where the time goes;
+the last line sums them.
 
 Usage: python scripts/check_oracles.py [sf_dir] [only_query ...]
 """
@@ -59,6 +60,7 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     ok = fail = 0
+    spark_total = 0.0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -67,7 +69,9 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            spark_s = f"spark {time.time() - t0:.2f} s"
+            elapsed = time.time() - t0
+            spark_total += elapsed
+            spark_s = f"spark {elapsed:.2f} s"
         except Exception as e:
             print(f"[SPARK ERR ] {name}: {str(e)[:300]}")
             fail += 1
@@ -100,7 +104,7 @@ def main():
         else:
             print(f"[MATCH     ] {name}: {len(srows)} rows, {spark_s}")
             ok += 1
-    print(f"\n{ok} ok, {fail} failing")
+    print(f"\n{ok} ok, {fail} failing, spark {spark_total:.1f} s")
     spark.stop()
     sys.exit(1 if fail else 0)
 

@@ -381,18 +381,20 @@ def test_run_extract_resumes_then_noops(spark, tmp_path, monkeypatch, capsys):
 def test_run_extract_leaves_session_conf(spark, tmp_path, monkeypatch, capsys):
     """The job sets its Arrow, batch-size and AQE settings on a session
     of its own: the caller's session reads its earlier values
-    afterwards."""
+    afterwards, including a batch size other than the job's."""
     from jobs import run_extract
+    from webtext_extraction_spark.session import ARROW_BATCH_ROWS
 
     monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
-    keys = (
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        "spark.sql.adaptive.enabled",
-    )
-    before = {k: spark.conf.get(k) for k in keys}
-    assert before["spark.sql.execution.arrow.maxRecordsPerBatch"] != "256"
-    out = str(tmp_path / "conf")
-    run_extract.main(["--synth-convs", "8", "--output", out, "--num-buckets", "2"])
-    capsys.readouterr()
-    assert {k: spark.conf.get(k) for k in keys} == before
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    keys = ("spark.sql.execution.arrow.pyspark.enabled", batch, "spark.sql.adaptive.enabled")
+    old_batch = spark.conf.get(batch)
+    spark.conf.set(batch, str(ARROW_BATCH_ROWS + 1))
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        out = str(tmp_path / "conf")
+        run_extract.main(["--synth-convs", "8", "--output", out, "--num-buckets", "2"])
+        capsys.readouterr()
+        assert {k: spark.conf.get(k) for k in keys} == before
+    finally:
+        spark.conf.set(batch, old_batch)

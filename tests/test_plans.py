@@ -342,11 +342,14 @@ def test_repetition_profile_sorts_once_per_row_below_its_lambdas(spark, tmp_path
 
 def test_run_curate_row_local_gates_join_and_shuffle_nothing(spark, tmp_path):
     """The row-local gates of run_curate (lang/quality, Gopher battery,
-    repetition, PII scrub) join nothing and shuffle nothing but
-    ensure_scan_parallelism's one round-robin rebalance.  They tokenize
-    each document once: the steps share one word column, and every
-    Filter reads fenced signal columns, not a copy of the tokenize or
-    of the lambdas over it."""
+    repetition, PII scrub) join nothing and shuffle nothing: curate()
+    only builds the plan, and main splits the source.  They tokenize
+    each document once and count its stopwords once: the steps share
+    one word column and its stopword count, and every Filter reads
+    fenced signal columns, not a copy of the tokenize or of the lambdas
+    over it.  The lang/quality gate alone computes no BPE count and no
+    fingerprint: only what a Filter reads is fenced, and the rest is
+    pruned."""
     from jobs import run_curate
 
     p = str(tmp_path / "docs_curate")
@@ -363,15 +366,23 @@ def test_run_curate_row_local_gates_join_and_shuffle_nothing(spark, tmp_path):
     out = run_curate.curate(spark.read.parquet(p), args)
     plan = _plan(out)
     assert "Join" not in plan
-    exchanges = _node_details(plan, "Exchange")
-    assert len(exchanges) <= 1
-    assert all("RoundRobinPartitioning" in b for b in exchanges)
+    assert _node_details(plan, "Exchange") == []
     optimized = out._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("split(") == 1, optimized
+    assert optimized.count("lower(") == 1, optimized
     filters = [line for line in optimized.splitlines() if re.match(r"[\s:+-]*Filter\b", line)]
     assert len(filters) >= 3, optimized
     for cond in filters:
         assert "split(" not in cond and "lambdafunction" not in cond, cond
+
+    lang_args = run_curate.parse_args(
+        ["--input", p, "--output", str(tmp_path / "unused"), "--lang", "en", "--min-quality", "0.6"]
+    )
+    lang_only = run_curate.curate(spark.read.parquet(p), lang_args)
+    optimized = lang_only._jdf.queryExecution().optimizedPlan().toString()
+    # regexp_count is rewritten to size(regexp_extract_all(...)) here
+    for pruned in ("regexp_count(", "regexp_extract_all(", "aggregate("):
+        assert pruned not in optimized, (pruned, optimized)
 
 
 def test_decontaminate_broadcasts_bench_and_never_shuffles_payload(spark, tmp_path):

@@ -201,9 +201,7 @@ def minhash_lsh_pairs(
             MINHASH_PRIME
         )
 
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
-    base = ensure_scan_parallelism(df.filter(F.col(text_col).rlike(r"\S"))).select(
+    base = df.filter(F.col(text_col).rlike(r"\S")).select(
         F.col(id_col).alias("_id"),
         hashed_word_set(F.col(text_col)).alias("_ws"),
     )
@@ -407,9 +405,6 @@ def with_simhash(df: DataFrame, text_col: str, bits: int = 32) -> DataFrame:
     # propagate NULL (r4 random-corpus soak finding).  Zero-token docs
     # therefore all carry fingerprint 0 and trivially pair with each
     # other in simhash_near_duplicates — identical on both engines.
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
-    df = ensure_scan_parallelism(df)
     ws = F.coalesce(word_set(F.col(text_col)), F.array().cast("array<string>"))
     hashes = F.transform(ws, lambda w: portable_hash64(w))
     # ONE array literal (not bits separate Literal nodes — plan size and

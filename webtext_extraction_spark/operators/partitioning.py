@@ -20,10 +20,27 @@ W:1388).  The Spark-native replacement is one measured decision
   per-turn, so salting is always safe (no cross-turn state).
 - AQE skew-join splitting stays on (session.py) as the runtime
   backstop for what the static salt misses.
+
+Every other job and entry query splits its input one way,
+``source_splits``, where it reads its source; operators never
+rebalance.  A source of fewer split units than ``defaultParallelism``
+would run per-row work (tokenizing, signatures, vector math) on fewer
+cores, so it is repartitioned to that count (explicitly, so AQE keeps
+it).  A unit is a parquet row group, from the ``inputFiles()`` footers,
+read only until the count reaches the target (a 10k-file table costs a
+handful); a file without a readable footer (WET text or gz, a scheme
+pyarrow does not know) counts as one.  The scan's planned split count
+over-counts: Spark splits a file by bytes, but only the split holding a
+row group's midpoint reads it, so a 105 MB one-row-group file planned
+4 splits at local[4] and ran on one task.  In-memory and streaming
+inputs pass unchanged.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
 
 # a conv_id is hot when its payload bytes exceed this multiple of the
@@ -100,28 +117,31 @@ def salted_repartition(
     return df.repartition(num_partitions, F.xxhash64(F.col("conv_id")), salt)
 
 
-def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
-    """Input-layout guard (guide §2.5 input skew / §6 small files): when
-    the plan yields fewer partitions than the cluster's parallelism —
-    one small parquet file, a single row group, an unsplittable codec —
-    per-row expression work (token hashing, minhash/simhash signatures,
-    vector math) runs on ONE core no matter how many the job has.
-    Rebalance once so compute-heavy projections use every core.
-
-    Scale-adaptive, not a local tune: any at-scale input already has
-    >= target splits, making this a structural no-op (zero added
-    shuffle at 100 TB); it only fires on under-split inputs, where the
-    rebalanced bytes are by definition small.  Uses an explicit
-    partition count so AQE does not re-coalesce the rebalance away.
-    Row-level results are partitioning-independent in every caller
-    (per-row columns, equi-join pair sets, deterministically tie-broken
-    rankings)."""
+def source_splits(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to ``defaultParallelism`` when its source
+    files hold fewer split units than that, else ``df`` itself (module
+    docstring)."""
     if df.isStreaming:
         return df
+    files = df.inputFiles()
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    units = 0
+    for uri in files:
+        units += _split_units(uri)
+        if units >= target:
+            return df
+    return df.repartition(target) if files else df
+
+
+def _split_units(uri: str) -> int:
+    """Row groups in the parquet footer at ``uri``; 1 for a file without
+    one (WET text or gz) or a scheme pyarrow does not know."""
+    try:
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with pq.ParquetFile(path, filesystem=fs) as footer:
+            return footer.metadata.num_row_groups
+    except (OSError, pa.ArrowInvalid):
+        return 1
 
 
 def bucket_id(key_col, num_buckets: int):

@@ -133,16 +133,12 @@ def cosine_topk(
     """Brute-force cosine top-k for the given query ids against the
     full table.  (query_id, neighbor_id, cos) with deterministic
     tie-breaking (cos desc, neighbor_id asc)."""
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
     if query_ids is None:
         query_ids = [0, 1, 2]
     queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    # the brute-force scoring scan is the per-row-heavy side (one cosine
-    # per row per query) — rebalance under-split inputs (guide §2.5)
-    base = ensure_scan_parallelism(embeddings).select(
+    base = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("b_vec")
     )
     scored = (
@@ -201,18 +197,11 @@ def lsh_ann_topk(
     """Bucketed ANN: probe only the query's own LSH bucket.  Recall<1
     by design; the bucket restriction is the 100 TB lever (candidates
     shrink 2^planes-fold and the join is an equi-join on bucket)."""
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
     if query_ids is None:
         query_ids = [0, 1, 2]
-    # one shared bucketed subtree for BOTH sides: the query filter does
-    # not push below the rebalance, so broadcast-build and probe reuse
-    # the same shuffle stage and the bucket projection runs once
-    # (measured faster than separately-bucketed sides, which scan and
-    # bucket twice)
-    bucketed = with_lsh_bucket(
-        ensure_scan_parallelism(embeddings), vec_col, num_planes, dim
-    )
+    # one bucketed subtree feeds both sides; the query filter reaches
+    # the scan, so the broadcast side buckets only the query rows
+    bucketed = with_lsh_bucket(embeddings, vec_col, num_planes, dim)
     queries = bucketed.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -308,10 +297,7 @@ def kmeans_centroids(
     (the same handful a real deployment would broadcast).  Components
     are rounded to 6 dp so the DuckDB oracle replays bit-identically;
     an empty cell keeps its previous centroid."""
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
     cents = default_centroids(df, k, id_col, vec_col)
-    df = ensure_scan_parallelism(df)
     dim = len(cents[0]) if cents else 0
     for _ in range(iters):
         celled = with_ivf_cell(df, cents, vec_col)
@@ -382,9 +368,7 @@ def ivf_ann_topk(
         )
     else:
         centroids = default_centroids(embeddings, k=n_cells, id_col=id_col, vec_col=vec_col)
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
-    celled = with_ivf_cell(ensure_scan_parallelism(embeddings), centroids, vec_col)
+    celled = with_ivf_cell(embeddings, centroids, vec_col)
     queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -471,11 +455,9 @@ def cosine_topk_int8(
     cosine.  Recall loss happens only if a true top-k neighbor falls
     outside the quantized top-(rerank_factor·k), which quantization
     error of ≲1% makes rare."""
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
     if query_ids is None:
         query_ids = [0, 1, 2]
-    quant = with_int8_quantization(ensure_scan_parallelism(embeddings), vec_col)
+    quant = with_int8_quantization(embeddings, vec_col)
     queries = quant.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -515,11 +497,7 @@ def embedding_near_duplicates(
     dim: int = 64,
 ) -> DataFrame:
     """Cosine near-dup pairs within LSH buckets (id_a < id_b)."""
-    from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
-
-    bucketed = with_lsh_bucket(
-        ensure_scan_parallelism(embeddings), vec_col, num_planes, dim
-    )
+    bucketed = with_lsh_bucket(embeddings, vec_col, num_planes, dim)
     a = bucketed.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("bucket").alias("ba")
     )

@@ -22,14 +22,16 @@ models:
   top-n-gram character share.
 
 The ``with_*`` steps behind text_profile, quality_gate and
-repetition_profile read one word array, ``_ws_<text>``, that the first
-of them puts in a plain Project, so a chain tokenizes each document
-once.  Each step's signals leave through ``_fence``, a one-row
-``inline``: Catalyst pushes a Filter through a Project with the aliases
-inlined, and lambdas escape common-subexpression elimination, so a
-Filter on an unfenced signal re-runs the tokenize and its lambdas.  The
-word array is not fenced: a second Generate per row cost text_profile
-20-30% at sf0.1.  Fences are pinned by tests/test_plans.py.
+repetition_profile read one word array, ``_ws_<text>``, and its
+stopword count, ``_stops_<text>``, that the first of them puts in plain
+Projects, so a chain tokenizes and counts once.  The signals a gate
+filters on leave through ``_fence``, a one-row ``inline``: Catalyst
+pushes a Filter through a Project with the aliases inlined, and lambdas
+escape common-subexpression elimination, so a Filter on an unfenced
+signal re-runs the tokenize and its lambdas.  The word array and the
+signals no gate filters on stay in plain Projects, which Catalyst prunes
+when unread (a second Generate per row for the word array cost
+text_profile 20-30% at sf0.1).  Fences are pinned by tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -41,7 +43,6 @@ from webtext_extraction_spark.functions.text import (
     portable_hash64,
     words,
 )
-from webtext_extraction_spark.operators.partitioning import ensure_scan_parallelism
 
 EN_STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "on", "for", "with"]
 
@@ -63,15 +64,16 @@ def _char_count(col, pattern: str) -> Column:
     return F.length(col) - F.length(F.regexp_replace(col, pattern, ""))
 
 
-def _with_words(df: DataFrame, text_col: str) -> tuple[DataFrame, Column]:
-    """(``df`` with the shared word column of ``text_col``, that column);
-    the column is added only when no earlier step added it."""
-    ws = f"_ws_{text_col}"
-    return (df if ws in df.columns else df.withColumn(ws, words(F.col(text_col)))), F.col(ws)
-
-
-def _stop_hits(ws: Column) -> Column:
-    return F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS)))
+def _with_words(df: DataFrame, text_col: str) -> tuple[DataFrame, Column, Column]:
+    """(``df`` with the shared word column of ``text_col`` and its
+    stopword count, those two columns), added only when no earlier step
+    added them; the count's Project reads the words from the one below."""
+    ws, stops = f"_ws_{text_col}", f"_stops_{text_col}"
+    if ws not in df.columns:
+        df = df.withColumn(ws, words(F.col(text_col))).withColumn(
+            stops, F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS)))
+        )
+    return df, F.col(ws), F.col(stops)
 
 
 def _fence(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
@@ -80,10 +82,9 @@ def _fence(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     return df.drop(*cols).select("*", F.inline(F.array(row)))
 
 
-def lang_id_expr(col, ws) -> Column:
+def lang_id_expr(col, ws, stop_hits) -> Column:
     jp = _char_count(col, r"[ぁ-んァ-ヶ一-龯ー]")
     total = F.greatest(F.length(col), F.lit(1))
-    stop_hits = _stop_hits(ws)
     n_words = F.greatest(F.size(ws), F.lit(1))
     alpha_ratio = _char_count(col, r"[A-Za-z ]") / total
     return (
@@ -93,13 +94,13 @@ def lang_id_expr(col, ws) -> Column:
     )
 
 
-def quality_score_expr(col, ws) -> Column:
+def quality_score_expr(col, ws, stop_hits) -> Column:
     """0..1 quality heuristic: rewards mid-length docs with normal
     punctuation/stopword profiles; penalizes fragments and symbol soup."""
     n = F.length(col).cast("double")
     n_words = F.greatest(F.size(ws), F.lit(1)).cast("double")
     punct_ratio = _char_count(col, r"[^\w\s]") / F.greatest(n, F.lit(1.0))
-    stop_ratio = _stop_hits(ws).cast("double") / n_words
+    stop_ratio = stop_hits.cast("double") / n_words
     mean_word_len = F.greatest(n, F.lit(1.0)) / n_words
     len_score = F.least(n / F.lit(500.0), F.lit(1.0))
     punct_score = F.when(punct_ratio < 0.2, 1.0).otherwise(
@@ -180,7 +181,7 @@ def with_repetition_profile(
     """
     if top_n < 1 or dup_n < 1:
         raise ValueError(f"gram sizes must be >= 1, got top_n={top_n} dup_n={dup_n}")
-    df, ws = _with_words(df, text_col)
+    df, ws, _ = _with_words(df, text_col)
     sizes = sorted({1, top_n, dup_n})
     tmp = [f"_rp_s{n}" for n in sizes]
     srt = df.withColumns(
@@ -1283,29 +1284,29 @@ def hist_quantiles(
 
 def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One-pass per-document profile: the operator queries() exposes."""
-    out = with_text_profile(ensure_scan_parallelism(df), text_col)
-    return out.select(id_col, "lang_pred", "quality", "ws_tokens", "bpe_tokens", "fingerprint")
+    return with_text_profile(df, text_col).select(
+        id_col, "lang_pred", "quality", "ws_tokens", "bpe_tokens", "fingerprint"
+    )
 
 
 def with_text_profile(df: DataFrame, text_col: str) -> DataFrame:
-    """``df`` plus the :func:`text_profile` columns: language, quality,
-    whitespace and BPE-ish regex token counts, fingerprint, fenced.
-    Like the other ``with_*`` steps it leaves the shared word column
-    ``_ws_<text_col>`` in its output for the next step (module
-    docstring): callers select their columns, and a caller that
-    rewrites the text drops it first."""
-    df, ws = _with_words(df, text_col)
+    """``df`` plus the :func:`text_profile` columns: language and
+    quality fenced, the token counts and fingerprint plain (module
+    docstring).  Like the other ``with_*`` steps it leaves the shared
+    word columns in its output for the next step: callers select their
+    columns, and a caller that rewrites the text drops them first."""
+    df, ws, stops = _with_words(df, text_col)
     text = F.col(text_col)
-    return _fence(
-        df,
+    # below the fence, so the word array crosses it only when a later step reads it
+    plain = df.withColumns(
         {
-            "lang_pred": lang_id_expr(text, ws),
-            "quality": quality_score_expr(text, ws),
             "ws_tokens": F.size(ws),
             "bpe_tokens": F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN)),
             "fingerprint": fingerprint_expr(ws),
-        },
+        }
     )
+    gated = {"lang_pred": lang_id_expr(text, ws, stops), "quality": quality_score_expr(text, ws, stops)}
+    return _fence(plain, gated)
 
 
 def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1634,12 +1635,13 @@ def with_quality_gate(
         )
     if max_word_len < 1:
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
-    df, ws = _with_words(df, text_col)
+    df, ws, stops = _with_words(df, text_col)
     ws = F.coalesce(ws, F.array().cast("array<string>"))
     text = F.coalesce(F.col(text_col), F.lit(""))
     n = F.size(ws).cast("long")
     nz = F.greatest(n, F.lit(1)).cast("double")
-    stop_hits = _stop_hits(ws).cast("long")
+    # NULL text has NULL hits (the profile scores on that); here it has none
+    stop_hits = F.greatest(stops, F.lit(0)).cast("long")
     longest = F.coalesce(F.array_max(F.transform(ws, F.length)), F.lit(0)).cast("int")
     n_distinct = F.size(F.array_distinct(ws)).cast("long")
     total_chars = F.greatest(F.length(text), F.lit(1)).cast("double")

@@ -5,11 +5,9 @@ chosen to survive a 1000-executor / 100 TB deployment:
 
 - AQE on (runtime coalesce + skew-join splitting) — the Spark-native
   answer to the reference's straggler problem (SURVEY.md §2.9).
-- Arrow batches capped at 512 rows (measured optimum for the
-  arrow-native UDF on KB-scale fixture payloads; the Spark default
-  10k-row batches would hold multi-MB Arrow buffers per python worker
-  — SURVEY.md §4).  Jobs with multi-MB payloads tune DOWN via
-  SPARK_ARROW_BATCH_ROWS / extra_conf (jobs/run_extract.py uses 256).
+- One Arrow batch size, ``ARROW_BATCH_ROWS`` rows (jobs/run_extract.py
+  sets it too); Spark's 64 MB ``arrow.maxBytesPerBatch`` bounds batches
+  of heavy rows (0.7 MB rows arrive 96 to a UDF batch, 8 MB rows 9).
 - shuffle partitions sized to cores locally; on a real cluster this is
   2-3× total executor cores (or left to AQE's coalescing).
 - Python workers import the installed pyspark, not SPARK_HOME's
@@ -28,14 +26,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Arrow batch sizing rule: target ~1-8 MB per batch.  512 rows is the
-# measured optimum for the arrow-native UDF on KB-scale payloads
-# (interleaved sweep, 45k bench turns x 32 cores: 512 beat 1024 by
-# 5-8% in both adjacent pairs; 2048/4096 regress ~10%); jobs processing
-# multi-MB payloads should tune DOWN further (256 or lower) to bound
-# executor python memory — override via SPARK_ARROW_BATCH_ROWS or
-# get_spark(extra_conf=...).
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_ARROW_BATCH_ROWS", "512"))
+# the measured optimum for the arrow-native UDF on KB-scale payloads
+# (45k bench turns x 32 cores: 512 beat 1024 by 5-8%; 2048/4096 ~10% slower)
+ARROW_BATCH_ROWS = 512
 
 # the directory holding this package, on the workers' PYTHONPATH so the
 # worker daemon below imports from any driver working directory
