@@ -18,7 +18,8 @@ language/quality (with_text_profile), the Gopher/FineWeb rule battery
 (with_quality_gate, --gopher-gate), repetition (with_repetition_profile,
 Gopher dup_word_char_frac), which tokenize each document once between
 them and filter on fenced signal columns (textstats module docstring).
-Cross-document gates join on the id: the
+Cross-document gates join on the id — a verdict applied as a semi or
+anti join never multiplies a repeated id: the
 unigram-LM floor, benchmark decontamination (4-gram overlap vs
 --bench), near-dup / semantic / exact-dup keepers, substring and
 containment dedup, α-temperature mixing of the survivors
@@ -161,10 +162,12 @@ def curate(docs, args: argparse.Namespace):
 
     if args.bench:
         bench = spark.read.parquet(args.bench)
-        cont = contamination.decontaminate(docs, bench, idc, txt, n=4).select(
-            idc, "contaminated"
+        contaminated = (
+            contamination.decontaminate(docs, bench, idc, txt, n=4)
+            .filter(F.col("contaminated"))
+            .select(idc)
         )
-        out = out.join(cont, idc).filter(~F.col("contaminated")).drop("contaminated")
+        out = out.join(contaminated, idc, "left_anti")
 
     if args.dedup == "exact":
         dups = dedup.exact_duplicates(docs, idc, txt)
@@ -225,7 +228,7 @@ def curate(docs, args: argparse.Namespace):
                 .filter(F.col("node") == F.col("component"))
                 .select(F.col("node").alias(idc))
             )
-        out = out.join(keepers, idc)
+        out = out.join(keepers, idc, "left_semi")
     elif args.dedup == "containment":
         # drop docs fully CONTAINED in another (word-set containment
         # 1.0 — the quote-page / doc+appendix class Jaccard dedup
@@ -262,7 +265,7 @@ def curate(docs, args: argparse.Namespace):
             .filter(F.col("node") == F.col("component"))
             .select(F.col("node").alias(idc))
         )
-        out = out.join(keepers, idc)
+        out = out.join(keepers, idc, "left_semi")
 
     if args.mix_budget is not None:
         # α-temperature downsampling of the SURVIVORS (the gated

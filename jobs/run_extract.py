@@ -8,13 +8,14 @@ Cluster usage (north rule: multi-executor, N and 4N):
         jobs/run_extract.py \\
         --input <parquet-or-iceberg path/table> \\
         --output /data/extracted \\
-        --num-buckets 512 --write-partitions 4096
+        --num-buckets 512 --rules site_rules.json
 
 Config precedence (reference analogue W:1758-1789: CLI > config.ini >
 default): CLI args > spark conf > defaults.  The job is resumable:
 re-running with the same --output skips lineage-committed buckets.
 The job's last stdout line is its summary as one JSON object
-(``buckets_done``, ``rows``; ``span_ok``/``span_mismatch`` with --audit).
+(``buckets_done``, ``rows``).  The write stage runs 2 tasks per core
+(at least one per remaining bucket), whatever --num-buckets is.
 UDF batches take the engine's one size, ``session.ARROW_BATCH_ROWS``
 rows; Spark's 64 MB ``maxBytesPerBatch`` bounds those of multi-MB pages.
 On an Iceberg deployment, --input takes a table identifier and the
@@ -53,13 +54,6 @@ def main(argv=None):
                              "(domain -> [selectors]); broadcast to executors")
     parser.add_argument("--input-snapshot", default=None,
                         help="input version id recorded in lineage rows")
-    parser.add_argument("--write-partitions", type=int, default=None,
-                        help="write-stage task count (decoupled from "
-                             "--num-buckets; default 2 tasks/core)")
-    parser.add_argument("--audit", action="store_true",
-                        help="post-commit span-invariant audit over this "
-                             "run's output (adds span_ok/span_mismatch "
-                             "to the summary)")
     args = parser.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -100,8 +94,6 @@ def main(argv=None):
         buckets_per_commit=args.buckets_per_commit,
         input_snapshot=args.input_snapshot or (args.input or "synth"),
         site_rules=site_rules,
-        write_partitions=args.write_partitions,
-        audit=args.audit,
     )
     print(json.dumps(summary))
     spark.stop()

@@ -9,13 +9,17 @@ python - <<EOF
 import shutil
 shutil.make_archive("$workdir/engine", "zip", root_dir=".", base_dir="webtext_extraction_spark")
 EOF
+# a one-domain rule table for the hot-domain archetype, which has no
+# built-in rule: it reaches the executors only through the broadcast
+echo '{"blog.example": ["main"]}' > "$workdir/rules.json"
 extract() {
   spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
     --conf spark.ui.enabled=false \
-    jobs/run_extract.py --synth-convs 60 --output "$workdir/out" --num-buckets 8
+    jobs/run_extract.py --synth-convs 60 --output "$workdir/out" --num-buckets 8 \
+    --rules "$workdir/rules.json"
 }
 # the lineage reconciles with the output: one row per bucket and
-# sum(rows) equal to the data row count
+# sum(rows) equal to the data row count; the --rules table was applied
 reconcile() {
   python - <<EOF
 import duckdb
@@ -28,7 +32,13 @@ data = duckdb.sql(
 ).fetchone()[0]
 assert n == buckets == 8, f"lineage rows {n}, buckets {buckets}: want one row per bucket"
 assert rows == data, f"lineage sum(rows) {rows} != data rows {data}"
-print(f"SMOKE OK: lineage of {n} buckets reconciles with {data} data rows")
+ruled = duckdb.sql(
+    "SELECT count(*) FROM read_parquet('$workdir/out/data/*/*.parquet') "
+    "WHERE strategy = 'site-rule' AND domain = 'blog.example'"
+).fetchone()[0]
+assert ruled > 0, "no blog.example row took the --rules site rule"
+print(f"SMOKE OK: lineage of {n} buckets reconciles with {data} data rows; "
+      f"{ruled} blog.example rows took the --rules site rule")
 EOF
 }
 extract

@@ -91,7 +91,7 @@ def test_cleanup_parity_with_reference_oracle():
     for case in CASES:
         tt = cleanup_extracted_text(TrackedText.literal(case, 0))
         assert tt.text == _oracle_cleanup(case), f"mismatch for {case!r}"
-        assert reconstruct(case, tt.text, tt.spans()) == tt.text
+        assert reconstruct(case, tt.text, tt.span_tuples()) == tt.text
 
 
 def test_near_dup_strict_greater_and_vs_kept_only():
@@ -117,7 +117,7 @@ def test_jina_markdown_cleanup():
     )
     out = jina_markdown_cleanup(TrackedText.literal(md, 0))
     assert out.text == "Body text tail\n\nend"
-    assert reconstruct(md, out.text, out.spans()) == out.text
+    assert reconstruct(md, out.text, out.span_tuples()) == out.text
 
 
 def test_nav_only_detector():

@@ -19,7 +19,7 @@ def test_entities_merge_into_one_string():
     assert p.get_text(strip=True) == "a & b"
     tt = p.get_text_tracked(separator="\n", strip=True)
     assert tt.text == "a & b"
-    assert reconstruct("<p> a &amp; b </p>", tt.text, tt.spans()) == tt.text
+    assert reconstruct("<p> a &amp; b </p>", tt.text, tt.span_tuples()) == tt.text
 
 
 def test_charref_hex_and_dec():
@@ -94,10 +94,10 @@ def test_get_text_tracked_offsets_literal():
     dom = parse(payload)
     tt = dom.select("div")[0].get_text_tracked(separator="\n", strip=True)
     assert tt.text == "hello\nworld"
-    spans = tt.spans()
-    assert spans[0]["kind"] == "src"
-    assert payload[spans[0]["start"] : spans[0]["end"]] == "hello"
-    assert payload[spans[2]["start"] : spans[2]["end"]] == "world"
+    spans = tt.span_tuples()
+    assert spans[0][2] == "src"
+    assert payload[spans[0][0] : spans[0][1]] == "hello"
+    assert payload[spans[2][0] : spans[2][1]] == "world"
 
 
 def test_depth_cap_keeps_pathological_pages_bounded():

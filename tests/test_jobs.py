@@ -196,7 +196,9 @@ def test_run_curate_row_local_gates_judge_each_copy_of_a_repeated_id(
 ):
     """Rows that share a doc_id are separate documents to the row-local
     gates: no gate emits more rows than it reads, and each copy passes
-    or fails on its own text."""
+    or fails on its own text.  The cross-document gates apply their
+    verdict as a semi/anti join on the id, so they do not multiply a
+    repeated id either."""
     from jobs import run_curate
 
     en = "the quick brown fox jumps over the lazy dog, mail me at a@example.com"
@@ -205,15 +207,23 @@ def test_run_curate_row_local_gates_judge_each_copy_of_a_repeated_id(
     rows = [(1, en), (1, ja), (2, twin), (2, twin), (3, "")]
     p = str(tmp_path / "docs_rep_ids")
     spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(p)
+    bench = str(tmp_path / "bench_unrelated")
+    spark.createDataFrame(
+        [("an unrelated benchmark question about prime numbers and sums",)], ["text"]
+    ).write.parquet(bench)
     monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
     scrubbed = en.replace("a@example.com", "<EMAIL>")
-    for flags, want in [
+    every_row = sorted(rows)
+    for i, (flags, want) in enumerate([
         (["--lang", "en", "--scrub-pii"], [(1, scrubbed), (2, twin), (2, twin)]),
         # the zero-word doc has no repetition metric and passes
         (["--max-dup-frac", "0.8"], [(1, en), (2, twin), (2, twin), (3, "")]),
         (["--gopher-gate", "--gate-min-words", "5"], [(1, en), (2, twin), (2, twin)]),
-    ]:
-        out = str(tmp_path / ("rep_ids_" + flags[0].strip("-")))
+        (["--bench", bench], every_row),
+        (["--dedup", "neardup"], every_row),
+        (["--dedup", "semantic"], every_row),
+    ]):
+        out = str(tmp_path / f"rep_ids_{i}")
         run_curate.main(["--input", p, "--output", out, *flags])
         got = sorted(
             (r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()

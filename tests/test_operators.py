@@ -566,18 +566,19 @@ def test_multimodal_decoder_seam(spark):
             assert bytes(r["payload"]) == originals[r["media_id"]]
 
 
-def test_make_extract_udf_rejects_unsupported_selectors(spark):
-    """Runtime rule tables are validated at broadcast time: an
-    unsupported selector must fail the job setup loudly instead of
-    being silently contained into per-row failure rows (round-3
-    review finding)."""
+def test_extract_turns_rejects_unsupported_selectors(spark):
+    """Runtime rule tables are validated when extract_turns builds the
+    plan, before any job runs: an unsupported selector must fail the
+    job setup loudly instead of being silently contained into per-row
+    failure rows (round-3 review finding)."""
     import pytest as _pytest
 
-    from webtext_extraction_spark.operators.extraction import make_extract_udf
+    from webtext_extraction_spark.operators.extraction import TRANSCRIPT_SCHEMA, extract_turns
 
+    df = spark.createDataFrame([], TRANSCRIPT_SCHEMA)
     with _pytest.raises(ValueError):
-        make_extract_udf(spark, {"example.com": ["div > p"]})
-    make_extract_udf(spark, {"example.com": [".article", "div.x + p"]})  # supported
+        extract_turns(df, site_rules={"example.com": ["div > p"]})
+    extract_turns(df, site_rules={"example.com": [".article", "div.x + p"]})  # supported
 
 
 # ---------------------------------------------------------------------------

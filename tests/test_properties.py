@@ -152,8 +152,7 @@ def test_mutated_archetype_payloads_never_crash():
         base, tool = pool[rng.randrange(len(pool))]
         m = mutate(base)
         r = extract_payload(m, tool)
-        spans = [{"start": a, "end": b, "kind": c} for a, b, c in r.spans]
-        assert reconstruct(m, r.text, spans) == r.text
+        assert reconstruct(m, r.text, r.spans) == r.text
         r2 = extract_payload(m, tool)
         assert r2.text == r.text and r2.status == r.status
 

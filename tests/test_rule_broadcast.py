@@ -41,3 +41,20 @@ def test_broadcast_site_rule_override(spark):
     # default path unchanged afterwards (no module-state mutation)
     again = extract_turns(df).select("strategy").first()
     assert again["strategy"] == "generic"
+
+
+def test_default_rules_equal_the_same_table_passed_explicitly(spark):
+    """With no ``site_rules`` extract_turns broadcasts the built-in
+    table: the output equals passing that table explicitly, row for
+    row, over every synth archetype."""
+    from webtext_extraction_spark.sources.transcripts import synth_transcripts
+
+    df = synth_transcripts(spark, num_conversations=60)
+    keys = ["conv_id", "turn_idx"]
+    default = extract_turns(df).orderBy(*keys).collect()
+    explicit = (
+        extract_turns(df, site_rules=dict(rules.DOMAIN_SELECTORS)).orderBy(*keys).collect()
+    )
+    assert len(default) == df.count()
+    assert any(r["strategy"] == "site-rule" for r in default)
+    assert default == explicit

@@ -3,11 +3,11 @@ independent recursive reimplementation (``tests.stdlib_tree.naive_select``),
 over random trees × the real selector inventory (every selector the
 rules/handlers actually use)."""
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from webtext_extraction_spark import rules
 from webtext_extraction_spark.html.dom import parse
+from webtext_extraction_spark.html.selector import _parse_selector, decompose_all, select
 
 from tests.stdlib_tree import naive_select
 
@@ -17,8 +17,9 @@ SELECTORS = list(
         + rules.UNWANTED_SELECTORS
         + rules.BODY_UNWANTED_SELECTORS
         + [s for sels in rules.DOMAIN_SELECTORS.values() for s in sels]
+        + rules.SELENIUM_BODY_UNWANTED
         + [
-            rules.SELENIUM_BODY_UNWANTED,
+            ", ".join(rules.SELENIUM_BODY_UNWANTED),
             "[data-test-id='pin-domain-link'] span",
             "span[style*='text-decoration: underline']",
             "a[href*='http']",
@@ -98,33 +99,52 @@ def test_index_select_survives_decompose_interleavings(nodes, data):
             assert [id(e) for e in fa] == [id(e) for e in walk]
 
 
-def test_decompose_all_adjacent_chain_sequential_semantics():
-    """decompose_all with an adjacent-sibling chain must equal
-    sequential per-selector select+decompose: '.x' removes the first
-    sibling, after which '.y + .z' no longer matches (round-3 review
-    finding — the batch walk used to match '+' against the pristine
-    tree)."""
-    from webtext_extraction_spark.html.selector import decompose_all
-
-    dom = parse('<html><body><p class="x y">a</p><p class="z">keep</p></body></html>')
-    decompose_all(dom.body, [".x", ".y + .z"])
-    assert [el.get_text() for el in dom.select("p")] == ["keep"]
+BOILERPLATE_LISTS = {
+    "UNWANTED_SELECTORS": rules.UNWANTED_SELECTORS,
+    "BODY_UNWANTED_SELECTORS": rules.BODY_UNWANTED_SELECTORS,
+    "SELENIUM_BODY_UNWANTED": rules.SELENIUM_BODY_UNWANTED,
+}
+BOILERPLATE_TAGS = TAGS + ["header", "footer", "aside", "script", "style", "noscript"]
+BOILERPLATE_CLASSES = CLASSES + ["header", "menu", "sidebar", "tag", "ad-x", "news"]
 
 
-def test_compiled_decompose_set_is_immutable():
-    """_compile_decompose_set is lru_cached, so every decompose_all call
-    with the same selector batch shares its result: a caller mutating it
-    would corrupt all later calls (ADVICE r6 #2).  Mutation must fail."""
-    from webtext_extraction_spark.html.selector import _compile_decompose_set
+def test_boilerplate_lists_hold_only_bare_tags_and_single_classes():
+    """decompose_all handles only these two entry forms."""
+    for name, selectors in BOILERPLATE_LISTS.items():
+        for sel in selectors:
+            (chain,) = _parse_selector(sel)
+            assert len(chain) == 1, (name, sel)
+            c = chain[0][1]
+            assert not c.ids and not c.attrs, (name, sel)
+            bare_tag = c.tag not in (None, "*") and not c.classes
+            single_class = c.tag is None and len(c.classes) == 1
+            assert bare_tag or single_class, (name, sel)
 
-    tags, classes, chains, has_adjacent = _compile_decompose_set(("nav", ".ad", "div p"))
-    assert (tags, classes, len(chains), has_adjacent) == ({"nav"}, {"ad"}, 1, False)
-    with pytest.raises(AttributeError):
-        tags.add("p")
-    with pytest.raises(AttributeError):
-        classes.discard("ad")
-    with pytest.raises(AttributeError):
-        chains.append(chains[0])
-    with pytest.raises(TypeError):
-        chains[0][0] = chains[0][1]
-    assert _compile_decompose_set(("nav", ".ad", "div p"))[:2] == ({"nav"}, {"ad"})
+
+@st.composite
+def boilerplate_tree(draw, depth=0):
+    if depth >= 3 or draw(st.booleans()):
+        return "t"
+    tag = draw(st.sampled_from(BOILERPLATE_TAGS))
+    attr = ""
+    if draw(st.booleans()):
+        cls = draw(st.lists(st.sampled_from(BOILERPLATE_CLASSES), min_size=1, max_size=3))
+        attr = f' class="{" ".join(cls)}"'
+    children = "".join(draw(st.lists(boilerplate_tree(depth=depth + 1), max_size=4)))
+    return f"<{tag}{attr}>{children}</{tag}>"
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(boilerplate_tree(), min_size=1, max_size=5), st.data())
+def test_decompose_all_equals_select_then_decompose(nodes, data):
+    """One pass of decompose_all drops the same elements as the selector
+    engine's select-then-decompose, for each boilerplate list, from the
+    Document or a random element as root."""
+    payload = "<html><body>" + "".join(nodes) + "</body></html>"
+    for name, selectors in BOILERPLATE_LISTS.items():
+        fast, slow = parse(payload), parse(payload)
+        k = data.draw(st.integers(0, len(fast.el_tag) - 1))  # 0 is the Document
+        decompose_all(fast.node(k), selectors)
+        for el in select(slow.node(k), ", ".join(selectors)):
+            el.decompose()
+        assert fast.dropped == slow.dropped, name

@@ -113,7 +113,7 @@ def test_span_invariant_through_arrow(extracted, spark):
     ).collect()
     for r in rows:
         payload, _tool = payload_for(r["conv_id"], r["turn_idx"])
-        spans = [{"start": s["start"], "end": s["end"], "kind": s["kind"]} for s in r["spans"]]
+        spans = [(s["start"], s["end"], s["kind"]) for s in r["spans"]]
         assert reconstruct(payload, r["extracted_text"], spans) == r["extracted_text"]
 
 
@@ -204,15 +204,13 @@ def test_resume_detects_changed_input_snapshot(spark, transcripts, tmp_path):
 
 
 def test_write_parallelism_decoupled_from_buckets(spark, transcripts, tmp_path):
-    """With num_buckets=2 the write stage must still produce more than
-    one file per bucket when write_partitions asks for it (the
-    one-task-per-bucket collapse is VERDICT r01 perf-weak #3)."""
+    """With num_buckets=2 the write stage (2 tasks per core) must still
+    produce more than one file per bucket (the one-task-per-bucket
+    collapse is VERDICT r01 perf-weak #3)."""
     import glob
 
     out = str(tmp_path / "wide")
-    run_extraction(
-        spark, transcripts, out, num_buckets=2, write_partitions=12
-    )
+    run_extraction(spark, transcripts, out, num_buckets=2)
     for b in (0, 1):
         files = glob.glob(f"{out}/data/bucket={b}/*.parquet")
         assert len(files) > 1, f"bucket {b} wrote {len(files)} file(s)"

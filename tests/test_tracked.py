@@ -8,13 +8,13 @@ from webtext_extraction_spark.kernel.tracked import TrackedText, reconstruct
 
 
 def _check(payload, tt):
-    assert reconstruct(payload, tt.text, tt.spans()) == tt.text
+    assert reconstruct(payload, tt.text, tt.span_tuples()) == tt.text
 
 
 def test_literal_and_spans():
     tt = TrackedText.literal("hello", 10)
-    spans = tt.spans()
-    assert spans == [{"start": 10, "end": 15, "kind": "src"}]
+    spans = tt.span_tuples()
+    assert spans == [(10, 15, "src")]
 
 
 def test_join_inserts_synthetic():
@@ -23,7 +23,7 @@ def test_join_inserts_synthetic():
     b = TrackedText.literal("def", 3)
     j = TrackedText.join("|", [a, b])
     assert j.text == "abc|def"
-    kinds = [s["kind"] for s in j.spans()]
+    kinds = [kind for _s, _e, kind in j.span_tuples()]
     assert kinds == ["src", "syn", "src"]
     _check(payload, j)
 
@@ -31,7 +31,7 @@ def test_join_inserts_synthetic():
 def test_strip_preserves_offsets():
     tt = TrackedText.literal("  x y  ", 5).strip()
     assert tt.text == "x y"
-    assert tt.spans() == [{"start": 7, "end": 10, "kind": "src"}]
+    assert tt.span_tuples() == [(7, 10, "src")]
 
 
 def test_sub_deletion_matches_re_sub():
@@ -50,7 +50,7 @@ def test_sub_with_replacement_is_synthetic():
     tt = TrackedText.literal(s, 0)
     out = tt.sub(r"\n\s*\n\s*\n+", "\n\n")
     assert out.text == "a\n\nb"
-    kinds = [sp["kind"] for sp in out.spans()]
+    kinds = [kind for _s, _e, kind in out.span_tuples()]
     assert kinds == ["src", "syn", "src"]
     _check(s, out)
 

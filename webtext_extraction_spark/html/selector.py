@@ -173,74 +173,30 @@ def _chain_matches(el, chain, idx) -> bool:
     return False
 
 
-@lru_cache(maxsize=128)
-def _compile_decompose_set(selectors: tuple[str, ...]):
-    """Split a selector batch into (simple_tags, simple_classes,
-    complex_chains, has_adjacent) — pure function of the selector
-    strings, memoized because the built-in unwanted-selector batches
-    are fixed lists applied once per extracted page.  Every call with
-    the same batch shares the result, so it is returned immutable."""
-    has_adjacent = any(
-        comb == "adjacent"
-        for s in selectors
-        for chain in _parse_selector(s)
-        for comb, _c in chain
-    )
-    simple_tags: set[str] = set()
-    simple_classes: set[str] = set()
-    complex_chains: list = []
-    if not has_adjacent:
-        for selector in selectors:
-            for chain in _parse_selector(selector):
-                if len(chain) == 1:
-                    c = chain[0][1]
-                    if c.tag and c.tag != "*" and not c.classes and not c.ids and not c.attrs:
-                        simple_tags.add(c.tag)
-                        continue
-                    if not c.tag and len(c.classes) == 1 and not c.ids and not c.attrs:
-                        simple_classes.add(c.classes[0])
-                        continue
-                complex_chains.append(tuple(chain))
-    return frozenset(simple_tags), frozenset(simple_classes), tuple(complex_chains), has_adjacent
-
-
 def decompose_all(root, selectors: list[str]) -> None:
-    """Decompose every descendant matching ANY selector — one pass over
-    the root's live index range instead of one walk per selector.  The
-    final tree equals sequential per-selector select+decompose, except
-    with adjacent-sibling (``+``) chains, whose matches can depend on
-    earlier decompositions: a batch containing one is applied
-    sequentially (round-3 review; the built-in batches have none).
+    """Decompose every live descendant of ``root`` that matches ANY of
+    ``selectors`` — one pass over the root's live index range.
 
-    Bare-tag and single-class compounds (all 26 boilerplate selectors)
-    are two set-membership tests per element, read from the Document's
-    lists without creating element views."""
-    simple_tags, simple_classes, complex_chains, has_adjacent = (
-        _compile_decompose_set(tuple(selectors))
-    )
-    if has_adjacent:
-        # exact sequential semantics, in list order
-        for s in selectors:
-            for el in select(root, s):
-                el.decompose()
-        return
+    Entries must be bare tags or single ``.class`` names, as are all
+    three boilerplate lists (rules.UNWANTED_SELECTORS,
+    BODY_UNWANTED_SELECTORS, SELENIUM_BODY_UNWANTED).  Such a match
+    does not depend on tree shape, so the pass drops the same set as
+    select-then-decompose per selector; each element costs a tag-set
+    and a class-set test, read from the Document's lists without
+    creating element views."""
+    tags = {s for s in selectors if s[0] != "."}
+    classes = {s[1:] for s in selectors if s[0] == "."}
     doc = root.doc
-    tags, attrs = doc.el_tag, doc.el_attrs
+    el_tag, el_attrs = doc.el_tag, doc.el_attrs
     matches = []
     for lo, hi in doc.live_ranges(root.order):
         for e in range(lo, hi):
-            if tags[e] in simple_tags:
+            if el_tag[e] in tags:
                 matches.append(e)
                 continue
-            if simple_classes:
-                raw = attrs[e].get("class")
-                if raw and not simple_classes.isdisjoint(raw.split()):
-                    matches.append(e)
-                    continue
-            for chain in complex_chains:
-                if _chain_matches(doc.node(e), chain, len(chain) - 1):
-                    matches.append(e)
-                    break
+            raw = el_attrs[e].get("class")
+            if raw and not classes.isdisjoint(raw.split()):
+                matches.append(e)
     for e in matches:
         doc.node(e).decompose()
 

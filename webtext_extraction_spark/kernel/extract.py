@@ -50,12 +50,9 @@ _MD_HEADER_RE = re.compile(r"^(Title|URL Source|Published Time|Markdown Content)
 @dataclass
 class ExtractResult:
     text: str
-    spans: list  # (start, end, kind) tuples; dict view via spans_dicts()
+    spans: list  # (start, end, kind) tuples
     strategy: str
     status: str
-
-    def spans_dicts(self) -> list[dict]:
-        return [{"start": s, "end": e, "kind": k} for s, e, k in self.spans]
 
     @classmethod
     def from_tracked(cls, tt: TrackedText, strategy: str, status: str = "ok"):
@@ -187,8 +184,7 @@ def _selenium_variant(
     dom = pristine_dom if pristine_dom is not None else htmldom.parse(payload)
     tt, strategy = extract_main_content(dom, domain, site_rules)
     if not tt.text or len(tt.text.strip()) < rules.SUCCESS_MIN_CHARS:
-        for tag in dom.select(rules.SELENIUM_BODY_UNWANTED):
-            tag.decompose()
+        decompose_all(dom, rules.SELENIUM_BODY_UNWANTED)
         body = dom.body
         body_text = (
             body.get_text_tracked(separator="\n", strip=True) if body is not None else None

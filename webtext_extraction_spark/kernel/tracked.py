@@ -160,18 +160,10 @@ class TrackedText:
             start = i + len(sep)
 
     # -- span encoding ---------------------------------------------------------
-    def spans(self) -> list[dict]:
-        """Run-length encode offsets into {start, end, kind} dicts —
-        the dict view of :meth:`span_tuples` (single source of truth
-        for the boundary computation)."""
-        return [
-            {"start": s, "end": e, "kind": k} for s, e, k in self.span_tuples()
-        ]
-
     def span_tuples(self) -> list[tuple]:
-        """spans() as (start, end, kind) tuples — the Arrow-friendly
-        form the extraction UDF emits (dict construction is measurable
-        at millions of rows)."""
+        """Run-length encode offsets into (start, end, kind) tuples — the
+        one span form, which the extraction UDF emits (dict construction
+        is measurable at millions of rows)."""
         n = len(self.text)
         if n == 0:
             return []
@@ -192,13 +184,9 @@ class TrackedText:
 
 
 def reconstruct(payload: str, extracted: str, spans: list) -> str:
-    """Rebuild extracted text from payload + spans (test invariant).
-    Accepts dict spans ({start,end,kind}) or (start, end, kind) tuples."""
+    """Rebuild extracted text from payload + (start, end, kind) spans
+    (test invariant)."""
     parts = []
-    for sp in spans:
-        if isinstance(sp, dict):
-            start, end, kind = sp["start"], sp["end"], sp["kind"]
-        else:
-            start, end, kind = sp
+    for start, end, kind in spans:
         parts.append(payload[start:end] if kind == "src" else extracted[start:end])
     return "".join(parts)

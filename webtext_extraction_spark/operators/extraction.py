@@ -208,45 +208,6 @@ def _extract_batch(
     )
 
 
-@F.arrow_udf(EXTRACT_RESULT_TYPE)
-def _extract_udf_raw(texts: pa.Array, tools: pa.Array) -> pa.Array:
-    return _extract_batch(texts, tools)
-
-
-# The kernel IS deterministic, but Catalyst duplicates deterministic
-# UDFs when pushing filters through their projection (observed: a
-# status filter over the output doubled the extraction work).  Marking
-# it non-deterministic forces exactly-once evaluation; input-side
-# filters are written before extract_turns anyway, so nothing needs to
-# push past it.
-extract_udf = _extract_udf_raw.asNondeterministic()
-
-
-def make_extract_udf(spark, site_rules: dict):
-    """Extraction UDF with a RUNTIME rule table shipped to executors as
-    a SparkContext broadcast (J3 — the north-star "rule-table of
-    per-site selector overrides broadcast to executors").  The closure
-    captures only the broadcast handle; executors unpack it once per
-    worker."""
-    # validate the runtime rule table at JOB SETUP: an unsupported
-    # selector must fail loudly here, not be silently converted into a
-    # per-row failure_template by the hostile-payload containment
-    # (round-3 review finding)
-    from webtext_extraction_spark.html.selector import _parse_selector
-
-    for _domain, selectors in (site_rules or {}).items():
-        for sel in selectors:
-            _parse_selector(sel)  # raises ValueError on unsupported grammar
-
-    bc = spark.sparkContext.broadcast(site_rules)
-
-    @F.arrow_udf(EXTRACT_RESULT_TYPE)
-    def udf(texts: pa.Array, tools: pa.Array) -> pa.Array:
-        return _extract_batch(texts, tools, bc.value)
-
-    return udf.asNondeterministic()
-
-
 def with_error_pattern_status(
     df: DataFrame,
     text_col: str = "extracted_text",
@@ -286,15 +247,34 @@ def extract_turns(df: DataFrame, site_rules: dict | None = None) -> DataFrame:
     and ``payload_bytes`` lineage columns through the UDF projection so
     the 100 TB payload column is scanned exactly once per run.
 
-    ``site_rules`` ships a runtime per-site selector table to the
-    executors via broadcast; None uses the built-in rules module."""
-    udf = (
-        make_extract_udf(df.sparkSession, site_rules)
-        if site_rules is not None
-        else extract_udf
-    )
+    ``site_rules`` is the per-site selector table (domain →
+    selectors); None means the built-in ``rules.DOMAIN_SELECTORS``.
+    Either way the table is validated here, at plan build — an
+    unsupported selector raises ValueError rather than turning every
+    row of its domain into a per-row failure_template — and reaches the
+    executors as a SparkContext broadcast (J3 — the north-star
+    "rule-table of per-site selector overrides broadcast to
+    executors"): the UDF closure captures only the broadcast handle.
+
+    The kernel IS deterministic, but Catalyst duplicates deterministic
+    UDFs when pushing filters through their projection (observed: a
+    status filter over the output doubled the extraction work), so the
+    UDF is marked non-deterministic to force exactly-once evaluation;
+    input-side filters are written before extract_turns anyway."""
+    from webtext_extraction_spark.html.selector import _parse_selector
+
+    table = rules_mod.DOMAIN_SELECTORS if site_rules is None else site_rules
+    for selectors in table.values():
+        for sel in selectors:
+            _parse_selector(sel)  # raises ValueError on unsupported grammar
+    bc = df.sparkSession.sparkContext.broadcast(table)
+
+    @F.arrow_udf(EXTRACT_RESULT_TYPE)
+    def udf(texts: pa.Array, tools: pa.Array) -> pa.Array:
+        return _extract_batch(texts, tools, bc.value)
+
     carried = [c for c in df.columns if c != "text"]
-    result = df.withColumn("_ex", udf(F.col("text"), F.col("tool")))
+    result = df.withColumn("_ex", udf.asNondeterministic()(F.col("text"), F.col("tool")))
     return result.select(
         *carried,
         F.col("_ex.extracted_text").alias("extracted_text"),
@@ -380,11 +360,8 @@ def audit_spans(extracted: DataFrame, transcripts: DataFrame) -> DataFrame:
             ok = []
             for payload, text, spans in zip(pdf["text"], pdf["extracted_text"], pdf["spans"]):
                 try:
-                    span_dicts = [
-                        {"start": s["start"], "end": s["end"], "kind": s["kind"]}
-                        for s in spans
-                    ]
-                    good = reconstruct(payload or "", text or "", span_dicts) == (text or "")
+                    span_tuples = [(s["start"], s["end"], s["kind"]) for s in spans]
+                    good = reconstruct(payload or "", text or "", span_tuples) == (text or "")
                 except Exception:
                     good = False
                 ok.append("ok" if good else "mismatch")

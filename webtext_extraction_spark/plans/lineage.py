@@ -100,8 +100,6 @@ def run_extraction(
     buckets_per_commit: int | None = None,
     input_snapshot: str = "unversioned",
     site_rules: dict | None = None,
-    write_partitions: int | None = None,
-    audit: bool = False,
 ) -> dict:
     """Resumable bucketed extraction run.
 
@@ -111,14 +109,12 @@ def run_extraction(
     row (the Iceberg snapshot id in production; a path/label here); a
     resume against a *different* snapshot raises rather than silently
     mixing two input versions in one output table.
-    ``write_partitions`` sizes the write stage independently of
-    ``num_buckets`` (default 2 tasks/core, floor = remaining buckets) —
-    one-task-per-bucket would mean ~3 TB per write task at 100 TB.
-    ``audit=True`` re-verifies the span invariant over THIS run's
-    committed output against its input payloads (extraction.audit_spans)
-    and adds span_ok/span_mismatch counts to the returned summary —
-    the post-batch quality gate a production deployment schedules
-    after each commit.
+    ``site_rules`` is ``extract_turns``' per-site selector table (None:
+    the built-in one), broadcast to the executors.
+    The write stage runs ``max(remaining buckets, 2 × defaultParallelism)``
+    tasks, independent of ``num_buckets`` — one task per bucket would
+    mean ~3 TB per write task at 100 TB.  The span-invariant check over
+    a commit's output is ``extraction.audit_spans``, a job of its own.
 
     A resumed commit runs seven Spark jobs (module docstring): one
     lineage read, two for bucket discovery, two for the data commit,
@@ -168,10 +164,7 @@ def run_extraction(
     # shuffle key is (bucket, hash(conv_id)) so one bucket spreads over
     # many write tasks (each conversation stays whole), and the
     # partitionBy writer still routes rows to the right bucket dir.
-    if write_partitions is None:
-        write_partitions = max(
-            len(remaining), 2 * spark.sparkContext.defaultParallelism
-        )
+    write_partitions = max(len(remaining), 2 * spark.sparkContext.defaultParallelism)
     (
         extracted.repartition(
             write_partitions, F.col("bucket"), F.xxhash64(F.col("conv_id"))
@@ -217,21 +210,7 @@ def run_extraction(
         "append"
     ).parquet(lineage_path)
 
-    summary = {"buckets_done": len(remaining), "rows": committed_rows.get["rows"]}
-
-    if audit:
-        from webtext_extraction_spark.operators.extraction import audit_spans
-
-        counts = {
-            r["span_ok"]: r["n"]
-            for r in audit_spans(out, batch)
-            .groupBy("span_ok")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        summary["span_ok"] = counts.get("ok", 0)
-        summary["span_mismatch"] = counts.get("mismatch", 0)
-    return summary
+    return {"buckets_done": len(remaining), "rows": committed_rows.get["rows"]}
 
 
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:

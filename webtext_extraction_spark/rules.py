@@ -97,11 +97,12 @@ BODY_UNWANTED_SELECTORS = [
     ".social", ".share", ".breadcrumb", ".pagination", ".tag", ".category",
 ]
 
-# Selenium-path body fallback (W:1216) — a *different*, shorter list
-SELENIUM_BODY_UNWANTED = (
-    "header, footer, nav, script, style, .header, .footer, .nav, .menu, "
-    ".sidebar, .ad, .advertisement, .banner, noscript"
-)
+# Selenium-path body fallback (W:1216, one comma group there) — a
+# *different*, shorter list
+SELENIUM_BODY_UNWANTED = [
+    "header", "footer", "nav", "script", "style", ".header", ".footer", ".nav", ".menu",
+    ".sidebar", ".ad", ".advertisement", ".banner", "noscript",
+]
 
 # ---------------------------------------------------------------------------
 # D3 — heuristic block scoring (W:1295-1338)
