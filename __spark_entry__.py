@@ -1044,7 +1044,7 @@ def _q_curate_corpus(spark, sf_dir):
     )
     # the row-local gates filter the scan; only the cluster keepers join
     return (
-        textstats.with_text_profile(docs, "text")
+        textstats.with_signals(docs, "text", ["lang_pred", "quality"])
         .filter((F.col("lang_pred") == "en") & (F.col("quality") >= 0.6))
         .join(keepers, "doc_id")
         .select("doc_id", "lang_pred", "quality")
@@ -1084,8 +1084,7 @@ def _q_pack_sequences(spark, sf_dir):
 
 def _q_curate_corpus_v2(spark, sf_dir):
     """The full curation pipeline with ALL engine gates composed:
-    lang + quality (with_text_profile), repetition
-    (with_repetition_profile, Gopher-style dup_word_char_frac <= 0.8),
+    lang + quality, repetition (Gopher-style dup_word_char_frac <= 0.8),
     decontamination (no benchmark 4-gram overlap), and near-dup
     cluster keepers.  Each
     gate drops at least one v1 survivor at sf0.01 (38 by repetition
@@ -1113,8 +1112,8 @@ def _q_curate_corpus_v2(spark, sf_dir):
     # the row-local gates (lang, quality, repetition; a zero-word doc's
     # NULL dup_word_char_frac fails) filter the scan; only the
     # cross-document gates join
-    gated = textstats.with_repetition_profile(
-        textstats.with_text_profile(docs, "text"), "text", top_n=2, dup_n=5
+    gated = textstats.with_signals(
+        docs, "text", ["lang_pred", "quality", "dup_word_char_frac"]
     ).filter(
         (F.col("lang_pred") == "en")
         & (F.col("quality") >= 0.6)

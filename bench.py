@@ -79,7 +79,7 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
 
     from webtext_extraction_spark.operators.extraction import extract_turns
     from webtext_extraction_spark.operators.partitioning import (
-        detect_hot_keys,
+        probe_payload_stats,
         salted_repartition,
         source_splits,
     )
@@ -115,7 +115,7 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
     box: dict = {}
 
     def probe():
-        box["hot"] = detect_hot_keys(transcripts, sample_fraction=0.1)
+        box["hot"] = probe_payload_stats(transcripts, sample_fraction=0.1)["hot_keys"]
 
     timings["hot_key_detect"] = best_of("hot_key_detect", probe)
     hot = box["hot"]

@@ -14,10 +14,10 @@ Input is a documents parquet, or raw Common Crawl WET files with
 ``--input-format wet`` (sources/wet — deterministic hashed doc_ids,
 url-host sources).  Row-local gates read only a doc's own text, so
 they are projections and Filters over the scan, with no join:
-language/quality (with_text_profile), the Gopher/FineWeb rule battery
-(with_quality_gate, --gopher-gate), repetition (with_repetition_profile,
-Gopher dup_word_char_frac), which tokenize each document once between
-them and filter on fenced signal columns (textstats module docstring).
+language/quality, the Gopher/FineWeb rule battery (--gopher-gate) and
+repetition (Gopher dup_word_char_frac), each asking
+textstats.with_signals for only the signals it filters on or ships, one
+tokenization per document between them (textstats module docstring).
 Cross-document gates join on the id — a verdict applied as a semi or
 anti join never multiplies a repeated id: the
 unigram-LM floor, benchmark decontamination (4-gram overlap vs
@@ -130,8 +130,9 @@ def curate(docs, args: argparse.Namespace):
     # another copy's verdict)
     out, cols = docs, docs.columns
     if args.lang or args.min_quality is not None:
-        out = textstats.with_text_profile(out, txt)
-        cols = cols + ["lang_pred", "quality"]
+        signals = ["lang_pred", "quality"]
+        out = textstats.with_signals(out, txt, signals)
+        cols = cols + signals
         if args.lang:
             out = out.filter(F.col("lang_pred") == args.lang)
         if args.min_quality is not None:
@@ -144,7 +145,7 @@ def curate(docs, args: argparse.Namespace):
         ).filter(F.col("passes"))
     if args.max_dup_frac is not None:
         # a zero-word doc has NULL repetition metrics and passes
-        out = textstats.with_repetition_profile(out, txt).filter(
+        out = textstats.with_signals(out, txt, ["dup_word_char_frac"]).filter(
             F.coalesce(F.col("dup_word_char_frac"), F.lit(0.0)) <= args.max_dup_frac
         )
         cols = cols + ["dup_word_char_frac"]

@@ -54,6 +54,7 @@ spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
   --conf spark.ui.enabled=false \
   jobs/run_curate.py --input /root/testdata/sf0.001/documents.parquet \
   --output "$workdir/curated" --lang en --min-quality 0.5 \
+  --gopher-gate --gate-min-words 10 \
   --max-dup-frac 0.9 --dedup neardup --scrub-pii
 test -d "$workdir/curated"
 python - <<EOF

@@ -1,7 +1,7 @@
 """Portable Bloom filter (operators/membership.py): bitmap vs a pure
-python replay, no-false-negative guarantee, merge≡union-build,
-bloom-gated decontamination parity with the exact operator, and the
-broadcast plan shape of the probe side."""
+python replay, no-false-negative guarantee, bloom-gated
+decontamination parity with the exact operator, and the broadcast plan
+shape of the probe side."""
 
 import hashlib
 
@@ -12,8 +12,6 @@ from webtext_extraction_spark.operators import contamination, membership
 from webtext_extraction_spark.operators.membership import (
     BITS_PER_WORD,
     bloom_build,
-    bloom_merge,
-    bloom_probe,
     decontaminate_bloom,
 )
 
@@ -64,29 +62,20 @@ def test_null_values_excluded(spark):
 
 
 def test_probe_no_false_negatives_and_python_parity(spark):
+    """decontaminate_bloom's probe at n=1: a one-word doc's
+    bloom_hit_grams is its word's bit test against the bench bitmap."""
     ins = [f"doc-{i}" for i in range(200)]
-    df = spark.createDataFrame([(v,) for v in ins], ["v"])
-    sk = bloom_build(df, "v", m_words=8, k=4)  # deliberately tiny → FPs
+    bench = spark.createDataFrame(list(enumerate(ins)), ["doc_id", "text"])
     probes = ins[:20] + [f"absent-{i}" for i in range(200)]
-    pdf = spark.createDataFrame([(v,) for v in probes], ["t"])
-    got = {r["value"]: r["bloom_hit"] for r in
-           bloom_probe(pdf, "t", sk, m_words=8, k=4).collect()}
+    docs = spark.createDataFrame(list(enumerate(probes)), ["doc_id", "text"])
+    # deliberately tiny → FPs
+    hits = decontaminate_bloom(docs, bench, "doc_id", "text", n=1, m_words=8, k=4).collect()
+    got = {probes[r["doc_id"]]: r["bloom_hit_grams"] == 1 for r in hits}
     bitmap = _py_bloom(ins, 8, 4)
     assert all(got[v] for v in ins[:20])  # membership is never missed
     assert all(got[v] == _py_hit(bitmap, v, 8, 4) for v in probes)
     # the tiny sizing really does produce false positives (non-vacuous)
     assert any(got[f"absent-{i}"] for i in range(200))
-
-
-def test_merge_equals_union_build(spark):
-    a = spark.createDataFrame([(f"a{i}",) for i in range(50)], ["v"])
-    b = spark.createDataFrame([(f"b{i}",) for i in range(50)], ["v"])
-    merged = {r["word_idx"]: r["word"] for r in
-              bloom_merge(bloom_build(a, "v", 32, 4),
-                          bloom_build(b, "v", 32, 4)).collect()}
-    together = {r["word_idx"]: r["word"] for r in
-                bloom_build(a.union(b), "v", 32, 4).collect()}
-    assert merged == together
 
 
 def test_param_validation(spark):
@@ -97,7 +86,7 @@ def test_param_validation(spark):
         # k=8 would let h1 + 7*h2 reach 2^63 — the DuckDB-overflow bound
         bloom_build(df, "v", m_words=8, k=8)
     with pytest.raises(ValueError, match="k must be"):
-        bloom_probe(df, "v", bloom_build(df, "v", 8, 3), m_words=8, k=0)
+        decontaminate_bloom(df, df, "v", "v", m_words=8, k=0)
 
 
 def _mini_corpus(spark):
@@ -149,11 +138,14 @@ def test_decontaminate_bloom_zero_gram_docs(spark):
 
 
 def test_probe_plan_broadcasts_sketch(spark):
-    """The sketch side of the probe join must broadcast — the 100 TB
-    side never shuffles for a membership test."""
-    df = spark.createDataFrame([(f"v{i}",) for i in range(100)], ["v"])
-    sk = bloom_build(df, "v", m_words=64, k=4)
-    plan = bloom_probe(df, "v", sk, m_words=64, k=4)._jdf.queryExecution(
-    ).explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    """The sketch side of decontaminate_bloom's probe join must
+    broadcast — the 100 TB side never shuffles for a membership test."""
+    docs = _mini_corpus(spark)
+    out = decontaminate_bloom(docs.filter(F.col("doc_id") < 10),
+                              docs.filter(F.col("doc_id") >= 10),
+                              "doc_id", "text", n=3, m_words=64, k=4)
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    probe_joins = [b.strip().split("\n")[0] for b in plan.split("\n\n")
+                   if "Join" in b.strip().split("\n")[0] and "keys [1]: [word_idx" in b]
+    assert probe_joins and all("BroadcastHashJoin" in j for j in probe_joins), plan

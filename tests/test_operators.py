@@ -690,15 +690,21 @@ EDGE_DOCS = [
 
 
 def test_chained_row_local_steps_equal_each_operator_alone(spark):
-    """with_text_profile -> with_quality_gate -> with_repetition_profile
+    """with_signals(profile) -> with_quality_gate -> with_signals(repetition)
     on one DataFrame share one word column; every operator's columns
-    equal that operator run alone, and no internal ``_`` column reaches
-    an operator's output or run_curate's."""
+    equal that operator run alone (n_words and dup_word_frac have one
+    definition, so the repetition call rewrites the gate's with equal
+    values, 0 for a zero-word doc), and no internal ``_`` column
+    reaches an operator's output or run_curate's."""
     from jobs import run_curate
 
     df = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
-    chain = textstats.with_repetition_profile(
-        textstats.with_quality_gate(textstats.with_text_profile(df, "text"), "text"), "text"
+    chain = textstats.with_signals(
+        textstats.with_quality_gate(
+            textstats.with_signals(df, "text", textstats.PROFILE_SIGNALS), "text"
+        ),
+        "text",
+        textstats.REPETITION_SIGNALS,
     )
     got = {r["doc_id"]: r.asDict() for r in chain.collect()}
     assert set(got) == {d for d, _ in EDGE_DOCS}
@@ -707,16 +713,13 @@ def test_chained_row_local_steps_equal_each_operator_alone(spark):
         "quality_gate": textstats.quality_gate(df, "doc_id", "text"),
         "repetition_profile": textstats.repetition_profile(df, "doc_id", "text"),
     }
-    # the repetition step writes its own n_words / dup_word_frac (NULL
-    # for a zero-word doc) over the gate's
-    rep_only = {"n_words", "dup_word_frac"}
     for name, out in alone.items():
         assert not [c for c in out.columns if c.startswith("_")], (name, out.columns)
         rows = out.collect()
         assert rows, name
         for r in rows:
             want = r.asDict()
-            cols = set(want) - ({"doc_id"} | (rep_only if name == "quality_gate" else set()))
+            cols = set(want) - {"doc_id"}
             assert {c: got[r["doc_id"]][c] for c in cols} == {c: want[c] for c in cols}, name
     # repetition_profile drops zero-word docs; the chain keeps them with NULL metrics
     assert {r["doc_id"] for r in alone["repetition_profile"].collect()} == {3, 4, 5, 6, 7}
@@ -1873,41 +1876,6 @@ def test_canonical_url_matches_python_reference_randomized(spark):
     }
     for i, u in urls:
         assert got[i] == py_canon(u), (i, u, got[i], py_canon(u))
-
-
-def test_ivf_tune_n_probe_monotone_and_reaches_full_recall(spark):
-    import random
-
-    rnd = random.Random(3)
-    # clustered vectors: 4 tight clusters of 10 in 8-dim space
-    rows = []
-    vid = 0
-    for c in range(4):
-        center = [10.0 * (1 if (c >> b) & 1 else -1) for b in range(3)] + [0.0] * 5
-        for _ in range(10):
-            rows.append((vid, [x + rnd.uniform(-0.5, 0.5) for x in center]))
-            vid += 1
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = similarity.ivf_tune_n_probe(
-        emb, query_ids=[0, 10, 20], k=3, target_recall=1.0, n_cells=4
-    )
-    curve = dict(out["curve"])
-    # recall is monotone non-decreasing in n_probe and hits 1.0 by
-    # the time every cell is probed
-    probes = sorted(curve)
-    assert all(curve[probes[i]] <= curve[probes[i + 1]] for i in range(len(probes) - 1))
-    assert out["recall"] == 1.0
-    assert out["n_probe"] <= 4
-    with pytest.raises(ValueError):
-        similarity.ivf_tune_n_probe(emb, query_ids=[], k=3)
-    # ADVICE r04: max_n_probe < 1 must raise, not return None
-    with pytest.raises(ValueError, match="max_n_probe"):
-        similarity.ivf_tune_n_probe(emb, query_ids=[0], k=3, max_n_probe=0)
-    # max_n_probe beyond n_cells clamps to full probe, still a dict
-    out2 = similarity.ivf_tune_n_probe(
-        emb, query_ids=[0], k=3, target_recall=1.0, n_cells=4, max_n_probe=99
-    )
-    assert out2["n_probe"] <= 4
 
 
 def test_exact_duplicates_normalize_ws(spark):

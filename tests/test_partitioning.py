@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from webtext_extraction_spark.operators import partitioning
 from webtext_extraction_spark.operators.partitioning import (
     bucket_id,
-    detect_hot_keys,
+    probe_payload_stats,
     salted_repartition,
     source_splits,
 )
@@ -31,7 +31,7 @@ def test_detect_hot_keys_finds_heavy_conversations(spark):
     rows = [(f"c{i}", t, "x" * 100) for i in range(50) for t in range(4)]
     rows += [("hot", t, "y" * 40000) for t in range(8)]
     df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "text"])
-    hot = detect_hot_keys(df)
+    hot = probe_payload_stats(df)["hot_keys"]
     assert hot == ["hot"]
 
 

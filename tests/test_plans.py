@@ -254,43 +254,11 @@ def test_extraction_keeps_status_filter_jvm_side(spark, tmp_path):
     path = str(tmp_path / "t3")
     synth_transcripts(spark, num_conversations=5).write.parquet(path)
     out = extract_turns(spark.read.parquet(path))
-    from webtext_extraction_spark.operators.extraction import renderable
-
-    plan = _plan(renderable(out))
-    # status filter is a plain Filter over the UDF output — one python
-    # stage only, filter evaluated JVM-side
+    # the failure/error status filter render_extracted applies (F5/F6)
+    # is a plain Filter over the UDF output — one python stage only,
+    # filter evaluated JVM-side
+    plan = _plan(out.filter(~F.col("status").isin("failure_template", "error_pattern")))
     assert _n_arrow_stages(plan) == 1
-
-
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Two tables bucketed on conv_id with equal bucket counts must
-    sort-merge join with NO Exchange on either side — the pay-the-
-    shuffle-once-at-write-time contract (sources/bucketed.py)."""
-    from webtext_extraction_spark.sources.bucketed import (
-        colocated_join,
-        write_bucketed_table,
-    )
-
-    t = synth_transcripts(spark, num_conversations=30)
-    ex = t.select("conv_id", F.length("text").alias("n_chars"))
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # the test tables are tiny enough to broadcast; disable that so
-        # the plan shows what bucketing buys at scale (where neither
-        # side broadcasts)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_table(t, "bk_transcripts", path=str(tmp_path / "bt"), num_buckets=8)
-        write_bucketed_table(ex, "bk_extracted", path=str(tmp_path / "be"), num_buckets=8,
-                             sort_cols=("conv_id",))
-        joined = colocated_join(spark, "bk_transcripts", "bk_extracted")
-        plan = _plan(joined.select("conv_id", "turn_idx", "n_chars"))
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in plan, plan  # neither shuffle nor broadcast
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        spark.sql("DROP TABLE IF EXISTS bk_transcripts")
-        spark.sql("DROP TABLE IF EXISTS bk_extracted")
 
 
 def _node_ids(plan: str, node: str) -> int:
@@ -321,8 +289,9 @@ def test_repetition_profile_sorts_once_per_row_below_its_lambdas(spark, tmp_path
     stays above that Generate.  Inlined into a lambda, the sort would
     re-run once per element."""
     from webtext_extraction_spark.operators.textstats import (
+        REPETITION_SIGNALS,
         repetition_profile,
-        with_repetition_profile,
+        with_signals,
     )
 
     p = str(tmp_path / "docs_rep_sort")
@@ -330,7 +299,9 @@ def test_repetition_profile_sorts_once_per_row_below_its_lambdas(spark, tmp_path
         [(i, "a b c a b c d e %d" % i) for i in range(8)], ["doc_id", "text"]
     ).write.parquet(p)
     docs = spark.read.parquet(p)
-    gated = with_repetition_profile(docs, "text").filter(F.col("dup_word_char_frac") <= 0.8)
+    gated = with_signals(docs, "text", REPETITION_SIGNALS).filter(
+        F.col("dup_word_char_frac") <= 0.8
+    )
     for df in (repetition_profile(docs, "doc_id", "text"), gated):
         plan = _plan(df)
         assert _node_ids(plan, "Exchange") == 0
@@ -383,6 +354,59 @@ def test_run_curate_row_local_gates_join_and_shuffle_nothing(spark, tmp_path):
     # regexp_count is rewritten to size(regexp_extract_all(...)) here
     for pruned in ("regexp_count(", "regexp_extract_all(", "aggregate("):
         assert pruned not in optimized, (pruned, optimized)
+
+
+# the name of every row-local signal: one that no Filter or output
+# reads must not appear in the plan
+_SIGNAL_NAMES = set(
+    textstats.PROFILE_SIGNALS + textstats.GATE_SIGNALS + textstats.REPETITION_SIGNALS
+)
+
+
+@pytest.mark.parametrize(
+    "flags, read, absent",
+    [
+        ("--lang en", {"lang_pred", "quality"}, ("array_distinct(", "aggregate(")),
+        ("--min-quality 0.6", {"lang_pred", "quality"}, ("array_distinct(", "aggregate(")),
+        ("--gopher-gate", set(textstats.GATE_SIGNALS), ("ぁ", r"[^\w\s]")),
+        ("--max-dup-frac 0.8", {"dup_word_char_frac"}, ("array_distinct(", "regexp", "lower(")),
+    ],
+)
+def test_run_curate_single_gate_computes_only_what_it_reads(spark, tmp_path, flags, read, absent):
+    """Under one row-local flag, the optimized plan of run_curate holds
+    exactly the signals its Filter or its output reads, and none of
+    the expressions of the others: no BPE count (``regexp_count``,
+    rewritten to ``regexp_extract_all``) anywhere, no gram sort
+    outside the repetition gate, and that gate sorts the words only
+    (one ``sort_array``)."""
+    from jobs import run_curate
+
+    p = str(tmp_path / "docs_one_gate")
+    spark.createDataFrame(
+        [(i, "the cat sat on the mat %d" % i) for i in range(8)], ["doc_id", "text"]
+    ).write.parquet(p)
+    args = run_curate.parse_args(["--input", p, "--output", "unused"] + flags.split())
+    out = run_curate.curate(spark.read.parquet(p), args)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert {name for name in _SIGNAL_NAMES if name in optimized} == read, optimized
+    for expr in ("regexp_count(", "regexp_extract_all(") + absent:
+        assert expr not in optimized, (expr, optimized)
+    assert optimized.count("sort_array(") == ("dup_word_char_frac" in read), optimized
+
+
+def test_curate_corpus_v2_sorts_the_words_once(spark, tmp_path):
+    """The curate_corpus_v2 entry query filters on lang_pred, quality
+    and dup_word_char_frac: its plan sorts the words once and sorts no
+    gram array."""
+    import __spark_entry__ as entry
+
+    spark.createDataFrame(
+        [(i, "the cat sat on the mat and the cat sat %d" % (i % 7)) for i in range(0, 500, 5)],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    out = entry._q_curate_corpus_v2(spark, str(tmp_path))
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("sort_array(") == 1, optimized
 
 
 def test_decontaminate_broadcasts_bench_and_never_shuffles_payload(spark, tmp_path):

@@ -7,6 +7,7 @@
 - resume/idempotency: two-phase run equals single-shot run (T05)
 """
 
+import os
 import shutil
 
 import pytest
@@ -16,18 +17,24 @@ from webtext_extraction_spark.fixtures_pages import payload_for
 from webtext_extraction_spark.kernel.extract import extract_payload
 from webtext_extraction_spark.operators.extraction import extract_turns
 from webtext_extraction_spark.operators.partitioning import (
-    detect_hot_keys,
+    probe_payload_stats,
     salted_repartition,
 )
 from webtext_extraction_spark.plans.lineage import (
+    DATA_DIR,
+    _literal,
     read_lineage,
-    read_output,
     run_extraction,
 )
 from webtext_extraction_spark.plans.pipeline import extraction_pipeline, render_extracted
 from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
 N_CONV = 40
+
+
+def _committed(spark, out):
+    """The data rows run_extraction committed under ``out``."""
+    return spark.read.parquet(_literal(os.path.join(out, DATA_DIR)))
 
 
 @pytest.fixture(scope="module")
@@ -71,7 +78,7 @@ def test_stable_order_under_partitioning(spark, transcripts):
     direct = ordered(transcripts)
     resplit = transcripts.repartition(13)
     assert ordered(salted_repartition(transcripts, 3)) == direct
-    assert ordered(salted_repartition(resplit, 11, detect_hot_keys(resplit))) == direct
+    assert ordered(salted_repartition(resplit, 11, probe_payload_stats(resplit)["hot_keys"])) == direct
     keys = [(r["conv_id"], r["turn_idx"]) for r in direct]
     assert keys == sorted(keys)
 
@@ -215,7 +222,7 @@ def test_write_parallelism_decoupled_from_buckets(spark, transcripts, tmp_path):
         files = glob.glob(f"{out}/data/bucket={b}/*.parquet")
         assert len(files) > 1, f"bucket {b} wrote {len(files)} file(s)"
     # output unchanged by the wider write
-    rows = read_output(spark, out).select("conv_id", "turn_idx").collect()
+    rows = _committed(spark, out).select("conv_id", "turn_idx").collect()
     assert len(rows) == transcripts.count()
     shutil.rmtree(out, ignore_errors=True)
 
@@ -225,7 +232,7 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
     phased = str(tmp_path / "phased")
 
     run_extraction(spark, transcripts, single, num_buckets=8)
-    full = read_output(spark, single).select(
+    full = _committed(spark, single).select(
         "conv_id", "turn_idx", "extracted_text"
     ).collect()
 
@@ -240,7 +247,7 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
     r3 = run_extraction(spark, transcripts, phased, num_buckets=8)
     assert r3 == {"buckets_done": 0, "rows": 0}
 
-    resumed = read_output(spark, phased).select(
+    resumed = _committed(spark, phased).select(
         "conv_id", "turn_idx", "extracted_text"
     ).collect()
     assert sorted(full) == sorted(resumed)
@@ -296,7 +303,7 @@ def test_resume_under_glob_metacharacter_output_path(spark, transcripts, tmp_pat
         run_extraction(spark, transcripts, out, num_buckets=8, input_snapshot="other")
     r2 = run_extraction(spark, transcripts, out, num_buckets=8)
     assert r1["buckets_done"] + r2["buckets_done"] == len(read_lineage(spark, out))
-    rows = read_output(spark, out).select("conv_id", "turn_idx").collect()
+    rows = _committed(spark, out).select("conv_id", "turn_idx").collect()
     assert len(rows) == len(set(rows)) == transcripts.count()
     assert r1["rows"] + r2["rows"] == len(rows)
     shutil.rmtree(str(tmp_path / "run[1]"), ignore_errors=True)
@@ -318,7 +325,7 @@ def test_resume_idempotent_at_4096_buckets(spark, transcripts, tmp_path):
         ).distinct().count()
     )
     assert r1["buckets_done"] + r2["buckets_done"] == total_buckets
-    rows = read_output(spark, out).select("conv_id", "turn_idx").collect()
+    rows = _committed(spark, out).select("conv_id", "turn_idx").collect()
     assert len(rows) == transcripts.count()
     assert len(set(rows)) == len(rows)
     shutil.rmtree(out, ignore_errors=True)

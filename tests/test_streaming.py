@@ -142,44 +142,6 @@ def test_stateful_conversation_counters_accumulate(spark, tmp_path):
     assert finals2.get("b") == 5  # untouched by the restart
 
 
-def test_streaming_exact_dedup_keeps_first_across_batches_and_restarts(spark, tmp_path):
-    from webtext_extraction_spark.streaming.stream import stream_exact_dedup
-
-    inp = str(tmp_path / "dd_in")
-    out = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    t0 = datetime.datetime(2024, 1, 1)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-
-    # batch 1: A, B  |  batch 2: B (dup), C  — separate files, 1/trigger
-    spark.createDataFrame(
-        [("c1", 0, "user", "textA", "fetch", t0), ("c1", 1, "user", "textB", "fetch", t0)],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(inp)
-    spark.createDataFrame(
-        [("c2", 0, "user", "textB", "fetch", t0), ("c2", 1, "user", "textC", "fetch", t0)],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(inp)
-
-    q = stream_exact_dedup(spark, inp, out, ckpt)
-    q.awaitTermination(300)
-    rows = {(r["conv_id"], r["text"]) for r in read_stream_output(spark, out).collect()}
-    texts = sorted(t for _, t in rows)
-    assert texts == ["textA", "textB", "textC"]
-    assert ("c2", "textB") not in rows  # cross-batch dup dropped, first kept
-
-    # restart: another B and a new D — state survives the restart
-    spark.createDataFrame(
-        [("c3", 0, "user", "textB", "fetch", t0), ("c3", 1, "user", "textD", "fetch", t0)],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(inp)
-    q2 = stream_exact_dedup(spark, inp, out, ckpt)
-    q2.awaitTermination(300)
-    rows2 = {(r["conv_id"], r["text"]) for r in read_stream_output(spark, out).collect()}
-    assert sorted(t for _, t in rows2) == ["textA", "textB", "textC", "textD"]
-    assert ("c3", "textB") not in rows2  # dup dropped even after restart
-
-
 def test_streaming_training_pairs_match_batch_across_batches_and_restart(spark, tmp_path):
     """The streaming pair assembler must equal the batch operator on an
     in-order replay — including prompts whose context turns arrived in
@@ -415,71 +377,6 @@ def test_stream_session_rollup_restart_no_duplicates(spark, tmp_path):
     ]
     assert rows.count((1, sec(0), 2)) == 1  # no duplicate emission
     assert (2, sec(6_000), 2) in rows
-
-
-def test_streaming_hll_matches_batch_bit_for_bit(spark, tmp_path):
-    """After draining all micro-batches, the streaming HLL estimate
-    per key equals textstats.hll_cardinality on the same rows EXACTLY
-    (same portable arithmetic), registers accumulate across batches,
-    and a restart with the same checkpoint continues the state."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from webtext_extraction_spark.operators.textstats import hll_cardinality
-    from webtext_extraction_spark.streaming.stream import stream_hll_cardinality
-
-    schema = StructType(
-        [
-            StructField("src", StringType()),
-            StructField("v", StringType()),
-            StructField("seq", LongType()),
-        ]
-    )
-    inp = str(tmp_path / "hll_in")
-    out = str(tmp_path / "hll_out")
-    ckpt = str(tmp_path / "hll_ckpt")
-
-    def mk(lo, hi):
-        rows = [(["a", "b"][i % 2], f"val-{i % 97}", i) for i in range(lo, hi)]
-        rows.append(("a", None, -1))  # NULLs excluded, like the batch op
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(inp)
-
-    mk(0, 400)
-    mk(400, 900)
-    q = stream_hll_cardinality(spark, inp, out, ckpt, schema, "src", "v")
-    q.awaitTermination(300)
-    # last emitted row per key is the live estimate
-    rows = read_stream_output(spark, out).collect()
-    finals = {}
-    for r in sorted(rows, key=lambda r: r["n_registers_hit"]):
-        finals[r["group_key"]] = r["hll_estimate"]
-    batch = {
-        r["src"]: r["hll_estimate"]
-        for r in hll_cardinality(
-            spark.read.parquet(inp), "v", ["src"]
-        ).collect()
-    }
-    assert finals == batch  # EXACT equality, not approx
-
-    # restart: same checkpoint, a third file with NEW values only for a
-    mk_rows = [("a", f"extra-{i}", 1000 + i) for i in range(50)]
-    spark.createDataFrame(mk_rows, schema).write.mode("append").parquet(inp)
-    q2 = stream_hll_cardinality(spark, inp, out, ckpt, schema, "src", "v")
-    q2.awaitTermination(300)
-    rows2 = read_stream_output(spark, out).collect()
-    finals2 = {}
-    for r in sorted(rows2, key=lambda r: r["n_registers_hit"]):
-        finals2[r["group_key"]] = r["hll_estimate"]
-    batch2 = {
-        r["src"]: r["hll_estimate"]
-        for r in hll_cardinality(
-            spark.read.parquet(inp), "v", ["src"]
-        ).collect()
-    }
-    assert finals2 == batch2
-    assert finals2["a"] != finals["a"]  # new values moved the estimate
-    assert finals2["b"] == finals["b"]  # untouched key unchanged
 
 
 def test_stream_quality_gate_matches_batch_and_restarts(spark, tmp_path):

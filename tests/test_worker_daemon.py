@@ -88,3 +88,39 @@ def test_session_workers_import_no_archive(spark):
     for zips, pyspark_file in spark.sparkContext.parallelize(range(4), 4).mapPartitions(probe).collect():
         assert zips == []
         assert ".zip" not in pyspark_file and ".jar" not in pyspark_file
+
+
+def test_get_spark_defaults_to_the_cpus_this_process_may_use(monkeypatch):
+    """Without SPARK_GRAFT_CPUS, get_spark runs ``local[N]`` with N the
+    CPU affinity count.  The builder is a stub, so no second session
+    starts beside the tests' own."""
+    import os
+    import types
+
+    from webtext_extraction_spark import session
+
+    class Builder:
+        conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            self.conf["master"] = master
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    conf = session.get_spark()
+    n = len(os.sched_getaffinity(0))
+    assert conf["master"] == f"local[{n}]"
+    assert conf["spark.default.parallelism"] == str(n)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.get_spark()["master"] == "local[3]"

@@ -374,9 +374,3 @@ def audit_spans(extracted: DataFrame, transcripts: DataFrame) -> DataFrame:
             )
 
     return joined.mapInPandas(run, AUDIT_SCHEMA)
-
-
-def renderable(df: DataFrame) -> DataFrame:
-    """F5/F6 — rows that appear in rendered output: failure-template and
-    error-pattern rows excluded, timeout rows KEPT (W:1628-1630, Q5)."""
-    return df.filter(~F.col("status").isin("failure_template", "error_pattern"))

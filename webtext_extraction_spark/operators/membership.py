@@ -121,50 +121,6 @@ def bloom_build(
     )
 
 
-def bloom_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge Bloom sketches built with the SAME m_words/k by per-word
-    ``bit_or`` — the accrete-per-crawl path (cf. ``cms_merge``)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
-
-
-def bloom_probe(
-    values: DataFrame,
-    value_col: str,
-    sketch: DataFrame,
-    m_words: int = 1024,
-    k: int = 5,
-) -> DataFrame:
-    """Membership test: (value, bloom_hit) for each DISTINCT non-null
-    value — bloom_hit=false means definitely absent; true means
-    present or a false positive (rate ≈ (1 - e^(-k·n/m_bits))^k).
-
-    The sketch (≤ m_words rows by construction) is BROADCAST; each
-    value spawns k probe rows, a missing word counts 0, and the hit is
-    ``bool_and`` over the k bit tests — all integer/bit arithmetic,
-    bit-exact cross-engine."""
-    _check_params(m_words, k)
-    probes = _probe_rows(
-        values.select(F.col(value_col).cast("string").alias("value")).distinct(),
-        F.col("value"),
-        m_words,
-        k,
-        "value",
-    )
-    joined = probes.join(F.broadcast(sketch), "word_idx", "left")
-    bit_set = (
-        F.coalesce(F.col("word"), F.lit(0)).bitwiseAND(
-            F.expr("shiftleft(CAST(1 AS BIGINT), pos)")
-        )
-        != 0
-    )
-    return joined.groupBy("value").agg(F.bool_and(bit_set).alias("bloom_hit"))
-
-
 def decontaminate_bloom(
     df: DataFrame,
     bench: DataFrame,

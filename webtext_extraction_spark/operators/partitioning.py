@@ -96,11 +96,6 @@ def probe_payload_stats(df: DataFrame, sample_fraction: float | None = None) -> 
     }
 
 
-def detect_hot_keys(df: DataFrame, sample_fraction: float | None = None) -> list[str]:
-    """The hot conv_ids of ``probe_payload_stats``."""
-    return probe_payload_stats(df, sample_fraction)["hot_keys"]
-
-
 def salted_repartition(
     df: DataFrame, num_partitions: int, hot_keys: list[str] | None = None
 ) -> DataFrame:

@@ -547,62 +547,3 @@ def topk_recall(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
         .cast("double")
         .alias("recall"),
     )
-
-
-def ivf_tune_n_probe(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    target_recall: float = 0.9,
-    n_cells: int = 8,
-    max_n_probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    kmeans_iters: int = 0,
-) -> dict:
-    """Driver-side IVF tuning loop: the smallest ``n_probe`` whose mean
-    recall@k (vs exact brute-force cosine, measured on the given query
-    sample by :func:`topk_recall`) meets ``target_recall``.  This is
-    the standard deployment step for a learned index — pick the probe
-    fan-out from MEASURED recall on a query sample, never by guessing.
-
-    Deliberately a driver loop (one small Spark job per candidate
-    n_probe, each over the same sampled query set): index tuning is a
-    setup-time activity like k-means seeding, not a per-query path.
-    The exact baseline is computed ONCE.  Returns
-    ``{"n_probe": int, "recall": float, "curve": [(n_probe, recall),
-    ...]}`` — if even probing every cell misses the target (possible
-    when the exact top-k ties at the boundary), the full-probe setting
-    is returned with its measured recall; callers compare against
-    target_recall themselves.
-    """
-    if not query_ids:
-        raise ValueError("query_ids must be non-empty")
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
-    if max_n_probe is not None and max_n_probe < 1:
-        # ADVICE r04: an empty loop range would return None instead of
-        # the documented dict
-        raise ValueError(f"max_n_probe must be >= 1, got {max_n_probe}")
-    exact = cosine_topk(embeddings, id_col=id_col, vec_col=vec_col,
-                        query_ids=query_ids, k=k)
-    exact.persist()
-    try:
-        curve = []
-        best = None
-        # clamp: probing more cells than exist is the full-probe case
-        top = min(max_n_probe, n_cells) if max_n_probe is not None else n_cells
-        for n_probe in range(1, top + 1):
-            approx = ivf_ann_topk(
-                embeddings, id_col=id_col, vec_col=vec_col, query_ids=query_ids,
-                k=k, n_cells=n_cells, n_probe=n_probe, kmeans_iters=kmeans_iters,
-            )
-            rows = topk_recall(exact, approx, k).collect()
-            mean_recall = round(sum(r["recall"] for r in rows) / len(rows), 6)
-            curve.append((n_probe, mean_recall))
-            best = {"n_probe": n_probe, "recall": mean_recall, "curve": curve}
-            if mean_recall >= target_recall:
-                break
-        return best
-    finally:
-        exact.unpersist()

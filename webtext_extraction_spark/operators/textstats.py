@@ -21,15 +21,17 @@ models:
   duplicate-word and duplicate-n-gram character fractions plus the
   top-n-gram character share.
 
-The ``with_*`` steps behind text_profile, quality_gate and
-repetition_profile read one word array, ``_ws_<text>``, and its
-stopword count, ``_stops_<text>``, that the first of them puts in plain
-Projects, so a chain tokenizes and counts once.  The signals a gate
-filters on leave through ``_fence``, a one-row ``inline``: Catalyst
-pushes a Filter through a Project with the aliases inlined, and lambdas
-escape common-subexpression elimination, so a Filter on an unfenced
-signal re-runs the tokenize and its lambdas.  The word array and the
-signals no gate filters on stay in plain Projects, which Catalyst prunes
+Every row-local signal is one entry of ``_signal_table``: whether a
+gate filters on it, the sorted gram array it reads, and its expression.
+:func:`with_signals` adds the named signals and only what they read:
+the word array ``_ws_<text>`` and its stopword count ``_stops_<text>``,
+plain Projects a chain of calls shares (one tokenize and count), and
+the sorted arrays.  The gated signals leave through ``_fence``, a
+one-row ``inline``: Catalyst pushes a Filter through a Project with the
+aliases inlined, and lambdas escape common-subexpression elimination,
+so a Filter on an unfenced signal re-runs the tokenize and its lambdas.
+Catalyst prunes no field of the fence, so a caller names only what it
+reads.  The other signals stay in plain Projects, which Catalyst prunes
 when unread (a second Generate per row for the word array cost
 text_profile 20-30% at sf0.1).  Fences are pinned by tests/test_plans.py.
 """
@@ -62,18 +64,6 @@ BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def _char_count(col, pattern: str) -> Column:
     return F.length(col) - F.length(F.regexp_replace(col, pattern, ""))
-
-
-def _with_words(df: DataFrame, text_col: str) -> tuple[DataFrame, Column, Column]:
-    """(``df`` with the shared word column of ``text_col`` and its
-    stopword count, those two columns), added only when no earlier step
-    added them; the count's Project reads the words from the one below."""
-    ws, stops = f"_ws_{text_col}", f"_stops_{text_col}"
-    if ws not in df.columns:
-        df = df.withColumn(ws, words(F.col(text_col))).withColumn(
-            stops, F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS)))
-        )
-    return df, F.col(ws), F.col(stops)
 
 
 def _fence(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
@@ -151,55 +141,101 @@ def repetition_profile(
                            the value can exceed 1 on degenerate text —
                            filters threshold it, they don't sum it.
 
-    The columns of :func:`with_repetition_profile` keyed by id, behind
-    the zero-word fence: docs with zero words drop out (documented; the
-    step keeps them, with NULL metrics).
+    :data:`REPETITION_SIGNALS` keyed by id, behind the zero-word fence:
+    docs with zero words drop out (documented; :func:`with_signals`
+    keeps them, the last three NULL).
     """
     # rlike guard == size(words)>0 without re-running the tokenize in
     # the pushed-down scan filter (same move as minhash_lsh_pairs)
     fenced = df.filter(F.col(text_col).rlike(r"\S"))
-    return with_repetition_profile(fenced, text_col, top_n, dup_n).select(
-        id_col, "n_words", "dup_word_frac", "dup_word_char_frac", "top_ngram_char_frac",
-        "dup_ngram_char_frac",
+    return with_signals(fenced, text_col, REPETITION_SIGNALS, top_n, dup_n).select(
+        id_col, *REPETITION_SIGNALS
     )
 
 
-def with_repetition_profile(
-    df: DataFrame, text_col: str, top_n: int = 2, dup_n: int = 5
+PROFILE_SIGNALS = ("lang_pred", "quality", "ws_tokens", "bpe_tokens", "fingerprint")
+GATE_SIGNALS = (
+    "n_words", "mean_word_len", "stop_ratio", "max_word_len", "dup_word_frac", "alpha_ratio"
+)
+REPETITION_SIGNALS = (
+    "n_words", "dup_word_frac", "dup_word_char_frac", "top_ngram_char_frac", "dup_ngram_char_frac"
+)
+
+
+def _signal_table(text: Column, ws: Column, stops: Column, top_n: int, dup_n: int) -> dict:
+    """name -> (fenced, n, expr) for every row-local signal: whether a
+    gate filters on it (it leaves through :func:`_fence`, else a plain
+    Project), the gram size of the sorted array ``_rp_s<n>`` it reads,
+    if any, and a thunk that builds its expression."""
+    words_ = F.coalesce(ws, F.array().cast("array<string>"))  # NULL text has no words here
+    n_words = F.size(words_)
+    text_ = F.coalesce(text, F.lit(""))
+    chars = F.length(text)
+
+    def per_word(count: Column) -> Column:  # 0 for a zero-word doc, no /0 under ANSI
+        return F.round(count.cast("double") / F.greatest(n_words, F.lit(1)).cast("double"), 6)
+
+    def repetition(frac: Column) -> Column:  # NULL for a zero-word doc
+        return F.when(F.size(ws) > 0, F.round(frac, 6))
+
+    def srt(n: int) -> Column:
+        return F.col(f"_rp_s{n}")
+
+    return {
+        "lang_pred": (True, None, lambda: lang_id_expr(text, ws, stops)),
+        "quality": (True, None, lambda: quality_score_expr(text, ws, stops)),
+        "ws_tokens": (False, None, lambda: F.size(ws)),
+        "bpe_tokens": (False, None, lambda: F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN))),
+        "fingerprint": (False, None, lambda: fingerprint_expr(ws)),
+        "n_words": (True, None, lambda: n_words),
+        "mean_word_len": (True, None, lambda: per_word(_mass(words_))),
+        # NULL text has NULL hits (the profile scores on that); here it has none
+        "stop_ratio": (True, None, lambda: per_word(F.greatest(stops, F.lit(0)))),
+        "max_word_len": (
+            True, None, lambda: F.coalesce(F.array_max(F.transform(words_, F.length)), F.lit(0))
+        ),
+        "dup_word_frac": (True, None, lambda: per_word(n_words - F.size(F.array_distinct(words_)))),
+        "alpha_ratio": (True, None, lambda: F.round(
+            _char_count(text_, r"[A-Za-z ]") / F.greatest(F.length(text_), F.lit(1)), 6
+        )),
+        "dup_word_char_frac": (True, 1, lambda: repetition(_dup_mass(srt(1)) / _mass(srt(1)))),
+        "top_ngram_char_frac": (True, top_n, lambda: repetition(
+            F.coalesce(_top_run_mass(srt(top_n)) / chars, F.lit(0.0))
+        )),
+        "dup_ngram_char_frac": (True, dup_n, lambda: repetition(_dup_mass(srt(dup_n)) / chars)),
+    }
+
+
+def with_signals(
+    df: DataFrame, text_col: str, names, top_n: int = 2, dup_n: int = 5
 ) -> DataFrame:
-    """``df`` plus the :func:`repetition_profile` columns, NULL for a
-    doc with zero words.  The Gopher rules are per-document, so this is
-    a row-local projection: each gram array (n in {1, top_n, dup_n}) is
-    sorted once per row, O(n log n) (``sort_array``: native ordering,
-    not ``array_sort``'s comparator lambda); the duplicate mass is the
-    summed length of elements equal to a sorted neighbour, the top gram
-    the greatest (run length, gram), over the shared word column.
-    Fences, pinned by test_plans.py: the sorted arrays sit in their own
-    Project (inlined into the lambdas that index them they would re-sort
-    per element), and the metrics come out of :func:`_fence`, so a
-    Filter on them is not pushed down with those sorts inlined.
-    """
+    """``df`` plus the named signals of ``text_col`` (module docstring),
+    leaving the shared word columns for the next call: callers select
+    their columns, and one that rewrites the text drops them first.
+    Each gram array a signal reads is sorted once per row by
+    ``sort_array`` (native ordering, not ``array_sort``'s comparator
+    lambda) in a Project below the fence: inlined into the lambdas that
+    index it, it would re-sort per element."""
     if top_n < 1 or dup_n < 1:
         raise ValueError(f"gram sizes must be >= 1, got top_n={top_n} dup_n={dup_n}")
-    df, ws, _ = _with_words(df, text_col)
-    sizes = sorted({1, top_n, dup_n})
-    tmp = [f"_rp_s{n}" for n in sizes]
-    srt = df.withColumns(
-        {f"_rp_s{n}": F.sort_array(ws if n == 1 else ngrams_of_words(ws, n)) for n in sizes}
+    ws_col, stops_col = f"_ws_{text_col}", f"_stops_{text_col}"
+    ws, stops = F.col(ws_col), F.col(stops_col)
+    # added only when no earlier call added them; the count's Project
+    # reads the words from the one below
+    if ws_col not in df.columns:
+        df = df.withColumn(ws_col, words(F.col(text_col))).withColumn(
+            stops_col, F.size(F.filter(ws, lambda w: F.lower(w).isin(EN_STOPWORDS)))
+        )
+    table = _signal_table(F.col(text_col), ws, stops, top_n, dup_n)
+    signals = {name: table[name] for name in names}
+    srt = {f"_rp_s{n}": n for _, n, _ in signals.values() if n}
+    plain = {name: expr() for name, (fenced, _, expr) in signals.items() if not fenced}
+    gated = {name: expr() for name, (fenced, _, expr) in signals.items() if fenced}
+    df = df.withColumns(
+        {col: F.sort_array(ws if n == 1 else ngrams_of_words(ws, n)) for col, n in srt.items()}
+        | plain
     )
-    s1, dup = F.col("_rp_s1"), F.col(f"_rp_s{dup_n}")
-    n_words = F.size(s1)
-    chars = F.length(F.col(text_col)).cast("double")
-    metrics = {
-        "n_words": n_words,
-        "dup_word_frac": F.round((n_words - F.size(F.array_distinct(s1))) / n_words, 6),
-        "dup_word_char_frac": F.round(_dup_mass(s1) / _mass(s1), 6),
-        "top_ngram_char_frac": F.round(
-            F.coalesce(_top_run_mass(F.col(f"_rp_s{top_n}")) / chars, F.lit(0.0)), 6
-        ),
-        "dup_ngram_char_frac": F.round(_dup_mass(dup) / chars, 6),
-    }
-    return _fence(srt, {name: F.when(n_words > 0, e) for name, e in metrics.items()}).drop(*tmp)
+    return (_fence(df, gated) if gated else df).drop(*srt)
 
 
 def _mass(arr: Column) -> Column:
@@ -1284,29 +1320,7 @@ def hist_quantiles(
 
 def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One-pass per-document profile: the operator queries() exposes."""
-    return with_text_profile(df, text_col).select(
-        id_col, "lang_pred", "quality", "ws_tokens", "bpe_tokens", "fingerprint"
-    )
-
-
-def with_text_profile(df: DataFrame, text_col: str) -> DataFrame:
-    """``df`` plus the :func:`text_profile` columns: language and
-    quality fenced, the token counts and fingerprint plain (module
-    docstring).  Like the other ``with_*`` steps it leaves the shared
-    word columns in its output for the next step: callers select their
-    columns, and a caller that rewrites the text drops them first."""
-    df, ws, stops = _with_words(df, text_col)
-    text = F.col(text_col)
-    # below the fence, so the word array crosses it only when a later step reads it
-    plain = df.withColumns(
-        {
-            "ws_tokens": F.size(ws),
-            "bpe_tokens": F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN)),
-            "fingerprint": fingerprint_expr(ws),
-        }
-    )
-    gated = {"lang_pred": lang_id_expr(text, ws, stops), "quality": quality_score_expr(text, ws, stops)}
-    return _fence(plain, gated)
+    return with_signals(df, text_col, PROFILE_SIGNALS).select(id_col, *PROFILE_SIGNALS)
 
 
 def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1563,8 +1577,7 @@ def mixing_weights(
 def quality_gate(df: DataFrame, id_col: str, text_col: str, **thresholds) -> DataFrame:
     """:func:`with_quality_gate`'s columns keyed by id, one row per input row."""
     return with_quality_gate(df, text_col, **thresholds).select(
-        id_col, "n_words", "mean_word_len", "stop_ratio", "max_word_len", "dup_word_frac",
-        "alpha_ratio", "fail_mask", "passes",
+        id_col, *GATE_SIGNALS, "fail_mask", "passes"
     )
 
 
@@ -1616,9 +1629,9 @@ def with_quality_gate(
     Shape (100 TB): row-local over the text scan — zero shuffle,
     zero Python, whole-stage codegen end-to-end; array ops are linear
     per doc (array_distinct is hash-based, no quadratic HOF).  The
-    signals read the shared word column and are fenced (module
-    docstring); ``fail_mask`` and ``passes`` project over them, so
-    ``.filter("passes")`` compares computed columns.
+    signals are :func:`with_signals`' fenced :data:`GATE_SIGNALS`
+    (module docstring); ``fail_mask`` and ``passes`` project over them,
+    so ``.filter("passes")`` compares computed columns.
 
     Adds to ``df``: n_words int, mean_word_len double, stop_ratio
     double, max_word_len int, dup_word_frac double, alpha_ratio
@@ -1635,28 +1648,7 @@ def with_quality_gate(
         )
     if max_word_len < 1:
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
-    df, ws, stops = _with_words(df, text_col)
-    ws = F.coalesce(ws, F.array().cast("array<string>"))
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    n = F.size(ws).cast("long")
-    nz = F.greatest(n, F.lit(1)).cast("double")
-    # NULL text has NULL hits (the profile scores on that); here it has none
-    stop_hits = F.greatest(stops, F.lit(0)).cast("long")
-    longest = F.coalesce(F.array_max(F.transform(ws, F.length)), F.lit(0)).cast("int")
-    n_distinct = F.size(F.array_distinct(ws)).cast("long")
-    total_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
-    alpha_chars = _char_count(text, r"[A-Za-z ]").cast("double")
-    base = _fence(
-        df,
-        {
-            "n_words": n.cast("int"),
-            "mean_word_len": F.round(_mass(ws).cast("double") / nz, 6),
-            "stop_ratio": F.round(stop_hits.cast("double") / nz, 6),
-            "max_word_len": longest,
-            "dup_word_frac": F.round((n - n_distinct).cast("double") / nz, 6),
-            "alpha_ratio": F.round(alpha_chars / total_chars, 6),
-        },
-    )
+    base = with_signals(df, text_col, GATE_SIGNALS)
     mask = (
         F.when(F.col("n_words") < min_words, GATE_TOO_FEW_WORDS).otherwise(0)
         + F.when(F.col("n_words") > max_words, GATE_TOO_MANY_WORDS).otherwise(0)

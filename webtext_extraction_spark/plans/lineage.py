@@ -211,11 +211,3 @@ def run_extraction(
     ).parquet(lineage_path)
 
     return {"buckets_done": len(remaining), "rows": committed_rows.get["rows"]}
-
-
-def read_output(spark: SparkSession, output_path: str) -> DataFrame:
-    """Final ordered view (stable (conv_id, turn_idx) — O1)."""
-    return (
-        spark.read.parquet(_literal(os.path.join(output_path, DATA_DIR)))
-        .orderBy("conv_id", "turn_idx")
-    )

@@ -49,8 +49,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -327,73 +325,6 @@ def _conv_state_fn(key, pdf_iter, state: GroupState):
     )
 
 
-DEDUP_OUTPUT = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", LongType()),
-        StructField("text", StringType()),
-    ]
-)
-
-DEDUP_STATE = StructType([StructField("seen", LongType())])
-
-
-def _dedup_state_fn(key, pdf_iter, state: GroupState):
-    """First occurrence of each content hash wins — across micro-batches
-    AND restarts (the seen-flag lives in the checkpointed state store)."""
-    already = state.exists
-    emitted = False
-    for pdf in pdf_iter:
-        if already or emitted or len(pdf) == 0:
-            continue
-        first = pdf.iloc[:1]
-        yield pd.DataFrame(
-            {
-                "conv_id": first["conv_id"].values,
-                "turn_idx": first["turn_idx"].astype("int64").values,
-                "text": first["text"].values,
-            }
-        )
-        emitted = True
-    if emitted and not already:
-        state.update((1,))
-
-
-def stream_exact_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming exact deduplication: only the FIRST turn with a given
-    content hash (md5(text)) ever reaches the output, even when the
-    duplicate arrives in a later micro-batch or after a query restart —
-    the standard keep-first contract a batch `dropDuplicates` cannot
-    give an unbounded stream.  (Across batches "first" is arrival
-    order; two identical texts inside ONE micro-batch keep an
-    arbitrary representative — the text, which is what dedup cares
-    about, is identical either way.)  State per distinct hash is one
-    long; production would add a state TTL (GroupStateTimeout) to
-    bound it over months of stream."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    keyed = stream.withColumn("content_hash", F.md5(F.col("text")))
-    deduped = keyed.groupBy("content_hash").applyInPandasWithState(
-        _dedup_state_fn,
-        outputStructType=DEDUP_OUTPUT,
-        stateStructType=DEDUP_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    return _start_idempotent_append(deduped, output_dir, checkpoint_dir, available_now)
-
-
 def stream_session_rollup(
     spark: SparkSession,
     input_dir: str,
@@ -504,104 +435,6 @@ def _write_layout_marker(spark, output_dir: str) -> None:
     except Exception:
         # marker write must never fail a stream start
         return
-
-
-HLL_OUTPUT = StructType(
-    [
-        StructField("group_key", StringType()),
-        StructField("hll_estimate", DoubleType()),
-        StructField("n_registers_hit", LongType()),
-    ]
-)
-
-# 2^p int64 registers per group — THE canonical mergeable-sketch
-# streaming state: bytes stay bounded no matter how many distinct
-# values the stream carries
-HLL_STATE = StructType([StructField("regs", ArrayType(LongType()))])
-
-
-def _hll_state_fn_factory(p: int):
-    """Builds the stateful update fn for a given precision — the
-    python replay of textstats.hll_cardinality's EXACT portable rule
-    (same md5 slice, same integer harmonic sum, same shared literal),
-    so the streaming estimate is bit-identical to the batch operator
-    over the same value set."""
-    import hashlib
-    import math
-
-    from webtext_extraction_spark.operators.textstats import hll_alpha_m2_2r
-
-    m = 1 << p
-    r = 60 - p + 1
-    lit = hll_alpha_m2_2r(p)
-
-    def fn(key, pdf_iter, state: GroupState):
-        regs = list(state.get[0]) if state.exists else [0] * m
-        for pdf in pdf_iter:
-            for v in pdf["_hll_value"].dropna():
-                h = int(hashlib.md5(str(v).encode("utf-8")).hexdigest()[:15], 16)
-                w = h >> p
-                rho = r - w.bit_length() if w else r
-                b = h % m
-                if rho > regs[b]:
-                    regs[b] = rho
-        state.update((regs,))
-        s = sum(1 << (r - reg) for reg in regs)
-        zeros = regs.count(0)
-        e = lit / float(s)
-        if e <= 2.5 * m and zeros > 0:
-            e = float(m) * math.log(float(m) / zeros)
-        yield pd.DataFrame(
-            {
-                "group_key": [key[0]],
-                "hll_estimate": [round(e, 6)],
-                "n_registers_hit": [m - zeros],
-            }
-        )
-
-    return fn
-
-
-def stream_hll_cardinality(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema: StructType,
-    key_col: str,
-    value_col: str,
-    p: int = 8,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming twin of ``textstats.hll_cardinality``: a live
-    distinct-count estimate per key over an unbounded stream.  The
-    state per key is the 2^p-register HLL array — constant bytes
-    regardless of stream cardinality, checkpointed so estimates
-    survive restarts, and each micro-batch appends the key's CURRENT
-    estimate (take the last row per key).  The update rule replays
-    the batch operator's portable arithmetic exactly, so after
-    draining the same rows the streaming estimate equals the batch
-    one bit-for-bit (pinned by tests/test_streaming.py)."""
-    if not 4 <= p <= 14:
-        raise ValueError(f"p must be in 4..14, got {p}")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("_hll_key"),
-        F.col(value_col).cast("string").alias("_hll_value"),
-    )
-    est = keyed.groupBy("_hll_key").applyInPandasWithState(
-        _hll_state_fn_factory(p),
-        outputStructType=HLL_OUTPUT,
-        stateStructType=HLL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _start_idempotent_append(est, output_dir, checkpoint_dir, available_now)
 
 
 def _start_idempotent_append(
