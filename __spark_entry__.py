@@ -110,8 +110,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the extraction operator over a synthetic transcripts
     table (FIXTURES.md §1), stable (conv_id, turn_idx) output.  It
-    extracts on the input splits and runs no skew probe
-    (``plans/pipeline.extraction_pipeline`` is the probing plan)."""
+    extracts on the input splits, as every extraction does."""
     from webtext_extraction_spark.operators.extraction import extract_turns
     from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
@@ -1037,10 +1036,8 @@ def _q_curate_corpus(spark, sf_dir):
     # check_every=2 halves the driver-side convergence-probe jobs,
     # which dominate the composite's wall-clock at small sf (labels
     # are identical; at most one surplus propagation round)
-    keepers = (
-        dedup.connected_components(pairs, nodes, check_every=2)
-        .filter(F.col("node") == F.col("component"))
-        .select(F.col("node").alias("doc_id"))
+    keepers = dedup.component_keepers(
+        dedup.connected_components(pairs, nodes, check_every=2), "doc_id"
     )
     # the row-local gates filter the scan; only the cluster keepers join
     return (
@@ -1104,10 +1101,8 @@ def _q_curate_corpus_v2(spark, sf_dir):
     # check_every=2 halves the driver-side convergence-probe jobs,
     # which dominate the composite's wall-clock at small sf (labels
     # are identical; at most one surplus propagation round)
-    keepers = (
-        dedup.connected_components(pairs, nodes, check_every=2)
-        .filter(F.col("node") == F.col("component"))
-        .select(F.col("node").alias("doc_id"))
+    keepers = dedup.component_keepers(
+        dedup.connected_components(pairs, nodes, check_every=2), "doc_id"
     )
     # the row-local gates (lang, quality, repetition; a zero-word doc's
     # NULL dup_word_char_frac fails) filter the scan; only the

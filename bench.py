@@ -8,7 +8,7 @@ text-stats) on the driver-provided parquet tables.
 
 Env:
   SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    (default 32)
+  SPARK_GRAFT_CPUS    (default: the CPUs this process may run on)
   BENCH_CONVS         override conversation count
 
 Output: {"metric": ..., "value": total_sec, "unit": "sec",
@@ -56,7 +56,6 @@ def build_transcripts(spark, sf: float, override: int | None = None):
 # then carries its own drift evidence instead of needing a fresh
 # session to disprove a trough (VERDICT r04 #8).
 BAND_HI = {
-    "hot_key_detect": 2.0,
     "extract_pipeline": 8.0,
     "dedup_minhash_lsh_first300": 2.0,
     "dedup_simhash": 1.5,
@@ -69,7 +68,6 @@ BAND_HI = {
 def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
              ops: bool = True) -> dict:
     from webtext_extraction_spark.operators import dedup, similarity, textstats
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
     from webtext_extraction_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench-{cores}", cores=cores)
@@ -78,11 +76,7 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
     leg_fns: dict = {}
 
     from webtext_extraction_spark.operators.extraction import extract_turns
-    from webtext_extraction_spark.operators.partitioning import (
-        probe_payload_stats,
-        salted_repartition,
-        source_splits,
-    )
+    from webtext_extraction_spark.operators.partitioning import source_splits
 
     transcripts = build_transcripts(spark, sf, convs)
     transcripts = transcripts.persist()
@@ -107,36 +101,14 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
         leg_fns[name] = fn
         return min(vals)
 
-    # phase 1: the flagship's auto skew probe (sampled JVM-only scan of
-    # two tiny columns — plans/pipeline.extraction_pipeline "auto").
-    # best-of-2 like the extraction leg: the first cache read after
-    # materialization occasionally eats a GC pause (observed 2.5-7.5 s
-    # for the same work)
+    # the extraction operator — the headline turns/sec, on the cache
+    # partitions directly.  forced through an aggregate over the UDF
+    # output: a bare count() lets Catalyst prune the (deterministic)
+    # pandas UDF away entirely
     box: dict = {}
 
-    def probe():
-        box["hot"] = probe_payload_stats(transcripts, sample_fraction=0.1)["hot_keys"]
-
-    timings["hot_key_detect"] = best_of("hot_key_detect", probe)
-    hot = box["hot"]
-
-    # phase 2 — CONDITIONAL: the salted repartition is bought only when
-    # the probe actually finds hot keys (it doesn't on this corpus:
-    # max/mean conv bytes ≈ 3× < skew_factor 8).  At 100 TB the
-    # unconditional variant was a 100 TB shuffle; see VERDICT r01.
-    src = transcripts
-    if hot:
-        t0 = time.time()
-        src = salted_repartition(transcripts, 3 * cores, hot_keys=hot).persist()
-        src.count()
-        timings["salted_shuffle"] = time.time() - t0
-
-    # phase 3: the extraction operator — the headline turns/sec, on
-    # scan/cache partitions directly (the auto plan's no-skew path).
-    # forced through an aggregate over the UDF output: a bare count()
-    # lets Catalyst prune the (deterministic) pandas UDF away entirely
     def run_extract():
-        box["agg"] = extract_turns(src).agg(
+        box["agg"] = extract_turns(transcripts).agg(
             F.count("*").alias("n"),
             F.sum(F.length("extracted_text")).alias("bytes_out"),
             F.countDistinct("status").alias("n_status"),
@@ -146,8 +118,6 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
     assert box["agg"]["n"] == n_turns
 
     if not ops:
-        if src is not transcripts:
-            src.unpersist()
         transcripts.unpersist()
         spark.stop()
         return {
@@ -213,8 +183,6 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
                     ),
                 }
 
-    if src is not transcripts:
-        src.unpersist()
     transcripts.unpersist()
     spark.stop()
     return {
@@ -227,7 +195,7 @@ def run_once(cores: int, sf_dir: str, sf: float, convs: int | None = None,
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = _sf_from_dir(sf_dir)
     convs = int(os.environ["BENCH_CONVS"]) if "BENCH_CONVS" in os.environ else None
 

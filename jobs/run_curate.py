@@ -206,28 +206,23 @@ def curate(docs, args: argparse.Namespace):
             prior_nodes = prior_sigs.select(F.col(idc).alias("node"))
             nodes = docs.select(F.col(idc).alias("node")).unionByName(prior_nodes)
             comps = dedup.connected_components(pairs, nodes, check_every=2)
+            # a keeper is its own component: dropping the tainted ids
+            # drops the keeper of every cluster holding a prior node
             tainted = (
                 comps.join(prior_nodes, "node", "left_semi")
-                .select("component")
+                .select(F.col("component").alias(idc))
                 .distinct()
             )
-            keepers = (
-                comps.filter(F.col("node") == F.col("component"))
-                .join(
-                    docs.select(F.col(idc).alias("node")), "node", "left_semi"
-                )
-                .join(tainted, "component", "left_anti")
-                .select(F.col("node").alias(idc))
+            keepers = dedup.component_keepers(comps, idc).join(
+                tainted, idc, "left_anti"
             )
         else:
             pairs = dedup.minhash_lsh_pairs(
                 docs, idc, txt, num_hashes=8, bands=4, jaccard_threshold=args.jaccard
             )
             nodes = docs.select(F.col(idc).alias("node"))
-            keepers = (
-                dedup.connected_components(pairs, nodes, check_every=2)
-                .filter(F.col("node") == F.col("component"))
-                .select(F.col("node").alias(idc))
+            keepers = dedup.component_keepers(
+                dedup.connected_components(pairs, nodes, check_every=2), idc
             )
         out = out.join(keepers, idc, "left_semi")
     elif args.dedup == "containment":
@@ -261,10 +256,8 @@ def curate(docs, args: argparse.Namespace):
             threshold=args.cosine, dim=args.embed_dim,
         )
         nodes = docs.select(F.col(idc).alias("node"))
-        keepers = (
-            dedup.connected_components(pairs, nodes, check_every=2)
-            .filter(F.col("node") == F.col("component"))
-            .select(F.col("node").alias(idc))
+        keepers = dedup.component_keepers(
+            dedup.connected_components(pairs, nodes, check_every=2), idc
         )
         out = out.join(keepers, idc, "left_semi")
 

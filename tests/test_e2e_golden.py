@@ -5,10 +5,8 @@ cross-round regression gate (FIXTURES.md §2)."""
 import pathlib
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from webtext_extraction_spark.operators.extraction import extract_turns
-from webtext_extraction_spark.operators.partitioning import salted_repartition
 from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
 GOLDEN = pathlib.Path(__file__).parent / "goldens" / "e2e.parquet"
@@ -22,7 +20,7 @@ def test_pipeline_matches_committed_golden(spark):
 
     transcripts = synth_transcripts(spark, num_conversations=n_convs)
     out = (
-        extract_turns(salted_repartition(transcripts, 9))
+        extract_turns(transcripts.repartition(9, "conv_id"))
         .select("conv_id", "turn_idx", "extracted_text", "strategy")
         .orderBy("conv_id", "turn_idx")
         .toPandas()

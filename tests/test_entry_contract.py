@@ -3,6 +3,8 @@ literal in __spark_entry__ silently drops an entry via a duplicate key
 (later keys win in Python — an easy editing accident to miss)."""
 
 import ast
+import json
+import os
 import pathlib
 
 import __spark_entry__ as entrymod
@@ -56,3 +58,22 @@ def test_gate_canonicalizer_detects_drift():
     d = mod.norm_rows(["id", "val", "tag"], list(reversed(rows)))
     assert a == d
     assert mod.norm_cell(True) == "true" and mod.norm_cell(None) == "None"
+
+
+def test_bench_defaults_to_the_affinity_cpu_count(monkeypatch, capsys):
+    """Without SPARK_GRAFT_CPUS, bench.py runs on the CPUs this process
+    may run on, as ``session.get_spark`` does, not a fixed core count."""
+    import bench
+
+    calls = []
+
+    def fake_run_once(cores, sf_dir, sf, convs=None):
+        calls.append(cores)
+        return {"turns": 1, "timings": {"extract_pipeline": 1.0}, "turns_per_sec": 1.0}
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("BENCH_CONVS", raising=False)
+    monkeypatch.setattr(bench, "run_once", fake_run_once)
+    bench.main()
+    assert calls == [len(os.sched_getaffinity(0))]
+    assert json.loads(capsys.readouterr().out)["cores"] == calls[0]

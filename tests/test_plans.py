@@ -38,8 +38,10 @@ def test_scan_pushdown_through_extraction(spark, tmp_path):
     # the conv_id predicate reaches the parquet scan
     assert "PushedFilters" in plan
     assert "conv000003" in plan or "IsNotNull(conv_id)" in plan
-    # exactly one Arrow-batched python stage
+    # exactly one Arrow-batched python stage, on the scan splits: the
+    # extraction plan never shuffles its payload
     assert _n_arrow_stages(plan) == 1
+    assert "Exchange" not in plan
 
 
 def test_column_pruning_drops_payload(spark, tmp_path):
@@ -134,80 +136,6 @@ def test_minhash_jaccard_threshold_stays_above_join(spark, tmp_path):
     ]
     # formatted explain numbers nodes children-first: above = larger id
     assert thresholds and all(t > join_id for t in thresholds)
-
-
-def test_pipeline_auto_skips_shuffle_when_no_skew(spark, monkeypatch):
-    """Flagship plan buys the repartition ONLY under detected skew.  A
-    conversation above SKEW_FACTOR × the mean key bytes but under one
-    task's share of the input (1 / defaultParallelism) is no straggler:
-    the full-scan probe finds no hot key and the plan has no Exchange
-    below the UDF (scan → ArrowEvalPython)."""
-    from webtext_extraction_spark.operators.partitioning import SKEW_FACTOR
-    from webtext_extraction_spark.plans import pipeline
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
-
-    monkeypatch.setattr(pipeline, "PROBE_SAMPLE_FRACTION", None)
-
-    rows = [(f"c{i}", 0, "user", "x" * 1000, "fetch", None) for i in range(99)]
-    rows += [("warm", t, "user", "y" * 1000, "fetch", None) for t in range(10)]
-    total = 109 * 1000
-    assert 10_000 > SKEW_FACTOR * total / 100  # hot by the mean alone
-    assert 10_000 < total / spark.sparkContext.defaultParallelism
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-    auto_plan = _plan(extraction_pipeline(df))
-    assert "ArrowEvalPython" in auto_plan
-    assert "Exchange" not in auto_plan  # extraction is shuffle-free
-
-
-def test_pipeline_auto_shuffles_under_skew(spark, monkeypatch):
-    """With a genuinely hot conversation, the probe detects it and the
-    plan gains the salted repartition."""
-    from webtext_extraction_spark.plans import pipeline
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
-
-    monkeypatch.setattr(pipeline, "PROBE_SAMPLE_FRACTION", None)
-
-    rows = [(f"c{i}", 0, "user", "x" * 50, "fetch", None) for i in range(40)]
-    rows += [("hot", t, "user", "y" * 60000, "fetch", None) for t in range(6)]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-    plan = _plan(extraction_pipeline(df))
-    assert "ArrowEvalPython" in plan
-    assert "Exchange" in plan
-
-
-def test_pipeline_auto_repartitions_heavy_rows_without_skew(spark, monkeypatch):
-    """Heavy-row regime: uniform ~200 KB payloads (zero key skew) must
-    still buy the fine-grained repartition — per-row CPU follows
-    payload bytes, so scan splits are too coarse (bench_heavy)."""
-    from webtext_extraction_spark.plans import pipeline
-    from webtext_extraction_spark.plans.pipeline import extraction_pipeline
-
-    monkeypatch.setattr(pipeline, "PROBE_SAMPLE_FRACTION", None)
-
-    rows = [(f"c{i}", 0, "user", "x" * 200_000, "fetch", None) for i in range(40)]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    plan = _plan(extraction_pipeline(df))
-    assert "Exchange" in plan
-    assert "ArrowEvalPython" in plan
-
-
-def test_probe_payload_stats_reports_both_regimes(spark):
-    from webtext_extraction_spark.operators.partitioning import probe_payload_stats
-
-    rows = [(f"c{i}", t, "x" * 100) for i in range(50) for t in range(4)]
-    rows += [("hot", t, "y" * 40000) for t in range(8)]
-    df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "text"])
-    stats = probe_payload_stats(df)
-    assert stats["hot_keys"] == ["hot"]
-    # mean row bytes = (200*100 + 8*40000) / 208
-    assert abs(stats["mean_row_bytes"] - (200 * 100 + 8 * 40000) / 208) < 1e-6
 
 
 def test_ivf_cell_plan_grows_linearly_in_k(spark):

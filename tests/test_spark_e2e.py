@@ -2,7 +2,7 @@
 
 - UDF path equals driver-side kernel on every turn (plumbing parity)
 - output (conv_id, turn_idx, extracted_text) stable under repartition
-  and salting (T01)
+  (T01)
 - F6 error_pattern layering, F5 render exclusions, Q5 timeout kept
 - resume/idempotency: two-phase run equals single-shot run (T05)
 """
@@ -16,17 +16,13 @@ from pyspark.sql import functions as F
 from webtext_extraction_spark.fixtures_pages import payload_for
 from webtext_extraction_spark.kernel.extract import extract_payload
 from webtext_extraction_spark.operators.extraction import extract_turns
-from webtext_extraction_spark.operators.partitioning import (
-    probe_payload_stats,
-    salted_repartition,
-)
 from webtext_extraction_spark.plans.lineage import (
     DATA_DIR,
     _literal,
     read_lineage,
     run_extraction,
 )
-from webtext_extraction_spark.plans.pipeline import extraction_pipeline, render_extracted
+from webtext_extraction_spark.plans.pipeline import render_extracted
 from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
 N_CONV = 40
@@ -46,7 +42,7 @@ def transcripts(spark):
 
 @pytest.fixture(scope="module")
 def extracted(spark, transcripts):
-    df = extraction_pipeline(transcripts).cache()
+    df = extract_turns(transcripts).cache()
     df.count()
     return df
 
@@ -64,9 +60,9 @@ def test_udf_matches_driver_side_kernel(extracted):
 
 
 def test_stable_order_under_partitioning(spark, transcripts):
-    """3- and 11-way salted repartitions (the 11-way one over a
-    13-split input, salting whatever the full probe finds hot) extract
-    exactly what direct extraction does, in the same stable order."""
+    """3- and 11-way repartitions (the 11-way one over a 13-split input)
+    extract exactly what direct extraction does, in the same stable
+    order."""
     def ordered(df):
         return (
             extract_turns(df)
@@ -77,8 +73,8 @@ def test_stable_order_under_partitioning(spark, transcripts):
 
     direct = ordered(transcripts)
     resplit = transcripts.repartition(13)
-    assert ordered(salted_repartition(transcripts, 3)) == direct
-    assert ordered(salted_repartition(resplit, 11, probe_payload_stats(resplit)["hot_keys"])) == direct
+    assert ordered(transcripts.repartition(3)) == direct
+    assert ordered(resplit.repartition(11)) == direct
     keys = [(r["conv_id"], r["turn_idx"]) for r in direct]
     assert keys == sorted(keys)
 
@@ -133,6 +129,14 @@ def test_render_excludes_failures_keeps_timeouts(extracted):
     if has_timeout:
         assert text.startswith("テキスト抽出タイムアウトページあり（該当URL表示）\n")
         assert "（テキスト抽出タイムアウト）" in text  # Q5: kept in body
+
+
+def test_synth_transcripts_rejects_unknown_profiles(spark):
+    for profile in ("golden", "bench"):
+        assert synth_transcripts(spark, 2, profile=profile).columns[:2] == ["conv_id", "turn_idx"]
+    for profile in ("heavy", "Bench", ""):
+        with pytest.raises(ValueError, match="profile"):
+            synth_transcripts(spark, 2, profile=profile)
 
 
 def test_render_limit_bounds_renderable_rows_not_prefilter(spark):

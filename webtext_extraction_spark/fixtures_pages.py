@@ -352,10 +352,9 @@ def bench_payload_for(conv_id: str, turn_idx: int, heavy_scale: int = 25) -> tup
 
 def heavy_payload_for(conv_id: str, turn_idx: int, scale: int = 1500) -> tuple[str, str]:
     """Heavy-profile payloads: every turn a ~0.7 MB article page —
-    ~100× the golden pool's per-turn bytes.  Exists for the Arrow
-    transport bench under memory pressure (scripts/bench_heavy.py):
-    batches of such rows are where maxRecordsPerBatch must be tuned
-    DOWN (session.py docstring) and where the 85-95%-of-control claim
-    needs re-verification."""
+    ~100× the golden pool's per-turn bytes.  The heavy-row parse
+    differential (tests/test_fastfeed_diff.py) reads it; the Arrow
+    transport profile it fed is recorded in BENCH/BASELINE.md
+    ("Heavy-payload")."""
     h = _stable_hash(f"{conv_id}#{turn_idx}")
     return h01_main_article(h % 100003, scale=scale), "fetch"

@@ -1154,6 +1154,15 @@ def connected_components(
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 
+def component_keepers(components: DataFrame, id_col: str) -> DataFrame:
+    """The keeper of each cluster in ``connected_components`` output,
+    as one ``id_col`` column: the node that is its own component (the
+    cluster's min id; every singleton keeps itself)."""
+    return components.filter(F.col("node") == F.col("component")).select(
+        F.col("node").alias(id_col)
+    )
+
+
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al., 'Connected Components in
     MapReduce and Beyond'): every node u connects each STRICTLY LARGER

@@ -112,11 +112,12 @@ def _extract_batch(
     # a heavy page carries ~9k spans, so a 26-row batch of 0.7 MB
     # pages built ~7M short-lived dicts, and CPython's gen-2 GC
     # rescanning millions of live objects dominated the batch (2-6×
-    # wall-clock swings at local[32], scripts/bench_heavy.py).  Flat
-    # lists keep the object count O(rows + spans) primitives; the
-    # kernel's (start, end, kind) span tuples are split into them by
-    # three C-level extends per row (no per-span Python code), and die
-    # with their row, so the tuple free list serves the next row.
+    # wall-clock swings at local[32], BENCH/BASELINE.md
+    # "Heavy-payload").  Flat lists keep the object count O(rows +
+    # spans) primitives; the kernel's (start, end, kind) span tuples
+    # are split into them by three C-level extends per row (no per-span
+    # Python code), and die with their row, so the tuple free list
+    # serves the next row.
     ex_texts: list = []
     strategies: list = []
     statuses: list = []

@@ -19,8 +19,9 @@ Reference analogue: the completed_folder membership checkpoint
 - the payload column is scanned exactly ONCE per run: input accounting
   (payload_bytes = length(text)) rides through the extraction
   projection and the phase-2 rollup reads only the committed output;
-- a commit extracts on the scan splits of its buckets: it never runs
-  the skew probe of ``pipeline.extraction_pipeline``.
+- a commit extracts on the scan splits of its buckets, with no skew
+  probe or salt (measured not to pay, BENCH/BASELINE.md "Skew-path
+  payoff").
 
 A resumed commit runs seven Spark jobs, and each has a reason to stay:
 

@@ -1,24 +1,14 @@
-"""End-to-end extraction plans + the rendered-output formatter.
+"""Extraction output plans: the A6 status rollup and the rendered-output
+formatter.
 
-``extraction_pipeline`` is the flagship logical plan:
-scan → [salted repartition ONLY if the probe finds a reason] → extract
-(one Arrow UDF; the F6 status is set inside its batch).  Everything
-before and after the UDF is Catalyst-visible; filters on conv_id/tool
-push into the parquet/Iceberg scan.
-
-Why the shuffle is conditional: scan splits are already byte-balanced
-(``maxPartitionBytes``) and extraction is stateless per row, so an
-unconditional repartition of the full payload column is a 100 TB
-shuffle at 100 TB input, bought to fix skew that balanced splits +
-AQE mostly already fix.  One sampled payload probe (two tiny columns)
-buys the shuffle only when it finds a reason: a hot key (salted
-repartition; 1.6-2.6× under planted skew at local[8] on a 32-core
-host, scripts/bench_skew.py) or heavy rows (mean payload ≥
-HEAVY_ROW_BYTES — CPU per row is payload-proportional, so task
-granularity must follow CPU, not bytes; fine-grained repartition
-measured 3-4× faster on ~0.7 MB pages, scripts/bench_heavy.py).  A
-plan that must never probe or shuffle calls
-``extraction.extract_turns`` directly.
+Every extraction runs ``extraction.extract_turns`` on the splits its
+source gives: scan splits are byte-balanced (``maxPartitionBytes``) and
+extraction is stateless per row, so the plan is scan → one Arrow UDF,
+with no shuffle.  A probe-and-salt split plan for hot conversations and
+heavy rows was measured and deleted: at local[4] the salt bought
+0.93-1.30× under planted skew and the heavy-row repartition ran
+0.78-0.86× of the plain scan splits (BENCH/BASELINE.md, "Skew-path
+payoff" and "Heavy-payload").
 
 ``render_extracted`` reproduces the reference's text sink format for
 golden comparison (save_results W:1712-1726 + integrated.py:45-58):
@@ -29,48 +19,6 @@ DataFrame — used only by tests, never in the scale path.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from webtext_extraction_spark.operators.extraction import extract_turns
-from webtext_extraction_spark.operators.partitioning import (
-    probe_payload_stats,
-    salted_repartition,
-)
-
-# rows above this mean size are "heavy": per-row CPU (kernel cost scales
-# with payload bytes) makes byte-balanced scan splits too coarse — a
-# 128 MB split of 0.7 MB pages is ~180 rows ≈ 30+ s of single-task CPU.
-# Measured at local[32]: 26-row splits 3-4× slower than 3-tasks/core
-# fine-grained repartition (scripts/bench_heavy.py).
-HEAVY_ROW_BYTES = 131072
-
-# the probe's seeded sample of the input (None scans every row)
-PROBE_SAMPLE_FRACTION = 0.1
-
-
-def extraction_pipeline(transcripts: DataFrame) -> DataFrame:
-    """The flagship plan.  Ordering is NOT forced here (keys travel with
-    every row); callers that need the stable output order add
-    ``.orderBy('conv_id', 'turn_idx')`` at the sink (O1).
-
-    One probe (``probe_payload_stats`` over a ``PROBE_SAMPLE_FRACTION``
-    sample) decides the split:
-    - key skew (hot conversations) or HEAVY ROWS (mean payload ≥
-      ``HEAVY_ROW_BYTES``, no skew needed) → salted repartition to
-      3 tasks per core: fine-grained tasks smooth stragglers (hot pages
-      cost ~10× a normal page even after salting), and byte-balanced
-      128 MB scan splits of ~MB pages are 100+-row, 30+-second tasks;
-    - otherwise → extraction on the scan splits, no shuffle.
-
-    Co-located exact-dup pages are collapsed for free by the batch-local
-    memo inside the UDF; global distinct-payload extraction is the
-    explicit ``extraction.extract_turns_distinct``.
-    """
-    stats = probe_payload_stats(transcripts, PROBE_SAMPLE_FRACTION)
-    hot = stats["hot_keys"]
-    if hot or stats["mean_row_bytes"] >= HEAVY_ROW_BYTES:
-        num_partitions = 3 * transcripts.sparkSession.sparkContext.defaultParallelism
-        transcripts = salted_repartition(transcripts, num_partitions, hot_keys=hot)
-    return extract_turns(transcripts)
 
 
 def extraction_summary(extracted: DataFrame) -> DataFrame:

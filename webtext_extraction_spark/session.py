@@ -7,7 +7,8 @@ chosen to survive a 1000-executor / 100 TB deployment:
   answer to the reference's straggler problem (SURVEY.md §2.9).
 - One Arrow batch size, ``ARROW_BATCH_ROWS`` rows (jobs/run_extract.py
   sets it too); Spark's 64 MB ``arrow.maxBytesPerBatch`` bounds batches
-  of heavy rows (0.7 MB rows arrive 96 to a UDF batch, 8 MB rows 9).
+  of heavy rows (0.7 MB rows arrive 96 to a UDF batch, 8 MB rows 9;
+  BENCH/BASELINE.md "Heavy-payload").
 - shuffle partitions sized to cores locally; on a real cluster this is
   2-3× total executor cores (or left to AQE's coalescing).
 - Python workers import the installed pyspark, not SPARK_HOME's

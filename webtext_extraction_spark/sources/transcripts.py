@@ -11,8 +11,7 @@ pool, so a 10^12-turn table would generate without a driver bottleneck.
 Payload pool: the golden fixture archetypes (tests/fixtures via
 fixtures_pages), with deterministic filler drawn from a word list so
 dedup/skew paths stay exercised.  ~5% of conversations share hot
-domains carrying outsized payloads (FIXTURES.md T04) to exercise the
-salting path.
+domains carrying outsized payloads (FIXTURES.md T04).
 """
 
 from __future__ import annotations
@@ -21,11 +20,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from webtext_extraction_spark.fixtures_pages import (
-    bench_payload_for,
-    heavy_payload_for,
-    payload_for,
-)
+from webtext_extraction_spark.fixtures_pages import bench_payload_for, payload_for
 
 PAYLOAD_TYPE = StructType(
     [
@@ -63,11 +58,6 @@ def bench_payload_udf(conv_ids: pa.Array, turn_idxs: pa.Array) -> pa.Array:
     return _payload_batch(conv_ids, turn_idxs, bench_payload_for)
 
 
-@F.arrow_udf(PAYLOAD_TYPE)
-def heavy_payload_udf(conv_ids: pa.Array, turn_idxs: pa.Array) -> pa.Array:
-    return _payload_batch(conv_ids, turn_idxs, heavy_payload_for)
-
-
 def synth_transcripts(
     spark: SparkSession,
     num_conversations: int = 200,
@@ -79,8 +69,14 @@ def synth_transcripts(
     conv_id = f"conv{i:06d}"; turns per conversation = 1 + (i % 12)
     (contiguous turn_idx); ts = epoch + row_index seconds (monotone,
     deterministic).  Payload archetype is a seeded hash of
-    (conv_id, turn_idx) — see fixtures_pages.payload_for.
+    (conv_id, turn_idx) — see fixtures_pages.payload_for.  ``profile``
+    picks the pool: ``"golden"`` (the archetype pool) or ``"bench"``
+    (fixtures_pages.bench_payload_for); any other value raises
+    ``ValueError``.
     """
+    gen_udfs = {"golden": payload_udf, "bench": bench_payload_udf}
+    if profile not in gen_udfs:
+        raise ValueError(f"profile must be one of {sorted(gen_udfs)}, got {profile!r}")
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
     skeleton = (
@@ -105,11 +101,9 @@ def synth_transcripts(
             + F.col("turn_idx")
         ),
     )
-    gen_udf = {
-        "bench": bench_payload_udf,
-        "heavy": heavy_payload_udf,
-    }.get(profile, payload_udf)
-    payloads = skeleton.withColumn("_p", gen_udf(F.col("conv_id"), F.col("turn_idx")))
+    payloads = skeleton.withColumn(
+        "_p", gen_udfs[profile](F.col("conv_id"), F.col("turn_idx"))
+    )
     return payloads.select(
         "conv_id",
         "turn_idx",
