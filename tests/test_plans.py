@@ -138,6 +138,20 @@ def test_minhash_jaccard_threshold_stays_above_join(spark, tmp_path):
     assert thresholds and all(t > join_id for t in thresholds)
 
 
+def test_pipeline_auto_skips_shuffle_when_no_skew(spark):
+    """An in-memory batch with one warm conversation (10× the turns of
+    every other) still extracts on its own splits: the plan is
+    ArrowEvalPython over the rows with no Exchange below or above it."""
+    rows = [(f"c{i}", 0, "user", "x" * 1000, "fetch", None) for i in range(99)]
+    rows += [("warm", t, "user", "y" * 1000, "fetch", None) for t in range(10)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    plan = _plan(extract_turns(df))
+    assert _n_arrow_stages(plan) == 1
+    assert "Exchange" not in plan  # extraction is shuffle-free
+
+
 def test_ivf_cell_plan_grows_linearly_in_k(spark):
     """The IVF argmin is one distance array, linear in k: doubling the
     centroids at most ~doubles the analyzed plan.  A running-best
