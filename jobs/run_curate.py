@@ -34,6 +34,7 @@ gate reads that one ``docs``; ``curate`` only builds the plan.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
@@ -283,6 +284,18 @@ def curate(docs, args: argparse.Namespace):
     return out
 
 
+def _write_counted(df, path: str) -> int:
+    """Overwrite ``path`` with ``df`` and return the rows written,
+    counted by an Observation on the write itself (no re-read)."""
+    from pyspark.sql import Observation, functions as F
+
+    written = Observation("written")
+    df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return written.get["rows"]
+
+
 def main(argv=None):
     args = parse_args(argv)
 
@@ -313,10 +326,7 @@ def main(argv=None):
     else:
         docs = spark.read.parquet(args.input)
     docs = source_splits(docs)
-    out = curate(docs, args)
-    out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(f"curated rows: {n}")
+    summary = {"rows": _write_counted(curate(docs, args), args.output)}
 
     if args.emit_signatures:
         # the artifact the NEXT run passes as --prior-signatures: this
@@ -330,8 +340,8 @@ def main(argv=None):
                 spark.read.parquet(args.prior_signatures)
                 .select(args.id_col, "ws_hashes", "minhash")
             )
-        sigs.write.mode("overwrite").parquet(args.emit_signatures)
-        print(f"signatures: {spark.read.parquet(args.emit_signatures).count()}")
+        summary["signatures"] = _write_counted(sigs, args.emit_signatures)
+    print(json.dumps(summary))
     spark.stop()
 
 

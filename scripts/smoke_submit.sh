@@ -49,24 +49,28 @@ last=$(extract | tail -n 1)
 python -c "import json, sys; s = json.loads(sys.argv[1]); assert s['buckets_done'] == 0, s" "$last"
 reconcile
 echo "SMOKE OK: rerun committed nothing ($last)"
-# curation job over the driver-provided documents table (all gates on)
-spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
+# curation job over the driver-provided documents table (all gates on);
+# its last stdout line is the JSON summary
+curated=$(spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
   --conf spark.ui.enabled=false \
   jobs/run_curate.py --input /root/testdata/sf0.001/documents.parquet \
   --output "$workdir/curated" --lang en --min-quality 0.5 \
   --gopher-gate --gate-min-words 10 \
-  --max-dup-frac 0.9 --dedup neardup --scrub-pii
+  --max-dup-frac 0.9 --dedup neardup --scrub-pii | tail -n 1)
 test -d "$workdir/curated"
-python - <<EOF
+python - "$curated" <<EOF
+import json, sys
 import duckdb
 curated = "read_parquet('$workdir/curated/*.parquet')"
 n = duckdb.sql(f"SELECT count(*) FROM {curated}").fetchone()[0]
 assert n > 0, "curation smoke produced zero rows"
+summary = json.loads(sys.argv[1])
+assert summary == {"rows": n}, f"run_curate summary {summary} != {n} parquet rows"
 # the gates' internal columns (the shared word array) must not ship
 cols = [r[0] for r in duckdb.sql(f"DESCRIBE SELECT * FROM {curated}").fetchall()]
 want = ["doc_id", "lang", "source", "n_chars", "lang_pred", "quality",
         "dup_word_char_frac", "text", "n_email", "n_ipv4", "n_phone"]
 assert cols == want, f"curated columns {cols} != {want}"
-print(f"SMOKE OK: curated {n} rows, columns {cols}")
+print(f"SMOKE OK: curated {n} rows ({sys.argv[1]}), columns {cols}")
 EOF
 rm -rf "$workdir"

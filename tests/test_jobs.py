@@ -2,6 +2,7 @@
 in-process (the spark-submit deploy path itself is exercised by
 scripts/smoke_submit.sh)."""
 
+import json
 import sys
 
 from pyspark.sql import functions as F
@@ -80,7 +81,7 @@ def test_run_curate_substring_dedup_rewrites_text(spark, tmp_path, monkeypatch):
     assert got[2]["removed_frac"] == 0.0
 
 
-def test_run_curate_incremental_neardup_two_runs(spark, tmp_path, monkeypatch):
+def test_run_curate_incremental_neardup_two_runs(spark, tmp_path, monkeypatch, capsys):
     """Crawl-over-crawl loop: run 1 emits the signature artifact; run 2
     passes it as --prior-signatures, drops new docs that near-match the
     existing corpus (prior keeper wins), keeps genuinely-new docs, and
@@ -103,11 +104,16 @@ def test_run_curate_incremental_neardup_two_runs(spark, tmp_path, monkeypatch):
     out1, out2 = str(tmp_path / "o1"), str(tmp_path / "o2")
     sigs1, sigs2 = str(tmp_path / "s1"), str(tmp_path / "s2")
 
+    def summary():
+        # the job's last stdout line is its one JSON summary
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
     run_curate.main(
         ["--input", in1, "--output", out1, "--dedup", "neardup",
          "--jaccard", "0.7", "--emit-signatures", sigs1]
     )
     assert spark.read.parquet(sigs1).count() == 2
+    assert summary() == {"rows": spark.read.parquet(out1).count(), "signatures": 2}
 
     run_curate.main(
         ["--input", in2, "--output", out2, "--dedup", "neardup",
@@ -119,6 +125,7 @@ def test_run_curate_incremental_neardup_two_runs(spark, tmp_path, monkeypatch):
     assert kept == [11]
     # accreted artifact = prior 2 + new 3
     assert spark.read.parquet(sigs2).count() == 5
+    assert summary() == {"rows": len(kept), "signatures": 5}
 
     # flag validation
     import pytest

@@ -41,9 +41,8 @@ def _py_minhash(text, num_hashes):
 
 
 def test_minhash_signature_matches_python(docs_df):
-    rows = dedup.with_minhash_signature(docs_df, "text", 8).select(
-        "doc_id", "minhash"
-    ).collect()
+    rows = dedup.minhash_signatures(docs_df, "doc_id", "text", 8).collect()
+    assert len(rows) == len(DOCS)
     for r in rows:
         expected = _py_minhash(DOCS[r["doc_id"]][1], 8)
         assert list(r["minhash"]) == expected
@@ -867,14 +866,26 @@ def test_conversation_pairs_null_text_is_empty_line(spark):
         ]
     )
     df = spark.createDataFrame(
-        [("c", 0, "user", None), ("c", 1, "assistant", "ok")], schema
+        [
+            ("c", 0, "user", None), ("c", 1, "assistant", "ok"),
+            ("d", 0, None, "bare"), ("d", 1, "assistant", "reply"),
+            ("e", None, "assistant", "orphan"),
+        ],
+        schema,
     )
     r = conversations.conversation_pairs(df, context_turns=2).collect()
-    by_idx = {x["turn_idx"]: x for x in r}
+    by_key = {(x["conv_id"], x["turn_idx"]): x for x in r}
+    assert set(by_key) == {("c", 1), ("d", 1), ("e", None)}
     # NULL context text renders as 'user: ' (kept as a line), matching
     # the SQL oracle's coalesce(text, '')
-    assert by_idx[1]["prompt"] == "user: "
-    assert by_idx[1]["n_context"] == 1
+    assert by_key["c", 1]["prompt"] == "user: "
+    assert by_key["c", 1]["n_context"] == 1
+    # a NULL role follows concat_ws: the line is the bare text
+    assert by_key["d", 1]["prompt"] == "bare"
+    assert by_key["d", 1]["n_context"] == 1
+    # a NULL turn_idx is kept as a pair with no context
+    assert (by_key["e", None]["prompt"], by_key["e", None]["completion"]) == ("", "orphan")
+    assert by_key["e", None]["n_context"] == 0
 
 
 def test_pack_sequences_hand_computed(spark):

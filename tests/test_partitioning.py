@@ -94,14 +94,25 @@ def test_source_splits_passes_inputs_without_files(spark):
     assert source_splits(stream) is stream
 
 
-def test_no_rdd_in_the_engine():
-    """No engine path depends on ``df.rdd`` (absent under Spark Connect)."""
+def _engine_lines_matching(pattern: str) -> list[str]:
+    """``path:line`` of every line under the package and ``jobs/`` that
+    matches ``pattern``."""
     root = pathlib.Path(__file__).resolve().parents[1]
-    hits = [
+    return [
         f"{p.relative_to(root)}:{n}"
         for d in ("webtext_extraction_spark", "jobs")
         for p in sorted((root / d).rglob("*.py"))
         for n, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
-        if re.search(r"\.rdd\b", line)
+        if re.search(pattern, line)
     ]
-    assert hits == []
+
+
+def test_no_rdd_in_the_engine():
+    """No engine path depends on ``df.rdd`` (absent under Spark Connect)."""
+    assert _engine_lines_matching(r"\.rdd\b") == []
+
+
+def test_engine_is_batch_only():
+    """The reference is a batch pipeline (SURVEY §2.10): no engine path
+    or job reads or writes a Structured-Streaming query."""
+    assert _engine_lines_matching(r"readStream|writeStream|pyspark\.sql\.streaming") == []

@@ -119,80 +119,28 @@ def corpus_diff(
     return joined.select(id_col, status.alias("status"), "old_hash", "new_hash")
 
 
-def with_minhash_signature(
-    df: DataFrame, text_col: str, num_hashes: int = 16
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16
 ) -> DataFrame:
-    """Append ``minhash`` array<bigint>.  Signature_i = min over word
-    tokens of (a_i·h(w) + b_i) mod M61 — all inside one row-level
-    expression (no shuffle, no Python)."""
-    tokens = word_set(F.col(text_col))
-    hashes = F.transform(tokens, lambda w: portable_hash64(w) % F.lit(TOKEN_SPACE))
+    """(id, ws_hashes, minhash) per document — the one MinHash
+    signature definition: :func:`minhash_lsh_pairs` bands it, and
+    persisted per snapshot it is the artifact for INCREMENTAL dedup,
+    where each new crawl dedups against the existing corpus without
+    re-reading its text (feed it to
+    :func:`minhash_lsh_pairs_incremental` as ``prior_signatures``).
 
-    def perm(a: int, b: int):
-        # factory keeps the Spark lambda unary (default-arg lambdas read
-        # as 2/3-ary to the higher-order-function binder)
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(hashes, perm(a, b)))
-            for a, b in _perm_params(num_hashes)
-        ]
-    )
-    return df.withColumn("minhash", sig)
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Candidate pairs via banded LSH, then exact word-set Jaccard
-    verification.  Returns (id_a, id_b, jaccard) with id_a < id_b.
-
-    The verification sets are HASHED word sets (``hashed_word_set``):
-    the candidate join then shuffles arrays of 8-byte ints instead of
-    full word strings — for ~10³-distinct-word documents that is the
-    difference between a payload-scale shuffle and a hash-scale one at
-    100 TB.  Jaccard over hashed sets equals word Jaccard modulo md5
-    60-bit collisions, and the DuckDB oracle replays the same hashing
-    (same move boilerplate_ngrams documents and contamination makes).
-    The minhash signature is derived from the SAME hashed array —
-    ``(h % TOKEN_SPACE)·a + b`` ≡ with_minhash_signature's per-word
-    value, and array_min is duplicate-insensitive — so the text column
-    is tokenized exactly once.
-
-    ZERO-TOKEN documents (empty or NULL text) are excluded before
-    banding: their minhash is undefined (array_min of an empty array),
-    their pairwise Jaccard is 0/0 — two colliding empties crashed the
-    whole job under ANSI division (r4 random-corpus soak finding) —
-    and at corpus scale they all share one degenerate bucket (a
-    quadratic skew bomb).  Empty-vs-empty duplication is exact
-    duplication; ``exact_duplicates`` owns it.  Caveat (ADVICE r04):
-    whitespace-only docs with DIFFERING bytes (``' '`` vs ``'  '``)
-    are zero-token here but distinct under byte-exact md5 — run
-    ``exact_duplicates(..., normalize_ws=True)`` when degenerate docs
-    need a dedup owner.
-
-    Plan shape (optimization r6, guide §2.3/§2.4 — output unchanged,
-    oracle-verified):
-    - the zero-token guard is ``text RLIKE '\\S'`` — the SAME predicate
-      as ``size(hashed_word_set(text)) > 0`` (a token exists iff some
-      non-whitespace char exists; NULL text fails rlike), but it
-      pushes to the scan WITHOUT re-evaluating the md5 tokenization
-      inside the pushed filter (the old guard doubled the tokenize);
-    - candidate pairs are deduplicated by FIRST-COLLIDING-BAND
-      ownership (a pair is emitted only from the lowest band where the
-      buckets agree) instead of a post-join dropDuplicates — that
-      removes one Exchange + two SortAggregates carrying full hashed
-      word-set arrays from the plan;
-    - exact Jaccard uses |A∩B| and the precomputed set sizes
-      (|A∪B| = |A|+|B|-|A∩B| for distinct-element arrays) so the
-      verification never materializes the union array."""
-    rows_per_band = num_hashes // bands
+    ``ws_hashes`` is the document's HASHED word set
+    (``hashed_word_set``); signature_i = min over it of
+    ((h % TOKEN_SPACE)·a_i + b_i) mod MINHASH_PRIME, derived from the
+    same hashed array so the text is tokenized once, all inside one
+    row-level expression (no shuffle, no Python).  Zero-token documents
+    are excluded (see :func:`minhash_lsh_pairs`) by ``text RLIKE '\\S'``
+    — the SAME predicate as ``size(hashed_word_set(text)) > 0`` (a token
+    exists iff some non-whitespace char exists; NULL text fails rlike),
+    but it pushes to the scan WITHOUT re-running the md5 tokenization
+    inside the pushed filter.  Signature width: ``num_hashes`` int64s +
+    the distinct-word hashes — payload text never needs to be stored or
+    shuffled again."""
 
     def perm(a: int, b: int):
         # factory keeps the Spark lambda unary (default-arg lambdas
@@ -205,17 +153,31 @@ def minhash_lsh_pairs(
         F.col(id_col).alias("_id"),
         hashed_word_set(F.col(text_col)).alias("_ws"),
     )
-    sigs = base.select(
-        "_id",
-        "_ws",
-        F.size("_ws").alias("_sz"),
+    return base.select(
+        F.col("_id").alias(id_col),
+        F.col("_ws").alias("ws_hashes"),
         F.array(
             *[
                 F.array_min(F.transform(F.col("_ws"), perm(a, b)))
                 for a, b in _perm_params(num_hashes)
             ]
-        ).alias("_mh"),
+        ).alias("minhash"),
     )
+
+
+def _lsh_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    jaccard_threshold: float,
+    new_only: bool = False,
+) -> DataFrame:
+    """Banded-LSH candidate pairs over a :func:`minhash_signatures`
+    table, verified by exact Jaccard over the hashed word sets.  With
+    ``new_only`` the table carries a boolean ``_new`` and a pair needs
+    at least one new side."""
+    rows_per_band = num_hashes // bands
     # bucket key = the band slice itself, stringified: equality is then
     # portable (no engine-specific hash in the collision definition).
     # NOTE: the generator argument must stay an inline CreateArray —
@@ -232,10 +194,15 @@ def minhash_lsh_pairs(
         )
         for b in range(bands)
     ]
+    # two selects: the set size joins the signature Project below the
+    # Generate, taken once per document rather than once per band
     banded = sigs.select(
-        "_id", "_ws", "_sz", "_mh",
-        F.posexplode(F.array(*bucket_strs)).alias("band", "bucket"),
-    )
+        F.col(id_col).alias("_id"),
+        F.col("ws_hashes").alias("_ws"),
+        F.size("ws_hashes").alias("_sz"),
+        F.col("minhash").alias("_mh"),
+        *(["_new"] if new_only else []),
+    ).select("*", F.posexplode(F.array(*bucket_strs)).alias("band", "bucket"))
     left = banded.alias("l")
     right = banded.alias("r")
     # first-colliding-band ownership: any earlier band whose buckets
@@ -250,13 +217,14 @@ def minhash_lsh_pairs(
                 F.col("l._mh").getItem(j) == F.col("r._mh").getItem(j)
             )
         earlier_match = earlier_match | ((F.col("l.band") > i) & band_eq)
-    joined = left.join(
-        right,
+    cond = (
         (F.col("l.band") == F.col("r.band"))
         & (F.col("l.bucket") == F.col("r.bucket"))
         & (F.col("l._id") < F.col("r._id"))
-        & ~earlier_match,
     )
+    if new_only:
+        cond = cond & (F.col("l._new") | F.col("r._new"))
+    joined = left.join(right, cond & ~earlier_match)
     inter = F.size(F.array_intersect(F.col("l._ws"), F.col("r._ws")))
     jac = F.round(inter / (F.col("l._sz") + F.col("r._sz") - inter), 6)
     # explode barrier: keeps the threshold filter from being pushed into
@@ -270,42 +238,53 @@ def minhash_lsh_pairs(
     ).filter(F.col("jaccard") >= jaccard_threshold)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 16,
+    bands: int = 4,
+    jaccard_threshold: float = 0.5,
 ) -> DataFrame:
-    """The persistable per-snapshot signature artifact for INCREMENTAL
-    dedup — the production pattern where each new crawl dedups against
-    the existing corpus without re-reading its text: (id, ws_hashes,
-    minhash), derived exactly as inside :func:`minhash_lsh_pairs`
-    (hashed word set tokenized once; signature from the same hashed
-    array; zero-token docs excluded — same ownership rule).  Persist
-    this per snapshot; feed it to
-    :func:`minhash_lsh_pairs_incremental` as ``prior_signatures``.
-    Signature width: ``num_hashes`` int64s + the distinct-word hashes
-    — payload text never needs to be stored or shuffled again."""
+    """Candidate pairs via banded LSH over :func:`minhash_signatures`,
+    then exact word-set Jaccard verification.  Returns
+    (id_a, id_b, jaccard) with id_a < id_b.
 
-    def perm(a: int, b: int):
-        return lambda h: ((h % F.lit(TOKEN_SPACE)) * F.lit(a) + F.lit(b)) % F.lit(
-            MINHASH_PRIME
-        )
+    The verification sets are HASHED word sets (``hashed_word_set``):
+    the candidate join then shuffles arrays of 8-byte ints instead of
+    full word strings — for ~10³-distinct-word documents that is the
+    difference between a payload-scale shuffle and a hash-scale one at
+    100 TB.  Jaccard over hashed sets equals word Jaccard modulo md5
+    60-bit collisions, and the DuckDB oracle replays the same hashing
+    (same move boilerplate_ngrams documents and contamination makes).
 
-    # rlike guard == size(hashed_word_set)>0 (a token exists iff a
-    # non-ws char exists) without re-running the tokenize in the
-    # pushed-down filter — see minhash_lsh_pairs
-    base = df.filter(F.col(text_col).rlike(r"\S")).select(
-        F.col(id_col).alias("_id"),
-        hashed_word_set(F.col(text_col)).alias("_ws"),
-    )
-    return base.select(
-        F.col("_id").alias(id_col),
-        F.col("_ws").alias("ws_hashes"),
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("_ws"), perm(a, b)))
-                for a, b in _perm_params(num_hashes)
-            ]
-        ).alias("minhash"),
-    )
+    ZERO-TOKEN documents (empty or NULL text) are excluded before
+    banding: their minhash is undefined (array_min of an empty array),
+    their pairwise Jaccard is 0/0 — two colliding empties crashed the
+    whole job under ANSI division (r4 random-corpus soak finding) —
+    and at corpus scale they all share one degenerate bucket (a
+    quadratic skew bomb).  Empty-vs-empty duplication is exact
+    duplication; ``exact_duplicates`` owns it.  Caveat (ADVICE r04):
+    whitespace-only docs with DIFFERING bytes (``' '`` vs ``'  '``)
+    are zero-token here but distinct under byte-exact md5 — run
+    ``exact_duplicates(..., normalize_ws=True)`` when degenerate docs
+    need a dedup owner.
+
+    Plan shape (optimization r6, guide §2.3/§2.4 — output unchanged,
+    oracle-verified):
+    - the zero-token guard is the rlike scan filter of
+      :func:`minhash_signatures` (the old size() guard doubled the
+      tokenize);
+    - candidate pairs are deduplicated by FIRST-COLLIDING-BAND
+      ownership (a pair is emitted only from the lowest band where the
+      buckets agree) instead of a post-join dropDuplicates — that
+      removes one Exchange + two SortAggregates carrying full hashed
+      word-set arrays from the plan;
+    - exact Jaccard uses |A∩B| and the precomputed set sizes
+      (|A∪B| = |A|+|B|-|A∩B| for distinct-element arrays) so the
+      verification never materializes the union array."""
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes)
+    return _lsh_pairs(sigs, id_col, num_hashes, bands, jaccard_threshold)
 
 
 def minhash_lsh_pairs_incremental(
@@ -334,61 +313,16 @@ def minhash_lsh_pairs_incremental(
     hash-width arrays, not text — the artifact's whole point — and
     the expensive exact-Jaccard verification runs only on pairs that
     survive the at-least-one-new predicate."""
-    rows_per_band = num_hashes // bands
     new_sigs = minhash_signatures(new_df, id_col, text_col, num_hashes).withColumn(
         "_new", F.lit(True)
     )
     prior = prior_signatures.select(
         F.col(id_col), "ws_hashes", "minhash"
     ).withColumn("_new", F.lit(False))
-    allsigs = new_sigs.unionByName(prior)
-    # same optimized shape as minhash_lsh_pairs: inline CreateArray
-    # generator (no inferred size() filter), first-colliding-band pair
-    # ownership instead of a dropDuplicates carrying word-set arrays,
-    # sizes-based Jaccard behind an explode barrier
-    bucket_strs = [
-        F.concat_ws(
-            "-",
-            *[
-                F.col("minhash").getItem(j).cast("string")
-                for j in range(b * rows_per_band, (b + 1) * rows_per_band)
-            ],
-        )
-        for b in range(bands)
-    ]
-    banded = allsigs.select(
-        F.col(id_col).alias("_id"),
-        F.col("ws_hashes").alias("_ws"),
-        F.size("ws_hashes").alias("_sz"),
-        F.col("minhash").alias("_mh"),
-        "_new",
-        F.posexplode(F.array(*bucket_strs)).alias("band", "bucket"),
+    return _lsh_pairs(
+        new_sigs.unionByName(prior), id_col, num_hashes, bands, jaccard_threshold,
+        new_only=True,
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    earlier_match = F.lit(False)
-    for i in range(bands - 1):
-        band_eq = F.lit(True)
-        for j in range(i * rows_per_band, (i + 1) * rows_per_band):
-            band_eq = band_eq & (
-                F.col("l._mh").getItem(j) == F.col("r._mh").getItem(j)
-            )
-        earlier_match = earlier_match | ((F.col("l.band") > i) & band_eq)
-    joined = left.join(
-        right,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col("l._id") < F.col("r._id"))
-        & (F.col("l._new") | F.col("r._new"))
-        & ~earlier_match,
-    )
-    inter = F.size(F.array_intersect(F.col("l._ws"), F.col("r._ws")))
-    jac = F.round(inter / (F.col("l._sz") + F.col("r._sz") - inter), 6)
-    return joined.select(
-        F.col("l._id").alias("id_a"),
-        F.col("r._id").alias("id_b"),
-        F.explode(F.array(jac)).alias("jaccard"),
-    ).filter(F.col("jaccard") >= jaccard_threshold)
 
 
 def with_simhash(df: DataFrame, text_col: str, bits: int = 32) -> DataFrame:

@@ -98,10 +98,9 @@ def sessionize(
     Skew note (stated honestly): an order-sensitive per-key window
     cannot be salted — one task sorts the largest key's full history,
     so a single pathological key (one conversation with 10⁹ turns)
-    bounds the stage.  At that shape, range-partition the key's
-    timeline and stitch boundary sessions (the pack_sequences
-    offset move), or use the streaming twin whose state store holds
-    only open sessions.
+    bounds the stage.  At that shape use :func:`sessionize_bounded`,
+    which range-partitions the key's timeline and stitches boundary
+    sessions (the pack_sequences offset move).
     """
     if gap_seconds < 0:
         raise ValueError(f"gap_seconds must be >= 0, got {gap_seconds}")
@@ -165,9 +164,7 @@ def sessionize_bounded(
     when one key's history exceeds a single task's sort capacity
     (~10⁸+ rows — spill, then OOM), plain sessionize fails outright
     while this splits the key across `num_partitions` sorts.  Use
-    sessionize by default; switch when a key approaches task limits,
-    or use the streaming twin whose state store holds only open
-    sessions.
+    sessionize by default; switch when a key approaches task limits.
     """
     if gap_seconds < 0:
         raise ValueError(f"gap_seconds must be >= 0, got {gap_seconds}")
