@@ -658,8 +658,9 @@ def _q_dedup_boilerplate_apply(spark, sf_dir):
     """Apply-side boilerplate removal with a PRECOMPUTED gram table —
     the per-snapshot-artifact path (learn once, persist, reuse, like
     the rule table): 3-grams in >= 3 of docs < 200 are learned from
-    that slice, then stripped from docs 200-299 in ONE text scan with
-    zero shuffle (driver InSet, see dedup.remove_boilerplate)."""
+    that slice, then stripped from docs 200-299; the gram table joins
+    as a broadcast and the text never shuffles (see
+    dedup.remove_boilerplate)."""
     docs = _load(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") < 200)
     target = docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 300))
@@ -687,11 +688,9 @@ def _q_dedup_remove_duplicate_spans(spark, sf_dir):
     corpus slice and parameters): of every duplicated 4-gram window in
     docs < 300, the globally-first (doc_id, position) occurrence
     survives and all others strip; survivors re-join with single
-    spaces.  method='auto' dispatches to the one-scan set apply here
-    (547 elected grams at sf0.01 ≤ the 1000-gram cap: the gh→keeper
-    table rides the driver, apply is ONE projection with zero
-    shuffle behind Generate barriers) and to the lazy join path on
-    corpora whose elected set outgrows the cap."""
+    spaces.  The non-keeper occurrences join back on the gram hash,
+    so payloads never shuffle, and building the plan runs no Spark
+    job."""
     docs = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return dedup.remove_duplicate_spans(
         docs, "doc_id", "text", n=4, min_occurrences=2

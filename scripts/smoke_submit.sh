@@ -5,6 +5,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 workdir=$(mktemp -d)
+# one task slot per CPU this process may run on, as get_spark and
+# bench.py size their sessions
+master="local[$(nproc)]"
 python - <<EOF
 import shutil
 shutil.make_archive("$workdir/engine", "zip", root_dir=".", base_dir="webtext_extraction_spark")
@@ -13,7 +16,7 @@ EOF
 # built-in rule: it reaches the executors only through the broadcast
 echo '{"blog.example": ["main"]}' > "$workdir/rules.json"
 extract() {
-  spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
+  spark-submit --master "$master" --py-files "$workdir/engine.zip" \
     --conf spark.ui.enabled=false \
     jobs/run_extract.py --synth-convs 60 --output "$workdir/out" --num-buckets 8 \
     --rules "$workdir/rules.json"
@@ -51,7 +54,7 @@ reconcile
 echo "SMOKE OK: rerun committed nothing ($last)"
 # curation job over the driver-provided documents table (all gates on);
 # its last stdout line is the JSON summary
-curated=$(spark-submit --master "local[8]" --py-files "$workdir/engine.zip" \
+curated=$(spark-submit --master "$master" --py-files "$workdir/engine.zip" \
   --conf spark.ui.enabled=false \
   jobs/run_curate.py --input /root/testdata/sf0.001/documents.parquet \
   --output "$workdir/curated" --lang en --min-quality 0.5 \

@@ -1044,11 +1044,11 @@ def test_remove_boilerplate_hand_computed(spark):
     assert rows[5]["n_removed_words"] == 0
 
 
-def test_remove_boilerplate_methods_and_supplied_grams_agree(spark):
-    """The driver-set apply path (default), the lazy join path, and a
-    supplied precomputed gram table must all produce identical rows —
-    including grams learned on a DIFFERENT corpus slice (the
-    per-snapshot-artifact reuse pattern)."""
+def test_remove_boilerplate_inline_and_supplied_grams_agree(spark):
+    """Inline detection and the same gram table supplied precomputed
+    produce identical rows; grams learned on a DIFFERENT corpus slice
+    (the per-snapshot-artifact reuse pattern) strip the target, and an
+    empty table strips nothing."""
     import random
 
     rnd = random.Random(11)
@@ -1065,30 +1065,19 @@ def test_remove_boilerplate_methods_and_supplied_grams_agree(spark):
     def rows(out):
         return sorted(tuple(r) for r in out.collect())
 
-    inline_set = rows(dedup.remove_boilerplate(df, "doc_id", "text", n=3, min_docs=5))
-    inline_join = rows(
-        dedup.remove_boilerplate(df, "doc_id", "text", n=3, min_docs=5, method="join")
-    )
-    assert inline_set == inline_join
+    inline = rows(dedup.remove_boilerplate(df, "doc_id", "text", n=3, min_docs=5))
+    learned = dedup.boilerplate_ngrams(df, "doc_id", "text", n=3, min_docs=5)
+    assert inline == rows(dedup.remove_boilerplate(df, "doc_id", "text", n=3, grams=learned))
+    assert any(r[3] > 0 for r in inline)
 
     grams = dedup.boilerplate_ngrams(train, "doc_id", "text", n=3, min_docs=5)
-    sup_set = rows(
-        dedup.remove_boilerplate(target, "doc_id", "text", n=3, grams=grams)
-    )
-    sup_join = rows(
-        dedup.remove_boilerplate(
-            target, "doc_id", "text", n=3, grams=grams, method="join"
-        )
-    )
-    assert sup_set == sup_join
+    supplied = rows(dedup.remove_boilerplate(target, "doc_id", "text", n=3, grams=grams))
     # the transferred grams actually strip something on the target side
-    assert any(r[3] > 0 for r in sup_set)
+    assert any(r[3] > 0 for r in supplied)
     # empty gram table: everything survives untouched
     empty = grams.filter(F.lit(False))
     untouched = rows(dedup.remove_boilerplate(target, "doc_id", "text", n=3, grams=empty))
     assert all(r[3] == 0 for r in untouched)
-    with pytest.raises(ValueError):
-        dedup.remove_boilerplate(df, "doc_id", "text", method="nope")
 
 
 def test_new_ops_null_text_behavior(spark):
@@ -1239,22 +1228,8 @@ def test_sample_stratified_python_replay_and_contract(spark):
              textstats.sample_stratified(df, "g", "doc_id", k=4,
                                          salt="strat-v2").collect()]
     assert set(other) != {(g, i) for g, i, _ in got}
-
-
-def test_sample_stratified_sharded_equals_plain(spark):
-    """Two-stage (hot-group-safe) formulation returns the IDENTICAL
-    row set: top-k of per-shard top-k's is the global top-k."""
-    rows = [(i, "g%d" % (i % 2)) for i in range(500)]
-    df = spark.createDataFrame(rows, "doc_id long, g string")
-    plain = set(map(tuple, textstats.sample_stratified(
-        df, "g", "doc_id", k=7).collect()))
-    sharded = set(map(tuple, textstats.sample_stratified(
-        df, "g", "doc_id", k=7, salt_partitions=8).collect()))
-    assert plain == sharded
     with pytest.raises(ValueError):
         textstats.sample_stratified(df, "g", "doc_id", k=0)
-    with pytest.raises(ValueError):
-        textstats.sample_stratified(df, "g", "doc_id", k=2, salt_partitions=0)
 
 
 def test_sample_mix_threshold_rounds_and_drops_null_ids(spark):
@@ -2071,14 +2046,11 @@ def test_remove_duplicate_spans_hand_and_python_oracle(spark):
     ]
     expect = py_remove(docs, 4, 2)
     sdf = spark.createDataFrame(docs, ["doc_id", "text"])
-    for method in ("set", "join"):
-        got = {
-            r["doc_id"]: (r["cleaned_text"], r["n_words"], r["n_removed_words"])
-            for r in dedup.remove_duplicate_spans(
-                sdf, "doc_id", "text", n=4, method=method
-            ).collect()
-        }
-        assert got == expect, method
+    got = {
+        r["doc_id"]: (r["cleaned_text"], r["n_words"], r["n_removed_words"])
+        for r in dedup.remove_duplicate_spans(sdf, "doc_id", "text", n=4).collect()
+    }
+    assert got == expect
 
 
 def test_hashed_bow_embedding_python_replay(spark):
@@ -2343,10 +2315,9 @@ def test_ngram_jaccard_bucketized_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_remove_duplicate_spans_set_join_parity_string_ids(spark):
-    """set ≡ join on STRING ids (the packed gh:p:id occurrence key's
-    unambiguous-tail property — ids containing ':' must not confuse
-    keeper election), including NULL text and a doc shorter than n."""
+def test_remove_duplicate_spans_string_ids(spark):
+    """Keeper election on STRING ids, ids containing ':' among them,
+    including NULL text and a doc shorter than n."""
     df = spark.createDataFrame(
         [
             ("u:1", "one two three four five tail0"),
@@ -2357,42 +2328,19 @@ def test_remove_duplicate_spans_set_join_parity_string_ids(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {}
-    for method in ("set", "join"):
-        out[method] = sorted(
-            dedup.remove_duplicate_spans(
-                df, "doc_id", "text", n=5, method=method
-            ).collect()
-        )
-    assert out["set"] == out["join"]
     # "a" < "u:1" lexicographically, so the keeper of the shared run
     # lives in doc "a" and both u-docs lose it
-    rows = {r["doc_id"]: r["cleaned_text"] for r in out["set"]}
-    assert rows["a"] == "one two three four five again here"
-    assert rows["u:1"] == "tail0"
-    assert rows["u:2"] == "head1"
-    assert rows["u:3"] == ""
-    assert rows["u:4"] == "short text"
-
-
-def test_remove_duplicate_spans_set_path_plan(spark):
-    """The set apply path is ONE text scan / ZERO Exchange: after the
-    eager keeper election, the returned plan is a pure projection —
-    no Exchange, no Join, no generate/aggregate nodes."""
-    df = spark.range(6).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("alpha beta gamma delta epsilon zeta doc"), F.col("id") % 2).alias(
-            "text"
-        ),
-    )
-    plan = (
-        dedup.remove_duplicate_spans(df, "doc_id", "text", n=3, method="set")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    assert "Join" not in plan
+    rows = {
+        r["doc_id"]: r["cleaned_text"]
+        for r in dedup.remove_duplicate_spans(df, "doc_id", "text", n=5).collect()
+    }
+    assert rows == {
+        "a": "one two three four five again here",
+        "u:1": "tail0",
+        "u:2": "head1",
+        "u:3": "",
+        "u:4": "short text",
+    }
 
 
 def test_token_entropy_hand_computed(spark):

@@ -90,8 +90,6 @@ def test_source_splits_reads_footers_only_until_the_target(spark, tmp_path, monk
 def test_source_splits_passes_inputs_without_files(spark):
     df = spark.createDataFrame([(i,) for i in range(3)], ["x"])
     assert source_splits(df) is df
-    stream = spark.readStream.format("rate").load()
-    assert source_splits(stream) is stream
 
 
 def _engine_lines_matching(pattern: str) -> list[str]:

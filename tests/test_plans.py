@@ -415,25 +415,63 @@ def test_pack_sequences_has_no_single_partition_exchange(spark):
     assert _node_ids(plan, "Window") >= 1  # the per-partition running sum is real
 
 
-def test_remove_boilerplate_apply_is_one_scan_no_shuffle(spark, tmp_path):
-    """The default (driver-set) apply path with a supplied gram table
-    must be ONE projection: a single parquet scan of the document
-    table, no Exchange, no join — the gram membership test is an
-    embedded InSet, not a join."""
-    from webtext_extraction_spark.operators.dedup import remove_boilerplate
-
-    p = str(tmp_path / "docs_rb")
+def _span_removal_docs(spark, tmp_path):
+    p = str(tmp_path / "docs_span_removal")
     spark.createDataFrame(
-        [(i, "follow us on line %d" % i) for i in range(12)], ["doc_id", "text"]
+        [(i, "follow us on line %d of %d" % (i, i % 3)) for i in range(12)],
+        ["doc_id", "text"],
     ).write.parquet(p)
-    docs = spark.read.parquet(p)
-    grams = spark.createDataFrame(
-        [("follow us on",), ("us on line",)], ["ngram"]
+    grams = spark.createDataFrame([("follow us on",), ("us on line",)], ["ngram"])
+    return spark.read.parquet(p), grams
+
+
+def test_span_removal_keeps_text_out_of_exchanges(spark, tmp_path):
+    """remove_boilerplate and remove_duplicate_spans shuffle ids,
+    positions and gram hashes: the text column never enters an
+    Exchange, and a supplied gram table joins as a broadcast."""
+    docs, grams = _span_removal_docs(spark, tmp_path)
+    supplied = _plan(dedup.remove_boilerplate(docs, "doc_id", "text", n=3, grams=grams))
+    plans = [
+        supplied,
+        _plan(dedup.remove_boilerplate(docs, "doc_id", "text", n=3, min_docs=2)),
+        _plan(dedup.remove_duplicate_spans(docs, "doc_id", "text", n=3)),
+    ]
+    for plan in plans:
+        assert _node_ids(plan, "Exchange") >= 1
+        for m in re.finditer(r"\(\d+\) Exchange\b.*?(?=\n\(\d+\)|\Z)", plan, re.S):
+            assert "text#" not in m.group(0)
+    gram_joins = [
+        m.group(0)
+        for m in re.finditer(r"\(\d+\) \w*Join\b.*?(?=\n\(\d+\)|\Z)", supplied, re.S)
+        if "ngram#" in m.group(0)
+    ]
+    assert gram_joins and all(j.split()[1] == "BroadcastHashJoin" for j in gram_joins)
+
+
+def test_span_removal_builds_without_running_a_job(spark, tmp_path):
+    """Building the span-removal plans, and run_curate's plan under
+    --dedup substring, launches no Spark job: every step is lazy."""
+    from jobs import run_curate
+
+    docs, grams = _span_removal_docs(spark, tmp_path)
+    args = run_curate.parse_args(
+        ["--input", "unused", "--output", "unused", "--dedup", "substring"]
     )
-    plan = _plan(remove_boilerplate(docs, "doc_id", "text", n=3, grams=grams))
-    assert _node_ids(plan, "Exchange") == 0
-    assert _node_ids(plan, "Join") == 0 and "Join" not in plan
-    assert _node_ids(plan, "Scan parquet") == 1
+    builds = {
+        "inline": lambda: dedup.remove_boilerplate(docs, "doc_id", "text", n=3, min_docs=2),
+        "supplied": lambda: dedup.remove_boilerplate(docs, "doc_id", "text", n=3, grams=grams),
+        "spans": lambda: dedup.remove_duplicate_spans(docs, "doc_id", "text", n=3),
+        "curate": lambda: run_curate.curate(docs, args),
+    }
+    sc = spark.sparkContext
+    for name, build in builds.items():
+        sc.setJobGroup(f"build:{name}", "plan build")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"build:{name}") == [], name
 
 
 def test_scrub_pii_is_shuffle_free_pure_expressions(spark, tmp_path):

@@ -624,50 +624,32 @@ def boilerplate_ngrams(
     )
 
 
-def _materialize(df: DataFrame, cols: dict) -> DataFrame:
-    """Materialize computed columns behind a Generate barrier (explode
-    of a single-element struct array).  Catalyst's CollapseProject
-    inlines plain projection aliases into downstream
-    higher-order-function lambda bodies, and HOFs are CodegenFallback
-    with no common-subexpression elimination — an inlined column
-    re-evaluates PER ARRAY ELEMENT there (measured: the duplicate-span
-    set apply's per-element re-eval of two array_intersects against
-    15k-entry literals cost 124 s on a 3000-doc slice; behind the
-    barrier the same job is sub-second).  A Generate node is not
-    collapsible, so everything upstream evaluates exactly once per
-    row; the one-element explode itself is noise."""
-    gen = F.explode(F.array(F.struct(*[c.alias(nm) for nm, c in cols.items()])))
-    out = df.withColumn("_m", gen)
-    for nm in cols:
-        out = out.withColumn(nm, F.col("_m")[nm])
-    return out.drop("_m")
-
-
-def _kept_from_flags(n: int):
-    """Shared rebuild tail of the one-scan "set" apply paths
-    (remove_boilerplate / remove_duplicate_spans): given a boolean
-    ``_flags`` array (flag per n-gram start position: strip this
-    window), keep the words of ``_ws`` no flagged window covers.
-    Pure higher-order expressions — no shuffle, no join."""
-    nflags = F.size("_flags")
-
-    def uncovered(w, i):
-        # word i is covered iff any flagged gram starts in
-        # [i-n+1, i] ∩ [0, n_grams-1]; that window is non-empty
-        # whenever n_grams >= 1 (lo <= n_grams-1 because
-        # i <= len(ws)-1 = n_grams+n-2)
-        lo = F.greatest(i - F.lit(n - 1), F.lit(0))
-        length = F.least(i, nflags - 1) - lo + 1
-        return ~F.exists(F.slice(F.col("_flags"), lo + 1, length), lambda f: f)
-
-    return F.when(nflags == 0, F.col("_ws")).otherwise(
-        F.filter(F.col("_ws"), uncovered)
+def _strip_covered(
+    base: DataFrame, starts: DataFrame, id_col: str, n: int
+) -> DataFrame:
+    """Shared apply of remove_boilerplate and remove_duplicate_spans:
+    ``starts`` holds the (_id, p) starts of the gram windows to strip
+    from ``base``'s word arrays (_id, _ws).  The covered positions fan
+    out and collect per doc (one groupBy on the doc key), join back to
+    ``base`` and filter its words; a doc with no window keeps them all.
+    The text never enters a shuffle, only ids and positions do."""
+    covered = (
+        starts.select("_id", F.explode(F.sequence(F.col("p"), F.col("p") + n - 1)).alias("ci"))
+        .groupBy("_id")
+        .agg(F.collect_set("ci").alias("_covered"))
     )
+    joined = base.join(covered, "_id", "left").withColumn(
+        "_covered", F.coalesce("_covered", F.array().cast("array<int>"))
+    )
+    kept = F.filter(
+        F.col("_ws"), lambda w, i: ~F.array_contains(F.col("_covered"), i.cast("int"))
+    )
+    return _cleaned_select(joined, id_col, kept)
 
 
-def _cleaned_select(marked: DataFrame, id_col: str, kept) -> DataFrame:
-    """Shared output projection of remove_boilerplate's two methods."""
-    return marked.select(
+def _cleaned_select(joined: DataFrame, id_col: str, kept) -> DataFrame:
+    """Output projection of :func:`_strip_covered`."""
+    return joined.select(
         F.col("_id").alias(id_col),
         F.concat_ws(" ", kept).alias("cleaned_text"),
         F.size("_ws").alias("n_words"),
@@ -689,7 +671,6 @@ def remove_boilerplate(
     n: int = 5,
     min_docs: int = 3,
     grams: DataFrame | None = None,
-    method: str = "set",
 ) -> DataFrame:
     """Strip cross-document boilerplate spans from each document — the
     removal action over :func:`boilerplate_ngrams`' detection: every
@@ -703,71 +684,28 @@ def remove_boilerplate(
     table; ``None`` learns it inline from ``df`` with
     :func:`boilerplate_ngrams`.
 
-    Two apply methods; both produce identical output:
-
-    - ``"set"`` (default): collect the gram set to the driver (eager —
-      one small job at call time; the set is small by construction,
-      the same class of driver scalar as hot-key lists and k-means
-      centroids) and apply in ONE projection: per doc, mark each gram
-      against the set (Catalyst folds the literal IN-list to an InSet
-      hash lookup), then keep the words no covering gram marks via a
-      windowed ``exists`` over the flag array.  ONE text scan on the
-      apply side, ZERO shuffles/joins.
-    - ``"join"``: the lazy formulation for gram tables too large to
-      embed in a task binary (≈ >10⁶ grams): posexplode -> broadcast
-      semi-join -> covered-position fan-out -> groupBy(doc)
-      collect_set -> join back.  Text is scanned once per consumer of
-      the tokenized base (twice; three times with inline detection) —
-      the price of staying fully lazy.
+    Apply: posexplode each doc's grams (the emitted position IS the
+    gram's word offset), broadcast semi-join them against the gram
+    table, then :func:`_strip_covered`.  Fully lazy — building the
+    plan runs no Spark job.  Text is scanned once per consumer of the
+    tokenized base (twice; three times with inline detection).
 
     NULL text is treated as the empty document.
 
     Output: one row per input doc — (id, cleaned_text, n_words,
     n_removed_words, removed_frac).
     """
-    if method not in ("set", "join"):
-        raise ValueError(f"method must be 'set' or 'join', got {method!r}")
     if grams is None:
         grams = boilerplate_ngrams(df, id_col, text_col, n=n, min_docs=min_docs)
-    boiler = grams.select("ngram")
     base = df.select(
         F.col(id_col).alias("_id"),
         words(F.coalesce(F.col(text_col), F.lit(""))).alias("_ws"),
     )
-
-    if method == "set":
-        gram_list = [r[0] for r in boiler.collect()]
-        mark = (
-            (lambda g: g.isin(gram_list)) if gram_list else (lambda g: F.lit(False))
-        )
-        # Generate barrier: _flags must be a materialized attribute, not
-        # an inlined alias, or the rebuild lambda re-marks every gram
-        # per word element (see _materialize)
-        marked = _materialize(
-            base, {"_flags": F.transform(ngrams_of_words(F.col("_ws"), n), mark)}
-        )
-        return _cleaned_select(marked, id_col, _kept_from_flags(n))
-
-    # method == "join"
-    # posexplode of the gram array: the emitted position IS the gram's
-    # word offset, and the word array itself is not replicated per row
-    pos = base.select(
+    starts = base.select(
         "_id",
         F.posexplode(ngrams_of_words(F.col("_ws"), n)).alias("p", "ngram"),
-    )
-    covered = (
-        pos.join(F.broadcast(boiler), "ngram", "left_semi")
-        .select("_id", F.explode(F.sequence(F.col("p"), F.col("p") + n - 1)).alias("ci"))
-        .groupBy("_id")
-        .agg(F.collect_set("ci").alias("_covered"))
-    )
-    joined = base.join(covered, "_id", "left").withColumn(
-        "_covered", F.coalesce("_covered", F.array().cast("array<int>"))
-    )
-    kept = F.filter(
-        F.col("_ws"), lambda w, i: ~F.array_contains(F.col("_covered"), i.cast("int"))
-    )
-    return _cleaned_select(joined, id_col, kept)
+    ).join(F.broadcast(grams.select("ngram")), "ngram", "left_semi")
+    return _strip_covered(base, starts, id_col, n)
 
 
 def duplicate_spans(
@@ -849,8 +787,6 @@ def remove_duplicate_spans(
     text_col: str,
     n: int = 20,
     min_occurrences: int = 2,
-    method: str = "auto",
-    max_set_size: int = 1000,
 ) -> DataFrame:
     """The REMOVAL action over :func:`duplicate_spans` — Lee et al.
     2022's dedup proper: of every duplicated n-gram window, ONE
@@ -865,39 +801,13 @@ def remove_duplicate_spans(
     first-occurrence-span preservation needs global interval
     resolution, which serializes).
 
-    Keeper election is the same either way: ONE skew-safe aggregation
+    Keeper election is ONE skew-safe aggregation
     (``groupBy(gh).agg(count, min(struct(id, p)))`` — map-side combine
-    collapses hot grams before the shuffle, no per-gram window).  Two
-    apply methods, identical output (remove_boilerplate's split):
-
-    - ``"set"``: collect the elected (gh → keeper) table to the driver
-      (eager — one small job at call time) and apply in ONE
-      projection: per doc, ``array_intersect`` against the literal
-      elected-gram array yields the doc's own dup grams and (via
-      packed ``gh:p:id`` occurrence keys — collision-free: gh and p
-      are colon-free numerics, id is the unambiguous tail) its own
-      keeper occurrences; the per-window flag then probes those two
-      SMALL per-doc arrays.  The big set is hashed once per row by
-      array_intersect, never linearly scanned per gram — plain
-      ``isin`` inside a higher-order-function lambda stays a linear
-      ``In`` (OptimizeIn does not rewrite under lambdas; measured 20×
-      slower at a 15k-gram set).  ONE text scan / ZERO shuffle on the
-      apply side; total = 2 text scans + 1 shuffle incl. election.
-    - ``"join"``: fully lazy for gram tables too large to embed in a
-      task binary: join occurrences back on the 8-byte gram hash,
-      covered-position fan-out, groupBy(doc), join to the tokenized
-      base.  Three text scans; payloads still never shuffle.
-    - ``"auto"`` (default): collect at most ``max_set_size + 1``
-      elected rows; at or under the cap → ``"set"``, over → ``"join"``.
-      Unlike boilerplate doc-frequency grams, corpus-wide
-      occurrence-count grams grow LINEARLY with corpus size, so the
-      set regime genuinely runs out — the probe costs one
-      limit-bounded collect.  The cap default comes from measurement,
-      not hope: the set apply rebuilds the literal-array hash per ROW
-      (array_intersect has no cross-row cache), so its cost is
-      O(rows × set) — at a 15,485-gram set over 3,000 sf0.1 docs it
-      measured ~30 s vs ~2 s for join; at ≲1k grams the per-row
-      rebuild is noise and the zero-shuffle shape wins.
+    collapses hot grams before the shuffle, no per-gram window).  The
+    non-keeper occurrences join back on the 8-byte gram hash and
+    :func:`_strip_covered` applies them.  Fully lazy — building the
+    plan runs no Spark job; three text scans, and payloads never
+    shuffle.
 
     Output: (id, cleaned_text, n_words, n_removed_words,
     removed_frac) — one row per input doc, remove_boilerplate's shape.
@@ -906,8 +816,6 @@ def remove_duplicate_spans(
         raise ValueError(f"n must be >= 1, got {n}")
     if min_occurrences < 2:
         raise ValueError(f"min_occurrences must be >= 2, got {min_occurrences}")
-    if method not in ("auto", "set", "join"):
-        raise ValueError(f"method must be 'auto', 'set' or 'join', got {method!r}")
     base = df.select(
         F.col(id_col).alias("_id"),
         words(F.coalesce(F.col(text_col), F.lit(""))).alias("_ws"),
@@ -929,78 +837,10 @@ def remove_duplicate_spans(
         .filter(F.col("_occ") >= min_occurrences)
         .select("gh", "_keep")
     )
-
-    if method == "auto":
-        elected = dup.limit(max_set_size + 1).collect()
-        method = "join" if len(elected) > max_set_size else "set"
-    elif method == "set":
-        elected = dup.collect()
-
-    if method == "set":
-        dup_list = [r["gh"] for r in elected]
-        # packed occurrence key must stringify exactly like the Spark
-        # side: BIGINT/INT → string casts have no decimal point, so
-        # str(python int) matches
-        keeper_list = [
-            f"{r['gh']}:{r['_keep']['q']}:{r['_keep']['i']}" for r in elected
-        ]
-        # barrier 1: tokenize + hash once per row
-        marked = _materialize(
-            base,
-            {"_ghs": F.transform(ngrams_of_words(F.col("_ws"), n), portable_hash64)},
-        )
-        if dup_list:
-            packed = F.transform(
-                "_ghs", lambda g, p: F.concat_ws(":", g, p, F.col("_id"))
-            )
-            # barrier 2: hash-probe the big literal arrays ONCE per
-            # row — the per-window flag probes only the doc's own
-            # (small) hit arrays
-            marked = _materialize(
-                marked,
-                {
-                    "_packed": packed,
-                    "_dup_hits": F.array_intersect("_ghs", F.lit(dup_list)),
-                    "_keep_hits": F.array_intersect(packed, F.lit(keeper_list)),
-                },
-            )
-            # barrier 3: the rebuild lambda must see _flags as an
-            # attribute, not re-derive it per word element
-            marked = _materialize(
-                marked,
-                {
-                    "_flags": F.transform(
-                        "_ghs",
-                        lambda g, p: F.array_contains("_dup_hits", g)
-                        & ~F.array_contains(
-                            "_keep_hits", F.element_at("_packed", p + 1)
-                        ),
-                    )
-                },
-            )
-        else:
-            marked = _materialize(
-                marked, {"_flags": F.transform("_ghs", lambda g: F.lit(False))}
-            )
-        return _cleaned_select(marked, id_col, _kept_from_flags(n))
-
-    # method == "join"
-    covered = (
-        grams.join(dup, "gh")
-        .filter(
-            ~((F.col("_id") == F.col("_keep.i")) & (F.col("p") == F.col("_keep.q")))
-        )
-        .select("_id", F.explode(F.sequence(F.col("p"), F.col("p") + n - 1)).alias("ci"))
-        .groupBy("_id")
-        .agg(F.collect_set("ci").alias("_covered"))
+    starts = grams.join(dup, "gh").filter(
+        ~((F.col("_id") == F.col("_keep.i")) & (F.col("p") == F.col("_keep.q")))
     )
-    joined = base.join(covered, "_id", "left").withColumn(
-        "_covered", F.coalesce("_covered", F.array().cast("array<int>"))
-    )
-    kept = F.filter(
-        F.col("_ws"), lambda w, i: ~F.array_contains(F.col("_covered"), i.cast("int"))
-    )
-    return _cleaned_select(joined, id_col, kept)
+    return _strip_covered(base, starts, id_col, n)
 
 
 def connected_components(

@@ -18,8 +18,8 @@ handful); a file without a readable footer (WET text or gz, a scheme
 pyarrow does not know) counts as one.  The scan's planned split count
 over-counts: Spark splits a file by bytes, but only the split holding
 a row group's midpoint reads it, so a 105 MB one-row-group file
-planned 4 splits at local[4] and ran on one task.  In-memory and
-streaming inputs pass unchanged.
+planned 4 splits at local[4] and ran on one task.  In-memory inputs
+pass unchanged.
 
 ``bucket_id`` is the partition-count-independent key the resumable
 extraction commits by (plans/lineage.py).
@@ -37,8 +37,6 @@ def source_splits(df: DataFrame) -> DataFrame:
     """``df`` repartitioned to ``defaultParallelism`` when its source
     files hold fewer split units than that, else ``df`` itself (module
     docstring)."""
-    if df.isStreaming:
-        return df
     files = df.inputFiles()
     target = df.sparkSession.sparkContext.defaultParallelism
     units = 0

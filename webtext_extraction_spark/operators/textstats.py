@@ -416,7 +416,6 @@ def sample_stratified(
     id_col: str,
     k: int,
     salt: str = "strat-v1",
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """Exactly min(k, |group|) rows per group — the fixed-size-per-
     stratum companion to :func:`sample_mix` (rate-based): eval-set
@@ -431,33 +430,16 @@ def sample_stratified(
 
     Output: (group_col, id_col, rk int), rk = 1..k in ticket order.
 
-    Scale shape: the default is one row_number window (one Exchange +
-    one Sort on group).  A single 100 TB-scale hot group funnels its
-    whole sort through one task — for that regime pass
-    ``salt_partitions=S``: stage 1 takes the per-(group, shard) top-k
-    inside S hash shards of each group (bounded sort tasks), stage 2
-    re-ranks the ≤ k·S survivors per group — top-k of shard top-k's
-    is exactly the global top-k, so the result is IDENTICAL (unit
-    test pins the equivalence); only the work shape changes."""
+    Scale shape: one row_number window (one Exchange + one Sort on
+    group)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if salt_partitions is not None and salt_partitions < 1:
-        raise ValueError(f"salt_partitions must be >= 1, got {salt_partitions}")
     ticket = portable_hash64(
         F.concat(F.lit(salt + "|"), F.col(id_col).cast("string"))
     )
     base = df.select(
         F.col(group_col), F.col(id_col), ticket.alias("_ticket")
     )
-    if salt_partitions is not None and salt_partitions > 1:
-        shard = F.xxhash64(F.col(id_col).cast("string")) % salt_partitions
-        w1 = Window.partitionBy(group_col, "_shard").orderBy("_ticket", id_col)
-        base = (
-            base.withColumn("_shard", shard)
-            .withColumn("_srk", F.row_number().over(w1))
-            .filter(F.col("_srk") <= k)
-            .drop("_shard", "_srk")
-        )
     w = Window.partitionBy(group_col).orderBy("_ticket", id_col)
     return (
         base.withColumn("rk", F.row_number().over(w))
@@ -490,10 +472,7 @@ def sample_quota(
     use case, so it broadcasts.
 
     Scale shape: one Exchange + one Sort (the per-group rank window) +
-    a broadcast quota join.  For a single 100 TB hot group, pre-thin
-    with :func:`sample_stratified`'s ``salt_partitions`` two-stage
-    shape at k = max quota, then apply quotas to the survivors — the
-    prefix property makes the composition exact.
+    a broadcast quota join.
 
     Output: (group_col, id_col, rk int), rk = 1..quota_g.
     """
