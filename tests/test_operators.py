@@ -2343,6 +2343,23 @@ def test_remove_duplicate_spans_string_ids(spark):
     }
 
 
+def test_remove_duplicate_spans_plan_keeps_text_out_of_exchanges(spark, tmp_path):
+    """remove_duplicate_spans shuffles ids, positions and gram hashes:
+    the text column never enters an Exchange."""
+    p = str(tmp_path / "docs_spans")
+    spark.createDataFrame(
+        [(i, "alpha beta gamma delta doc%d" % (i % 2)) for i in range(6)],
+        ["doc_id", "text"],
+    ).write.parquet(p)
+    df = dedup.remove_duplicate_spans(spark.read.parquet(p), "doc_id", "text", n=3)
+    plan = df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    exchanges = re.findall(r"\(\d+\) Exchange\b.*?(?=\n\(\d+\)|\Z)", plan, re.S)
+    assert exchanges
+    assert all("text#" not in e for e in exchanges)
+
+
 def test_token_entropy_hand_computed(spark):
     """H = log2(n) - (sum c*log2(c))/n against a pure-Python replay of
     the exact rounding rule; zero-token / NULL docs drop."""

@@ -425,18 +425,14 @@ def _span_removal_docs(spark, tmp_path):
     return spark.read.parquet(p), grams
 
 
-def test_span_removal_keeps_text_out_of_exchanges(spark, tmp_path):
-    """remove_boilerplate and remove_duplicate_spans shuffle ids,
-    positions and gram hashes: the text column never enters an
-    Exchange, and a supplied gram table joins as a broadcast."""
+def test_remove_boilerplate_keeps_text_out_of_exchanges(spark, tmp_path):
+    """remove_boilerplate shuffles ids, positions and gram hashes: the
+    text column never enters an Exchange, with the grams detected inline
+    or supplied, and a supplied gram table joins as a broadcast."""
     docs, grams = _span_removal_docs(spark, tmp_path)
     supplied = _plan(dedup.remove_boilerplate(docs, "doc_id", "text", n=3, grams=grams))
-    plans = [
-        supplied,
-        _plan(dedup.remove_boilerplate(docs, "doc_id", "text", n=3, min_docs=2)),
-        _plan(dedup.remove_duplicate_spans(docs, "doc_id", "text", n=3)),
-    ]
-    for plan in plans:
+    inline = _plan(dedup.remove_boilerplate(docs, "doc_id", "text", n=3, min_docs=2))
+    for plan in (supplied, inline):
         assert _node_ids(plan, "Exchange") >= 1
         for m in re.finditer(r"\(\d+\) Exchange\b.*?(?=\n\(\d+\)|\Z)", plan, re.S):
             assert "text#" not in m.group(0)
