@@ -334,35 +334,6 @@ def _q_j5_asof_join(spark, sf_dir):
     ).orderBy("event_id")
 
 
-def _q_j5_asof_join_bounded(spark, sf_dir):
-    """The hot-key-safe as-of formulation (range-partition + Spark-side
-    carry stitch, relational.asof_join_bounded) over the SAME corpus
-    and parameters as j5_asof_join — gated against the identical
-    DuckDB ASOF JOIN oracle, so the per-partition running-last +
-    boundary-carry arithmetic must reproduce the single-sort matches
-    bit-exactly."""
-    events = _load(spark, sf_dir, "events")
-    left = events.filter(F.col("event_type") != "error").select(
-        "event_id", "user_id", "ts"
-    )
-    right = (
-        events.filter(F.col("event_type") == "error")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("err_event_id"))
-    )
-    out = relational.asof_join_bounded(
-        left, right, "user_id", "ts", "ts", ["err_event_id"]
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "err_event_id",
-        (
-            F.unix_micros(F.col("ts").cast("timestamp")) - F.col("matched_ts_us")
-        ).alias("staleness_us"),
-    ).orderBy("event_id")
-
-
 def _q_o1_stable_topn(spark, sf_dir):
     """(l_orderkey, l_linenumber) repeats, so ties keep file order,
     whatever the partitioning."""
@@ -581,18 +552,6 @@ def _q_dedup_clusters(spark, sf_dir):
     )
     nodes = docs.select(F.col("doc_id").alias("node"))
     return dedup.connected_components(pairs, nodes).orderBy("node")
-
-
-def _q_dedup_clusters_star(spark, sf_dir):
-    """Same cluster resolution via the alternating large/small-star
-    algorithm (dedup.connected_components_star) — the adversarial-
-    high-diameter variant; must agree with the recursive-CTE truth."""
-    docs = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hashes=8, bands=4, jaccard_threshold=0.7
-    )
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    return dedup.connected_components_star(pairs, nodes).orderBy("node")
 
 
 def _q_dedup_ngram_jaccard(spark, sf_dir):
@@ -870,19 +829,6 @@ def _q_sessionize(spark, sf_dir):
     ).orderBy("user_id", "session_idx")
 
 
-def _q_sessionize_bounded(spark, sf_dir):
-    """The hot-key-safe sessionize formulation (range-partition +
-    driver stitch, relational.sessionize_bounded) over the SAME events
-    corpus and parameters as the `sessionize` gate query — gated
-    against the identical DuckDB oracle, so the stitch arithmetic
-    (carried offsets, boundary gap flags, tie handling) must reproduce
-    the single-sort session ids bit-exactly."""
-    events = _load(spark, sf_dir, "events")
-    return relational.session_rollup(
-        events, "user_id", "ts", 43200, "event_id", bounded=True
-    ).orderBy("user_id", "session_idx")
-
-
 def _q_scrub_pii(spark, sf_dir):
     """PII redaction over documents with deterministically PLANTED
     pii (the word-soup corpus carries none naturally — round-2
@@ -1032,11 +978,8 @@ def _q_curate_corpus(spark, sf_dir):
         docs, "doc_id", "text", num_hashes=8, bands=4, jaccard_threshold=0.7
     )
     nodes = docs.select(F.col("doc_id").alias("node"))
-    # check_every=2 halves the driver-side convergence-probe jobs,
-    # which dominate the composite's wall-clock at small sf (labels
-    # are identical; at most one surplus propagation round)
     keepers = dedup.component_keepers(
-        dedup.connected_components(pairs, nodes, check_every=2), "doc_id"
+        dedup.connected_components(pairs, nodes), "doc_id"
     )
     # the row-local gates filter the scan; only the cluster keepers join
     return (
@@ -1097,11 +1040,8 @@ def _q_curate_corpus_v2(spark, sf_dir):
         docs, "doc_id", "text", num_hashes=8, bands=4, jaccard_threshold=0.7
     )
     nodes = docs.select(F.col("doc_id").alias("node"))
-    # check_every=2 halves the driver-side convergence-probe jobs,
-    # which dominate the composite's wall-clock at small sf (labels
-    # are identical; at most one surplus propagation round)
     keepers = dedup.component_keepers(
-        dedup.connected_components(pairs, nodes, check_every=2), "doc_id"
+        dedup.connected_components(pairs, nodes), "doc_id"
     )
     # the row-local gates (lang, quality, repetition; a zero-word doc's
     # NULL dup_word_char_frac fails) filter the scan; only the
@@ -1936,7 +1876,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_winnow": _q_text_winnow,
         "text_winnow_pairs": _q_text_winnow_pairs,
         "s13_wet_roundtrip": _q_s13_wet_roundtrip,
-        "sessionize_bounded": _q_sessionize_bounded,
         "corpus_bloom": _q_corpus_bloom,
         "decontaminate_bloom": _q_decontaminate_bloom,
         "corpus_quantile_sketch": _q_corpus_quantile_sketch,
@@ -1944,7 +1883,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_token_entropy": _q_text_token_entropy,
         "lm_bigram_logprob": _q_lm_bigram_logprob,
         "corpus_shuffle": _q_corpus_shuffle,
-        "j5_asof_join_bounded": _q_j5_asof_join_bounded,
         "sim_hashed_bow": _q_sim_hashed_bow,
         "sim_text_neardup": _q_sim_text_neardup,
         "corpus_hll": _q_corpus_hll,
@@ -1992,7 +1930,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_unigram_logprob": _q_lm_unigram_logprob,
         "conv_dedup_digest": _q_conv_dedup_digest,
         # rotated past the window in r5 (driver rows green in r4):
-        "dedup_clusters_star": _q_dedup_clusters_star,
         "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
         "curate_corpus": _q_curate_corpus,
         "dedup_boilerplate": _q_dedup_boilerplate,
@@ -2548,7 +2485,7 @@ def oracle_sql() -> dict[str, str]:
             FROM g GROUP BY ngram HAVING count(*) >= 3 ORDER BY ngram
         """,
         # true connected components via recursive CTE — the oracle for
-        # the Spark min-label-propagation loop (dedup.connected_components)
+        # the Spark large/small-star loop (dedup.connected_components)
         "dedup_clusters": f"""
             WITH RECURSIVE base AS (
               SELECT doc_id AS _id, text AS _text, {hs_expr} AS hs
@@ -2574,38 +2511,6 @@ def oracle_sql() -> dict[str, str]:
                       UNION SELECT id_b, id_a FROM pairs),
             reach(node, label) AS (
               SELECT doc_id, doc_id FROM documents WHERE doc_id < 60
-              UNION
-              SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.node)
-            SELECT node::BIGINT AS node, min(label)::BIGINT AS component
-            FROM reach GROUP BY node ORDER BY node
-        """,
-        # same recursive-CTE truth, wider doc range — oracle for the
-        # alternating large/small-star variant (connected_components_star)
-        "dedup_clusters_star": f"""
-            WITH RECURSIVE base AS (
-              SELECT doc_id AS _id, text AS _text, {hs_expr} AS hs
-              FROM documents WHERE doc_id < 80),
-            sigs AS (SELECT _id, _text, {sig_expr} AS minhash FROM base
-                     WHERE len(hs) > 0),
-            banded AS (
-              SELECT _id, _text, band,
-                     array_to_string(minhash[band*2+1 : band*2+2], '-') AS bucket
-              FROM sigs, (SELECT unnest([0,1,2,3]) AS band)),
-            cand AS (
-              SELECT DISTINCT l._id AS id_a, r._id AS id_b,
-                              l._text AS text_a, r._text AS text_b
-              FROM banded l JOIN banded r
-                ON l.band = r.band AND l.bucket = r.bucket AND l._id < r._id),
-            pairs AS (
-              SELECT id_a, id_b FROM cand
-              WHERE round(len(list_intersect({_WSHASH.format(x='text_a')},
-                                             {_WSHASH.format(x='text_b')})) * 1.0 /
-                    len(list_distinct(list_concat({_WSHASH.format(x='text_a')},
-                                      {_WSHASH.format(x='text_b')}))), 6) >= 0.7),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                      UNION SELECT id_b, id_a FROM pairs),
-            reach(node, label) AS (
-              SELECT doc_id, doc_id FROM documents WHERE doc_id < 80
               UNION
               SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.node)
             SELECT node::BIGINT AS node, min(label)::BIGINT AS component
@@ -4514,11 +4419,4 @@ def oracle_sql() -> dict[str, str]:
             FROM fx ORDER BY media_id, frame_idx
         """,
     }
-    # The *_bounded formulations are SEMANTICS-IDENTICAL to their
-    # single-sort originals (only the plan differs: range-partition +
-    # stitch instead of one per-key sort task), so each is gated
-    # against the very same oracle over the same corpus — any stitch
-    # bug diverges from this SQL.
-    oracles["sessionize_bounded"] = oracles["sessionize"]
-    oracles["j5_asof_join_bounded"] = oracles["j5_asof_join"]
     return oracles

@@ -28,7 +28,11 @@ containment dedup, α-temperature mixing of the survivors
 step is the projection behind an operator the driver gate oracles.
 Every gate is optional — skip a flag and it never enters the plan.
 ``main`` splits the source once (partitioning.source_splits), and every
-gate reads that one ``docs``; ``curate`` only builds the plan.
+gate reads that one ``docs``.  ``curate`` builds the plan; two flags
+also run Spark jobs while it builds: ``--dedup neardup|semantic``
+(the connected-components rounds, each checkpointed and checked for
+convergence on the driver — 14 and 6 jobs on a 60-document table)
+and ``--min-logprob`` (the unigram model's corpus token total, 3 jobs).
 """
 
 from __future__ import annotations
@@ -206,7 +210,7 @@ def curate(docs, args: argparse.Namespace):
             )
             prior_nodes = prior_sigs.select(F.col(idc).alias("node"))
             nodes = docs.select(F.col(idc).alias("node")).unionByName(prior_nodes)
-            comps = dedup.connected_components(pairs, nodes, check_every=2)
+            comps = dedup.connected_components(pairs, nodes)
             # a keeper is its own component: dropping the tainted ids
             # drops the keeper of every cluster holding a prior node
             tainted = (
@@ -223,7 +227,7 @@ def curate(docs, args: argparse.Namespace):
             )
             nodes = docs.select(F.col(idc).alias("node"))
             keepers = dedup.component_keepers(
-                dedup.connected_components(pairs, nodes, check_every=2), idc
+                dedup.connected_components(pairs, nodes), idc
             )
         out = out.join(keepers, idc, "left_semi")
     elif args.dedup == "containment":
@@ -258,7 +262,7 @@ def curate(docs, args: argparse.Namespace):
         )
         nodes = docs.select(F.col(idc).alias("node"))
         keepers = dedup.component_keepers(
-            dedup.connected_components(pairs, nodes, check_every=2), idc
+            dedup.connected_components(pairs, nodes), idc
         )
         out = out.join(keepers, idc, "left_semi")
 

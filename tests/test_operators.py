@@ -183,52 +183,69 @@ def test_connected_components_warns_when_unconverged(spark):
         assert any("did not converge" in str(x.message) for x in w)
 
 
-def test_connected_components_check_every_still_converges(spark):
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"])
-    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11)], ["node"])
-    got = {
-        r["node"]: r["component"]
-        for r in dedup.connected_components(pairs, nodes, check_every=3).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_connected_components_star_long_path(spark):
-    """VERDICT r02 #4: a path graph LONGER than 2× the min-label default
-    round budget resolves correctly (and in O(log n) rounds) under the
-    large/small-star variant."""
-    n = 50  # diameter 50 > 2 × 20 default rounds of min-label
+def test_connected_components_long_path(spark):
+    """A 61-node path (diameter 60, three times the round budget of a
+    diameter-bound label propagation) resolves to one component within
+    the default round budget."""
+    n = 60
     chain = spark.createDataFrame([(i, i + 1) for i in range(n)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(i,) for i in range(n + 1)], ["node"])
     cc = {
         r["node"]: r["component"]
-        for r in dedup.connected_components_star(
-            chain, nodes, max_iterations=12
-        ).collect()
+        for r in dedup.connected_components(chain, nodes).collect()
     }
     assert len(cc) == n + 1
-    assert all(v == 0 for v in cc.values())
+    assert set(cc.values()) == {0}
 
 
-def test_connected_components_star_matches_min_label(spark):
-    """Star and min-label agree on a mixed graph (cliques + chain +
-    singletons), including node ids that never appear in pairs."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (7, 7)], ["id_a", "id_b"]
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 5, 7, 10, 11, 20, 21)], ["node"]
-    )
-    star = {
+def test_connected_components_matches_union_find(spark):
+    """Python union-find oracle over a seeded random graph: cliques, a
+    chain longer than 40, self-loops, duplicate and reversed pairs,
+    and nodes that never appear in the pairs."""
+    import random
+
+    rnd = random.Random(29)
+    ids = rnd.sample(range(10_000), 400)
+    pairs = []
+    pos = 0
+    for size in (rnd.randint(2, 6) for _ in range(25)):  # cliques
+        clique = ids[pos : pos + size]
+        pos += size
+        pairs += [(a, b) for a in clique for b in clique if a < b]
+    chain = ids[pos : pos + 45]  # a chain, in shuffled id order
+    pos += 45
+    pairs += list(zip(chain, chain[1:]))
+    for _ in range(60):  # sparse random edges over the next block
+        a, b = rnd.sample(ids[pos : pos + 150], 2)
+        pairs.append((a, b))
+    pos += 150
+    pairs += [(i, i) for i in ids[:5] + ids[pos : pos + 3]]  # self-loops
+    pairs += [(b, a) for a, b in pairs[:10]]  # reversed duplicates
+    rnd.shuffle(pairs)
+    node_ids = ids[: pos + 40]  # 40+ ids absent from every pair
+
+    parent = {i: i for i in node_ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expect = {i: min(j for j in node_ids if find(j) == find(i)) for i in node_ids}
+
+    got = {
         r["node"]: r["component"]
-        for r in dedup.connected_components_star(pairs, nodes).collect()
+        for r in dedup.connected_components(
+            spark.createDataFrame(pairs, "id_a long, id_b long").repartition(3),
+            spark.createDataFrame([(i,) for i in node_ids], "node long"),
+        ).collect()
     }
-    label = {
-        r["node"]: r["component"]
-        for r in dedup.connected_components(pairs, nodes).collect()
-    }
-    assert star == label
-    assert star[5] == 5 and star[7] == 7  # singleton + self-loop
+    assert got == expect
 
 
 def test_simhash_bits_forwarded(spark):
@@ -1435,6 +1452,13 @@ def test_sessionize_matches_python_reference_randomized(spark):
             rows.append((user, eid, t0 + datetime.timedelta(microseconds=t)))
             eid += 1
             t += rnd.randint(0, 3_000_000)  # gaps 0-3 s incl. exact 0
+    # NULL is a session key like any other: a long NULL-key history with
+    # periodic gap jumps and equal-timestamp runs
+    t = 0
+    for i in range(200):
+        t += 2_000_000 if i % 23 == 22 else rnd.choice([0, 0, 400_000])
+        rows.append((None, eid, t0 + datetime.timedelta(microseconds=t)))
+        eid += 1
     rnd.shuffle(rows)
     df = spark.createDataFrame(
         rows, "user_id long, event_id long, ts timestamp_ntz"
@@ -1443,7 +1467,8 @@ def test_sessionize_matches_python_reference_randomized(spark):
         (r["user_id"], r["event_id"]): r["session_idx"]
         for r in sessionize(df, "user_id", "ts", 1, "event_id").collect()
     }
-    # python reference: sort by (user, ts, id), split at gap > 1 s
+    # python reference: sort by (user, ts, id), split at gap > 1 s; the
+    # dict groups None as one key, as the window's partitionBy does
     expect = {}
     by_user = {}
     for u, e, ts in rows:
@@ -1573,6 +1598,32 @@ def test_asof_join_hand_computed_edges(spark):
         asof_join(left.withColumnRenamed("eid", "_k"), right, "k", "ts", "ts", ["rid"])
 
 
+def test_asof_join_null_key_matches_nothing(spark):
+    """A NULL key never equals a NULL key: a NULL-keyed left row stays
+    unmatched even when a NULL-keyed right row precedes it, as DuckDB's
+    ``ASOF LEFT JOIN ... ON l.k = r.k`` answers [(1, None), (2, 200)]."""
+    import datetime
+
+    from webtext_extraction_spark.operators.relational import asof_join
+
+    T = lambda s: datetime.datetime(2024, 1, 1, 0, 0, s)
+    left = spark.createDataFrame(
+        [(1, None, T(10)), (2, "a", T(10))], "eid int, k string, ts timestamp"
+    )
+    right = spark.createDataFrame(
+        [(100, None, T(5)), (200, "a", T(5))], "rid int, k string, ts timestamp"
+    )
+    for direction, lts in (("backward", T(10)), ("forward", T(0))):
+        got = sorted(
+            (r["eid"], r["rid"])
+            for r in asof_join(
+                left.withColumn("ts", F.lit(lts)), right, "k", "ts", "ts", ["rid"],
+                direction=direction,
+            ).collect()
+        )
+        assert got == [(1, None), (2, 200)], direction
+
+
 def test_asof_join_matches_python_reference_randomized(spark):
     import datetime
     import random
@@ -1582,17 +1633,29 @@ def test_asof_join_matches_python_reference_randomized(spark):
     rnd = random.Random(47)
     t0 = datetime.datetime(2024, 1, 1)
     lrows, rrows = [], []
+    # keys 0-5 plus NULL on both sides (NULL never matches), and a hot
+    # key 6 over a wider time range than the rest
+    keys = [0, 1, 2, 3, 4, 5, None]
     for i in range(250):
-        lrows.append((i, rnd.randrange(6), t0 + datetime.timedelta(seconds=rnd.randint(0, 50))))
+        lrows.append((i, rnd.choice(keys), t0 + datetime.timedelta(seconds=rnd.randint(0, 50))))
+    for i in range(250, 650):
+        lrows.append((i, 6, t0 + datetime.timedelta(seconds=rnd.randint(0, 3000))))
     for j in range(120):
         # coarse grid forces equal-(key, ts) right collisions
-        rrows.append((j, rnd.randrange(6), t0 + datetime.timedelta(seconds=rnd.randint(0, 50))))
+        rrows.append((j, rnd.choice(keys), t0 + datetime.timedelta(seconds=rnd.randint(0, 50))))
+    for j in range(120, 220):
+        rrows.append((j, 6, t0 + datetime.timedelta(seconds=rnd.randint(0, 3000))))
     rnd.shuffle(lrows)
     rnd.shuffle(rrows)
     left = spark.createDataFrame(lrows, "eid long, k long, ts timestamp_ntz").repartition(5)
     right = spark.createDataFrame(rrows, "rid long, k long, ts timestamp_ntz").repartition(4)
 
-    for direction, tol in [("backward", None), ("forward", None), ("backward", 7_000_000)]:
+    for direction, tol in [
+        ("backward", None),
+        ("forward", None),
+        ("backward", 7_000_000),
+        ("forward", 7_000_000),
+    ]:
         got = {
             r["eid"]: (r["rid"], r["matched_ts_us"])
             for r in asof_join(
@@ -1602,11 +1665,12 @@ def test_asof_join_matches_python_reference_randomized(spark):
         }
         expect = {}
         for eid, k, lts in lrows:
+            same = [(rid, rts) for rid, rk, rts in rrows if k is not None and rk == k]
             if direction == "backward":
-                cand = [(rts, rid) for rid, rk, rts in rrows if rk == k and rts <= lts]
+                cand = [(rts, rid) for rid, rts in same if rts <= lts]
                 best = max(cand) if cand else None  # latest ts, then max rid
             else:
-                cand = [(rts, -rid) for rid, rk, rts in rrows if rk == k and rts >= lts]
+                cand = [(rts, -rid) for rid, rts in same if rts >= lts]
                 best = min(cand) if cand else None  # earliest ts, then max rid
             if best is not None and tol is not None:
                 if abs((best[0] - lts).total_seconds()) * 1e6 > tol:
@@ -1622,63 +1686,6 @@ def test_asof_join_matches_python_reference_randomized(spark):
                 )
                 expect[eid] = (abs(rid), us)
         assert got == expect, direction
-
-
-def test_asof_join_bounded_parity(spark):
-    """asof_join_bounded ≡ asof_join on a randomized corpus with one
-    hot key spanning many range partitions, equal-(key, ts) right
-    collisions, left rows with no match, a NULL join key, tolerance,
-    and both directions — the Spark-side carry stitch must reproduce
-    the single-sort matches exactly."""
-    import datetime
-    import random
-
-    from webtext_extraction_spark.operators.relational import (
-        asof_join,
-        asof_join_bounded,
-    )
-
-    rnd = random.Random(31)
-    t0 = datetime.datetime(2024, 1, 1)
-    lrows, rrows = [], []
-    eid = 0
-    # hot key 0: 400 left events; cold keys 1-5: few each; key None: 6
-    for _ in range(400):
-        lrows.append((eid, 0, t0 + datetime.timedelta(seconds=rnd.randint(0, 3000))))
-        eid += 1
-    for _ in range(60):
-        lrows.append(
-            (eid, rnd.randrange(1, 6), t0 + datetime.timedelta(seconds=rnd.randint(0, 50)))
-        )
-        eid += 1
-    for _ in range(6):
-        lrows.append((eid, None, t0 + datetime.timedelta(seconds=rnd.randint(0, 50))))
-        eid += 1
-    for j in range(150):
-        k = 0 if j < 100 else rnd.choice([1, 2, 3, 4, 5, None])
-        secs = rnd.randint(0, 3000) if k == 0 else rnd.randint(0, 50)
-        rrows.append((j, k, t0 + datetime.timedelta(seconds=secs)))
-    left = spark.createDataFrame(lrows, "eid long, k long, ts timestamp_ntz").repartition(5)
-    right = spark.createDataFrame(rrows, "rid long, k long, ts timestamp_ntz").repartition(4)
-
-    for direction, tol in [("backward", None), ("forward", None), ("backward", 9_000_000)]:
-        want = {
-            r["eid"]: (r["rid"], r["matched_ts_us"])
-            for r in asof_join(
-                left, right, "k", "ts", "ts", ["rid"],
-                direction=direction, tolerance_us=tol, right_tiebreak="rid",
-            ).collect()
-        }
-        for nparts in (1, 7, 16):
-            got = {
-                r["eid"]: (r["rid"], r["matched_ts_us"])
-                for r in asof_join_bounded(
-                    left, right, "k", "ts", "ts", ["rid"],
-                    direction=direction, tolerance_us=tol, right_tiebreak="rid",
-                    num_partitions=nparts,
-                ).collect()
-            }
-            assert got == want, (direction, tol, nparts)
 
 
 def test_topk_recall_hand_computed_including_silent_miss(spark):
@@ -1880,69 +1887,6 @@ def test_exact_duplicates_normalize_ws(spark):
         ).collect()
     }
     assert got == {(2, 0), (2, 2)}
-
-
-def test_sessionize_bounded_parity_with_hot_key(spark):
-    """sessionize_bounded ≡ sessionize on a corpus with one hot key
-    spanning many range partitions, timestamp ties, and multi-key
-    partitions — the stitch (carried offsets + boundary gap flags)
-    must reproduce the single-sort session ids exactly."""
-    import datetime
-    import random
-
-    from webtext_extraction_spark.operators.relational import (
-        sessionize,
-        sessionize_bounded,
-    )
-
-    rnd = random.Random(42)
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    # hot key: 600 events, gaps of 10s usually, 2000s jump every ~37
-    ts = t0
-    for i in range(600):
-        ts += datetime.timedelta(seconds=2000 if i % 37 == 36 else 10)
-        rows.append(("hot", eid, ts))
-        eid += 1
-    # 30 cold keys with few events each, including exact-tie timestamps
-    for k in range(30):
-        ts = t0 + datetime.timedelta(seconds=rnd.randint(0, 5000))
-        for i in range(rnd.randint(1, 6)):
-            ts += datetime.timedelta(seconds=rnd.choice([0, 5, 700]))
-            rows.append((f"k{k:02d}", eid, ts))
-            eid += 1
-    df = spark.createDataFrame(rows, ["key", "event_id", "ts"])
-    want = {
-        (r["key"], r["event_id"]): r["session_idx"]
-        for r in sessionize(df, "key", "ts", 600, "event_id").collect()
-    }
-    for nparts in (1, 4, 16):
-        got = {
-            (r["key"], r["event_id"]): r["session_idx"]
-            for r in sessionize_bounded(
-                df, "key", "ts", 600, "event_id", num_partitions=nparts
-            ).collect()
-        }
-        assert got == want, nparts
-    # column-collision guard
-    with pytest.raises(ValueError, match="_pid"):
-        sessionize_bounded(
-            df.withColumn("_pid", F.lit(1)), "key", "ts", 600, "event_id"
-        )
-    # plan shape: the heavy work (range shuffle + per-partition window)
-    # ran ONCE behind the eager localCheckpoint — the returned frame is
-    # a projection over the materialized RDD plus at most a broadcast
-    # stitch join; never a per-key global window, BNLJ, or cartesian
-    plan = (
-        sessionize_bounded(df, "key", "ts", 600, "event_id", num_partitions=4)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Scan ExistingRDD" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_sessionize_string_keys_transcript_shape(spark):
@@ -3157,47 +3101,3 @@ def test_winnow_overlap_pairs_hand_computed(spark):
         textstats.winnow_overlap_pairs(df, "doc_id", "text", min_shared=0)
     with pytest.raises(ValueError, match="max_df"):
         textstats.winnow_overlap_pairs(df, "doc_id", "text", max_df=1)
-
-
-def test_sessionize_bounded_null_keys_parity(spark):
-    """NULL is a legitimate session key (the window formulation groups
-    NULLs like any other key): a NULL-key history long enough to span
-    range partitions must stitch exactly like a named key (ADVICE r05:
-    sorted() over mixed None/str boundary keys raised, and the
-    isin()/== stitch predicates silently skipped NULL-key rows)."""
-    import datetime
-
-    from webtext_extraction_spark.operators.relational import (
-        sessionize,
-        sessionize_bounded,
-    )
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    # NULL key: 200 events with periodic gap jumps -> many sessions
-    ts = t0
-    for i in range(200):
-        ts += datetime.timedelta(seconds=2000 if i % 23 == 22 else 10)
-        rows.append((None, eid, ts))
-        eid += 1
-    # a few named keys around it, with ties
-    for k in range(8):
-        ts = t0 + datetime.timedelta(seconds=100 * k)
-        for i in range(5):
-            ts += datetime.timedelta(seconds=[0, 5, 700, 10, 900][i])
-            rows.append((f"k{k}", eid, ts))
-            eid += 1
-    df = spark.createDataFrame(rows, "key string, event_id long, ts timestamp")
-    want = {
-        (r["key"], r["event_id"]): r["session_idx"]
-        for r in sessionize(df, "key", "ts", 600, "event_id").collect()
-    }
-    for nparts in (1, 4, 16):
-        got = {
-            (r["key"], r["event_id"]): r["session_idx"]
-            for r in sessionize_bounded(
-                df, "key", "ts", 600, "event_id", num_partitions=nparts
-            ).collect()
-        }
-        assert got == want, nparts

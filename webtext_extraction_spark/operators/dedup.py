@@ -13,7 +13,7 @@ Each a first-class DataFrame operator with a DuckDB oracle
 - jaccard:     exact n-gram / word-set Jaccard for bounded pair sets
 - boilerplate: cross-document repeated word-n-grams (doc frequencies)
 - resolution:  connected components over near-dup pairs → cluster
-               keepers (min-label propagation)
+               keepers (alternating large/small-star rounds)
 
 Scale notes (the 100 TB story):
 - tokenization / signatures are per-row higher-order-function
@@ -27,6 +27,8 @@ Scale notes (the 100 TB story):
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -843,91 +845,6 @@ def remove_duplicate_spans(
     return _strip_covered(base, starts, id_col, n)
 
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    node_col: str = "node",
-    max_iterations: int = 20,
-    check_every: int = 1,
-) -> DataFrame:
-    """Duplicate-cluster resolution: connected components over a
-    near-dup pair table → (node, component) where component = the
-    smallest id reachable (the canonical "keeper" of the cluster;
-    singletons map to themselves).
-
-    Algorithm: min-label propagation — every node starts labeled with
-    itself; each round takes the min of its own label and its
-    neighbors' labels; converges in O(graph diameter) rounds, bounded
-    by ``max_iterations``.  The driver-side convergence count runs only
-    every ``check_every`` rounds (each check is one extra job — at
-    check_every=2 half the probe jobs for at most one surplus round).
-    Each round is one shuffle on the edge key; ``localCheckpoint``
-    truncates the growing plan lineage.  Near-dup graphs are
-    overwhelmingly tiny cliques (diameter 1-2), so this terminates in
-    2-3 rounds in practice; for adversarial high-diameter graphs use
-    ``connected_components_star`` (O(log²) rounds).
-
-    Warns (and still returns the partial labels) if ``max_iterations``
-    rounds end while labels are still changing — silent truncation
-    would split one cluster into several keepers with no signal
-    (ADVICE r02)."""
-    edges = pairs.select(
-        F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
-    )
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-
-    labels = nodes.select(
-        F.col(node_col).cast("long").alias("node")
-    ).withColumn("label", F.col("node"))
-
-    converged = False
-    for i in range(max_iterations):
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # carry the changed flag INSIDE the checkpointed frame: the
-        # convergence probe is then a filter-count over materialized
-        # rows instead of a shuffle join of new vs old labels (one
-        # fewer shuffle per probe; labels only ever decrease, so
-        # changed == new < old)
-        nl = F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label")))
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(
-                "node",
-                nl.alias("label"),
-                (nl < F.col("label")).alias("_chg"),
-            )
-            .localCheckpoint()
-        )
-        if (i + 1) % check_every == 0 or i == max_iterations - 1:
-            changed = new_labels.filter(F.col("_chg")).count()
-            if changed == 0:
-                labels = new_labels
-                converged = True
-                break
-        labels = new_labels.select("node", "label")
-    edges.unpersist()
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge in {max_iterations} "
-            "rounds (graph diameter exceeds the budget); labels are "
-            "PARTIAL — clusters may be split across several keepers. "
-            "Raise max_iterations or use connected_components_star.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
 def component_keepers(components: DataFrame, id_col: str) -> DataFrame:
     """The keeper of each cluster in ``connected_components`` output,
     as one ``id_col`` column: the node that is its own component (the
@@ -970,7 +887,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def connected_components_star(
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when the oriented (src > dst) edge set is a forest of stars:
+    a node with an out-edge has no other edge.  Large/small-star rounds
+    preserve connectivity, so each star is then one whole component
+    pointing at its min node — the fixpoint, which the next round would
+    return unchanged."""
+    ends = edges.select(F.col("src").alias("n"), F.lit(1).alias("out")).union(
+        edges.select(F.col("dst").alias("n"), F.lit(0).alias("out"))
+    )
+    bad = (
+        ends.groupBy("n")
+        .agg(F.sum("out").alias("n_out"), F.count("*").alias("deg"))
+        .filter((F.col("n_out") > 0) & (F.col("deg") > 1))
+    )
+    return bad.isEmpty()
+
+
+def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
     id_a: str = "id_a",
@@ -978,50 +912,40 @@ def connected_components_star(
     node_col: str = "node",
     max_iterations: int = 25,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al.) — the adversarial-graph upgrade over min-label
-    propagation: converges in O(log² n) rounds regardless of diameter
-    (a path graph of length 10⁶ resolves in ~20 rounds where label
-    propagation needs 10⁶).  Same equi-join + groupBy shuffle shape per
-    round, no driver-side per-round data; convergence is detected from
-    a 2-number edge signature (count + hash-sum) per round pair.
+    """Duplicate-cluster resolution: connected components over a
+    near-dup pair table → (node, component) where component = the
+    smallest id reachable (the canonical "keeper" of the cluster;
+    singletons and nodes absent from ``pairs`` map to themselves).
 
-    Returns (node, component) with component = min node id of the
-    cluster, identical contract to ``connected_components``."""
+    Algorithm: alternating large-star / small-star rounds (Kiveris et
+    al.), which converge in O(log² n) rounds whatever the graph's
+    diameter (a path graph of length 10⁶ resolves in ~20 rounds where
+    label propagation needs 10⁶).  Each round is a few equi-join +
+    groupBy shuffles with no driver-side per-round data, and
+    ``localCheckpoint`` truncates the growing plan lineage.  The round
+    loop stops as soon as the edge set is a star forest (one grouped
+    count per round, :func:`_is_star_forest`).
+
+    Warns (and still returns the partial labels) if ``max_iterations``
+    rounds end before that — silent truncation would split one cluster
+    into several keepers with no signal."""
     edges = (
         pairs.select(
             F.col(id_a).cast("long").alias("src"),
             F.col(id_b).cast("long").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
         .localCheckpoint()
     )
-
-    def signature(e: DataFrame) -> tuple:
-        # per-edge hash reduced to [0, 2^31) so the sum stays exact in
-        # ANSI long arithmetic up to 2^32 edges
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1 << 31))).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    prev_sig = signature(edges)
-    converged = False
     for _ in range(max_iterations):
         edges = _small_star(_large_star(edges)).localCheckpoint()
-        sig = signature(edges)
-        if sig == prev_sig:
-            converged = True
+        if _is_star_forest(edges):
             break
-        prev_sig = sig
-    if not converged:
-        import warnings
-
+    else:
         warnings.warn(
-            f"connected_components_star did not converge in {max_iterations} "
-            "rounds; labels may be partial.",
+            f"connected_components did not converge in {max_iterations} "
+            "rounds; labels are PARTIAL — clusters may be split across "
+            "several keepers. Raise max_iterations.",
             RuntimeWarning,
             stacklevel=2,
         )
