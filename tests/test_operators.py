@@ -1436,6 +1436,25 @@ def test_scrub_pii_matches_python_re_and_is_idempotent(spark):
         assert twice[i]["n_email"] == twice[i]["n_ipv4"] == twice[i]["n_phone"] == 0
 
 
+def _py_sessionize(rows, gap_seconds):
+    """Python reference: sort each key's (ts, id) events, split at gap >
+    gap_seconds. The dict groups None as one key, as the window's
+    partitionBy does."""
+    by_key = {}
+    for k, e, ts in rows:
+        by_key.setdefault(k, []).append((ts, e))
+    expect = {}
+    for k, evs in by_key.items():
+        evs.sort()
+        sidx, prev = 0, None
+        for ts, e in evs:
+            if prev is not None and (ts - prev).total_seconds() > gap_seconds:
+                sidx += 1
+            expect[(k, e)] = sidx
+            prev = ts
+    return expect
+
+
 def test_sessionize_matches_python_reference_randomized(spark):
     import datetime
     import random
@@ -1452,13 +1471,6 @@ def test_sessionize_matches_python_reference_randomized(spark):
             rows.append((user, eid, t0 + datetime.timedelta(microseconds=t)))
             eid += 1
             t += rnd.randint(0, 3_000_000)  # gaps 0-3 s incl. exact 0
-    # NULL is a session key like any other: a long NULL-key history with
-    # periodic gap jumps and equal-timestamp runs
-    t = 0
-    for i in range(200):
-        t += 2_000_000 if i % 23 == 22 else rnd.choice([0, 0, 400_000])
-        rows.append((None, eid, t0 + datetime.timedelta(microseconds=t)))
-        eid += 1
     rnd.shuffle(rows)
     df = spark.createDataFrame(
         rows, "user_id long, event_id long, ts timestamp_ntz"
@@ -1467,21 +1479,41 @@ def test_sessionize_matches_python_reference_randomized(spark):
         (r["user_id"], r["event_id"]): r["session_idx"]
         for r in sessionize(df, "user_id", "ts", 1, "event_id").collect()
     }
-    # python reference: sort by (user, ts, id), split at gap > 1 s; the
-    # dict groups None as one key, as the window's partitionBy does
-    expect = {}
-    by_user = {}
-    for u, e, ts in rows:
-        by_user.setdefault(u, []).append((ts, e))
-    for u, evs in by_user.items():
-        evs.sort()
-        sidx, prev = 0, None
-        for ts, e in evs:
-            if prev is not None and (ts - prev).total_seconds() > 1.0:
-                sidx += 1
-            expect[(u, e)] = sidx
-            prev = ts
+    assert got == _py_sessionize(rows, 1.0)
+
+
+def test_sessionize_null_key_matches_python_reference(spark):
+    """NULL is a session key like any other: a long NULL-key history
+    with periodic gap jumps splits exactly as a named key would, next
+    to string keys whose events tie on ts."""
+    import datetime
+
+    from webtext_extraction_spark.operators.relational import sessionize
+
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = []
+    eid = 0
+    ts = t0
+    for i in range(200):
+        ts += datetime.timedelta(seconds=2000 if i % 23 == 22 else 10)
+        rows.append((None, eid, ts))
+        eid += 1
+    for k in range(8):
+        ts = t0 + datetime.timedelta(seconds=100 * k)
+        for i in range(5):
+            ts += datetime.timedelta(seconds=[0, 5, 700, 10, 900][i])
+            rows.append((f"k{k}", eid, ts))
+            eid += 1
+    df = spark.createDataFrame(
+        rows, "key string, event_id long, ts timestamp"
+    ).repartition(4)
+    got = {
+        (r["key"], r["event_id"]): r["session_idx"]
+        for r in sessionize(df, "key", "ts", 600, "event_id").collect()
+    }
+    expect = _py_sessionize(rows, 600.0)
     assert got == expect
+    assert max(v for (k, _), v in expect.items() if k is None) == 8
 
 
 def test_group_percentiles_matches_numpy_linear(spark):
